@@ -107,6 +107,19 @@ object Barrier {
     out
   }
 
+  /** Barrier `b` as a frame whose logical plan is ONE leaf over its
+    * rows — the round input of an iterative operator. A `persist`-mode
+    * barrier keeps its lineage IN THE PLAN, so a round that reads its
+    * input k times would nest every earlier round's plan k times over
+    * (k^rounds plan nodes; a star-contraction round reads its input ~9
+    * times, so a handful of rounds exhausts the driver heap). The leaf
+    * reads `b`'s cached blocks, and its RDD lineage still recomputes a
+    * lost block. The other modes already cut the plan (`none` keeps it
+    * and is unfit for iterative operators). */
+  def leaf(b: DataFrame): DataFrame =
+    if (mode(b) == "persist") b.sparkSession.createDataFrame(b.rdd, b.schema)
+    else b
+
   /** Run `body` and release every barrier it creates (on this thread)
     * when it returns — the seam for REPEATED operator invocations that
     * would otherwise accumulate cached frames under `persist` mode: a

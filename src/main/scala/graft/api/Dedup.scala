@@ -1,7 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import graft.functions.{HashFunctions, MinHashConstants, VectorFunctions}
 
 /** Library-facing deduplication operators: DataFrame in, DataFrame out,
@@ -1243,100 +1244,148 @@ object Dedup extends org.apache.spark.internal.Logging {
   /** Connected components over near-dup pairs: (doc_id, group_id) with
     * group_id = the minimum doc id in the component — the step that
     * turns PAIRS into KEEP/DROP decisions (keep group_id, drop the
-    * rest), which is what a dedup pipeline actually executes.
+    * rest), which is what a dedup pipeline actually executes. One row
+    * per id appearing in some pair, a self-pair included; unpaired docs
+    * are their own trivial groups by definition, and a pair with a null
+    * endpoint links nothing. Ids must be integral; both output columns
+    * keep the ids' type.
     *
-    * Algorithm: min-label propagation to a fixpoint. Each iteration is
-    * one slim equi-join (edges ⋈ labels) + a min-aggregate — O(E)
-    * shuffled rows of two longs — and converges in ≤ graph-diameter
-    * iterations. Near-dup clusters are dense (diameter is small, 2-3
-    * hops), so the loop runs a handful of rounds at any corpus size;
-    * labels are [[Barrier]]'d per round to keep lineage flat. For
-    * adversarial diameters (long chains) use [[duplicateGroupsStar]],
-    * which converges in O(log²) rounds regardless of diameter. Only
-    * ids appearing in some pair get a row — unpaired docs are their
-    * own trivial groups by definition. */
-  def duplicateGroups(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 50): DataFrame = {
-    // r20: the edge barrier is hash-partitioned on the probe key (dst)
-    // BEFORE checkpointing — localCheckpoint preserves the physical
-    // partitioning in its LogicalRDD, so every round's ed⋈labels join
-    // reuses it instead of re-exchanging the edge list once per round
-    // (guide §2.4: operations keyed the same way share one exchange).
-    // One extra exchange at build time buys rounds × 1 fewer exchanges
-    // at ANY scale (rounds ≥ 1 always; near-dup graphs run 2–5).
-    val ed = Barrier(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct() // scanned every iteration
-      .repartition(col("dst")))
-    // labels partitioned on v for the same reason (both per-round joins
-    // key on it); the distinct()'s own exchange is on the same column,
-    // so the explicit repartition collapses into it at planning time
-    var labels = Barrier(ed.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("lbl")))
-    // the frame actually holding this round's barrier (labels is later
-    // a PROJECTION of it, which release() could not unpersist)
-    var barriered = labels
-    var iter = 0
-    var converged = false
-    // labels flow one hop along (symmetric) edges; keep the min. One
-    // aggregate + one left join per hop: the improved label and the
-    // did-anything-change flag come out of the same pass (no separate
-    // convergence join against the previous labels).
-    def hop(l: DataFrame): DataFrame = {
-      val prop = ed.join(l, ed("dst") === l("v"))
-        .select(ed("src").as("v"), l("lbl"))
-        .groupBy("v").agg(min("lbl").as("plbl"))
-      l.alias("o")
-        .join(prop.alias("p"), col("o.v") === col("p.v"), "left")
-        .select(col("o.v").as("v"),
-          least(col("o.lbl"), col("p.plbl")).as("lbl"),
-          (col("p.plbl") < col("o.lbl")).as("changed"))
-    }
-    while (!converged && iter < maxIters) {
-      // r20: TWO hops per materialized round — halves the barrier +
-      // convergence-check jobs (the fixed per-round driver cost that
-      // dominates small-graph fixpoints) without changing the
-      // fixpoint: labels only ever decrease toward the component min,
-      // so extra hops inside a round just converge faster. The
-      // convergence test needs only the SECOND hop's changed flag:
-      // hop is a deterministic function of the labels, so
-      // hop2.changed empty ⟺ hop(h1) = h1 ⟺ h1 is the fixpoint.
-      // r21: the round is ONE job, not two — the barrier fills lazily
-      // and the convergence count (a full-scan aggregate, the
-      // Barrier.lazily contract) is the job that materializes it;
-      // the eager-barrier + isEmpty shape paid a second driver
-      // round-trip per round for the same scan.
-      val next = Barrier.lazily(hop(hop(labels).select(col("v"), col("lbl"))))
-      converged = next.agg(count(when(col("changed"), lit(1))))
-        .head.getLong(0) == 0L
-      Barrier.release(barriered) // persist mode: one cached copy per round otherwise
-      barriered = next
-      labels = next.select(col("v"), col("lbl"))
-      iter += 1
-    }
-    require(converged, s"label propagation did not converge in $maxIters iterations")
-    labels.select(col("v").as("doc_id"), col("lbl").as("group_id"))
+    * Algorithm — union-find inside partitions, level by level:
+    *  1. every partition of the edge list runs union-find over its own
+    *     edges ([[localRoots]]); a local root is the minimum id of its
+    *     local component. No shuffle.
+    *  2. ONE groupBy on the node gives each node the minimum of its
+    *     local roots, and a RESIDUE edge from that minimum to each other
+    *     local root of a node seen in more than one partition. The
+    *     residue's components are the graph's components contracted to
+    *     local roots, so it has at most one node per local root.
+    *  3. An empty residue ends it: every component lay inside one
+    *     partition, and the level's one count was its only action.
+    *     Otherwise the residue's labels, computed by the next level,
+    *     compose over this level's with one join. A level whose residue
+    *     is more than half the previous level's hands it to
+    *     large-star/small-star rounds ([[starComponents]]) instead.
+    *
+    * A residue is a groupBy's output, which AQE coalesces to a few
+    * partitions, so the second level usually ends it. Levels halve the
+    * residue and star contraction converges in O(log²) rounds of its
+    * size; the graph's diameter bounds neither. These levels and rounds
+    * are the one loop on the driver; the rounds are capped at
+    * [[MaxStarRounds]]. */
+  def duplicateGroups(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val idType = pairs.select(col(aCol).as("id"))
+      .union(pairs.select(col(bCol).as("id"))).schema("id").dataType
+    require(IntegralIds.contains(idType),
+      s"duplicateGroups needs integral ids, got $idType")
+    components(
+      pairs.filter(col(aCol).isNotNull && col(bCol).isNotNull)
+        .select(col(aCol).cast("long"), col(bCol).cast("long")),
+      above = Long.MaxValue, top = true)
+      .select(col("node").cast(idType).as("doc_id"),
+        col("lbl").cast(idType).as("group_id"))
   }
 
-  /** Connected components by alternating large-star / small-star
-    * contraction [Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14] — the scale path for ADVERSARIAL diameters:
-    * converges in O(log²) rounds on any graph where plain label
-    * propagation ([[duplicateGroups]]) needs diameter rounds (a
-    * 10⁶-node chain: ~20 rounds vs 10⁶). Same output contract as
-    * duplicateGroups: (doc_id, group_id = component min), one row per
-    * id appearing in some pair.
+  /** One level of [[duplicateGroups]] over (long, long) edges: (node,
+    * lbl = component min) for every node. `above` is the previous
+    * level's residue size. Below the top level the labels compose into
+    * ONE barrier and the level's own barriers are released, so the top
+    * level's (lazy) output reads two barriers however many levels ran;
+    * the caller releases a lower level's result once it has composed
+    * it. */
+  private def components(edges: DataFrame, above: Long, top: Boolean): DataFrame = {
+    val local = Barrier.lazily(
+      edges.as(LongPairs).mapPartitions(localRoots)(LongPairs).toDF("node", "root")
+        .groupBy("node")
+        .agg(min("root").as("lbl"), collect_set("root").as("roots")))
+    // the full-scan aggregate that fills the barrier (Barrier.lazily)
+    val residueSize = local
+      .agg(coalesce(sum(size(col("roots")) - 1), lit(0L))).head.getLong(0)
+    if (residueSize == 0L) local
+    else {
+      val residue = local
+        .select(col("lbl").as("u"), explode(col("roots")).as("v"))
+        .filter(col("u") =!= col("v"))
+      val (sub, subLabels) =
+        if (2 * residueSize <= above) {
+          val c = components(residue, residueSize, top = false)
+          (c, c.select(col("node").as("r"), col("lbl").as("rl")))
+        } else {
+          val c = starComponents(residue, residueSize)
+          (c, c.select(col("u").as("r"), col("v").as("rl")))
+        }
+      val labels = local.join(subLabels, col("lbl") === col("r"), "left")
+        .select(col("node"), coalesce(col("rl"), col("lbl")).as("lbl"))
+      if (top) labels
+      else {
+        val composed = Barrier(labels)
+        Barrier.release(local)
+        Barrier.release(sub)
+        composed
+      }
+    }
+  }
+
+  private val IntegralIds: Set[DataType] =
+    Set(ByteType, ShortType, IntegerType, LongType)
+
+  private val LongPairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+
+  /** Round cap of [[starComponents]]: the rounds grow with the log of
+    * the residue size (an 8 801-edge residue of a 10⁴-hop chain
+    * converges in 15), so the cap only turns a residue that does not
+    * converge into a loud failure. */
+  private val MaxStarRounds = 100
+
+  /** Union-find over one partition's edges: (node, local root) for each
+    * distinct node of the partition, the root being the minimum id of
+    * the node's local component. Primitive arrays only — the endpoints
+    * as read (16 B an edge), their sorted distinct ids (16 B an edge
+    * before de-duplication) and an int parent array (4 B a node). Ids
+    * map to indexes by binary search, so a smaller index is a smaller
+    * id, and linking every union under its smaller root roots each set
+    * at its minimum. */
+  private def localRoots(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var ends = new Array[Long](256)
+    var n = 0
+    edges.foreach { case (a, b) =>
+      if (n == ends.length) ends = java.util.Arrays.copyOf(ends, 2 * n)
+      ends(n) = a; ends(n + 1) = b; n += 2
+    }
+    val ids = java.util.Arrays.copyOf(ends, n)
+    java.util.Arrays.sort(ids)
+    var k = 0
+    for (i <- 0 until n if k == 0 || ids(i) != ids(k - 1)) { ids(k) = ids(i); k += 1 }
+    val parent = Array.range(0, k)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def root(id: Long): Int = find(java.util.Arrays.binarySearch(ids, 0, k, id))
+    for (i <- 0 until n by 2) {
+      val ra = root(ends(i))
+      val rb = root(ends(i + 1))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Iterator.range(0, k).map(i => (ids(i), ids(find(i))))
+  }
+
+  /** Connected components of a (long) edge list by alternating
+    * large-star / small-star contraction [Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14], which converges in
+    * O(log²) rounds on any graph. Returns the barrier holding (u,
+    * v = min of u's component) for every node but the component
+    * minimums. `residueSize` names the input in the error when the
+    * rounds hit [[MaxStarRounds]].
     *
-    * Each round is two groupBy-min + join passes over the (two-long)
-    * edge list:
+    * Each round is two groupBy-min + join passes over the edge list:
     *  - large-star(u): every neighbor v > u re-attaches to
     *    m(u) = min(Γ(u) ∪ {u});
     *  - small-star(u): every neighbor v ≤ u, and u itself, attaches
     *    to m(u);
     * alternated until the canonical edge set reaches its fixpoint, at
     * which point every node holds an edge to its component minimum. */
-  def duplicateGroupsStar(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 40): DataFrame = {
+  private def starComponents(residue: DataFrame, residueSize: Long): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
@@ -1349,17 +1398,25 @@ object Dedup extends org.apache.spark.internal.Logging {
     def mins(se: DataFrame): DataFrame = se
       .groupBy(col("u").as("c")).agg(least(min(col("v")), col("c")).as("m"))
 
-    // r21: lazy barrier + count — the count is the materializing job
+    // lazy barrier + count: the count is the materializing job
     // (Barrier.lazily contract), and carrying each round's count
     // forward drops the previous round's re-count; with the
     // equal-count precondition short-circuiting the except, a round is
-    // 1-2 jobs where the eager shape paid 4 (barrier, 2 counts, except)
-    var edges = Barrier.lazily(canon(
-      pairs.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))))
-    var edgeCount = edges.count()
-    var iter = 0
+    // 1-2 actions. `barriered` holds the round's barrier and `edges`
+    // reads it through Barrier.leaf, so the next round's plan does not
+    // nest this one's.
+    var barriered = Barrier.lazily(canon(residue))
+    var edgeCount = barriered.count()
+    var edges = Barrier.leaf(barriered)
+    var rounds = 0
     var converged = false
-    while (!converged && iter < maxIters) {
+    while (!converged) {
+      if (rounds == MaxStarRounds) {
+        Barrier.release(barriered)
+        throw new IllegalStateException(s"connected components: star " +
+          s"contraction over a residue of $residueSize edges did not " +
+          s"converge in $MaxStarRounds rounds")
+      }
       // large-star over the symmetric view: every neighbor above the
       // center re-attaches to the center's minimum
       val se = sym(edges)
@@ -1377,16 +1434,13 @@ object Dedup extends org.apache.spark.internal.Logging {
       val next = Barrier.lazily(small)
       val nextCount = next.count()
       converged = nextCount == edgeCount && next.except(edges).isEmpty
-      Barrier.release(edges) // persist mode: one cached copy per round otherwise
-      edges = next
+      Barrier.release(barriered) // persist mode: one cached copy per round otherwise
+      barriered = next
+      edges = Barrier.leaf(next)
       edgeCount = nextCount
-      iter += 1
+      rounds += 1
     }
-    require(converged, s"star contraction did not converge in $maxIters rounds")
-    // fixpoint edges are (node, component-min) stars; add the roots
-    edges.select(col("u").as("doc_id"), col("v").as("group_id"))
-      .union(edges.select(col("v").as("doc_id"), col("v").as("group_id")).distinct())
-      .distinct()
+    barriered
   }
 
   /** dd11 — SEMANTIC dedup over an embedding column, the SemDeDup shape
@@ -1458,10 +1512,10 @@ object Dedup extends org.apache.spark.internal.Logging {
       .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
         cos.as("cos"))
       .filter(col("cos") >= threshold)
-    // r20: no re-barrier — duplicateGroups' output is a projection of
-    // its own final labels checkpoint (live until the enclosing scope
-    // exits), so both consumers below read materialized blocks; the
-    // extra Barrier was one more materialization job of the same rows
+    // no re-barrier — duplicateGroups' output is a projection of its
+    // own checkpoints (live until the enclosing scope exits), so both
+    // consumers below read materialized blocks; a Barrier here would be
+    // one more materialization job of the same rows
     val groups = duplicateGroups(pairs, "va", "vb")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("group_id"))
@@ -1507,12 +1561,11 @@ object Dedup extends org.apache.spark.internal.Logging {
     * Scale shape: the corpus asset (the 100 TB table) is STREAMED
     * twice and never shuffled — once against a broadcast of the
     * increment's pair endpoints (label lookup), once against a
-    * broadcast of the touched group ids (member expansion). The
-    * connected-components fixpoint runs over the CONTRACTED label
-    * graph — one node per touched group or new doc, O(|incPairs|)
-    * edges — never the full corpus, so a bridge merging two
-    * billion-doc groups costs a fixpoint over 2 labels, not 2×10⁹
-    * rows. Preconditions: increment ids are disjoint from corpus ids
+    * broadcast of the touched group ids (member expansion).
+    * [[duplicateGroups]] runs over the CONTRACTED label graph — one
+    * node per touched group or new doc, O(|incPairs|) edges — never
+    * the full corpus, so a bridge merging two billion-doc groups costs
+    * components over 2 labels, not 2×10⁹ rows. Preconditions: increment ids are disjoint from corpus ids
     * (an increment is new by definition) and each incPair touches the
     * increment; a corpus-corpus pair inside ONE existing group is
     * tolerated (its contracted edge self-collapses — the group is
@@ -1543,7 +1596,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       .join(la, "da").join(lb, "db")
       .select(col("la"), col("lb"))
       .filter(col("la") =!= col("lb"))
-    // fixpoint over touched labels only; group = min label = min doc id
+    // components over touched labels only; group = min label = min doc id
     // of the merged component (each old label is already its group min)
     val newGroup = duplicateGroups(contracted, "la", "lb")
       .select(col("doc_id").as("lbl"), col("group_id").as("new_group"))

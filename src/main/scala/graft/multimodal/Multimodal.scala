@@ -679,28 +679,30 @@ object Multimodal {
     // in-memory barrier (value-identical to the parquet round-trip:
     // longs), never the file being written, and the corpus-side asset
     // reads exclude inc_0 by contract. Both writes join before the
-    // groups upsert lands: same dirs, same rows, replay idempotence
-    // unchanged. The decode (the day's ONLY codec work: the
-    // increment's) runs once, in the barrier job.
-    val incSigs = graft.api.Barrier(
-      ahashSigsOf(docIds(s, dir).filter(col("doc_id") % IncMod === 0)))
-    val joinSigsW = graft.api.Overlap.background("p6-sigs") {
-      incSigs.write.mode("overwrite").parquet(s"$root/sigs/inc_0")
-    }
-    val pairs = graft.api.Barrier(Dedup.incrementalHammingPairs(
-      Dedup.readSignatureAsset(s, s"$root/sigs", excludeInc = Some("inc_0")),
-      incSigs, "doc_id", "sig", AHashMaxHamming,
-      Dedup.readSignatureHistogram(s, s"$root/sigs",
-        Dedup.hammingGuardKeys("sig"), excludeInc = Some("inc_0"))))
-    val joinPairsW = graft.api.Overlap.background("p6-pairs") {
-      pairs.write.mode("overwrite").parquet(s"$root/pairs")
-    }
-    Dedup.incrementalGroups(
+    // groups upsert is written (groups/inc_0 is never newer than a
+    // partial sigs or pairs dir): same dirs, same rows, replay
+    // idempotence unchanged. The decode (the day's ONLY codec work:
+    // the increment's) runs once, in the barrier job.
+    graft.api.Overlap.scoped { writes =>
+      val incSigs = graft.api.Barrier(
+        ahashSigsOf(docIds(s, dir).filter(col("doc_id") % IncMod === 0)))
+      writes.background("p6-sigs") {
+        incSigs.write.mode("overwrite").parquet(s"$root/sigs/inc_0")
+      }
+      val pairs = graft.api.Barrier(Dedup.incrementalHammingPairs(
+        Dedup.readSignatureAsset(s, s"$root/sigs", excludeInc = Some("inc_0")),
+        incSigs, "doc_id", "sig", AHashMaxHamming,
+        Dedup.readSignatureHistogram(s, s"$root/sigs",
+          Dedup.hammingGuardKeys("sig"), excludeInc = Some("inc_0"))))
+      writes.background("p6-pairs") {
+        pairs.write.mode("overwrite").parquet(s"$root/pairs")
+      }
+      val groups = Dedup.incrementalGroups(
         Dedup.readGroupsAsset(s, s"$root/groups", excludeInc = Some("inc_0")),
         pairs, "doc_a", "doc_b")
-      .write.mode("overwrite").parquet(s"$root/groups/inc_0")
-    joinSigsW()
-    joinPairsW()
+      writes.join()
+      groups.write.mode("overwrite").parquet(s"$root/groups/inc_0")
+    }
     val losers = Dedup.readGroupsAsset(s, s"$root/groups")
       .filter(col("doc_id") =!= col("group_id")).select(col("doc_id"))
     Tables.documents(s, dir).select(col("doc_id"))

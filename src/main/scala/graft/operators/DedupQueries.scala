@@ -105,9 +105,9 @@ object DedupQueries {
   // -- dd6: duplicate GROUPS — connected components over dd3 pairs ------
   // The step that turns near-dup pairs into keep/drop decisions: each
   // doc maps to the minimum doc_id of its connected component. Spark
-  // side is iterative min-label propagation (slim two-long rows per
-  // round, diameter-bounded rounds — see Dedup.duplicateGroups); the
-  // oracle computes the same fixpoint as a DuckDB recursive CTE over
+  // side is union-find inside partitions plus star contraction over
+  // the cross-partition residue (see Dedup.duplicateGroups); the
+  // oracle computes the same components as a DuckDB recursive CTE over
   // the shared band-candidate chain.
   private[operators] def dupGroups(s: SparkSession, dir: String): DataFrame =
     graft.api.Dedup.duplicateGroups(minhashLsh(s, dir), "doc_a", "doc_b")

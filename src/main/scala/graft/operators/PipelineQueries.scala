@@ -263,30 +263,35 @@ private[graft] object DailyPipeline {
       // parquet round-trip: longs and long arrays), never the file it
       // is concurrently writing, and the corpus-side asset reads
       // exclude inc_0 by contract. Both writes join before the groups
-      // upsert lands, so the on-disk protocol (overwrite to fixed
-      // inc_0 names, same rows) and replay idempotence are unchanged.
-      val incSigs = graft.api.Barrier(graft.api.Dedup.minhashSignatures(
-        increment(docs), "doc_id", "text", DD3Bands, DD3Rows))
-      val joinSigsW = graft.api.Overlap.background("p4-sigs") {
-        incSigs.write.mode("overwrite").parquet(s"$root/sigs/inc_0")
-      }
-      val pairs = graft.api.Barrier(graft.api.Dedup.incrementalJaccardPairs(
-        graft.api.Dedup.readSignatureAsset(
-          s, s"$root/sigs", excludeInc = Some("inc_0")),
-        incSigs, Jaccard,
-        graft.api.Dedup.readSignatureHistogram(
-          s, s"$root/sigs", graft.api.Dedup.jaccardGuardKeys,
-          excludeInc = Some("inc_0"))))
-      val joinPairsW = graft.api.Overlap.background("p4-pairs") {
-        pairs.write.mode("overwrite").parquet(s"$root/pairs")
-      }
-      graft.api.Dedup.incrementalGroups(
+      // upsert is written, so groups/inc_0 is never newer than a
+      // partial sigs or pairs dir; the on-disk protocol (overwrite to
+      // fixed inc_0 names, same rows) and replay idempotence are those
+      // of the sequential shape.
+      graft.api.Overlap.scoped { writes =>
+        val incSigs = graft.api.Barrier(graft.api.Dedup.minhashSignatures(
+          increment(docs), "doc_id", "text", DD3Bands, DD3Rows))
+        writes.background("p4-sigs") {
+          incSigs.write.mode("overwrite").parquet(s"$root/sigs/inc_0")
+        }
+        val pairs = graft.api.Barrier(graft.api.Dedup.incrementalJaccardPairs(
+          graft.api.Dedup.readSignatureAsset(
+            s, s"$root/sigs", excludeInc = Some("inc_0")),
+          incSigs, Jaccard,
+          graft.api.Dedup.readSignatureHistogram(
+            s, s"$root/sigs", graft.api.Dedup.jaccardGuardKeys,
+            excludeInc = Some("inc_0"))))
+        writes.background("p4-pairs") {
+          pairs.write.mode("overwrite").parquet(s"$root/pairs")
+        }
+        // the components' jobs run at call time, still overlapping the
+        // writes; only the upsert itself waits for them
+        val groups = graft.api.Dedup.incrementalGroups(
           graft.api.Dedup.readGroupsAsset(
             s, s"$root/groups", excludeInc = Some("inc_0")),
           pairs, "doc_a", "doc_b")
-        .write.mode("overwrite").parquet(s"$root/groups/inc_0")
-      joinSigsW()
-      joinPairsW()
+        writes.join()
+        groups.write.mode("overwrite").parquet(s"$root/groups/inc_0")
+      }
       if (compact) {
         graft.api.Dedup.compactSignatureAsset(s, s"$root/sigs",
           guardKeys = Some(graft.api.Dedup.jaccardGuardKeys))

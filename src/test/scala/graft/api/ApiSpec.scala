@@ -91,26 +91,68 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
       20L -> 20L, 21L -> 20L))
   }
 
-  test("star-contraction components equal label propagation; chains stay cheap") {
-    val rnd = new scala.util.Random(7)
-    for (_ <- 0 until 2) {
-      val n = 60
-      val edges = Seq.fill(70)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(e => e._1 != e._2)
-      val df = spark.createDataFrame(edges).toDF("x", "y")
-      val prop = Dedup.duplicateGroups(df, "x", "y")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val star = Dedup.duplicateGroupsStar(df, "x", "y")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == prop)
+  /** Driver-side reference components: node -> component min. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x0: Long): Long = {
+      var x = parent.getOrElseUpdate(x0, x0)
+      while (parent(x) != x) x = parent(x)
+      x
     }
-    // a 40-node chain has diameter 39: label propagation would need 39
-    // rounds, star contraction converges in O(log^2) — run only star
-    val chain = (0L until 39L).map(i => (i, i + 1))
-    val g = Dedup.duplicateGroupsStar(
-        spark.createDataFrame(chain).toDF("x", "y"), "x", "y", maxIters = 12)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(g == (0L to 39L).map(_ -> 0L).toMap)
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      parent(ra max rb) = ra min rb
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  /** `f` once as the session is, and once with the residue spread over
+    * 16 uncoalesced shuffle partitions: a residue level then cannot
+    * halve its input, so star contraction finishes the components. */
+  private def bothResiduePaths(f: => Unit): Unit = {
+    f
+    val keys = Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "16")
+    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("duplicateGroups equals a driver-side union-find, across partitions and id types") {
+    def groups(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      Dedup.duplicateGroups(df, "x", "y")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // seeded random graphs, self-pairs included (one on a paired node,
+    // one on an otherwise unpaired node); spread over 4 or 16 partitions
+    // most components cross partitions, so the residue path runs
+    val rnd = new scala.util.Random(7)
+    for (parts <- Seq(1, 4, 16)) {
+      val edges = Seq.fill(150)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong)) ++
+        Seq((3L, 3L), (500L, 500L))
+      val df = spark.createDataFrame(edges).toDF("x", "y").repartition(parts)
+      bothResiduePaths(assert(groups(df) == unionFind(edges), s"over $parts partitions"))
+    }
+    // Int ids keep their type in both output columns
+    val ints = Dedup.duplicateGroups(spark.createDataFrame(
+      Seq((3, 1), (1, 2), (7, 7), (9, 8))).toDF("x", "y").repartition(2), "x", "y")
+    assert(ints.schema.map(_.dataType) ==
+      Seq(org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType))
+    assert(ints.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 8 -> 8, 9 -> 8))
+    // a 10⁴-hop chain whose shuffled edges spread over 16 partitions:
+    // its diameter is 10⁴ (a label propagation would need 10⁴ hops),
+    // and nearly every node sits in two partitions
+    val chain = rnd.shuffle((0L until 10000L).map(i => (i, i + 1)))
+    val cdf = spark.createDataFrame(chain).toDF("x", "y").repartition(16)
+    val crossing = cdf
+      .select(spark_partition_id().as("p"), explode(array(col("x"), col("y"))).as("id"))
+      .groupBy("id").agg(countDistinct("p").as("np")).filter(col("np") > 1).count()
+    assert(crossing > 1000, s"only $crossing nodes cross partitions")
+    bothResiduePaths(assert(groups(cdf) == (0L to 10000L).map(_ -> 0L).toMap))
   }
 
   test("multi-probe LSH recall >= 0.9 on planted pairs in the cos~0.4-0.5 regime") {

@@ -55,9 +55,10 @@ class BarrierSpec extends AnyFunSuite with SparkSpec {
 
   test("dd6 duplicate groups are identical under every barrier mode") {
     import spark.implicits._
-    // two components incl. a 5-node chain (multi-round propagation)
+    // two components incl. a 5-node chain, its edges over two
+    // partitions so the residue levels run in every mode
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
-      .toDF("a", "b")
+      .toDF("a", "b").repartition(2)
     def run(): Seq[String] =
       Dedup.duplicateGroups(pairs, "a", "b")
         .collect().map(_.toString).sorted.toSeq
@@ -125,14 +126,16 @@ class BarrierSpec extends AnyFunSuite with SparkSpec {
 
   test("persist-mode fixpoints release per-round barriers (no cache leak)") {
     import spark.implicits._
-    // a 7-node chain forces ~6 label-propagation rounds; without
-    // release() each round would leave one more cached copy behind
-    val pairs = (1L to 6L).map(i => (i, i + 1)).toDF("a", "b")
+    // a 7-node chain over three partitions: its residue runs a second
+    // level, which does not halve it, and then star rounds; without
+    // release() each level and round would leave a cached copy behind
+    val pairs = (1L to 6L).map(i => (i, i + 1)).toDF("a", "b").repartition(3)
     withMode("persist") {
       val leaked = leakedIds {
         Dedup.duplicateGroups(pairs, "a", "b").collect()
       }
-      // ed + the final round's labels may stay; per-round copies must not
+      // the top level's labels + the composed residue labels may stay
+      // (the output reads both); per-level and per-round copies must not
       assert(leaked.size <= 2,
         s"leaked ${leaked.size} cached barriers: RDD ids $leaked")
     }

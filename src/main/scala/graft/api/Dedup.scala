@@ -80,11 +80,12 @@ object Dedup extends org.apache.spark.internal.Logging {
     // shingle arrays re-attached per pair — the exact duplicate-heap
     // blowup hammingPairs got guarded against in r14, one signature
     // family over.
-    validatePairBudget(sigged, col("sig"), "jaccardPairs",
+    Guard.run(docs.sparkSession, heapPairBudget(sigged, col("sig"),
+      "jaccardPairs",
       "Use Dedup.jaccardGroups (contracts to distinct shingle sets " +
         "first — linear in n, heap members never pair-expanded), or " +
         "exact-dedup by fingerprint (Dedup.exactGroups) and near-dup " +
-        "only the keepers")
+        "only the keepers"))
     val banded = Barrier(sigged
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
@@ -160,11 +161,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     // r15 guard: the full band-key ARRAY is the asset's stored stand-in
     // for the minhash signature (equal texts ⇒ equal signatures ⇒ equal
     // bkeys ⇒ every band collides and every pair verifies at jac = 1.0)
-    validateIncPairBudget(corpusSigs, incSigs, col("bkeys"),
-      "incrementalJaccardPairs",
+    Guard.run(incSigs.sparkSession, incHeapPairBudget(corpusSigs, incSigs,
+      col("bkeys"), corpusHist, "incrementalJaccardPairs",
       "Exact-dedup the increment first (Dedup.exactGroups) or contract " +
-        "heaps with Dedup.jaccardGroups before pairing",
-      corpusHist)
+        "heaps with Dedup.jaccardGroups before pairing"))
     // barrier: the increment's banded rows are probed against the union
     // below, so they would otherwise be derived twice
     val incBanded = Barrier(explodeBands(incSigs))
@@ -221,10 +221,20 @@ object Dedup extends org.apache.spark.internal.Logging {
   val CandBudgetMaxKey = "spark.graft.dedup.candbudget.max"
   val CandBudgetDefault: Long = 10000000000L
 
+  /** A [[Guard.priced]] budget check: trips when the estimate exceeds
+    * the long budget read from `maxKey`, with `msg(estimate, budget)`. */
+  private def overBudget(spark: org.apache.spark.sql.SparkSession,
+      key: String, maxKey: String, default: Long)(est: => DataFrame)(
+      msg: (Double, Long) => String): Guard.Priced =
+    Guard.priced(key)(est) { e =>
+      val budget = spark.conf.get(maxKey, default.toString).toLong
+      if (e > budget) Some(msg(e, budget)) else None
+    }
+
   /** Estimate the LSH band join's candidate volume from the bucket
     * histogram — Σ C(c,2) same-bucket plus, under multi-probe, the
-    * Hamming-1 cross-bucket products — and fail loud (per
-    * [[CandBudgetConfKey]]) when it exceeds the budget. The histogram
+    * Hamming-1 cross-bucket products — checked against
+    * [[CandBudgetMaxKey]] per [[CandBudgetConfKey]]. The histogram
     * is one map-side-combined aggregate over the slim banded rows
     * (≤ tables·2^planes result rows), and the probe cross-terms join
     * that tiny histogram against itself `probes` times — trivial next
@@ -233,33 +243,25 @@ object Dedup extends org.apache.spark.internal.Logging {
     * corpus scale is planes ~ log n with tables resized per
     * [[graft.api.Similarity.lshTablesFor]], or the PQ/IVF family for
     * low-similarity regimes (see [[embeddingPairs]]' scaladoc). */
-  private def validateCandBudget(banded: DataFrame, probes: Int,
-      what: String): Unit = {
-    val spark = banded.sparkSession
-    val mode = Similarity.guardMode(spark, CandBudgetConfKey)
-    if (mode == "off") return
-    val budget = spark.conf.get(CandBudgetMaxKey,
-      CandBudgetDefault.toString).toLong
-    val hist = Barrier(banded.groupBy(col("tbl"), col("sig"))
-      .agg(count(lit(1)).cast("double").as("c")))
-    val oneShotF = hist
-      .agg(coalesce(sum(col("c") * (col("c") - 1.0) / 2.0), lit(0.0)))
-    // all probed flips in ONE union → one aggregate, not `probes`;
-    // r21: the one-shot and cross-term scalars evaluate in ONE fused
-    // job (scalarsOf) over the barrier'd histogram — two driver
-    // round-trips before
-    val crossTermsF = if (probes == 0) None else {
-      val flips = (0 until probes).map(p => hist.select(col("tbl"),
-          col("sig").bitwiseXOR(lit(1L << p)).as("sig"), col("c").as("cn")))
-        .reduce(_ union _)
-      Some(hist.join(flips, Seq("tbl", "sig"))
-        .agg(coalesce(sum(col("c") * col("cn")), lit(0.0))))
-    }
-    val ests = scalarsOf(Seq(oneShotF) ++ crossTermsF.toSeq)
-    val est = ests.head + (if (crossTermsF.isEmpty) 0.0 else ests.last / 2.0)
-    Barrier.release(hist)
-    if (est > budget) {
-      val msg = f"$what: the band join would generate ~$est%.3g candidate " +
+  private def lshCandBudget(banded: DataFrame, probes: Int): Guard.Priced =
+    overBudget(banded.sparkSession, CandBudgetConfKey, CandBudgetMaxKey,
+        CandBudgetDefault) {
+      val hist = Barrier(banded.groupBy(col("tbl"), col("sig"))
+        .agg(count(lit(1)).cast("double").as("c")))
+      val oneShot = hist
+        .agg(coalesce(sum(col("c") * (col("c") - 1.0) / 2.0), lit(0.0)).as("one"))
+      // all probed flips in ONE union → one aggregate, not `probes`
+      if (probes == 0) oneShot
+      else {
+        val flips = (0 until probes).map(p => hist.select(col("tbl"),
+            col("sig").bitwiseXOR(lit(1L << p)).as("sig"), col("c").as("cn")))
+          .reduce(_ union _)
+        oneShot.crossJoin(hist.join(flips, Seq("tbl", "sig"))
+            .agg(coalesce(sum(col("c") * col("cn")), lit(0.0)).as("cross")))
+          .select(col("one") + col("cross") / 2.0)
+      }
+    } { (est, budget) =>
+      f"embeddingPairs: the band join would generate ~$est%.3g candidate " +
         s"pairs (> budget $budget, conf $CandBudgetMaxKey) — candidate " +
         "volume grows as n^2*tables/2^planes at a fixed geometry " +
         "(measured r14: 1.8e12 at 2M rows for the 8x6 fixture " +
@@ -267,12 +269,9 @@ object Dedup extends org.apache.spark.internal.Logging {
         "tables from the measured per-table rate " +
         "(Similarity.lshTablesFor), use the PQ/IVF family for " +
         s"low-similarity search, or set $CandBudgetConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
     }
-  }
 
-  /** Two-sided [[validateCandBudget]] for [[incrementalEmbeddingPairs]]:
+  /** Two-sided [[lshCandBudget]] for [[incrementalEmbeddingPairs]]:
     * the probe join's candidate volume is Σ over (tbl, sig) buckets of
     * c_inc·c_corpus + C(c_inc, 2), plus — under multi-probe, which
     * lives on the INC side only — Σ over probed bit flips of
@@ -290,70 +289,56 @@ object Dedup extends org.apache.spark.internal.Logging {
     * bucket counts, with a `+ 1.0` floor standing in for the 0-or-1
     * true copies the c ≥ 2-truncated sidecar cannot see (always
     * conservative, over by ≤ (1+probes)·|inc banded rows|). */
-  private def validateIncCandBudget(corpusBanded: DataFrame,
-      incBanded: DataFrame, probes: Int, what: String,
-      corpusHist: Option[DataFrame] = None, radius: Int = 1): Unit = {
-    val spark = incBanded.sparkSession
-    val mode = Similarity.guardMode(spark, CandBudgetConfKey)
-    if (mode == "off") return
-    val budget = spark.conf.get(CandBudgetMaxKey,
-      CandBudgetDefault.toString).toLong
-    // r18: the probe targets are the FULL ≤-radius mask set (1-bit
-    // flips at the pre-r18 radius 1; +2-bit/3-bit masks under the
-    // asymmetric ladder) — the estimate must cover exactly the buckets
-    // the expanded probe join will visit, or an escalated radius could
-    // smuggle a hot 2-bits-away bucket past the guard
-    val flipMasks = Similarity.probeMasks(probes, radius).drop(1)
-    val est = corpusHist match {
-      case Some(h0) =>
-        // Θ(increment): inc-only bucket counts, corpus counts looked up
-        // in the sidecar with the +1 floor. The cross-term targets are
-        // the FLIPPED buckets — their corpus population must come from
-        // the sidecar too (an inc row probing a hot corpus-only bucket
-        // is exactly the wall this guards), so flips LEFT-join both the
-        // inc counts and the sidecar; a target absent from both gets
-        // the floor's cin·1 (conservative, never a miss).
-        val h = Barrier(h0.select(col("k.tbl").as("tbl"),
-          col("k.sig").as("sig"), col("cc").cast("double").as("hcc")))
-        val incAgg = Barrier(incBanded.groupBy(col("tbl"), col("sig"))
-          .agg(count(lit(1)).cast("double").as("ci")))
-        val ccOf = coalesce(col("hcc"), lit(0.0)) + 1.0
-        val oneShotF = incAgg.join(h, Seq("tbl", "sig"), "left")
-          .agg(coalesce(sum(ccOf * col("ci") +
-            col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)))
-        val crossTermsF = if (probes == 0) None else {
-          val flips = flippedCounts(incAgg, "ci", flipMasks)
-          Some(flips.join(incAgg, Seq("tbl", "sig"), "left")
-            .join(h, Seq("tbl", "sig"), "left")
-            .agg(coalesce(sum(col("cin") *
-              (ccOf + coalesce(col("ci"), lit(0.0)))), lit(0.0))))
-        }
-        // r21: both scalars in one fused job (scalarsOf), not one each
-        val ests = scalarsOf(Seq(oneShotF) ++ crossTermsF.toSeq)
-        Barrier.release(incAgg)
-        Barrier.release(h)
-        ests.sum
-      case None =>
-        val hist = Barrier(
-          corpusBanded.select(col("tbl"), col("sig"), lit(0).as("side"))
-            .union(incBanded.select(col("tbl"), col("sig"), lit(1).as("side")))
-            .groupBy("tbl", "sig")
-            .agg(sum(when(col("side") === 0, 1.0).otherwise(0.0)).as("cc"),
-              sum(when(col("side") === 1, 1.0).otherwise(0.0)).as("ci")))
-        val oneShotF = hist
-          .agg(coalesce(sum(col("ci") * col("cc") +
-            col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)))
-        val crossTermsF = if (probes == 0) None else {
-          val flips = flippedCounts(hist, "ci", flipMasks)
-          Some(hist.join(flips, Seq("tbl", "sig"))
-            .agg(coalesce(sum(col("cin") * (col("cc") + col("ci"))), lit(0.0))))
-        }
-        val ests = scalarsOf(Seq(oneShotF) ++ crossTermsF.toSeq)
-        Barrier.release(hist)
-        ests.sum
-    }
-    if (est > budget) {
-      val msg = f"$what: the probe join would generate ~$est%.3g " +
+  private def incLshCandBudget(corpusBanded: DataFrame,
+      incBanded: DataFrame, probes: Int, corpusHist: Option[DataFrame],
+      radius: Int): Guard.Priced =
+    overBudget(incBanded.sparkSession, CandBudgetConfKey, CandBudgetMaxKey,
+        CandBudgetDefault) {
+      // r18: the probe targets are the FULL ≤-radius mask set (1-bit
+      // flips at the pre-r18 radius 1; +2-bit/3-bit masks under the
+      // asymmetric ladder) — the estimate must cover exactly the buckets
+      // the expanded probe join will visit, or an escalated radius could
+      // smuggle a hot 2-bits-away bucket past the guard
+      val flipMasks = Similarity.probeMasks(probes, radius).drop(1)
+      val (oneShot, crossTerms) = corpusHist match {
+        case Some(h0) =>
+          // Θ(increment): inc-only bucket counts, corpus counts looked up
+          // in the sidecar with the +1 floor. The cross-term targets are
+          // the FLIPPED buckets — their corpus population must come from
+          // the sidecar too (an inc row probing a hot corpus-only bucket
+          // is exactly the wall this guards), so flips LEFT-join both the
+          // inc counts and the sidecar; a target absent from both gets
+          // the floor's cin·1 (conservative, never a miss).
+          val h = Barrier(h0.select(col("k.tbl").as("tbl"),
+            col("k.sig").as("sig"), col("cc").cast("double").as("hcc")))
+          val incAgg = Barrier(incBanded.groupBy(col("tbl"), col("sig"))
+            .agg(count(lit(1)).cast("double").as("ci")))
+          val ccOf = coalesce(col("hcc"), lit(0.0)) + 1.0
+          (incAgg.join(h, Seq("tbl", "sig"), "left")
+            .agg(coalesce(sum(ccOf * col("ci") +
+              col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)).as("one")),
+            flippedCounts(incAgg, "ci", flipMasks)
+              .join(incAgg, Seq("tbl", "sig"), "left")
+              .join(h, Seq("tbl", "sig"), "left")
+              .agg(coalesce(sum(col("cin") *
+                (ccOf + coalesce(col("ci"), lit(0.0)))), lit(0.0)).as("cross")))
+        case None =>
+          val hist = Barrier(
+            corpusBanded.select(col("tbl"), col("sig"), lit(0).as("side"))
+              .union(incBanded.select(col("tbl"), col("sig"), lit(1).as("side")))
+              .groupBy("tbl", "sig")
+              .agg(sum(when(col("side") === 0, 1.0).otherwise(0.0)).as("cc"),
+                sum(when(col("side") === 1, 1.0).otherwise(0.0)).as("ci")))
+          (hist.agg(coalesce(sum(col("ci") * col("cc") +
+              col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)).as("one")),
+            hist.join(flippedCounts(hist, "ci", flipMasks), Seq("tbl", "sig"))
+              .agg(coalesce(sum(col("cin") * (col("cc") + col("ci"))),
+                lit(0.0)).as("cross")))
+      }
+      if (probes == 0) oneShot
+      else oneShot.crossJoin(crossTerms).select(col("one") + col("cross"))
+    } { (est, budget) =>
+      f"incrementalEmbeddingPairs: the probe join would generate ~$est%.3g " +
         s"candidate pairs (> budget $budget, conf $CandBudgetMaxKey) — " +
         "a hot bucket in the corpus signature asset drags its whole " +
         "population through the join for every increment row landing " +
@@ -361,10 +346,7 @@ object Dedup extends org.apache.spark.internal.Logging {
         "from the measured per-table rate (Similarity.lshTablesFor), " +
         "use the PQ/IVF family for low-similarity search, or set " +
         s"$CandBudgetConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
     }
-  }
 
   /** Per-bucket counts re-keyed to every probe-mask flip: one row per
     * (source bucket, mask) at the FLIPPED signature — the probe-target
@@ -382,11 +364,11 @@ object Dedup extends org.apache.spark.internal.Logging {
         col(cntCol).as("cin"))
   }
 
-  /** Estimate the GUARANTEED pair output — Σ over exact-signature
+  /** Check the GUARANTEED pair output — Σ over exact-signature
     * buckets of C(c, 2), every one of which survives verification
     * (equal signatures come from equal inputs: hamming 0 / jac 1.0) —
-    * and fail loud (per [[PairBudgetConfKey]]) when it exceeds the
-    * budget: pair output on duplicate-heaped corpora is QUADRATIC (a
+    * against [[PairBudgetMaxKey]] per [[PairBudgetConfKey]]: pair
+    * output on duplicate-heaped corpora is QUADRATIC (a
     * 10 k-copy image is 5×10⁷ pairs), and no downstream consumer
     * survives what the join emits. Exact-sig heaps — not band-bucket
     * collisions — are the killer the r13 probe measured: random
@@ -405,54 +387,23 @@ object Dedup extends org.apache.spark.internal.Logging {
     * duplicate-heap mechanism, one signature family over from mm8's
     * measured wall). `remedy` names the contraction verb the caller
     * should compose instead. */
-  /** Evaluate several single-row single-DOUBLE-column estimate frames
-    * in ONE Spark job (a crossJoin of the scalar aggregates) — each
-    * guard estimate was its own driver-synchronized `.head` job
-    * otherwise, and on the multi-guard operators (the extended hamming
-    * band runs a pair guard AND a candidate guard) the precheck cost
-    * was 2-3 jobs per call (r20 verdict: dd13 re-priced an unchanged
-    * corpus every run). The guarded join still never starts before
-    * every estimate clears. */
-  private def scalarsOf(frames: Seq[DataFrame]): Seq[Double] =
-    if (frames.isEmpty) Seq.empty
-    else {
-      val row = frames.reduce(_.crossJoin(_)).head
-      frames.indices.map(row.getDouble)
-    }
-
-  /** [[validatePairBudget]]'s estimate as a 1-row frame — the seam
-    * that lets callers fuse it with other guard scalars via
-    * [[scalarsOf]]. */
-  private def pairBudgetEstFrame(docs: DataFrame, key: Column): DataFrame =
-    docs.groupBy(key.as("k"))
-      .agg(count(lit(1)).cast("double").as("c"))
-      .agg(coalesce(sum(col("c") * (col("c") - 1.0) / 2.0), lit(0.0)))
-
-  private def checkPairBudget(est: Double, budget: Long, mode: String,
-      what: String, remedy: String): Unit =
-    if (est > budget) {
-      val msg = f"$what: equal-signature heaps alone guarantee ~$est%.3g " +
+  private def heapPairBudget(docs: DataFrame, key: Column, what: String,
+      remedy: String): Guard.Priced =
+    overBudget(docs.sparkSession, PairBudgetConfKey, PairBudgetMaxKey,
+        PairBudgetDefault) {
+      docs.groupBy(key.as("k"))
+        .agg(count(lit(1)).cast("double").as("c"))
+        .agg(coalesce(sum(col("c") * (col("c") - 1.0) / 2.0), lit(0.0)))
+    } { (est, budget) =>
+      f"$what: equal-signature heaps alone guarantee ~$est%.3g " +
         s"output pairs (> budget $budget, conf $PairBudgetMaxKey) — the " +
         "quadratic all-pairs regime on duplicate-heaped signatures " +
         "(measured r13: 6.5e8 intra-bucket pairs at 500k docs OOM'd a " +
         s"32-slot/8g session). $remedy, or set " +
         s"$PairBudgetConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
     }
 
-  private def validatePairBudget(docs: DataFrame, key: Column,
-      what: String, remedy: String): Unit = {
-    val spark = docs.sparkSession
-    val mode = Similarity.guardMode(spark, PairBudgetConfKey)
-    if (mode == "off") return
-    val budget = spark.conf.get(PairBudgetMaxKey,
-      PairBudgetDefault.toString).toLong
-    checkPairBudget(pairBudgetEstFrame(docs, key).head.getDouble(0),
-      budget, mode, what, remedy)
-  }
-
-  /** Two-sided [[validatePairBudget]] for the INCREMENTAL pair
+  /** Two-sided [[heapPairBudget]] for the INCREMENTAL pair
     * generators: the guaranteed surviving pairs of the probe join are
     * Σ over exact-signature buckets of c_corpus·c_inc + C(c_inc, 2)
     * (inc×corpus plus inc×inc; corpus×corpus is never paired by
@@ -485,56 +436,39 @@ object Dedup extends org.apache.spark.internal.Logging {
     * see it: those pairs collide on FLIP-ADJACENT piece values, not
     * equal keys. The hamming callers close that gap at maxHamming > 3
     * with a separate piece-collision CANDIDATE estimate
-    * ([[validateHamCandBudget]], r20): the (piece, pval) histogram is
+    * ([[hamCandBudget]], r20): the (piece, pval) histogram is
     * bounded at 4·2¹⁶ rows at ANY corpus size, so the flip-adjacent
     * term is priceable there where the full-signature flip
     * enumeration (C(64, ≤ 7) masks) is not. */
-  private def validateIncPairBudget(corpus: DataFrame, inc: DataFrame,
-      key: Column, what: String, remedy: String,
-      corpusHist: Option[DataFrame] = None): Unit = {
-    val spark = corpus.sparkSession
-    val mode = Similarity.guardMode(spark, PairBudgetConfKey)
-    if (mode == "off") return
-    val budget = spark.conf.get(PairBudgetMaxKey,
-      PairBudgetDefault.toString).toLong
-    val est = incPairEstFrame(corpus, inc, key, corpusHist).head.getDouble(0)
-    checkIncPairBudget(est, budget, mode, what, remedy)
-  }
-
-  /** [[validateIncPairBudget]]'s estimate as a 1-row frame
-    * ([[scalarsOf]] seam — the extended hamming band fuses it with the
-    * candidate estimate into one precheck job). */
-  private def incPairEstFrame(corpus: DataFrame, inc: DataFrame,
-      key: Column, corpusHist: Option[DataFrame]): DataFrame =
-    corpusHist match {
-      case Some(hist) =>
-        inc.select(key.as("k")).groupBy("k")
-          .agg(count(lit(1)).cast("double").as("ci"))
-          .join(hist.select(col("k"), col("cc")), Seq("k"), "left")
-          .agg(coalesce(sum(
-            (coalesce(col("cc").cast("double"), lit(0.0)) + 1.0) * col("ci") +
+  private def incHeapPairBudget(corpus: DataFrame, inc: DataFrame,
+      key: Column, corpusHist: Option[DataFrame], what: String,
+      remedy: String): Guard.Priced =
+    overBudget(inc.sparkSession, PairBudgetConfKey, PairBudgetMaxKey,
+        PairBudgetDefault) {
+      corpusHist match {
+        case Some(hist) =>
+          inc.select(key.as("k")).groupBy("k")
+            .agg(count(lit(1)).cast("double").as("ci"))
+            .join(hist.select(col("k"), col("cc")), Seq("k"), "left")
+            .agg(coalesce(sum(
+              (coalesce(col("cc").cast("double"), lit(0.0)) + 1.0) * col("ci") +
+                col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)))
+        case None =>
+          corpus.select(key.as("k"), lit(0).as("side"))
+            .union(inc.select(key.as("k"), lit(1).as("side")))
+            .groupBy("k")
+            .agg(sum(when(col("side") === 0, 1.0).otherwise(0.0)).as("cc"),
+              sum(when(col("side") === 1, 1.0).otherwise(0.0)).as("ci"))
+            .agg(coalesce(sum(col("cc") * col("ci") +
               col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)))
-      case None =>
-        corpus.select(key.as("k"), lit(0).as("side"))
-          .union(inc.select(key.as("k"), lit(1).as("side")))
-          .groupBy("k")
-          .agg(sum(when(col("side") === 0, 1.0).otherwise(0.0)).as("cc"),
-            sum(when(col("side") === 1, 1.0).otherwise(0.0)).as("ci"))
-          .agg(coalesce(sum(col("cc") * col("ci") +
-            col("ci") * (col("ci") - 1.0) / 2.0), lit(0.0)))
-    }
-
-  private def checkIncPairBudget(est: Double, budget: Long, mode: String,
-      what: String, remedy: String): Unit =
-    if (est > budget) {
-      val msg = f"$what: equal-signature heaps alone guarantee ~$est%.3g " +
+      }
+    } { (est, budget) =>
+      f"$what: equal-signature heaps alone guarantee ~$est%.3g " +
         s"inc-touching output pairs (> budget $budget, conf " +
         s"$PairBudgetMaxKey) — an increment doc landing in a corpus " +
         "duplicate heap pairs with EVERY copy (the r13-measured " +
         s"quadratic regime, incremental form). $remedy, or set " +
         s"$PairBudgetConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
     }
 
   /** Piece-collision CANDIDATE budget for the extended hamming band
@@ -556,54 +490,39 @@ object Dedup extends org.apache.spark.internal.Logging {
     * a bounded join. Reuses the LSH family's candidate budget conf
     * ([[CandBudgetConfKey]]/[[CandBudgetMaxKey]]) — the same
     * semantic: rows the banded join materializes before exact
-    * verification. `partial` marks a build histogram that UNDERcounts
+    * verification. `hists` builds the (probe, build) histograms;
+    * `partial` marks a build histogram that UNDERcounts
     * (the sidecar path's ≥ 2-copy truncation hides singleton corpus
     * sigs) — the Θ(increment + histogram) daily-path contract is kept
     * at the price of that documented gap, and the message says so. */
-  private def validateHamCandBudget(probeHist: DataFrame,
-      buildHist: DataFrame, what: String, remedy: String,
-      partial: Boolean): Unit = {
-    val spark = probeHist.sparkSession
-    val mode = Similarity.guardMode(spark, CandBudgetConfKey)
-    if (mode == "off") return
-    val budget = spark.conf.get(CandBudgetMaxKey,
-      CandBudgetDefault.toString).toLong
-    val est = hamCandEstFrame(probeHist, buildHist).head.getDouble(0)
-    checkHamCandBudget(est, budget, mode, what, remedy, partial)
-  }
-
-  /** [[validateHamCandBudget]]'s estimate as a 1-row frame
-    * ([[scalarsOf]] seam). */
-  private def hamCandEstFrame(probeHist: DataFrame,
-      buildHist: DataFrame): DataFrame = {
-    val probed = probeHist.select(col("piece"),
-      explode(array(col("pval") +:
-        (0 until 16).map(b => col("pval").bitwiseXOR(lit(1L << b))): _*))
-        .as("pval"),
-      col("c").as("cp"))
-    probed.join(buildHist, Seq("piece", "pval"))
-      .agg(coalesce(sum(col("cp") * col("c")), lit(0.0)))
-  }
-
-  private def checkHamCandBudget(est: Double, budget: Long, mode: String,
-      what: String, remedy: String, partial: Boolean): Unit =
-    if (est > budget) {
+  private def hamCandBudget(spark: org.apache.spark.sql.SparkSession,
+      what: String, remedy: String, partial: Boolean)(
+      hists: => (DataFrame, DataFrame)): Guard.Priced =
+    overBudget(spark, CandBudgetConfKey, CandBudgetMaxKey,
+        CandBudgetDefault) {
+      val (probeHist, buildHist) = hists
+      probeHist.select(col("piece"),
+          explode(array(col("pval") +:
+            (0 until 16).map(b => col("pval").bitwiseXOR(lit(1L << b))): _*))
+            .as("pval"),
+          col("c").as("cp"))
+        .join(buildHist, Seq("piece", "pval"))
+        .agg(coalesce(sum(col("cp") * col("c")), lit(0.0)))
+    } { (est, budget) =>
       val part = if (!partial) "" else " (an UNDERcount here: the " +
         "sidecar histogram's >=2-copy truncation hides singleton " +
         "corpus sigs, so the true volume is higher still)"
-      val msg = f"$what: the one-bit piece probe join at the extended " +
+      f"$what: the one-bit piece probe join at the extended " +
         f"hamming band would materialize ~$est%.3g candidate rows$part " +
         s"(> budget $budget, conf $CandBudgetMaxKey) — near-equal " +
         "signature clusters collide on flip-adjacent piece values the " +
         "exact-heap pair guard cannot see. At this signature density " +
         "the h >= 4 probe join is quadratic-shaped; " +
         s"$remedy, or set $CandBudgetConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
     }
 
   /** (piece, pval) histogram of slim piece rows — bounded at 4·2¹⁶
-    * rows at any corpus size (the property [[validateHamCandBudget]]
+    * rows at any corpus size (the property [[hamCandBudget]]
     * prices with). */
   private def pieceHistOf(pieces: DataFrame): DataFrame =
     pieces.groupBy(col("piece"), col("pval"))
@@ -674,7 +593,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * smaller of any framing — and members are never pair-expanded),
     * and [[incrementalHammingPairs]] already probes the increment.
     * At h ≥ 4 the flip-adjacent candidate volume is additionally
-    * priced by [[validateHamCandBudget]] (r19 ADVICE: near-equal
+    * priced by [[hamCandBudget]] (r19 ADVICE: near-equal
     * signature clusters are invisible to the exact-heap pair guard),
     * one bounded aggregate before the join runs. */
   def hammingPairs(sigs: DataFrame, idCol: String, sigCol: String,
@@ -695,42 +614,23 @@ object Dedup extends org.apache.spark.internal.Logging {
         posexplode(array((0 until 4).map(i =>
           shiftright(col("sig"), 16 * i).bitwiseAND(0xFFFFL)): _*)))
       .withColumnRenamed("pos", "piece").withColumnRenamed("col", "pval")
-    // r21: the pair guard and (at the extended band) the candidate
-    // guard evaluate in ONE fused precheck job (scalarsOf) — each
-    // estimate was its own driver-synchronized head job before
-    val spark = sigs.sparkSession
-    val pairMode = Similarity.guardMode(spark, PairBudgetConfKey)
-    val candMode = Similarity.guardMode(spark, CandBudgetConfKey)
-    val pairEst =
-      if (pairMode == "off") None
-      else Some(pairBudgetEstFrame(docs, col("sig")))
-    val candGuardOn = maxHamming > 3 && candMode != "off"
-    var histBarrier: Option[DataFrame] = None
-    val candEst =
-      if (!candGuardOn) None
-      else {
+    // the pair guard and (at the extended band) the candidate guard
+    // evaluate in ONE fused precheck job
+    val candGuard = if (maxHamming <= 3) Nil else Seq(
+      hamCandBudget(sigs.sparkSession, "hammingPairs",
+        "Use Dedup.hammingGroups (the 17x probe expansion then runs " +
+          "over DISTINCT signatures) or tighten maxHamming to <= 3",
+        partial = false) {
         // both sides of the candidate estimate read one histogram — a
         // barrier keeps the (possibly expensive) signature input from
         // being aggregated twice
         val hist = Barrier(pieceHistOf(pieces))
-        histBarrier = Some(hist)
-        Some(hamCandEstFrame(hist, hist))
-      }
-    val ests = scalarsOf(pairEst.toSeq ++ candEst.toSeq)
-    pairEst.foreach { _ =>
-      checkPairBudget(ests.head, spark.conf.get(PairBudgetMaxKey,
-        PairBudgetDefault.toString).toLong, pairMode, "hammingPairs",
-        "Use Dedup.hammingGroups (contracts to distinct signatures " +
-          "first — linear in n, members never pair-expanded)")
-    }
-    candEst.foreach { _ =>
-      checkHamCandBudget(ests.last, spark.conf.get(CandBudgetMaxKey,
-        CandBudgetDefault.toString).toLong, candMode, "hammingPairs",
-        "Use Dedup.hammingGroups (the 17x probe expansion then runs " +
-          "over DISTINCT signatures) or tighten maxHamming to <= 3",
-        partial = false)
-    }
-    histBarrier.foreach(Barrier.release)
+        (hist, hist)
+      })
+    Guard.run(sigs.sparkSession, heapPairBudget(docs, col("sig"),
+      "hammingPairs",
+      "Use Dedup.hammingGroups (contracts to distinct signatures " +
+        "first — linear in n, members never pair-expanded)") +: candGuard: _*)
     val a = piecesProbed(pieces, maxHamming).alias("a")
     val b = pieces.alias("b")
     val hamming = bit_count(col("a.sig").bitwiseXOR(col("b.sig")))
@@ -879,7 +779,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     // scans the corpus and skips the barrier; guard mode `off` skips
     // it too (nothing would read it twice).
     val guardedFallback = maxHamming > 3 && corpusHist.isEmpty &&
-      Similarity.guardMode(corpusSigs.sparkSession, CandBudgetConfKey) != "off"
+      Guard.mode(corpusSigs.sparkSession, CandBudgetConfKey) != "off"
     val corpusPieces =
       if (guardedFallback) Barrier(pieces(corpusSigs)) else pieces(corpusSigs)
     val allPieces = incPieces.union(corpusPieces)
@@ -902,39 +802,22 @@ object Dedup extends org.apache.spark.internal.Logging {
     // pair guard's own fallback).
     // r21 (r20 verdict item 3 — dd13 paid ~0.5 s/run re-pricing an
     // unchanged corpus): BOTH guards' estimates evaluate in ONE fused
-    // job (scalarsOf) over the shared piece barriers, instead of a
+    // job over the shared piece barriers, instead of a
     // barrier + head job per guard — at the extended band that is 1
     // precheck job where r20 ran 3 (incHist barrier + 2 heads). The
     // incHist barrier is kept ONLY on the sidecar path, where the
     // build histogram unions the probe histogram (two reads in the
     // fused job); the fallback path reads each histogram once.
     val spark = corpusSigs.sparkSession
-    val pairMode = Similarity.guardMode(spark, PairBudgetConfKey)
-    val candMode = Similarity.guardMode(spark, CandBudgetConfKey)
-    val pairRemedy = "Contract the corpus heaps with Dedup.hammingGroups " +
-      "(persist the contracted signature asset) or exact-dedup the " +
-      "increment first"
-    val candRemedy = "Contract the corpus heaps with Dedup.hammingGroups " +
-      "(persist the contracted signature asset), exact-dedup the " +
-      "increment first, or tighten maxHamming to <= 3"
-    val pairEst =
-      if (pairMode == "off") None
-      else Some(incPairEstFrame(keyed(corpusPieces), keyed(incPieces),
-        col("sig"), corpusHist))
-    val candGuardOn = maxHamming > 3 && candMode != "off"
-    var incHistBarrier: Option[DataFrame] = None
-    val candEst =
-      if (!candGuardOn) None
-      else {
-        val incHist =
-          if (corpusHist.isEmpty) pieceHistOf(incPieces)
-          else {
-            val b = Barrier(pieceHistOf(incPieces))
-            incHistBarrier = Some(b)
-            b
-          }
-        val buildHist = corpusHist match {
+    val candGuard = if (maxHamming <= 3) Nil else Seq(
+      hamCandBudget(spark, "incrementalHammingPairs",
+        "Contract the corpus heaps with Dedup.hammingGroups " +
+          "(persist the contracted signature asset), exact-dedup the " +
+          "increment first, or tighten maxHamming to <= 3",
+        partial = corpusHist.isDefined) {
+        corpusHist match {
           case Some(h) =>
+            val incHist = Barrier(pieceHistOf(incPieces))
             val corpusPieceHist = h.select(col("k").as("sig"),
                 col("cc").cast("double").as("cc"))
               .select(col("cc"), posexplode(array((0 until 4).map(i =>
@@ -945,24 +828,15 @@ object Dedup extends org.apache.spark.internal.Logging {
               .agg(sum(col("cc")).as("c"))
             // split (piece, pval) keys across the two sides sum
             // linearly through the estimate's Σ cp·cb — no re-aggregate
-            corpusPieceHist.union(incHist)
-          case None => pieceHistOf(allPieces)
+            (incHist, corpusPieceHist.union(incHist))
+          case None => (pieceHistOf(incPieces), pieceHistOf(allPieces))
         }
-        Some(hamCandEstFrame(incHist, buildHist))
-      }
-    val ests = scalarsOf(pairEst.toSeq ++ candEst.toSeq)
-    pairEst.foreach { _ =>
-      checkIncPairBudget(ests.head, spark.conf.get(PairBudgetMaxKey,
-        PairBudgetDefault.toString).toLong, pairMode,
-        "incrementalHammingPairs", pairRemedy)
-    }
-    candEst.foreach { _ =>
-      checkHamCandBudget(ests.last, spark.conf.get(CandBudgetMaxKey,
-        CandBudgetDefault.toString).toLong, candMode,
-        "incrementalHammingPairs", candRemedy,
-        partial = corpusHist.isDefined)
-    }
-    incHistBarrier.foreach(Barrier.release)
+      })
+    Guard.run(spark, incHeapPairBudget(keyed(corpusPieces), keyed(incPieces),
+      col("sig"), corpusHist, "incrementalHammingPairs",
+      "Contract the corpus heaps with Dedup.hammingGroups " +
+        "(persist the contracted signature asset) or exact-dedup the " +
+        "increment first") +: candGuard: _*)
     val hamming = bit_count(col("a.sig").bitwiseXOR(col("b.sig")))
     // inc probes the union: inc-inc pairs arrive in both orientations,
     // inc-corpus in one; canonicalize + distinct (hamming is symmetric
@@ -1024,7 +898,24 @@ object Dedup extends org.apache.spark.internal.Logging {
       tables: Int, planes: Int, threshold: Double, probes: Int = 0): DataFrame = {
     require(probes >= 0 && probes <= planes,
       s"probes must be in [0, planes=$planes], got $probes")
-    validateLshRecall(tables, planes, threshold, probes, df.sparkSession)
+    // pinned-geometry MODEL recall, no job: 1-(1-rate)^tables at the
+    // closed-form per-pair rate; pairs above the threshold collide at a
+    // higher rate, so the check is conservative for them
+    Guard.check(df.sparkSession, Similarity.LshSizingConfKey) {
+      val modelRecall = 1.0 - math.pow(
+        1.0 - Similarity.lshPerTableRate(threshold, planes, probes), tables)
+      if (modelRecall >= Similarity.LshRecallFloor) None
+      else Some(f"embeddingPairs geometry ${tables}x$planes " +
+        f"(probes=$probes) has model recall $modelRecall%.3f at the " +
+        f"$threshold verification threshold — below the " +
+        f"${Similarity.LshRecallFloor} collapse floor: most qualifying " +
+        "pairs are expected MISSED (the r14 probe measured a committed " +
+        "one-shot geometry at 1-7% recall on diffuse corpora). Use the " +
+        "auto-sized overload (threshold only), size tables from " +
+        "Similarity.lshTablesFor at a measured or modeled per-table " +
+        "rate (Similarity.lshPerTableRate), or set " +
+        s"${Similarity.LshSizingConfKey}=warn|off.")
+    }
     VectorFunctions.register(df.sparkSession)
     // r20 A/B note: widening below this projection (the full e frame)
     // measured MIXED (−0.5 s on one quiet-window A/B, +0.3–0.7 under
@@ -1050,7 +941,7 @@ object Dedup extends org.apache.spark.internal.Logging {
         posexplode(VectorFunctions.lshSignatures(col("embedding"), tables, planes)))
       .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "sig")),
       col("vec_id"))
-    validateCandBudget(tagged, probes, "embeddingPairs")
+    Guard.run(df.sparkSession, lshCandBudget(tagged, probes))
     val probed =
       if (probes == 0) tagged
       else tagged.select(col("vec_id"), col("tbl"),
@@ -1093,39 +984,6 @@ object Dedup extends org.apache.spark.internal.Logging {
     val g = Similarity.lshGeometryFor(df.count(), threshold,
       df.sparkSession, maxRadius = 1)
     embeddingPairs(df, idCol, vecCol, g.tables, g.planes, threshold, g.probes)
-  }
-
-  /** Throw (or warn, per [[Similarity.LshSizingConfKey]]) when a
-    * caller-PINNED band geometry's MODEL recall at the verification
-    * threshold sits below [[Similarity.LshRecallFloor]] — the
-    * collapse regime: the r14 probe measured a committed one-shot
-    * geometry recalling 1–7% of qualifying neighbors on diffuse
-    * corpora while nothing in the API flagged it. Pure arithmetic
-    * (no job): rate = closed-form per-pair Bernoulli, recall =
-    * 1−(1−rate)^tables. Pairs above the threshold collide at a
-    * higher rate, so the check is conservative for the qualifying
-    * population. */
-  private def validateLshRecall(tables: Int, planes: Int,
-      threshold: Double, probes: Int,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mode = Similarity.guardMode(spark, Similarity.LshSizingConfKey)
-    if (mode == "off") return
-    val rate = Similarity.lshPerTableRate(threshold, planes, probes)
-    val modelRecall = 1.0 - math.pow(1.0 - rate, tables)
-    if (modelRecall < Similarity.LshRecallFloor) {
-      val msg = f"embeddingPairs geometry ${tables}x$planes " +
-        f"(probes=$probes) has model recall $modelRecall%.3f at the " +
-        f"$threshold verification threshold — below the " +
-        f"${Similarity.LshRecallFloor} collapse floor: most qualifying " +
-        "pairs are expected MISSED (the r14 probe measured a committed " +
-        "one-shot geometry at 1-7% recall on diffuse corpora). Use the " +
-        "auto-sized overload (threshold only), size tables from " +
-        "Similarity.lshTablesFor at a measured or modeled per-table " +
-        "rate (Similarity.lshPerTableRate), or set " +
-        s"${Similarity.LshSizingConfKey}=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
-    }
   }
 
   /** Persistable hyperplane-LSH signature asset for INCREMENTAL
@@ -1188,8 +1046,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     // embeddingPairs guard extended to the incremental generator);
     // r16: Θ(increment) when the embeddingGuardKeys sidecar is passed;
     // r18: cross terms cover the full ≤-radius probe-mask set
-    validateIncCandBudget(banded(corpusSigs), incBanded, probes,
-      "incrementalEmbeddingPairs", corpusHist, radius)
+    Guard.run(incSigs.sparkSession, incLshCandBudget(banded(corpusSigs),
+      incBanded, probes, corpusHist, radius))
     val probed =
       if (probes == 0) incBanded
       else incBanded.select(col("vec_id"), col("tbl"),
@@ -1749,8 +1607,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     // normalized (trim + lowercase) like the enforce|warn|off guard
     // confs read through SQLConf: 'OFF'/' On ' must select the mode,
     // not throw mid-pipeline at the first read-time call (r17 ADVICE)
-    val mode = Similarity.confMode(spark, PairHistConfKey, "on", Seq("on", "off"))
-    if (mode == "off") return None
+    if (Guard.mode(spark, PairHistConfKey, "on", Seq("on", "off")) == "off")
+      return None
     val (fs, root) = assetFs(spark, dir)
     val scan = scanAsset(fs, root)
     val histPaths = scan.gen

@@ -12,23 +12,6 @@ import graft.functions.VectorFunctions
   * (q_id, n_id, cos, rank). */
 object Similarity extends org.apache.spark.internal.Logging {
 
-  /** Read a mode conf (enforce|warn|off guards, the pairhist on|off
-    * toggle) NORMALIZED — trimmed and lowercased — so 'OFF' / ' Warn '
-    * select the mode instead of throwing mid-pipeline at the first
-    * guarded call (r17 ADVICE); a genuinely unknown token still fails
-    * loud naming the key and the accepted set. */
-  private[graft] def confMode(spark: org.apache.spark.sql.SparkSession,
-      key: String, default: String, allowed: Seq[String]): String = {
-    val mode = spark.conf.get(key, default).trim.toLowerCase
-    require(allowed.contains(mode),
-      s"$key must be ${allowed.mkString("|")}, got '$mode'")
-    mode
-  }
-
-  private[graft] def guardMode(spark: org.apache.spark.sql.SparkSession,
-      key: String): String =
-    confMode(spark, key, "enforce", Seq("enforce", "warn", "off"))
-
   /** Session conf governing the coarse-quantizer sizing check:
     * `enforce` (default) throws on a k₁ outside the √ band, `warn`
     * logs the cost model and proceeds, `off` skips the check. */
@@ -48,31 +31,25 @@ object Similarity extends org.apache.spark.internal.Logging {
   def coarseSizeFor(k: Long, w: Int): Int =
     math.max(1, math.round(math.sqrt(w.toDouble * k))).toInt
 
-  /** Throw (or warn, per [[HierSizingConfKey]]) when a pinned k₁ costs
+  /** [[HierSizingConfKey]]'s verdict: a pinned k₁ trips when it costs
     * more than [[HierSizingBand]]× the optimal routing — the guard the
     * r12 verdict asked for: the measured third-decade wall was
     * "prevented only by documentation". */
-  private def validateHierSizing(k: Long, k1: Long, w: Int,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mode = guardMode(spark, HierSizingConfKey)
-    if (mode == "off" || k == 0 || k1 == 0) return
+  private def hierSizingVerdict(k: Long, k1: Long, w: Int): Option[String] = {
     val actual = k1 + w.toDouble * k / k1
     val optimal = 2.0 * math.sqrt(w.toDouble * k)
-    if (actual > HierSizingBand * optimal) {
-      val msg = f"hier routing k1=$k1 is outside the sqrt band for " +
-        f"k=$k, w=$w: per-row cost k1 + w*k/k1 = ${actual}%.0f dots vs " +
-        f"optimal 2*sqrt(w*k) = ${optimal}%.0f at k1* = " +
-        s"${coarseSizeFor(k, w)} (${f"${actual / optimal}%.1f"}x > " +
-        s"${HierSizingBand}x band). A k1 that grows linearly with k " +
-        "re-creates the n*k1 routing wall; size k1 ~ sqrt(w*k) (or use " +
-        s"the auto-sized overload), or set $HierSizingConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
-    }
+    if (k == 0 || k1 == 0 || actual <= HierSizingBand * optimal) None
+    else Some(f"hier routing k1=$k1 is outside the sqrt band for " +
+      f"k=$k, w=$w: per-row cost k1 + w*k/k1 = ${actual}%.0f dots vs " +
+      f"optimal 2*sqrt(w*k) = ${optimal}%.0f at k1* = " +
+      s"${coarseSizeFor(k, w)} (${f"${actual / optimal}%.1f"}x > " +
+      s"${HierSizingBand}x band). A k1 that grows linearly with k " +
+      "re-creates the n*k1 routing wall; size k1 ~ sqrt(w*k) (or use " +
+      s"the auto-sized overload), or set $HierSizingConfKey=warn|off.")
   }
 
   /** Session conf governing the PQ-family rerank-budget check
-    * ([[validateRerankSizing]]): `enforce` (default) throws on a
+    * ([[rerankSizingVerdict]]): `enforce` (default) throws on a
     * caller-pinned rerank an order of magnitude below the calibrated
     * curve, `warn` logs and proceeds, `off` skips. */
   val RerankSizingConfKey = "spark.graft.rerank.sizing"
@@ -125,35 +102,28 @@ object Similarity extends org.apache.spark.internal.Logging {
     math.min(math.max(10L * k, curve), n - 1).toInt
   }
 
-  /** Throw (or warn, per [[RerankSizingConfKey]]) when a pinned rerank
-    * budget sits [[RerankBand]]× below the calibrated curve for the
+  /** [[RerankSizingConfKey]]'s verdict: a pinned rerank budget trips
+    * when it sits [[RerankBand]]× below the calibrated curve for the
     * corpus size — the guard the r13 verdict asked for: the probe
     * measured recall collapsing 0.94 → 0.35 under a fixed tuning-scale
     * R while nothing in the API stopped a caller from pinning it. */
-  private def validateRerankSizing(nByName: => Long, k: Int, rerank: Int,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mode = guardMode(spark, RerankSizingConfKey)
-    if (mode == "off") return // before forcing n: `off` must skip the count job
-    val n = nByName
-    if (n <= 0) return
+  private def rerankSizingVerdict(n: Long, k: Int,
+      rerank: Int): Option[String] = {
     val auto = rerankFor(n, k)
     val floor = math.max(k.toLong, auto.toLong / RerankBand)
-    if (rerank < floor) {
-      val msg = s"PQ rerank budget $rerank is >${RerankBand}x below the " +
-        s"calibrated curve for a $n-row corpus: R(n) = $RerankCalibR * " +
-        s"sqrt(n/$RerankCalibN) = $auto (floor $floor). A tuning-scale " +
-        "constant collapses recall as the corpus grows (measured r13: " +
-        "R=50 read recall@5 0.35 at 2M vectors vs 0.91 at the " +
-        "corpus-scaled R=5000). Use the auto-sized overload (no rerank " +
-        "arg), re-measure the knee at this scale with tools/RecallProbe, " +
-        s"or set $RerankSizingConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
-    }
+    if (n <= 0 || rerank >= floor) None
+    else Some(s"PQ rerank budget $rerank is >${RerankBand}x below the " +
+      s"calibrated curve for a $n-row corpus: R(n) = $RerankCalibR * " +
+      s"sqrt(n/$RerankCalibN) = $auto (floor $floor). A tuning-scale " +
+      "constant collapses recall as the corpus grows (measured r13: " +
+      "R=50 read recall@5 0.35 at 2M vectors vs 0.91 at the " +
+      "corpus-scaled R=5000). Use the auto-sized overload (no rerank " +
+      "arg), re-measure the knee at this scale with tools/RecallProbe, " +
+      s"or set $RerankSizingConfKey=warn|off.")
   }
 
   /** Session conf governing the PQ-family AUTO paths' concentration
-    * floor ([[validatePqConcentration]]): `enforce` (default) throws
+    * floor ([[pqConcVerdict]]): `enforce` (default) throws
     * when the measured corpus concentration sits in the regime where
     * the √n rerank curve is REFUTED, `warn` logs the measurement and
     * proceeds, `off` skips (skips the sample job too). The pinned
@@ -164,16 +134,12 @@ object Similarity extends org.apache.spark.internal.Logging {
 
   /** Per-query COLLAPSE LEVEL: the kth-NN cosine at or above which a
     * query's neighborhood sits in the regime where the √n rerank
-    * curve is refuted (conf `spark.graft.pq.concfloor.stat`
-    * overrides; see [[PqConcStatFloorDefault]]'s scaladoc for the
-    * measured calibration). Through r16 this value was compared
-    * against the 10th-PERCENTILE statistic; since r17 the floor trips
-    * on the FRACTION of queries at/above the level
-    * ([[PqConcFracKey]]) — the percentile form is measurably blind to
-    * mixtures. */
-  val PqConcStatFloorKey = "spark.graft.pq.concfloor.stat"
-
-  /** MEASURED calibration. r16 (tools/ConcStatProbe over the r15
+    * curve is refuted. Through r16 this value was compared against
+    * the 10th-PERCENTILE statistic; since r17 the floor trips on the
+    * FRACTION of queries at/above the level ([[PqConcFrac]]) — the
+    * percentile form is measurably blind to mixtures.
+    *
+    * MEASURED calibration. r16 (tools/ConcStatProbe over the r15
     * recall campaign's own fixtures): the 10th-percentile 5th-NN
     * cosine ([[annConcentration]], k = 5, sampleN = 1024) reads
     * 0.267–0.326 on every diffuse fixture (sf0.001 / sf0.01 / sf0.1
@@ -190,13 +156,12 @@ object Similarity extends org.apache.spark.internal.Logging {
     * the diffuse band, at every λ ≤ 0.75 while the auto curve
     * collapsed to 0.58/0.47 at 200 k), which is why the floor now
     * trips on the at-level FRACTION instead
-    * (target/r17_mix_probe.log; [[PqConcFracDefault]]). */
-  val PqConcStatFloorDefault = 0.6
+    * (target/r17_mix_probe.log; [[PqConcFrac]]). */
+  val PqConcStatFloor = 0.6
 
-  /** Tolerated concentrated-query share for the PQ auto paths (conf
-    * `spark.graft.pq.concfloor.frac`): the floor trips when more than
-    * this fraction of sample queries sit at/above the
-    * [[PqConcStatFloorKey]] collapse level. Default 0.1 = 1 − the 0.9
+  /** Tolerated concentrated-query share for the PQ auto paths: the
+    * floor trips when more than this fraction of sample queries sit
+    * at/above the [[PqConcStatFloor]] collapse level. 0.1 = 1 − the 0.9
     * recall target the calculators size for: if the concentrated
     * slice collapsed to zero recall, a smaller share could not pull
     * the composite below target, while a larger one provably can —
@@ -207,13 +172,12 @@ object Similarity extends org.apache.spark.internal.Logging {
     * corpora. The trip is deliberately conservative at small n
     * (20 k mixtures still read 0.89–0.99 — there the remedy costs
     * only ~1.2× the auto budget and reads ≥ 0.97). */
-  val PqConcFracKey = "spark.graft.pq.concfloor.frac"
-  val PqConcFracDefault = 0.1
+  val PqConcFrac = 0.1
 
-  /** Throw (or warn, per [[PqConcConfKey]]) when an AUTO-sized
-    * PQ-family call is about to run the √n rerank curve on a corpus
-    * where more than [[PqConcFracKey]] of the query population sits
-    * in the curve's refuted regime: heavy manifold concentration
+  /** [[PqConcConfKey]]'s verdict: an AUTO-sized PQ-family call trips
+    * when it is about to run the √n rerank curve on a corpus where more
+    * than [[PqConcFrac]] of the query population sits in the curve's
+    * refuted regime: heavy manifold concentration
     * compresses within-cluster cosine gaps below ADC's resolution, so
     * the auto budget silently reads 0.23–0.47 recall@5 where R =
     * cluster population reads 1.0000 (r15 clustered fixture, three
@@ -224,12 +188,9 @@ object Similarity extends org.apache.spark.internal.Logging {
     * at 0.28 — a 10% diffuse minority pins any low percentile in the
     * diffuse band no matter how large the clustered mass. Costs one
     * sample-sized statistic job ([[concentrationSample]]) per auto
-    * call; `off` skips the job entirely. */
-  private def validatePqConcentration(cNormed: DataFrame, n: Long,
-      k: Int, what: String): Unit = {
-    val spark = cNormed.sparkSession
-    val mode = guardMode(spark, PqConcConfKey)
-    if (mode == "off") return
+    * call; under `off` [[Guard.check]] never runs it. */
+  private def pqConcVerdict(cNormed: DataFrame, n: Long,
+      k: Int, what: String): Option[String] = {
     // A corpus with n <= k rows cannot be in the collapse regime the
     // floor polices (there is no "cluster population >> rerank budget"
     // at that size, and the exact scan is affordable anyway) — and
@@ -240,34 +201,27 @@ object Similarity extends org.apache.spark.internal.Logging {
       logWarning(s"$what: corpus holds only $n rows (<= k = $k) — " +
         "concentration floor skipped; a corpus this small cannot " +
         "collapse the sqrt(n) rerank curve")
-      return
+      return None
     }
-    val tau = spark.conf.get(PqConcFracKey,
-      PqConcFracDefault.toString).toDouble
     val cs = concentrationSample(cNormed, "vec_id", "embedding", k, 1024,
       Some(n))
     Barrier.release(cs.sample)
-    if (!cs.concFrac.isNaN && cs.concFrac >= tau) {
-      val level = spark.conf.get(PqConcStatFloorKey,
-        PqConcStatFloorDefault.toString).toDouble
-      val msg = f"$what (auto-sized): ${100 * cs.concFrac}%.0f%% of " +
-        f"sampled queries have their ${k}th-NN cosine >= $level " +
-        f"(tolerated share ${100 * tau}%.0f%%, conf $PqConcFracKey) — " +
-        "that query population sits outside the sqrt(n) rerank " +
-        "curve's validated regime (measured r15-r17: diffuse corpora " +
-        "hold 0.91-0.97 recall@5 on the curve; clustered ones read " +
-        "0.23-0.47, and MIXTURES collapse the same way while keeping " +
-        "a diffuse-looking 10th-percentile statistic — lambda=0.5/" +
-        "0.75 mixes at 200k read 0.58/0.47 on the auto budget where " +
-        "the measured remedy read 0.99; within-cluster cosine gaps " +
-        "compress below ADC's resolution, and recall returns only at " +
-        "R = cluster population). Use rerankForMeasured (pass its " +
-        "budget to the pinned overload), route with annTopK/annRoute " +
-        "(it takes the measured-rerank path on this shape), or set " +
-        s"$PqConcConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
-    }
+    if (cs.concFrac.isNaN || cs.concFrac < PqConcFrac) None
+    else Some(f"$what (auto-sized): ${100 * cs.concFrac}%.0f%% of " +
+      f"sampled queries have their ${k}th-NN cosine >= $PqConcStatFloor " +
+      f"(tolerated share ${100 * PqConcFrac}%.0f%%) — " +
+      "that query population sits outside the sqrt(n) rerank " +
+      "curve's validated regime (measured r15-r17: diffuse corpora " +
+      "hold 0.91-0.97 recall@5 on the curve; clustered ones read " +
+      "0.23-0.47, and MIXTURES collapse the same way while keeping " +
+      "a diffuse-looking 10th-percentile statistic — lambda=0.5/" +
+      "0.75 mixes at 200k read 0.58/0.47 on the auto budget where " +
+      "the measured remedy read 0.99; within-cluster cosine gaps " +
+      "compress below ADC's resolution, and recall returns only at " +
+      "R = cluster population). Use rerankForMeasured (pass its " +
+      "budget to the pinned overload), route with annTopK/annRoute " +
+      "(it takes the measured-rerank path on this shape), or set " +
+      s"$PqConcConfKey=warn|off.")
   }
 
   /** Session conf governing the IVFADC probe-width check: same
@@ -281,31 +235,25 @@ object Similarity extends org.apache.spark.internal.Logging {
     * tune scale) sits inside the tolerated band below this. */
   def probeFor(nCells: Int): Int = math.max(1, (nCells + 1) / 2)
 
-  /** Throw (or warn, per [[ProbeSizingConfKey]]) when a pinned nProbe
-    * is below HALF of [[probeFor]] (i.e. < nCells/4) — the
+  /** [[ProbeSizingConfKey]]'s verdict: a pinned nProbe trips below
+    * HALF of [[probeFor]] (i.e. < nCells/4) — the
     * probe-starved regime: the r13 sweep measured s8's recall ceiling
     * as PROBE-limited (nProbe 3 → 8 moved 0.70 → 0.87 at 200 k while
     * 4× the residual codes moved it only 0.70 → 0.73), so too few
     * probed cells is unfixable by any rerank budget: true neighbors
     * in unprobed cells are unreachable. */
-  private def validateProbeSizing(nCells: Int, nProbe: Int,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mode = guardMode(spark, ProbeSizingConfKey)
-    if (mode == "off") return
+  private def probeSizingVerdict(nCells: Int, nProbe: Int): Option[String] = {
     val floor = math.max(1, (nCells + 3) / 4)
-    if (nProbe < floor) {
-      val msg = s"IVFADC nProbe=$nProbe of $nCells cells is below the " +
-        s"probe-starved floor $floor (= nCells/4; the recall-robust " +
-        s"width is probeFor(nCells) = ${probeFor(nCells)}). Recall in " +
-        "this regime is PROBE-limited — true neighbors in unprobed " +
-        "cells are unreachable at any rerank budget (measured r13: " +
-        "nProbe 3->8 moved recall 0.70->0.87 at 200k vectors while 4x " +
-        "the residual codes moved it 0.70->0.73). Use the auto-sized " +
-        "overload, re-measure with tools/RecallProbe, or set " +
-        s"$ProbeSizingConfKey=warn|off."
-      if (mode == "warn") logWarning(msg)
-      else throw new IllegalArgumentException(msg)
-    }
+    if (nProbe >= floor) None
+    else Some(s"IVFADC nProbe=$nProbe of $nCells cells is below the " +
+      s"probe-starved floor $floor (= nCells/4; the recall-robust " +
+      s"width is probeFor(nCells) = ${probeFor(nCells)}). Recall in " +
+      "this regime is PROBE-limited — true neighbors in unprobed " +
+      "cells are unreachable at any rerank budget (measured r13: " +
+      "nProbe 3->8 moved recall 0.70->0.87 at 200k vectors while 4x " +
+      "the residual codes moved it 0.70->0.73). Use the auto-sized " +
+      "overload, re-measure with tools/RecallProbe, or set " +
+      s"$ProbeSizingConfKey=warn|off.")
   }
 
   /** Hash tables needed for a target candidate recall given a
@@ -517,7 +465,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       LshMaxCandFracDefault.toString).toDouble
     // conf validated on EVERY call (not just past the cap): a typo'd
     // mode must not pass silently until the first over-cap corpus
-    val mode = guardMode(spark, LshSizingConfKey)
+    val mode = Guard.mode(spark, LshSizingConfKey)
     val tried = lshRadiusLadder(n, threshold, recallTarget, maxRadius)
     lshRadiusFit(tried, maxTables, maxFrac) match {
       case Some(g) => g
@@ -540,8 +488,7 @@ object Similarity extends org.apache.spark.internal.Logging {
           "(pqTopK/ivfadcTopK) for low-similarity search, or set " +
           s"$LshSizingConfKey=warn|off to clamp to the caps (an " +
           "explicit recall floor)."
-        if (mode == "enforce") throw new IllegalArgumentException(msg)
-        if (mode == "warn") logWarning(msg)
+        Guard.trip(mode, msg)
         // clamp: cap the tables, then take the largest radius whose
         // candidate fraction still fits the budget at that table count
         // (radius 1 is always admissible — it is the r14-validated
@@ -641,7 +588,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       s"probes must be in [0, planes=$planes], got $probes")
     val maxFrac = spark.conf.get(LshMaxCandFracKey,
       LshMaxCandFracDefault.toString).toDouble
-    val mode = guardMode(spark, LshSizingConfKey)
+    val mode = Guard.mode(spark, LshSizingConfKey)
     def recallAt(r: Int): Double = 1.0 - math.pow(
       1.0 - lshPerTableRate(threshold, planes, probes, r), tables)
     def fracAt(r: Int): Double =
@@ -682,8 +629,7 @@ object Similarity extends org.apache.spark.internal.Logging {
           "use the PQ/IVF family for low-similarity search, or set " +
           s"$LshSizingConfKey=warn|off to clamp to the best " +
           "admissible rung (an explicit recall floor)."
-        if (mode == "enforce") throw new IllegalArgumentException(msg)
-        if (mode == "warn") logWarning(msg)
+        Guard.trip(mode, msg)
         admissible.maxBy(_._2)._1
     }
   }
@@ -705,7 +651,7 @@ object Similarity extends org.apache.spark.internal.Logging {
 
   /** The CONCENTRATED-QUERY FRACTION on the same sample as
     * [[annConcentration]]: the share of sample queries whose kth-NN
-    * cosine sits at or above the [[PqConcStatFloorKey]] collapse level
+    * cosine sits at or above the [[PqConcStatFloor]] collapse level
     * — the statistic the r17 mixture campaign showed the percentile
     * form is blind to (a 10% diffuse minority pins the 10th
     * percentile in the diffuse band while the clustered MAJORITY
@@ -758,11 +704,8 @@ object Similarity extends org.apache.spark.internal.Logging {
       vecCol: String, k: Int, sampleN: Int,
       nKnown: Option[Long] = None): ConcSample = {
     concentrationSampleRuns.incrementAndGet()
-    val spark = corpus.sparkSession
     val n = nKnown.getOrElse(corpus.count())
     require(n > k, s"corpus must hold more than k=$k rows, got $n")
-    val level = spark.conf.get(PqConcStatFloorKey,
-      PqConcStatFloorDefault.toString).toDouble
     val stride = math.max(1L, n / sampleN)
     // The window is over ≤ ~sampleN rows — single-partition by design.
     val sample = Barrier(corpus
@@ -776,7 +719,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     val row = cosineTopK(sample, sample, idCol, vecCol, kk)
       .groupBy("q_id").agg(min("cos").as("kcos"))
       .agg(expr("percentile(kcos, 0.1)"),
-        avg((col("kcos") >= level).cast("double"))).head
+        avg((col("kcos") >= PqConcStatFloor).cast("double"))).head
     ConcSample(sample, row.getDouble(0), row.getDouble(1), stride, n)
   }
 
@@ -951,14 +894,11 @@ object Similarity extends org.apache.spark.internal.Logging {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int, ks: Int, iters: Int, sampleN: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    val tau = spark.conf.get(PqConcFracKey,
-      PqConcFracDefault.toString).toDouble
     if (route.family == "lsh") {
       val geom = route.geometry.get
       lshTopK(corpus, queries, idCol, vecCol, k,
         geom.tables, geom.planes, geom.probes, geom.radius)
-    } else if (!route.concFrac.isNaN && route.concFrac >= tau)
+    } else if (!route.concFrac.isNaN && route.concFrac >= PqConcFrac)
       pqTopK(corpus, queries, idCol, vecCol, k, m, ks, iters,
         rerankForMeasured(corpus, idCol, vecCol, k, m, ks, iters, sampleN))
     else {
@@ -966,7 +906,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       // produced the statistics — measured them, or served them from
       // the `_concstat` sidecar — and the concentrated share sits
       // under the floor's tolerance. Calling the public auto overload
-      // here would re-run validatePqConcentration's sample job (a
+      // here would re-run the concentration floor's sample job (a
       // SECOND sample-sized exact top-k per routed call, contradicting
       // the documented one-sample routing cost — and on
       // annTopKCached's hit path, re-paying the exact job the sidecar
@@ -1250,8 +1190,8 @@ object Similarity extends org.apache.spark.internal.Logging {
   def kmeansCentroidsHier(corpus: DataFrame, seeds: DataFrame,
       coarseSeeds: DataFrame, idCol: String, vecCol: String,
       iters: Int, w: Int): DataFrame = {
-    validateHierSizing(seeds.count(), coarseSeeds.count(), w,
-      corpus.sparkSession)
+    Guard.check(corpus.sparkSession, HierSizingConfKey)(
+      hierSizingVerdict(seeds.count(), coarseSeeds.count(), w))
     val coarse = normed(coarseSeeds, idCol, vecCol)
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
         col("nrm").as("c_nrm"))
@@ -1301,8 +1241,8 @@ object Similarity extends org.apache.spark.internal.Logging {
   def kmeansAssignHier(corpus: DataFrame, seeds: DataFrame,
       coarseSeeds: DataFrame, idCol: String, vecCol: String,
       iters: Int, w: Int): DataFrame = {
-    validateHierSizing(seeds.count(), coarseSeeds.count(), w,
-      corpus.sparkSession)
+    Guard.check(corpus.sparkSession, HierSizingConfKey)(
+      hierSizingVerdict(seeds.count(), coarseSeeds.count(), w))
     val c = Barrier(normed(corpus, idCol, vecCol))
     val coarse = normed(coarseSeeds, idCol, vecCol)
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
@@ -1357,8 +1297,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     * operators — `cents`/`coarseCents` = (cent_id, c_emb, c_nrm). */
   def hierAssign(corpus: DataFrame, cents: DataFrame,
       coarseCents: DataFrame, w: Int): DataFrame = {
-    validateHierSizing(cents.count(), coarseCents.count(), w,
-      corpus.sparkSession)
+    Guard.check(corpus.sparkSession, HierSizingConfKey)(
+      hierSizingVerdict(cents.count(), coarseCents.count(), w))
     hierAssignImpl(corpus, cents, coarseCents, w)
   }
 
@@ -1651,7 +1591,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     // round-trip instead of two
     val c = Barrier.lazily(normed(corpus, idCol, vecCol))
     val n = c.count()
-    validateRerankSizing(n, k, rerank, corpus.sparkSession)
+    Guard.check(corpus.sparkSession, RerankSizingConfKey)(
+      rerankSizingVerdict(n, k, rerank))
     pqTopKImpl(c, queries, idCol, vecCol, k, m, ks, iters, rerank)
   }
 
@@ -1659,14 +1600,15 @@ object Similarity extends org.apache.spark.internal.Logging {
     * corpus row count ([[rerankFor]]) — the sizing-by-construction
     * path (a caller cannot recreate the measured fixed-R recall
     * collapse through it), concentration-floored since r16
-    * ([[validatePqConcentration]]: the √n curve's OTHER measured
+    * ([[pqConcVerdict]]: the √n curve's OTHER measured
     * failure mode — corpus shape, not corpus size). */
   def pqTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int, ks: Int, iters: Int): DataFrame = {
     val c = Barrier.lazily(normed(corpus, idCol, vecCol))
     val n = c.count()
-    validatePqConcentration(c, n, k, "pqTopK")
+    Guard.check(corpus.sparkSession, PqConcConfKey)(
+      pqConcVerdict(c, n, k, "pqTopK"))
     pqTopKImpl(c, queries, idCol, vecCol, k, m, ks, iters, rerankFor(n, k))
   }
 
@@ -1724,9 +1666,11 @@ object Similarity extends org.apache.spark.internal.Logging {
     // covers the base table by contract): counting the base is a
     // metadata-only parquet count in the production shape, where
     // counting the index frame could replay the increment's encode.
-    // Passed BY NAME: `off` mode must skip the count job entirely (a
-    // computed, non-parquet base would replay its lineage per call)
-    validateRerankSizing(base.count(), k, rerank, queries.sparkSession)
+    // Evaluated inside the check: `off` mode must skip the count job
+    // entirely (a computed, non-parquet base would replay its lineage
+    // per call)
+    Guard.check(queries.sparkSession, RerankSizingConfKey)(
+      rerankSizingVerdict(base.count(), k, rerank))
     pqQueryTail(
       index.select(col(idCol).as("vec_id"), col("nrm"), col("codes")),
       normed(base, idCol, vecCol),
@@ -1742,7 +1686,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     VectorFunctions.register(queries.sparkSession)
     val b = normed(base, idCol, vecCol)
     val n = base.count()
-    validatePqConcentration(b, n, k, "pqTopKFromIndex")
+    Guard.check(queries.sparkSession, PqConcConfKey)(
+      pqConcVerdict(b, n, k, "pqTopKFromIndex"))
     pqQueryTail(
       index.select(col(idCol).as("vec_id"), col("nrm"), col("codes")),
       b, normed(queries, idCol, vecCol), booksRowOf(books), k,
@@ -1944,8 +1889,10 @@ object Similarity extends org.apache.spark.internal.Logging {
     // r21: lazy barrier + count (one materializing job, see pqTopK)
     val c = Barrier.lazily(normed(corpus, idCol, vecCol))
     val n = c.count()
-    validateProbeSizing(nCells, nProbe, corpus.sparkSession)
-    validateRerankSizing(n, k, rerank, corpus.sparkSession)
+    Guard.check(corpus.sparkSession, ProbeSizingConfKey)(
+      probeSizingVerdict(nCells, nProbe))
+    Guard.check(corpus.sparkSession, RerankSizingConfKey)(
+      rerankSizingVerdict(n, k, rerank))
     ivfadcTopKImpl(c, queries, idCol, vecCol, k, nCells, coarseIters,
       m, ks, pqIters, nProbe, rerank)
   }
@@ -1961,7 +1908,8 @@ object Similarity extends org.apache.spark.internal.Logging {
       pqIters: Int): DataFrame = {
     val c = Barrier.lazily(normed(corpus, idCol, vecCol))
     val n = c.count()
-    validatePqConcentration(c, n, k, "ivfadcTopK")
+    Guard.check(corpus.sparkSession, PqConcConfKey)(
+      pqConcVerdict(c, n, k, "ivfadcTopK"))
     ivfadcTopKImpl(c, queries, idCol, vecCol, k, nCells, coarseIters,
       m, ks, pqIters, probeFor(nCells), rerankFor(n, k))
   }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Calibrate [[graft.api.Similarity.PqConcStatFloorDefault]]: print the
+/** Calibrate [[graft.api.Similarity.PqConcStatFloor]]: print the
   * [[graft.api.Similarity.annConcentration]] statistic (10th-percentile
   * kth-NN cosine, k = 5, sampleN = 1024) over every fixture the r15
   * recall campaign measured the √n curve on — the diffuse sign-cipher

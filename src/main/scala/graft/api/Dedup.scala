@@ -1544,8 +1544,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     * asset ([[minhashSignatures]] schema): the stored band-key array
     * is the asset's stand-in for the full minhash signature (equal
     * texts ⇒ equal bkeys ⇒ every pair survives at jac = 1.0). Pass to
-    * [[compactSignatureAsset]] / [[readSignatureHistogram]] /
-    * [[graft.streaming.StreamingOps.incrementalDedupStream]]. */
+    * [[compactSignatureAsset]] / [[readSignatureHistogram]];
+    * [[Increment.Family.jaccard]] carries it. */
   val jaccardGuardKeys: DataFrame => DataFrame =
     sigs => sigs.select(col("bkeys").as("k"))
 
@@ -1628,7 +1628,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     if (scan.gen.size > 1) return None
     val genHist = spark.read.parquet(histPaths.map(_.toString): _*)
       .select(col("k"), col("cc"))
-    val incs = scan.liveIncs.filterNot(i => excludeInc.contains(i.getName))
+    val incs = scan.liveExcept(excludeInc, dir)
     Some(
       if (incs.isEmpty) genHist
       else genHist.union(
@@ -1644,16 +1644,33 @@ object Dedup extends org.apache.spark.internal.Logging {
 
   /** Asset-root inventory: `gen` = dirs of the newest complete
     * generation (the seed dirs when none exists), `genK` = its number
-    * (0 = seeds), `folded` = its manifest (every dir name ever folded),
-    * `liveIncs` = un-folded inc_* dirs, `stale` = superseded dirs
-    * tagged with the generation that superseded them (Int.MinValue =
-    * crashed attempt, deletable immediately). */
+    * (0 = seeds), `folded` = its manifest (every dir name ever folded,
+    * with the first generation that folded it), `liveIncs` = un-folded
+    * inc_* dirs, `stale` = superseded dirs tagged with the generation
+    * that superseded them (Int.MinValue = crashed attempt, deletable
+    * immediately). */
   private final case class AssetScan(
       gen: Seq[org.apache.hadoop.fs.Path],
       genK: Int,
-      folded: Set[String],
+      folded: Map[String, Int],
       liveIncs: Seq[org.apache.hadoop.fs.Path],
-      stale: Seq[(org.apache.hadoop.fs.Path, Int)])
+      stale: Seq[(org.apache.hadoop.fs.Path, Int)]) {
+
+    /** The live inc dirs minus `excludeInc`. Excluding a tag that a
+      * generation already folded fails: its rows are in that
+      * generation, so the exclusion cannot hold, and a rewrite of the
+      * tag would be skipped by every reader and deleted by a later
+      * compaction — an increment lost without an error. */
+    def liveExcept(excludeInc: Option[String], dir: String): Seq[org.apache.hadoop.fs.Path] = {
+      for (t <- excludeInc; k <- folded.get(t))
+        throw new IllegalArgumentException(s"inc tag '$t' of the asset at " +
+          s"$dir was already folded into generation base_gen$k — its " +
+          "rows are in that generation, and a rewrite of the tag would " +
+          "be skipped by every reader and deleted by a later compaction. " +
+          "Give a new increment a tag no compaction has folded.")
+      liveIncs.filterNot(i => excludeInc.contains(i.getName))
+    }
+  }
 
   /** One manifest read per generation: None = missing or vanished
     * mid-scan (an expired lingering gen deleted by a concurrent
@@ -1687,12 +1704,12 @@ object Dedup extends org.apache.spark.internal.Logging {
         readManifest(fs, p).filter(_.nonEmpty).map(m => (j, p, m)) }
     complete.lastOption match {
       case Some((k, newest, newestManifest)) =>
-        val folded = newestManifest.toSet
         // first generation that folded each name — manifests are
         // cumulative, so lingering manifests date every superseded dir
         val firstFold = scala.collection.mutable.Map[String, Int]()
         complete.foreach { case (j, _, m) =>
           m.foreach(n => if (!firstFold.contains(n)) firstFold(n) = j) }
+        val folded = newestManifest.map(n => n -> firstFold(n)).toMap
         val unrecognized = seeds.filterNot(s => folded.contains(s.getName))
         require(unrecognized.isEmpty,
           s"asset at $root holds director(ies) the lifecycle did not " +
@@ -1715,7 +1732,7 @@ object Dedup extends org.apache.spark.internal.Logging {
           staleSeeds ++ staleGens ++ crashed ++
             foldedIncs.map(p => (p, firstFold(p.getName))))
       case None =>
-        AssetScan(seeds, 0, Set.empty, incs, Seq.empty)
+        AssetScan(seeds, 0, Map.empty, incs, Seq.empty)
     }
   }
 
@@ -1730,14 +1747,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     * newest complete generation + un-folded inc_* dirs, minus
     * `excludeInc` (a streaming batch excludes its OWN subdir so a
     * replayed batch never pairs against its previous attempt). Fails
-    * loud when the asset is unseeded. */
+    * loud when the asset is unseeded, and when `excludeInc` names a tag
+    * a compaction already folded. */
   def readSignatureAsset(spark: org.apache.spark.sql.SparkSession, dir: String,
       excludeInc: Option[String] = None): DataFrame = {
     val (fs, root) = assetFs(spark, dir)
     val scan = scanAsset(fs, root)
-    val parts = (scan.gen ++
-        scan.liveIncs.filterNot(i => excludeInc.contains(i.getName)))
-      .map(_.toString)
+    val parts = (scan.gen ++ scan.liveExcept(excludeInc, dir)).map(_.toString)
     require(parts.nonEmpty,
       s"signature asset at $dir is unseeded — write minhashSignatures / " +
         "lshSignatureTable output (e.g. under base/) first")
@@ -1755,8 +1771,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     * overwritten, and cleanup of superseded dirs is safe at any point
     * after the manifest exists (readers already ignore them). Safe to
     * run between micro-batches of a live stream — but not concurrently
-    * with one (a replayed batch whose inc dir was just folded would
-    * re-pair against its own signatures); quiesce the stream first.
+    * with one (a replayed batch whose inc dir was just folded fails:
+    * readers refuse to exclude a folded tag); quiesce the stream first.
     *
     * Retention: the dirs THIS compaction supersedes stay on disk for
     * `keepSuperseded` further compactions (default 1) before being
@@ -1792,7 +1808,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     val k = scan.genK + 1
     writeGeneration(fs, root, k,
       spark.read.parquet((scan.gen ++ scan.liveIncs).map(_.toString): _*),
-      scan.folded ++ (scan.gen ++ scan.liveIncs).map(_.getName),
+      scan.folded.keySet ++ (scan.gen ++ scan.liveIncs).map(_.getName),
       guardKeys.map(gk => out => gk(spark.read.parquet(out))
         .groupBy("k").agg(count(lit(1)).as("cc"))
         .filter(col("cc") >= 2)))
@@ -1858,7 +1874,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       maxUpsertDirs: Int = DefaultMaxUpsertDirs): DataFrame = {
     val (fs, root) = assetFs(spark, dir)
     val scan = scanAsset(fs, root)
-    val (gen, incs0) = (scan.gen, scan.liveIncs)
+    val gen = scan.gen
     def ord(p: org.apache.hadoop.fs.Path): Long = {
       val suffix = p.getName.stripPrefix("inc_")
       require(suffix.forall(_.isDigit) && suffix.nonEmpty,
@@ -1866,7 +1882,7 @@ object Dedup extends org.apache.spark.internal.Logging {
           "upsert precedence is by numeric batch id")
       suffix.toLong
     }
-    val incs = incs0.filterNot(i => excludeInc.contains(i.getName)).sortBy(ord)
+    val incs = scan.liveExcept(excludeInc, dir).sortBy(ord)
     // guard counts only the dirs that PARTICIPATE in resolution (an
     // excluded replayed batch's own dir never unions into the window)
     require(incs.size <= maxUpsertDirs,
@@ -1930,7 +1946,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       // fix for upsert accumulation and must never refuse it
       writeGeneration(fs, root, k,
         readGroupsAsset(spark, dir, maxUpsertDirs = Int.MaxValue),
-        scan.folded ++ (scan.gen ++ scan.liveIncs).map(_.getName))
+        scan.folded.keySet ++ (scan.gen ++ scan.liveIncs).map(_.getName))
     }
     deleteAged(fs, scan.stale ++ (scan.gen ++ scan.liveIncs).map((_, k)),
       k - keepSuperseded)

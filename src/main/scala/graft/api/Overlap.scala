@@ -3,10 +3,10 @@ package graft.api
 /** Concurrent-job overlap seam (optimization guide §2.6 "Overlap
   * independent jobs"): Spark's scheduler happily runs several jobs at
   * once inside one application — actions are only sequential because
-  * driver code calls them sequentially. The daily pipelines write three
-  * independent asset dirs per run whose WRITE jobs do not feed the next
-  * stage (the next stage reads the in-memory barrier, not the file), so
-  * the writes can run on a side thread while the driver thread plans
+  * driver code calls them sequentially. The increment step
+  * ([[Increment.step]]) writes asset dirs whose WRITE jobs do not feed
+  * the next stage (the next stage reads the in-memory barrier, not the
+  * file), so the writes can run on a side thread while the driver thread plans
   * and runs the next stage's jobs — the write's tasks back-fill idle
   * cores behind the compute stage's tail.
   *

@@ -342,6 +342,10 @@ object Multimodal {
   private val AHashFamily = 4   // ids per near-dup family
   private val AHashDelta = 2    // brightness step between family members
   private val AHashMaxHamming = 2
+  /** The increment family of p6/p6p: the (doc_id, sig) ahash asset at
+    * [[AHashMaxHamming]]. */
+  private val ImageFamily =
+    graft.api.Increment.Family.hamming("doc_id", "sig", AHashMaxHamming)
 
   private def ahashSigs(s: SparkSession, dir: String): DataFrame =
     ahashSigsOf(docIds(s, dir))
@@ -545,7 +549,7 @@ object Multimodal {
   // wall-clock, so p6 is correctness-gated but not benched — mm9 and
   // the dd8/dd10p probes carry the measured daily costs.
   private def dailyImageIncrement(s: SparkSession, dir: String): DataFrame = {
-    import graft.api.{Barrier, Dedup}
+    import graft.api.{Barrier, Dedup, Increment}
     import graft.operators.DedupQueries.IncMod
     val root = s"target/graft_p6/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}"
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -562,37 +566,17 @@ object Multimodal {
       // guard sidecar (r16): the daily dd8-shaped precheck reads this
       // instead of re-scanning the corpus signature asset
       Dedup.writeSignatureHistogram(
-        s, s"$root/sigs/base", Dedup.hammingGuardKeys("sig"))
+        s, s"$root/sigs/base", ImageFamily.guardKeys)
       Dedup.duplicateGroups(
           Dedup.hammingPairs(corpusSigs, "doc_id", "sig", AHashMaxHamming),
           "doc_a", "doc_b")
         .write.mode("overwrite").parquet(s"$root/groups/base")
-      // today: increment signatures land as inc_0 (replay-idempotent
-      // overwrite; asset reads exclude the batch's own dir — the
-      // protocol DailyPipeline and the streaming twins share)
-      sigs.filter(col("doc_id") % IncMod === 0)
-        .write.mode("overwrite").parquet(s"$root/sigs/inc_0")
-      Dedup.incrementalHammingPairs(
-          Dedup.readSignatureAsset(s, s"$root/sigs", excludeInc = Some("inc_0")),
-          s.read.parquet(s"$root/sigs/inc_0"), "doc_id", "sig", AHashMaxHamming,
-          Dedup.readSignatureHistogram(s, s"$root/sigs",
-            Dedup.hammingGuardKeys("sig"), excludeInc = Some("inc_0")))
-        .write.mode("overwrite").parquet(s"$root/pairs")
-      Dedup.incrementalGroups(
-          Dedup.readGroupsAsset(s, s"$root/groups", excludeInc = Some("inc_0")),
-          s.read.parquet(s"$root/pairs"), "doc_a", "doc_b")
-        .write.mode("overwrite").parquet(s"$root/groups/inc_0")
-      // the day's quiesce point: fold both assets a generation forward
-      Dedup.compactSignatureAsset(s, s"$root/sigs",
-        guardKeys = Some(Dedup.hammingGuardKeys("sig")))
-      Dedup.compactGroupsAsset(s, s"$root/groups")
+      // today: the increment step, then the day's quiesce point
+      Increment.step(s, s"$root/sigs", Some(s"$root/groups"), s"$root/pairs",
+        "inc_0", sigs.filter(col("doc_id") % IncMod === 0), ImageFamily)
+      Increment.compact(s, s"$root/sigs", Some(s"$root/groups"), ImageFamily)
     }
-    // keep/drop: a doc survives iff it leads its resolved group (or
-    // belongs to none) — the corpus anti-joins a broadcastable loser set
-    val losers = graft.api.Dedup.readGroupsAsset(s, s"$root/groups")
-      .filter(col("doc_id") =!= col("group_id")).select(col("doc_id"))
-    Tables.documents(s, dir).select(col("doc_id"))
-      .join(losers, Seq("doc_id"), "leftanti").select(col("doc_id"))
+    Increment.survivors(Tables.documents(s, dir), s"$root/groups")
   }
 
   private val dailyImageIncrementSql =
@@ -627,86 +611,41 @@ object Multimodal {
   //   → keep/drop   (corpus anti-joins the broadcastable loser set)
   //
   // with NO seeding and NO compaction (the quiesce-point maintenance
-  // verb is not part of the daily latency path). Replay-idempotent
-  // writes — overwrite to a fixed inc_0, asset reads excluding the
-  // batch's own dir — so warm passes replay the same day against the
-  // pristine seeded base. The resolved merge-on-read group table
-  // equals p6's post-compaction one, so p6's batch-global oracle
-  // (components over the FULL ahash pair set) gates this binding
-  // unchanged.
-  private val seededP6Roots = scala.collection.mutable.Set[String]()
-
-  private def seedP6Assets(s: SparkSession, dir: String): String = {
-    import graft.operators.DedupQueries.IncMod
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val root = s"target/graft_bench/p6p/$key"
-    synchronized {
-      if (!seededP6Roots.contains(root)) {
-        // a leftover root from a previous JVM may hold inc dirs from a
-        // different fixture state; re-seed from scratch
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
-        graft.api.Barrier.scoped {
-          val corpusSigs = graft.api.Barrier(ahashSigsOf(
-            docIds(s, dir).filter(col("doc_id") % IncMod =!= 0)))
-          corpusSigs.write.mode("overwrite").parquet(s"$root/sigs/base")
-          // guard sidecar (r16): p6p's daily precheck reads this, so
-          // the timed path never re-scans the corpus signature asset
-          graft.api.Dedup.writeSignatureHistogram(
-            s, s"$root/sigs/base", graft.api.Dedup.hammingGuardKeys("sig"))
-          // seed via the CONTRACTION verb (≡ duplicateGroups over
-          // hammingPairs, property-pinned) — the pattern the pair
-          // budget preaches: the replica fixture's ahash space
-          // saturates (~716 distinct sigs), so the all-pairs seeding
-          // form would trip its own guard at the 500 k-doc decade
-          graft.api.Dedup.hammingGroups(
-              corpusSigs, "doc_id", "sig", AHashMaxHamming)
-            .write.mode("overwrite").parquet(s"$root/groups/base")
-        }
-        seededP6Roots += root
-      }
-    }
-    root
-  }
-
+  // verb is not part of the daily latency path). The increment is
+  // Increment.step with the fixed tag inc_0, whose replay rule (reads
+  // exclude inc_0, writes overwrite it) lets warm passes replay the
+  // same day against the pristine seeded base. The resolved
+  // merge-on-read group table equals p6's post-compaction one, so p6's
+  // batch-global oracle (components over the FULL ahash pair set)
+  // gates this binding unchanged.
   private def dailyImageIncrementAsset(s: SparkSession, dir: String): DataFrame = {
-    import graft.api.Dedup
+    import graft.api.Increment
     import graft.operators.DedupQueries.IncMod
-    val root = seedP6Assets(s, dir)
-    // r21 (guide §2.6): the sigs/inc_0 and pairs WRITES run on side
-    // threads while the driver runs the next stage — it reads the
-    // in-memory barrier (value-identical to the parquet round-trip:
-    // longs), never the file being written, and the corpus-side asset
-    // reads exclude inc_0 by contract. Both writes join before the
-    // groups upsert is written (groups/inc_0 is never newer than a
-    // partial sigs or pairs dir): same dirs, same rows, replay
-    // idempotence unchanged. The decode (the day's ONLY codec work:
-    // the increment's) runs once, in the barrier job.
-    graft.api.Overlap.scoped { writes =>
-      val incSigs = graft.api.Barrier(
-        ahashSigsOf(docIds(s, dir).filter(col("doc_id") % IncMod === 0)))
-      writes.background("p6-sigs") {
-        incSigs.write.mode("overwrite").parquet(s"$root/sigs/inc_0")
+    val root = QueryDef.seedOnce(s, "p6p", dir) { root =>
+      graft.api.Barrier.scoped {
+        val corpusSigs = graft.api.Barrier(ahashSigsOf(
+          docIds(s, dir).filter(col("doc_id") % IncMod =!= 0)))
+        corpusSigs.write.mode("overwrite").parquet(s"$root/sigs/base")
+        // guard sidecar: p6p's daily precheck reads this, so the timed
+        // path never re-scans the corpus signature asset
+        graft.api.Dedup.writeSignatureHistogram(
+          s, s"$root/sigs/base", ImageFamily.guardKeys)
+        // seed via the CONTRACTION verb (≡ duplicateGroups over
+        // hammingPairs, property-pinned) — the pattern the pair
+        // budget preaches: the replica fixture's ahash space
+        // saturates (~716 distinct sigs), so the all-pairs seeding
+        // form would trip its own guard at the 500 k-doc decade
+        graft.api.Dedup.hammingGroups(
+            corpusSigs, "doc_id", "sig", AHashMaxHamming)
+          .write.mode("overwrite").parquet(s"$root/groups/base")
       }
-      val pairs = graft.api.Barrier(Dedup.incrementalHammingPairs(
-        Dedup.readSignatureAsset(s, s"$root/sigs", excludeInc = Some("inc_0")),
-        incSigs, "doc_id", "sig", AHashMaxHamming,
-        Dedup.readSignatureHistogram(s, s"$root/sigs",
-          Dedup.hammingGuardKeys("sig"), excludeInc = Some("inc_0"))))
-      writes.background("p6-pairs") {
-        pairs.write.mode("overwrite").parquet(s"$root/pairs")
-      }
-      val groups = Dedup.incrementalGroups(
-        Dedup.readGroupsAsset(s, s"$root/groups", excludeInc = Some("inc_0")),
-        pairs, "doc_a", "doc_b")
-      writes.join()
-      groups.write.mode("overwrite").parquet(s"$root/groups/inc_0")
     }
-    val losers = Dedup.readGroupsAsset(s, s"$root/groups")
-      .filter(col("doc_id") =!= col("group_id")).select(col("doc_id"))
-    Tables.documents(s, dir).select(col("doc_id"))
-      .join(losers, Seq("doc_id"), "leftanti").select(col("doc_id"))
+    // the decode (the day's ONLY codec work: the increment's) runs
+    // once, in the step's barrier job
+    Increment.step(s, s"$root/sigs", Some(s"$root/groups"), s"$root/pairs",
+      "inc_0", ahashSigsOf(docIds(s, dir).filter(col("doc_id") % IncMod === 0)),
+      ImageFamily)
+    Increment.survivors(Tables.documents(s, dir), s"$root/groups")
   }
 
   val all: Seq[QueryDef] = Seq(

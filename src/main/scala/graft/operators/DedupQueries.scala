@@ -359,31 +359,19 @@ object DedupQueries {
   // the timed plan is ONLY incrementalGroups — the asset streamed
   // against broadcasts, CC fixpoint over the contracted label graph.
   // Same oracle as dd10: identical semantics, different input shape.
-  private val seededRoots = scala.collection.mutable.Set[String]()
-
-  private def seedDd10Assets(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val root = s"target/graft_bench/dd10p/$key"
-    synchronized {
-      if (!seededRoots.contains(root)) {
-        val corpus = Tables.documents(s, dir).filter(col("doc_id") % IncMod =!= 0)
-        graft.api.Barrier.scoped {
-          graft.api.Dedup.duplicateGroups(
-              graft.api.Dedup.jaccardPairs(
-                corpus, "doc_id", "text", DD3Bands, DD3Rows, 0.8),
-              "doc_a", "doc_b")
-            .write.mode("overwrite").parquet(s"$root/groups_asset")
-          incremental(s, dir)
-            .write.mode("overwrite").parquet(s"$root/inc_pairs")
-        }
-        seededRoots += root
+  private def incrementalCCAsset(s: SparkSession, dir: String): DataFrame = {
+    val root = QueryDef.seedOnce(s, "dd10p", dir) { root =>
+      val corpus = Tables.documents(s, dir).filter(col("doc_id") % IncMod =!= 0)
+      graft.api.Barrier.scoped {
+        graft.api.Dedup.duplicateGroups(
+            graft.api.Dedup.jaccardPairs(
+              corpus, "doc_id", "text", DD3Bands, DD3Rows, 0.8),
+            "doc_a", "doc_b")
+          .write.mode("overwrite").parquet(s"$root/groups_asset")
+        incremental(s, dir)
+          .write.mode("overwrite").parquet(s"$root/inc_pairs")
       }
     }
-    root
-  }
-
-  private def incrementalCCAsset(s: SparkSession, dir: String): DataFrame = {
-    val root = seedDd10Assets(s, dir)
     graft.api.Dedup.incrementalGroups(
       s.read.parquet(s"$root/groups_asset"),
       s.read.parquet(s"$root/inc_pairs"), "doc_a", "doc_b")

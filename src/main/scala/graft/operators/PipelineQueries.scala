@@ -160,34 +160,17 @@ object PipelineQueries {
   //   → keep/drop (corpus anti-joins the broadcastable loser set)
   //
   // with NO seeding and NO compaction (compaction is the quiesce-point
-  // maintenance verb, not part of the daily latency path). Every write
-  // is the replay-idempotent shape the streaming twin uses — overwrite
-  // mode to a fixed inc_0 name, asset reads excluding the batch's own
-  // dir — so warm passes replay the same day deterministically against
-  // the pristine seeded base. The final merge-on-read group table
-  // equals p4's post-compaction one, so p4's batch-global oracle gates
-  // this binding unchanged.
-  private val seededP4Roots = scala.collection.mutable.Set[String]()
-
-  private def seedP4Assets(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val root = s"target/graft_bench/p4p/$key"
-    synchronized {
-      if (!seededP4Roots.contains(root)) {
-        // a leftover root from a previous JVM may hold inc dirs from a
-        // different fixture state; re-seed from scratch
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
-        DailyPipeline.seedAssets(s, Tables.documents(s, dir), root)
-        seededP4Roots += root
-      }
-    }
-    root
-  }
-
+  // maintenance verb, not part of the daily latency path). The
+  // increment is Increment.step with the fixed tag inc_0, whose replay
+  // rule (reads exclude inc_0, writes overwrite it) lets warm passes
+  // replay the same day deterministically against the pristine seeded
+  // base. The final merge-on-read group table equals p4's
+  // post-compaction one, so p4's batch-global oracle gates this binding
+  // unchanged.
   private def dailyIncrementAsset(s: SparkSession, dir: String): DataFrame = {
-    val root = seedP4Assets(s, dir)
+    val root = QueryDef.seedOnce(s, "p4p", dir) { root =>
+      DailyPipeline.seedAssets(s, Tables.documents(s, dir), root)
+    }
     val docs = Tables.documents(s, dir)
     // NO compaction: that's the quiesce-point maintenance verb, not
     // part of the daily latency path this binding measures
@@ -205,21 +188,23 @@ object PipelineQueries {
   )
 }
 
-/** The composed daily-increment verb — the ONE definition of the
-  * pipeline's stage sequence, dd3 geometry (8 bands × 4 rows,
-  * jaccard ≥ 0.8), doc_id % 10 corpus/increment split, and
-  * replay-idempotent write protocol (overwrite to a fixed `inc_0`,
-  * asset reads excluding the batch's own dir). Shared by p4 (the
-  * batch-global-oracle correctness capstone), p4p (the bench binding
-  * over pre-seeded assets), and the lambda-sim + FS-shuffle deployment
-  * dress rehearsal (GraftShuffleDailyRehearsalSpec), so a geometry or
-  * protocol change can't leave one binding silently on the old shape.
-  * `private[graft]`: an internal composition seam, not library API —
-  * users compose [[graft.api.Dedup]]'s verbs directly (README's
-  * operating guide). */
+/** The composed daily-increment verb: its stage sequence, dd3 geometry
+  * (8 bands × 4 rows, jaccard ≥ 0.8) and doc_id % 10 corpus/increment
+  * split. The increment itself is [[graft.api.Increment.step]] with the
+  * fixed tag `inc_0`. Shared by p4 (the batch-global-oracle correctness
+  * capstone), p4p (the bench binding over pre-seeded assets), and the
+  * lambda-sim + FS-shuffle deployment dress rehearsal
+  * (GraftShuffleDailyRehearsalSpec), so a geometry change can't leave
+  * one binding on the old shape. `private[graft]`: an internal
+  * composition seam, not library API — users compose
+  * [[graft.api.Increment]] and [[graft.api.Dedup]]'s verbs directly
+  * (README's operating guide). */
 private[graft] object DailyPipeline {
   import DedupQueries.{DD3Bands, DD3Rows, IncMod}
+  import graft.api.{Increment, Dedup}
   private val Jaccard = 0.8
+  private val Family =
+    Increment.Family.jaccard("doc_id", "text", DD3Bands, DD3Rows, Jaccard)
 
   private def corpus(docs: DataFrame): DataFrame =
     docs.filter(col("doc_id") % IncMod =!= 0)
@@ -230,81 +215,30 @@ private[graft] object DailyPipeline {
     * corpus (the increment's docs excluded). */
   def seedAssets(s: SparkSession, docs: DataFrame, root: String): Unit =
     graft.api.Barrier.scoped {
-      graft.api.Dedup.minhashSignatures(
-          corpus(docs), "doc_id", "text", DD3Bands, DD3Rows)
+      Family.signatures(corpus(docs))
         .write.mode("overwrite").parquet(s"$root/sigs/base")
-      // guard sidecar (r16): the daily dd7 precheck reads this instead
-      // of re-scanning the corpus signature asset
-      graft.api.Dedup.writeSignatureHistogram(
-        s, s"$root/sigs/base", graft.api.Dedup.jaccardGuardKeys)
-      graft.api.Dedup.duplicateGroups(
-          graft.api.Dedup.jaccardPairs(
+      // guard sidecar: the daily dd7 precheck reads this instead of
+      // re-scanning the corpus signature asset
+      Dedup.writeSignatureHistogram(s, s"$root/sigs/base", Family.guardKeys)
+      Dedup.duplicateGroups(
+          Dedup.jaccardPairs(
             corpus(docs), "doc_id", "text", DD3Bands, DD3Rows, Jaccard),
           "doc_a", "doc_b")
         .write.mode("overwrite").parquet(s"$root/groups/base")
     }
 
-  /** The daily latency path over seeded assets:
-    *
-    *   increment-ingest (signatures land as the `inc_0` dir)
-    *   → dd7 pairs   (asset streamed once, increment broadcast;
-    *                  the asset read excludes the batch's own dir —
-    *                  the replay-safe shape the streaming twin uses)
-    *   → dd10 groups (fixpoint over contracted labels only)
-    *   → upsert      (touched components land as a groups-asset inc dir)
-    *
-    * plus, when `compact`, the day's quiesce point: fold both assets. */
+  /** The daily latency path over seeded assets — the increment step
+    * (signatures → dd7 pairs → dd10 groups upsert, tag `inc_0`) — plus,
+    * when `compact`, the day's quiesce point: fold both assets. */
   def runIncrement(s: SparkSession, docs: DataFrame, root: String,
-      compact: Boolean): Unit =
-    graft.api.Barrier.scoped {
-      // r21 (guide §2.6): the sigs/inc_0 and pairs WRITES run on side
-      // threads while the driver thread runs the next stage — the next
-      // stage reads the in-memory barrier (value-identical to the
-      // parquet round-trip: longs and long arrays), never the file it
-      // is concurrently writing, and the corpus-side asset reads
-      // exclude inc_0 by contract. Both writes join before the groups
-      // upsert is written, so groups/inc_0 is never newer than a
-      // partial sigs or pairs dir; the on-disk protocol (overwrite to
-      // fixed inc_0 names, same rows) and replay idempotence are those
-      // of the sequential shape.
-      graft.api.Overlap.scoped { writes =>
-        val incSigs = graft.api.Barrier(graft.api.Dedup.minhashSignatures(
-          increment(docs), "doc_id", "text", DD3Bands, DD3Rows))
-        writes.background("p4-sigs") {
-          incSigs.write.mode("overwrite").parquet(s"$root/sigs/inc_0")
-        }
-        val pairs = graft.api.Barrier(graft.api.Dedup.incrementalJaccardPairs(
-          graft.api.Dedup.readSignatureAsset(
-            s, s"$root/sigs", excludeInc = Some("inc_0")),
-          incSigs, Jaccard,
-          graft.api.Dedup.readSignatureHistogram(
-            s, s"$root/sigs", graft.api.Dedup.jaccardGuardKeys,
-            excludeInc = Some("inc_0"))))
-        writes.background("p4-pairs") {
-          pairs.write.mode("overwrite").parquet(s"$root/pairs")
-        }
-        // the components' jobs run at call time, still overlapping the
-        // writes; only the upsert itself waits for them
-        val groups = graft.api.Dedup.incrementalGroups(
-          graft.api.Dedup.readGroupsAsset(
-            s, s"$root/groups", excludeInc = Some("inc_0")),
-          pairs, "doc_a", "doc_b")
-        writes.join()
-        groups.write.mode("overwrite").parquet(s"$root/groups/inc_0")
-      }
-      if (compact) {
-        graft.api.Dedup.compactSignatureAsset(s, s"$root/sigs",
-          guardKeys = Some(graft.api.Dedup.jaccardGuardKeys))
-        graft.api.Dedup.compactGroupsAsset(s, s"$root/groups")
-      }
-    }
-
-  /** Keep/drop: a doc survives iff it leads its resolved group (or
-    * belongs to none) — the corpus-sized side anti-joins a
-    * broadcastable loser set. */
-  def survivors(s: SparkSession, docs: DataFrame, root: String): DataFrame = {
-    val losers = graft.api.Dedup.readGroupsAsset(s, s"$root/groups")
-      .filter(col("doc_id") =!= col("group_id")).select(col("doc_id"))
-    docs.join(losers, Seq("doc_id"), "leftanti").select(col("doc_id"))
+      compact: Boolean): Unit = {
+    Increment.step(s, s"$root/sigs", Some(s"$root/groups"), s"$root/pairs",
+      "inc_0", Family.signatures(increment(docs)), Family)
+    if (compact) Increment.compact(s, s"$root/sigs", Some(s"$root/groups"), Family)
   }
+
+  /** Keep/drop over the groups asset under `root`
+    * ([[graft.api.Increment.survivors]]). */
+  def survivors(s: SparkSession, docs: DataFrame, root: String): DataFrame =
+    Increment.survivors(docs, s"$root/groups")
 }

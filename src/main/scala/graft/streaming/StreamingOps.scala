@@ -124,36 +124,58 @@ object StreamingOps {
           phoneRe, "<PHONE>").as("clean_text"))
   }
 
-  /** Continuous ingest-and-dedup engine shared by all three signature
-    * families (MinHash/Jaccard, 64-bit Hamming, hyperplane-LSH/cosine —
-    * see the wrappers below). Per micro-batch: read the persisted
-    * corpus signature asset, emit the batch's near-dup pairs against it
-    * (and within the batch) via `pairFn`, then APPEND the batch's own
-    * `sigFn` signatures to the asset — so every batch dedups against
-    * the seed corpus plus all earlier batches, and the union of
-    * per-batch pair outputs equals ONE batch incremental run over the
-    * whole increment (StreamingSpec pins the equality across
-    * micro-batches for each family).
+  /** The one micro-batch skeleton of the asset streams: drain `data`
+    * with `Trigger.AvailableNow` under `checkpointDir`, and per batch
+    * check the lineage of every asset dir (see [[requireLineage]]),
+    * then run `body(batch, batchId)` inside a [[graft.api.Barrier.scoped]]
+    * (a long stream does not accumulate cached frames under `persist`
+    * barrier mode). `compactOnFinish` makes the call BLOCK until the
+    * drain terminates, then runs `compact` — the stream's natural
+    * quiesce point, so a fold can never race a micro-batch. A failed
+    * stream skips compaction: its exception surfaces from
+    * awaitTermination untouched. */
+  private def microBatches(data: DataFrame, checkpointDir: String,
+      assetDirs: Seq[String], compactOnFinish: Boolean)(
+      body: (DataFrame, Long) => Unit)(
+      compact: SparkSession => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    val query = data.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        assetDirs.foreach(requireLineage(batch.sparkSession, _, checkpointDir))
+        graft.api.Barrier.scoped(body(batch.toDF(), batchId))
+      }
+      .start()
+    if (compactOnFinish) {
+      query.awaitTermination()
+      compact(data.sparkSession)
+    }
+    query
+  }
+
+  /** Continuous ingest-and-dedup for any signature family
+    * ([[graft.api.Increment.Family]]: MinHash/Jaccard, 64-bit Hamming,
+    * hyperplane-LSH/cosine). Micro-batch `<id>` is the increment
+    * [[graft.api.Increment.step]] with tag `inc_<id>`: its signatures
+    * land as `sigDir/inc_<id>`, its pairs against the asset (and within
+    * the batch) as `pairsDir/batch=<id>`, and — with `groupsDir` — the
+    * touched components as the upsert `groupsDir/inc_<id>`. So every
+    * batch dedups against the seed corpus plus all earlier batches, the
+    * union of the per-batch pairs equals ONE batch incremental run over
+    * the whole increment, and the resolved groups asset equals ONE
+    * batch `duplicateGroups` over corpus ∪ all processed increments
+    * (StreamingSpec pins both). Seed `sigDir` (e.g. `base/`) with the
+    * family's signatures of the corpus at the same geometry, and
+    * `groupsDir` with [[graft.api.Dedup.duplicateGroups]] over the
+    * corpus pairs.
     *
-    * Exactly-once discovery under retries: both writes go to
-    * deterministic per-batch subdirs with overwrite (`pairs/batch=<id>`,
-    * `sigs/inc_<id>`), and the corpus read EXCLUDES the current batch's
-    * own subdir, so a replayed batch recomputes the same pairs instead
-    * of pairing against its failed attempt's signatures. The asset is
-    * read through [[graft.api.Dedup.readSignatureAsset]], so it
-    * composes with [[graft.api.Dedup.compactSignatureAsset]] run
-    * between batches (folded inc dirs are skipped via the generation
-    * manifest). Inner operator barriers are released per batch
-    * ([[graft.api.Barrier.scoped]]), so `persist` barrier mode does not
-    * accumulate cached frames over a long stream.
-    *
-    * Lifecycle guard: the asset root is stamped with a `_lineage`
-    * marker naming this query's checkpoint dir. Restarting against the
-    * same asset with a DIFFERENT checkpoint restarts batchIds at 0,
-    * which would silently OVERWRITE `inc_0` (dropping a prior run's
-    * signatures) — the marker turns that into a loud failure. Delete
-    * `_lineage` (or the whole checkpoint+asset pair) to intentionally
-    * re-seed.
+    * Exactly-once under retries is the step's replay rule: the reads
+    * exclude the batch's own tag, the writes overwrite deterministic
+    * per-batch dirs. The asset roots are stamped with a `_lineage`
+    * marker naming this query's checkpoint dir: a fresh checkpoint
+    * restarts batchIds at 0 and would overwrite `inc_0`, so it fails
+    * loud. Delete `_lineage` (or the whole checkpoint+asset pair) to
+    * intentionally re-seed.
     *
     * `assertDisjointIds` (opt-in; one corpus scan per batch): fail loud
     * when a batch re-uses an id already in the asset — e.g. a re-ingested
@@ -161,122 +183,41 @@ object StreamingOps {
     * error: the verification union holds both rows and the batch emits
     * duplicate/incorrect pairs ([[graft.api.Dedup.assertDisjointIds]]).
     *
-    * GUARD COST per micro-batch (r15, histogram-backed since r16):
-    * the incremental pair generators run their two-sided
-    * pair/candidate-budget prechecks PER CALL. `histKeys` (the
-    * family's guard-key projection — the wrappers below pass theirs)
-    * feeds each batch the asset's `_pairhist` sidecar
-    * ([[graft.api.Dedup.readSignatureHistogram]]), making the precheck
-    * Θ(batch + un-compacted incs) — the corpus signature asset is
-    * scanned ONCE per batch (by the pair join), not twice. Before the
-    * first compaction-with-`guardKeys` there is no sidecar and the
-    * precheck falls back to the full aggregate (one additional
-    * slim-column streamed asset scan per batch — measured
-    * +0.14–0.48 s per call at sf0.1, the A/B table in STATUS r15);
-    * `compactOnFinish` threads `histKeys` into the fold, so a
-    * compacted asset upgrades every later run. A duplicate-heap batch
-    * kills the stream LOUDLY with the estimate and remedy instead of
-    * OOM'ing an executor mid-join — intended. Pipelines that pre-dedup
-    * their ingest and want the scan back can set the conf
-    * ([[graft.api.Dedup.PairBudgetConfKey]] /
-    * [[graft.api.Dedup.CandBudgetConfKey]]) to `warn` or `off` on the
-    * STREAM's session. */
-  /** `groupsAsset = Some((dir, aCol, bCol))` additionally maintains a
-    * CONTINUOUS (doc_id, group_id) asset — dd10's streaming twin: per
-    * batch, the batch's pairs run through
-    * [[graft.api.Dedup.incrementalGroups]] against the resolved groups
-    * asset and the touched components' rows land as upsert dir
-    * `inc_<batchId>` (latest-wins merge-on-read via
-    * [[graft.api.Dedup.readGroupsAsset]];
-    * [[graft.api.Dedup.compactGroupsAsset]] folds the upserts away).
-    * Seed the groups dir (e.g. `base/`) with [[graft.api.Dedup
-    * .duplicateGroups]] output over the corpus pairs. The resolved
-    * asset after N batches equals ONE batch `duplicateGroups` over
-    * corpus ∪ all processed increments — the FULL table, not just
-    * touched components (StreamingSpec pins the equality).
+    * Guard cost per micro-batch: the pair generators' budget prechecks
+    * read the asset's `_pairhist` sidecar
+    * ([[graft.api.Dedup.readSignatureHistogram]]), Θ(batch +
+    * un-compacted incs). Before the first compaction there is no
+    * sidecar and the precheck falls back to the full aggregate (one
+    * more slim streamed asset scan per batch); `compactOnFinish` writes
+    * the sidecar with the fold, so a compacted asset upgrades every
+    * later run. A duplicate-heap batch kills the stream LOUDLY with the
+    * estimate and remedy instead of OOM'ing an executor mid-join; set
+    * [[graft.api.Dedup.PairBudgetConfKey]] /
+    * [[graft.api.Dedup.CandBudgetConfKey]] to `warn` or `off` on the
+    * stream's session to skip that.
     *
-    * `compactOnFinish = true` makes the call BLOCK until the
-    * AvailableNow drain terminates, then folds both assets' inc dirs
-    * ([[graft.api.Dedup.compactSignatureAsset]] /
-    * [[graft.api.Dedup.compactGroupsAsset]]) — the stream's natural
-    * quiesce point, so the fold can never race a micro-batch.
-    * `keepSuperseded` threads through to both folds (same contract as
-    * the Dedup API: 0 = immediate cleanup, default 1 lets a reader
-    * that planned against the previous generation finish).
-    * `maxUpsertDirs` threads to the per-batch groups-asset read
-    * ([[graft.api.Dedup.readGroupsAsset]]'s accumulation guard): a
-    * stream draining a backlog larger than the default 64 batches
-    * between compactions must either raise it here or compact — the
-    * knob must be reachable from the streaming API, or the guard's
-    * documented remedy would be unreachable exactly where batches
-    * accumulate. */
-  def incrementalPairStream(docs: DataFrame,
-      sigFn: DataFrame => DataFrame,
-      pairFn: (DataFrame, DataFrame, Option[DataFrame]) => DataFrame,
-      corpusSigDir: String, pairsOutDir: String, checkpointDir: String,
-      idCol: String = "doc_id", assertDisjointIds: Boolean = false,
-      groupsAsset: Option[(String, String, String)] = None,
+    * `compactOnFinish = true` blocks until the AvailableNow drain
+    * terminates, then folds both assets ([[graft.api.Increment.compact]];
+    * `keepSuperseded` as in [[graft.api.Dedup.compactSignatureAsset]]).
+    * `maxUpsertDirs` is the per-batch groups read's accumulation guard
+    * ([[graft.api.Dedup.readGroupsAsset]]): a stream draining more
+    * batches than that between compactions must raise it or compact. */
+  def incrementalPairStream(docs: DataFrame, family: graft.api.Increment.Family,
+      sigDir: String, pairsDir: String, checkpointDir: String,
+      assertDisjointIds: Boolean = false,
+      groupsDir: Option[String] = None,
       compactOnFinish: Boolean = false,
       keepSuperseded: Int = 1,
-      maxUpsertDirs: Int = graft.api.Dedup.DefaultMaxUpsertDirs,
-      histKeys: Option[DataFrame => DataFrame] = None):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    val query = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        requireLineage(s, corpusSigDir, checkpointDir)
-        groupsAsset.foreach { case (gDir, _, _) =>
-          requireLineage(s, gDir, checkpointDir) }
-        val corpusSigs = graft.api.Dedup.readSignatureAsset(
-          s, corpusSigDir, excludeInc = Some(s"inc_$batchId"))
-        // the guard sidecar shares the asset read's exclusion contract:
-        // a replayed batch must not precheck against its failed attempt
-        val corpusHist = histKeys.flatMap(gk =>
-          graft.api.Dedup.readSignatureHistogram(
-            s, corpusSigDir, gk, excludeInc = Some(s"inc_$batchId")))
-        graft.api.Barrier.scoped {
-          val incSigs = graft.api.Barrier(sigFn(batch.toDF()))
-          if (assertDisjointIds)
-            graft.api.Dedup.assertDisjointIds(corpusSigs, incSigs, idCol)
-          pairFn(corpusSigs, incSigs, corpusHist)
-            .write.mode("overwrite").parquet(s"$pairsOutDir/batch=$batchId")
-          groupsAsset.foreach { case (gDir, aCol, bCol) =>
-            // read back the just-written pairs (deterministic, avoids
-            // recomputing the band join) and upsert the touched
-            // components; the groups read excludes this batch's own
-            // upsert so a replayed batch resolves the same base state
-            val batchPairs = s.read.parquet(s"$pairsOutDir/batch=$batchId")
-            graft.api.Dedup.incrementalGroups(
-                graft.api.Dedup.readGroupsAsset(
-                  s, gDir, excludeInc = Some(s"inc_$batchId"),
-                  maxUpsertDirs = maxUpsertDirs),
-                batchPairs, aCol, bCol)
-              .write.mode("overwrite").parquet(s"$gDir/inc_$batchId")
-          }
-          incSigs.write.mode("overwrite").parquet(s"$corpusSigDir/inc_$batchId")
-        }
-        ()
-      }
-      .start()
-    // Compaction at the stream's natural quiesce point: AvailableNow
-    // drains the source and terminates, so after awaitTermination no
-    // batch can be in flight — exactly the window the compaction
-    // contract requires. Opting in makes this call BLOCK until the
-    // drain completes; both assets then fold their inc dirs (retention
-    // defaults apply). A failed stream skips compaction — the exception
-    // surfaces from awaitTermination untouched.
-    if (compactOnFinish) {
-      query.awaitTermination()
-      val s = docs.sparkSession
-      graft.api.Dedup.compactSignatureAsset(s, corpusSigDir, keepSuperseded,
-        histKeys)
-      groupsAsset.foreach { case (gDir, _, _) =>
-        graft.api.Dedup.compactGroupsAsset(s, gDir, keepSuperseded) }
+      maxUpsertDirs: Int = graft.api.Dedup.DefaultMaxUpsertDirs):
+      org.apache.spark.sql.streaming.StreamingQuery =
+    microBatches(docs, checkpointDir, sigDir +: groupsDir.toSeq, compactOnFinish) {
+      (batch, batchId) =>
+        graft.api.Increment.step(batch.sparkSession, sigDir, groupsDir,
+          s"$pairsDir/batch=$batchId", s"inc_$batchId",
+          family.signatures(batch), family, assertDisjointIds, maxUpsertDirs)
+    } { s =>
+      graft.api.Increment.compact(s, sigDir, groupsDir, family, keepSuperseded)
     }
-    query
-  }
 
   /** Couple the asset's lifecycle to ONE checkpoint lineage: batchIds
     * are only unique within a checkpoint, and `inc_<batchId>` names key
@@ -330,111 +271,6 @@ object StreamingOps {
     }
   }
 
-  /** dd7's streaming twin — MinHash/Jaccard family. `corpusSigDir` must
-    * be seeded (e.g. subdir `base/`) with
-    * [[graft.api.Dedup.minhashSignatures]] output of the same
-    * (bands, rows) geometry. `groupsDir` (optional) additionally
-    * maintains the continuous (doc_id, group_id) asset — see
-    * [[incrementalPairStream]]. */
-  def incrementalDedupStream(docs: DataFrame, idCol: String, textCol: String,
-      corpusSigDir: String, pairsOutDir: String, checkpointDir: String,
-      bands: Int, rows: Int, threshold: Double,
-      assertDisjointIds: Boolean = false,
-      groupsDir: Option[String] = None,
-      compactOnFinish: Boolean = false,
-      keepSuperseded: Int = 1,
-      maxUpsertDirs: Int = graft.api.Dedup.DefaultMaxUpsertDirs):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    incrementalPairStream(docs,
-      df => graft.api.Dedup.minhashSignatures(df, idCol, textCol, bands, rows),
-      (c, i, h) => graft.api.Dedup.incrementalJaccardPairs(c, i, threshold, h),
-      corpusSigDir, pairsOutDir, checkpointDir, "doc_id", assertDisjointIds,
-      groupsDir.map(d => (d, "doc_a", "doc_b")), compactOnFinish,
-      keepSuperseded, maxUpsertDirs,
-      histKeys = Some(graft.api.Dedup.jaccardGuardKeys))
-
-  /** dd8's streaming twin — 64-bit Hamming family (SimHash text sigs,
-    * mm8 perceptual image hashes). Input stream carries PRECOMPUTED
-    * signatures (idCol, sigCol); seed the asset with the same (id, sig)
-    * projection of the corpus. */
-  def incrementalHammingStream(sigs: DataFrame, idCol: String, sigCol: String,
-      corpusSigDir: String, pairsOutDir: String, checkpointDir: String,
-      maxHamming: Int = 3, assertDisjointIds: Boolean = false,
-      groupsDir: Option[String] = None,
-      compactOnFinish: Boolean = false,
-      keepSuperseded: Int = 1,
-      maxUpsertDirs: Int = graft.api.Dedup.DefaultMaxUpsertDirs):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    incrementalPairStream(sigs,
-      df => df.select(col(idCol).as("doc_id"), col(sigCol).as("sig")),
-      (c, i, h) => graft.api.Dedup.incrementalHammingPairs(
-        c, i, "doc_id", "sig", maxHamming, h),
-      corpusSigDir, pairsOutDir, checkpointDir, "doc_id", assertDisjointIds,
-      groupsDir.map(d => (d, "doc_a", "doc_b")), compactOnFinish,
-      keepSuperseded, maxUpsertDirs,
-      histKeys = Some(graft.api.Dedup.hammingGuardKeys("sig")))
-
-  /** dd9's streaming twin — hyperplane-LSH/cosine family. Seed the
-    * asset with [[graft.api.Dedup.lshSignatureTable]] output of the
-    * same (tables, planes) geometry. `radius` (default 1, the
-    * pre-r18 contract) expands each micro-batch's probe masks like
-    * the batch verb — size it with
-    * [[graft.api.Similarity.lshIncRadiusFor]] at the asset geometry,
-    * or use the `(tables, planes, threshold, recallTarget)` AUTO
-    * overload below (r19), which derives it the same way; the
-    * candidate guard prices the expanded mask set per batch
-    * through the sidecar path. */
-  def incrementalEmbeddingStream(vecs: DataFrame, idCol: String, vecCol: String,
-      corpusSigDir: String, pairsOutDir: String, checkpointDir: String,
-      tables: Int, planes: Int, threshold: Double, probes: Int = 0,
-      assertDisjointIds: Boolean = false,
-      groupsDir: Option[String] = None,
-      compactOnFinish: Boolean = false,
-      keepSuperseded: Int = 1,
-      maxUpsertDirs: Int = graft.api.Dedup.DefaultMaxUpsertDirs,
-      radius: Int = 1):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    incrementalPairStream(vecs,
-      df => graft.api.Dedup.lshSignatureTable(df, idCol, vecCol, tables, planes),
-      (c, i, h) => graft.api.Dedup.incrementalEmbeddingPairs(
-        c, i, threshold, probes, h, radius),
-      corpusSigDir, pairsOutDir, checkpointDir, "vec_id", assertDisjointIds,
-      groupsDir.map(d => (d, "vec_a", "vec_b")), compactOnFinish,
-      keepSuperseded, maxUpsertDirs,
-      histKeys = Some(graft.api.Dedup.embeddingGuardKeys))
-
-  /** AUTO-RADIUS [[incrementalEmbeddingStream]] (r18 verdict item #3
-    * — the batch `(tables, planes)` auto overload mirrored to the
-    * stream twin, which until r19 asked the caller to size the probe
-    * radius by hand): `tables`/`planes` are the geometry the
-    * signature ASSET at `corpusSigDir` was built at (fixed —
-    * re-sizing them re-encodes the corpus), probes = planes (full
-    * multi-probe, dd9's committed discipline), and the per-batch
-    * probe RADIUS comes from [[graft.api.Similarity.lshIncRadiusFor]]
-    * at `recallTarget`: the first rung of the 1–3 ladder whose
-    * closed-form model recall holds the target at `threshold` inside
-    * the [[graft.api.Similarity.LshMaxCandFracKey]] candidate
-    * budget. The ladder is pure arithmetic over the asset geometry —
-    * no data is touched — so the radius is derived once at stream
-    * start and every micro-batch probes at it; the candidate guard
-    * still prices each batch's expanded mask set through the sidecar
-    * path. Output ≡ the batch auto overload over the accumulated
-    * increments (batch≡stream pinned in StreamingSpec). No default
-    * arguments (Scala allows one defaulted overload per name — the
-    * manual-radius overload holds them); compose `groupsDir`/
-    * compaction via that overload, passing the derived radius
-    * explicitly. */
-  def incrementalEmbeddingStream(vecs: DataFrame, idCol: String, vecCol: String,
-      corpusSigDir: String, pairsOutDir: String, checkpointDir: String,
-      tables: Int, planes: Int, threshold: Double, recallTarget: Double):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    val radius = graft.api.Similarity.lshIncRadiusFor(
-      tables, planes, planes, threshold, vecs.sparkSession, recallTarget)
-    incrementalEmbeddingStream(vecs, idCol, vecCol, corpusSigDir,
-      pairsOutDir, checkpointDir, tables, planes, threshold,
-      probes = planes, radius = radius)
-  }
-
   /** s7's streaming twin — CONTINUOUS PQ index maintenance: each
     * micro-batch of new vectors is encoded against the FROZEN
     * codebooks at `booksDir` (one map-only pass — no retraining, the
@@ -450,29 +286,16 @@ object StreamingOps {
   def pqIndexStream(vecs: DataFrame, idCol: String, vecCol: String,
       booksDir: String, indexDir: String, checkpointDir: String,
       compactOnFinish: Boolean = false, keepSuperseded: Int = 1):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    val query = vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        requireLineage(s, indexDir, checkpointDir)
-        graft.api.Barrier.scoped {
-          graft.api.Similarity.pqEncodeIndex(
-              batch.toDF(), s.read.parquet(booksDir), idCol, vecCol)
-            .write.mode("overwrite").parquet(s"$indexDir/inc_$batchId")
-        }
-        ()
-      }
-      .start()
-    if (compactOnFinish) {
-      query.awaitTermination()
-      graft.api.Dedup.compactSignatureAsset(
-        vecs.sparkSession, indexDir, keepSuperseded)
+      org.apache.spark.sql.streaming.StreamingQuery =
+    microBatches(vecs, checkpointDir, Seq(indexDir), compactOnFinish) {
+      (batch, batchId) =>
+        graft.api.Similarity.pqEncodeIndex(
+            batch, batch.sparkSession.read.parquet(booksDir), idCol, vecCol)
+          .write.mode("overwrite").parquet(s"$indexDir/inc_$batchId")
+    } { s =>
+      graft.api.Dedup.compactSignatureAsset(s, indexDir, keepSuperseded)
       ()
     }
-    query
-  }
 
   /** ex5's streaming twin — CONTINUOUS sequence packing: each
     * micro-batch of documents continue-packs AFTER the frozen corpus
@@ -494,38 +317,25 @@ object StreamingOps {
   def packIncrementStream(docs: DataFrame, idCol: String, tokensCol: String,
       packDir: String, checkpointDir: String, seed: Long, seqLen: Long,
       compactOnFinish: Boolean = false, keepSuperseded: Int = 1):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    val query = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      org.apache.spark.sql.streaming.StreamingQuery =
+    microBatches(docs, checkpointDir, Seq(packDir), compactOnFinish) {
+      (batch, batchId) =>
         val s = batch.sparkSession
-        requireLineage(s, packDir, checkpointDir)
-        graft.api.Barrier.scoped {
-          val prev = graft.api.Export.readPackTotal(s, packDir,
-            exclude = Some(s"inc_$batchId"))
-          val base = s.range(1).select(lit(prev).as("base_tokens"))
-          graft.api.Export.packSequencesAfter(batch.toDF(), idCol, tokensCol,
-              base, seed, seqLen)
-            .write.mode("overwrite").parquet(s"$packDir/inc_$batchId")
-          s.read.parquet(s"$packDir/inc_$batchId")
-            .agg(coalesce(max(col("cum_before") + col(tokensCol)), lit(prev))
-              .as("end_total"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$packDir/_totals/inc_$batchId")
-        }
-        ()
-      }
-      .start()
-    if (compactOnFinish) {
-      query.awaitTermination()
-      graft.api.Dedup.compactSignatureAsset(
-        docs.sparkSession, packDir, keepSuperseded)
-      graft.api.Export.collapsePackTotals(docs.sparkSession, packDir)
-      ()
+        val prev = graft.api.Export.readPackTotal(s, packDir,
+          exclude = Some(s"inc_$batchId"))
+        val base = s.range(1).select(lit(prev).as("base_tokens"))
+        graft.api.Export.packSequencesAfter(batch, idCol, tokensCol,
+            base, seed, seqLen)
+          .write.mode("overwrite").parquet(s"$packDir/inc_$batchId")
+        s.read.parquet(s"$packDir/inc_$batchId")
+          .agg(coalesce(max(col("cum_before") + col(tokensCol)), lit(prev))
+            .as("end_total"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$packDir/_totals/inc_$batchId")
+    } { s =>
+      graft.api.Dedup.compactSignatureAsset(s, packDir, keepSuperseded)
+      graft.api.Export.collapsePackTotals(s, packDir)
     }
-    query
-  }
 
   /** Idempotent micro-batch sink: foreachBatch + deterministic
     * per-batch output paths, the standard exactly-once-to-storage

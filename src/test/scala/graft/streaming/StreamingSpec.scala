@@ -106,8 +106,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       }
       val stream = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(landing.toString)
-      val q = StreamingOps.incrementalDedupStream(stream, "doc_id", "text",
-        sigDir, pairsDir, s"$work/ckpt", 8, 4, 0.8)
+      val q = StreamingOps.incrementalPairStream(stream,
+        graft.api.Increment.Family.jaccard("doc_id", "text", 8, 4, 0.8),
+        sigDir, pairsDir, s"$work/ckpt")
       assert(q.awaitTermination(180000), "AvailableNow query did not stop")
       val gotDf = spark.read.parquet(pairsDir) // batch=<id> partition col
       assert(gotDf.select("batch").distinct().count() == 2,
@@ -152,9 +153,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .write.parquet(s"$sigDir/base")
       // run 1: first half of the increment
       land(col("doc_id") % 20 === 0, "inc0.parquet")
-      val q1 = StreamingOps.incrementalDedupStream(
+      val q1 = StreamingOps.incrementalPairStream(
         spark.readStream.schema(docs.schema).parquet(landing.toString),
-        "doc_id", "text", sigDir, pairsDir, ckpt, 8, 4, 0.8)
+        graft.api.Increment.Family.jaccard("doc_id", "text", 8, 4, 0.8), sigDir, pairsDir, ckpt)
       assert(q1.awaitTermination(180000), "run 1 did not stop")
       // compact while the stream is quiesced: inc_0 folds into a new gen
       // (keepSuperseded = 0: this test pins the immediate-cleanup layout;
@@ -170,9 +171,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         graft.api.Dedup.jaccardGuardKeys).isDefined)
       // run 2: second half, SAME checkpoint — batchIds continue
       land(col("doc_id") % 20 =!= 0, "inc1.parquet")
-      val q2 = StreamingOps.incrementalDedupStream(
+      val q2 = StreamingOps.incrementalPairStream(
         spark.readStream.schema(docs.schema).parquet(landing.toString),
-        "doc_id", "text", sigDir, pairsDir, ckpt, 8, 4, 0.8)
+        graft.api.Increment.Family.jaccard("doc_id", "text", 8, 4, 0.8), sigDir, pairsDir, ckpt)
       assert(q2.awaitTermination(180000), "run 2 did not stop")
       val gotDf = spark.read.parquet(pairsDir)
       val got = gotDf.select("doc_a", "doc_b", "jac")
@@ -214,9 +215,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       graft.api.Dedup.minhashSignatures(corpus, "doc_id", "text", 8, 4)
         .write.parquet(s"$sigDir/base")
       land(col("doc_id") % 20 === 0, "inc0.parquet")
-      val q1 = StreamingOps.incrementalDedupStream(
+      val q1 = StreamingOps.incrementalPairStream(
         spark.readStream.schema(docs.schema).parquet(landing.toString),
-        "doc_id", "text", sigDir, s"$work/pairs", s"$work/ckpt", 8, 4, 0.8)
+        graft.api.Increment.Family.jaccard("doc_id", "text", 8, 4, 0.8), sigDir, s"$work/pairs", s"$work/ckpt")
       assert(q1.awaitTermination(180000), "run 1 did not stop")
       // DEFAULT retention: the folded seed and inc_0 LINGER after the
       // fold — run 2 must skip them via the manifest, not re-pair
@@ -226,9 +227,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .filter(_.isDirectory).map(_.getName).toSet
       assert(names == Set("base", "inc_0", "base_gen1"), s"got $names")
       land(col("doc_id") % 20 =!= 0, "inc1.parquet")
-      val q2 = StreamingOps.incrementalDedupStream(
+      val q2 = StreamingOps.incrementalPairStream(
         spark.readStream.schema(docs.schema).parquet(landing.toString),
-        "doc_id", "text", sigDir, s"$work/pairs", s"$work/ckpt", 8, 4, 0.8)
+        graft.api.Increment.Family.jaccard("doc_id", "text", 8, 4, 0.8), sigDir, s"$work/pairs", s"$work/ckpt")
       assert(q2.awaitTermination(180000), "run 2 did not stop")
       val gotDf = spark.read.parquet(s"$work/pairs")
       val got = gotDf.select("doc_a", "doc_b")
@@ -271,11 +272,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
             .findFirst().get
           Files.copy(part, landing.resolve(s"inc$i.parquet"))
       }
-      val q = StreamingOps.incrementalDedupStream(
+      val q = StreamingOps.incrementalPairStream(
         spark.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1").parquet(landing.toString),
-        "doc_id", "text", s"$work/sigs", s"$work/pairs", s"$work/ckpt",
-        8, 4, 0.8, groupsDir = Some(s"$work/groups"))
+        graft.api.Increment.Family.jaccard("doc_id", "text", 8, 4, 0.8), s"$work/sigs", s"$work/pairs", s"$work/ckpt",
+        groupsDir = Some(s"$work/groups"))
       assert(q.awaitTermination(180000), "AvailableNow query did not stop")
       assert(new java.io.File(s"$work/groups").list()
         .count(_.startsWith("inc_")) == 2, "one upsert dir per batch")
@@ -323,10 +324,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       Files.copy(part, landing.resolve("inc.parquet"))
       // compactOnFinish blocks through the AvailableNow drain, then
       // folds both assets at the quiesce point
-      val q = StreamingOps.incrementalDedupStream(
+      val q = StreamingOps.incrementalPairStream(
         spark.readStream.schema(docs.schema).parquet(landing.toString),
-        "doc_id", "text", s"$work/sigs", s"$work/pairs", s"$work/ckpt",
-        8, 4, 0.8, groupsDir = Some(s"$work/groups"), compactOnFinish = true)
+        graft.api.Increment.Family.jaccard("doc_id", "text", 8, 4, 0.8), s"$work/sigs", s"$work/pairs", s"$work/ckpt",
+        groupsDir = Some(s"$work/groups"), compactOnFinish = true)
       assert(!q.isActive, "compactOnFinish must return after termination")
       def gens(dir: String) = new java.io.File(dir).listFiles()
         .filter(_.isDirectory).map(_.getName).filter(_.startsWith("base_gen")).toSet
@@ -407,9 +408,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
       Files.copy(part, landing.resolve("inc.parquet"))
       def run(ckpt: String) = {
-        val q = StreamingOps.incrementalDedupStream(
+        val q = StreamingOps.incrementalPairStream(
           spark.readStream.schema(docs.schema).parquet(landing.toString),
-          "doc_id", "text", sigDir, s"$work/pairs", ckpt, 8, 4, 0.8)
+          graft.api.Increment.Family.jaccard("doc_id", "text", 8, 4, 0.8), sigDir, s"$work/pairs", ckpt)
         q.awaitTermination(180000)
       }
       assert(run(s"$work/ckptA"), "first run did not stop")
@@ -453,10 +454,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
             .findFirst().get
           Files.copy(part, landing.resolve(s"inc$i.parquet"))
       }
-      val q = StreamingOps.incrementalHammingStream(
+      val q = StreamingOps.incrementalPairStream(
         spark.readStream.schema(inc.schema)
           .option("maxFilesPerTrigger", "1").parquet(landing.toString),
-        "doc_id", "sig", s"$work/sigs", s"$work/pairs", s"$work/ckpt", 3)
+        graft.api.Increment.Family.hamming("doc_id", "sig", 3),
+        s"$work/sigs", s"$work/pairs", s"$work/ckpt")
       assert(q.awaitTermination(180000), "AvailableNow query did not stop")
       val gotDf = spark.read.parquet(s"$work/pairs")
       assert(gotDf.select("batch").distinct().count() == 2)
@@ -560,16 +562,17 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
             .findFirst().get
           Files.copy(part, landing.resolve(s"inc$i.parquet"))
       }
-      val q = StreamingOps.incrementalEmbeddingStream(
+      val q = StreamingOps.incrementalPairStream(
         spark.readStream.schema(inc.schema)
           .option("maxFilesPerTrigger", "1").parquet(landing.toString),
-        "vec_id", "embedding", s"$work/sigs", s"$work/pairs", s"$work/ckpt",
-        8, 6, 0.3, probes = 6, groupsDir = Some(s"$work/groups"),
         // r18: radius-2 probing through the streaming plumb — the
         // batch twin below probes at the same radius, so equality
         // also pins the cross-batch symmetry (batch-2's masks find
         // batch-1 pairs in the upserted asset at radius 2)
-        radius = 2)
+        graft.api.Increment.Family.embedding("vec_id", "embedding",
+          8, 6, 0.3, probes = 6, radius = 2),
+        s"$work/sigs", s"$work/pairs", s"$work/ckpt",
+        groupsDir = Some(s"$work/groups"))
       assert(q.awaitTermination(180000), "AvailableNow query did not stop")
       val gotDf = spark.read.parquet(s"$work/pairs")
       assert(gotDf.select("batch").distinct().count() == 2)
@@ -634,11 +637,12 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .filter(_.getFileName.toString.endsWith(".parquet"))
         .findFirst().get
       Files.copy(part, landing.resolve("inc.parquet"))
-      val q = StreamingOps.incrementalEmbeddingStream(
+      val q = StreamingOps.incrementalPairStream(
         spark.readStream.schema(inc.schema)
           .option("maxFilesPerTrigger", "1").parquet(landing.toString),
-        "vec_id", "embedding", s"$work/sigs", s"$work/pairs", s"$work/ckpt",
-        8, 6, 0.3, 0.9)
+        graft.api.Increment.Family.embedding(spark, "vec_id", "embedding",
+          8, 6, 0.3, 0.9),
+        s"$work/sigs", s"$work/pairs", s"$work/ckpt")
       assert(q.awaitTermination(180000), "AvailableNow query did not stop")
       val got = spark.read.parquet(s"$work/pairs")
         .select("vec_a", "vec_b", "cos")
@@ -701,11 +705,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .filter(_.getFileName.toString.endsWith(".parquet"))
         .findFirst().get
       Files.copy(part, landing.resolve("inc.parquet"))
-      val q = StreamingOps.incrementalHammingStream(
+      val q = StreamingOps.incrementalPairStream(
         spark.readStream.schema(inc.schema)
           .option("maxFilesPerTrigger", "1").parquet(landing.toString),
-        "doc_id", "sig", s"$work/sigs", s"$work/pairs", s"$work/ckpt",
-        maxHamming = 5)
+        graft.api.Increment.Family.hamming("doc_id", "sig", maxHamming = 5),
+        s"$work/sigs", s"$work/pairs", s"$work/ckpt")
       assert(q.awaitTermination(180000), "AvailableNow query did not stop")
       val got = spark.read.parquet(s"$work/pairs")
         .select("doc_a", "doc_b", "hamming")

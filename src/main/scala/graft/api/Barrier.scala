@@ -95,7 +95,10 @@ object Barrier {
     * strictly worse) and `none` (nothing to fill). Under
     * `localCheckpoint` any partition the first action somehow missed
     * is computed by the checkpoint finalizer's fill-in job, so the
-    * contract violation costs an extra job, never correctness. */
+    * contract violation costs an extra job, never correctness.
+    * BarrierSpec pins this per mode (one filling job, no second read of
+    * the source); the Lloyd engine's seed collect and first round are
+    * such filling actions. */
   def lazily(df: DataFrame): DataFrame = {
     val out = mode(df) match {
       case "none" => df
@@ -105,6 +108,14 @@ object Barrier {
     }
     scopeStack.get.headOption.foreach(_ += out)
     out
+  }
+
+  /** [[lazily]] together with its filling action: the barrier and its
+    * row count, counted in ONE job over every partition (`Dataset.count`
+    * adds an aggregate exchange, a second job under AQE). */
+  def counted(df: DataFrame): (DataFrame, Long) = {
+    val b = lazily(df)
+    (b, b.queryExecution.toRdd.count())
   }
 
   /** Barrier `b` as a frame whose logical plan is ONE leaf over its
@@ -133,10 +144,10 @@ object Barrier {
     * INVARIANT (r13 — [[release]] is destructive under
     * `localCheckpoint` mode, where it used to be a no-op): any result
     * that transitively reads a barriered frame must be FULLY
-    * MATERIALIZED (written, collected, or re-barriered into an outer
-    * scope via [[adopt]]) before the scope exits. A lazy DataFrame
-    * returned OUT of a scope fails at materialization with missing
-    * checkpoint blocks — the blocks were unpersisted at scope exit.
+    * MATERIALIZED (written or collected) before the scope exits. A
+    * lazy DataFrame returned OUT of a scope fails at materialization
+    * with missing checkpoint blocks — the blocks were unpersisted at
+    * scope exit.
     * Under `persist` mode the same escape recomputes from lineage
     * (slow but correct); code must not rely on that mode-dependent
     * rescue. */
@@ -168,32 +179,4 @@ object Barrier {
         lr.rdd.unpersist(false); ()
       case _ => ()
     }
-
-  /** Run `body` on THIS thread and return its result plus every
-    * barrier it created — the seam for operators that fan work out to
-    * OTHER threads (concurrent Spark job submission): the scope stack
-    * is a ThreadLocal, so a barrier created on a pool thread would
-    * otherwise escape the caller's [[scoped]] block and, under
-    * `persist` mode, stay cached forever. The fan-out caller wraps
-    * each task body in `collecting`, then [[adopt]]s the returned
-    * frames into its own scope (see
-    * [[graft.api.Similarity.pqTrain]]). */
-  def collecting[T](body: => T): (T, Seq[DataFrame]) = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    scopeStack.set(buf :: scopeStack.get)
-    try { val r = body; (r, buf.toList) }
-    catch {
-      // On failure nobody will ever adopt buf's frames — release them
-      // here or they stay cached forever under `persist` mode (the
-      // exact leak collecting exists to prevent, on the error path).
-      case e: Throwable => buf.foreach(release); throw e
-    }
-    finally scopeStack.set(scopeStack.get.tail)
-  }
-
-  /** Register an already-materialized barrier into the CURRENT
-    * thread's innermost scope (no-op outside any scope) — the
-    * receiving half of [[collecting]]. */
-  def adopt(df: DataFrame): Unit =
-    scopeStack.get.headOption.foreach(_ += df)
 }

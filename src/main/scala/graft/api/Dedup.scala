@@ -1304,7 +1304,7 @@ object Dedup extends org.apache.spark.internal.Logging {
   /** dd11 — SEMANTIC dedup over an embedding column, the SemDeDup shape
     * [Abbas et al., "SemDeDup: Data-efficient learning at web-scale
     * through semantic deduplication", 2023]: cluster the corpus with
-    * deterministic in-plan k-means ([[Similarity.kmeansAssign]]), find
+    * deterministic Lloyd k-means ([[Similarity.kmeansAssign]]), find
     * near-dup pairs by exact cosine WITHIN each cluster only, connect
     * pairs into duplicate groups, and keep ONE member per group — the
     * one FARTHEST from its centroid (lowest ccos; the paper's rule:
@@ -1312,8 +1312,8 @@ object Dedup extends org.apache.spark.internal.Logging {
     * to the lowest id. Unpaired members all survive. Output:
     * (vec_id, cent_id) for every survivor.
     *
-    * Scale shape: clustering never shuffles the corpus (broadcast
-    * centroids + tiny fixed-point mean aggregates — see
+    * Scale shape: clustering never shuffles the corpus (one aggregate
+    * job per Lloyd round over driver-held centroids — see
     * kmeansAssign); the pair step shuffles the corpus ONCE on cent_id
     * and pays O(Σ|cell|²) dot products — the SemDeDup cost model — so
     * k is the knob that bounds cell size (grow k ~ corpus/targetCell;
@@ -1626,7 +1626,12 @@ object Dedup extends org.apache.spark.internal.Logging {
     // back to the exact full-corpus aggregate until the first
     // compaction merges them into one generation.
     if (scan.gen.size > 1) return None
-    val genHist = spark.read.parquet(histPaths.map(_.toString): _*)
+    // read the sidecar's part files: Spark treats the `_`-prefixed dir
+    // itself as a hidden path and logs that it ignored it
+    val parts = histPaths.flatMap(fs.listStatus(_).map(_.getPath)
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith(".")))
+    val genHist = spark.read.parquet(
+        (if (parts.nonEmpty) parts else histPaths).map(_.toString): _*)
       .select(col("k"), col("cc"))
     val incs = scan.liveExcept(excludeInc, dir)
     Some(

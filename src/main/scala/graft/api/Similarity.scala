@@ -1,9 +1,13 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
+import org.apache.spark.sql.types._
+import graft.functions.{PqKernels, VectorFunctions, VectorKernels}
 
 /** Library-facing similarity search: corpus/query DataFrames in, ranked
   * neighbor rows out. The oracled fixture queries
@@ -756,7 +760,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     // the sample itself: train books on the sample, score every
     // sample pair both ways, take the 90th-percentile |adc − true|.
     val e = Barrier(normed(sample, idCol, vecCol))
-    val booksRow = booksRowOf(pqTrain(sample, idCol, vecCol, m, ks, iters))
+    val booksRow = trainedBooksRow(sample, idCol, vecCol, m, ks, iters)
     val index = pqIndexOf(e, booksRow)
       .join(e.select(col("vec_id"), col("embedding").as("c_emb")), "vec_id")
     val qB = e.crossJoin(broadcast(booksRow))
@@ -989,9 +993,10 @@ object Similarity extends org.apache.spark.internal.Logging {
   /** Deterministic evenly-id-rank-spaced k₁-row subset of `seeds` —
     * the auto-sizing path's coarse routing table. Spread (not prefix)
     * so the coarse cells sample the seed population; tiny-frame window
-    * (seeds are k rows by contract). */
-  private def autoCoarseSeeds(seeds: DataFrame, idCol: String,
-      k1: Int, n: Long): DataFrame = {
+    * (seeds are k rows by contract); k₁ = [[coarseSizeFor]](k, w). */
+  private def autoCoarseSeeds(seeds: DataFrame, idCol: String, w: Int): DataFrame = {
+    val n = seeds.count()
+    val k1 = coarseSizeFor(n, w)
     val stride = math.max(1L, n / k1)
     seeds.withColumn("_rk",
         row_number().over(Window.orderBy(col(idCol))).cast("long") - 1)
@@ -1151,37 +1156,34 @@ object Similarity extends org.apache.spark.internal.Logging {
     * floating point, so the only lossy step is the floor itself. */
   val KMeansQuantScale: Long = 1L << 20
 
-  /** Deterministic in-plan Lloyd k-means over an `array<float>` column:
+  /** Deterministic Lloyd k-means over an `array<float>` column:
     * `iters` rounds of (assign to nearest centroid by cosine, recompute
     * centroids as the quantized fixed-point mean), then a final
-    * assignment. No driver-side training loop and no RNG: seeds are a
-    * caller-provided DataFrame (same id/vec columns), assignment is a
-    * broadcast join + window top-1, and the centroid update is a tiny
-    * (k × dim)-row aggregate — the corpus is never shuffled. Empty
+    * assignment. No RNG: seeds are a caller-provided DataFrame (same
+    * id/vec columns). The rounds run in [[lloyd]] (one aggregate job
+    * each over driver-held centroids); the final assignment is the
+    * map-only [[assignCells]] pass — the corpus is never shuffled. Empty
     * clusters drop out of the centroid set (both here and in the SQL
     * oracle). Output: (vec_id, embedding, nrm, cent_id, ccos) with
     * ccos = cosine to the final centroid. Ties in assignment break to
     * the lowest cent_id.
     *
-    * Scale shape: each round is one corpus pass (the normed projection
-    * is [[Barrier]]'d once, so parquet is read once) against a
-    * broadcast centroid table; k should grow ~corpus/targetCellSize so
+    * Scale shape: each round is one corpus pass against centroids that
+    * ride the task closure; k should grow ~corpus/targetCellSize so
     * downstream per-cell work stays bounded. */
   def kmeansAssign(corpus: DataFrame, seeds: DataFrame,
-      idCol: String, vecCol: String, iters: Int): DataFrame = {
-    val c = Barrier(normed(corpus, idCol, vecCol))
-    assignCells(c, kmeansLoop(c, seeds, idCol, vecCol, iters))
-  }
+      idCol: String, vecCol: String, iters: Int): DataFrame =
+    assignCells(normed(corpus, idCol, vecCol),
+      kmeansCentroids(corpus, seeds, idCol, vecCol, iters))
 
   /** The trained CODEBOOK itself — final (cent_id, c_emb, c_nrm) after
     * `iters` Lloyd rounds over `corpus` — for callers that index OTHER
     * data with it (the IVF-with-trained-codebook shape: train once,
     * assign corpus cells, probe at query time). Same determinism
-    * contract as [[kmeansAssign]]. */
+    * contract as [[kmeansAssign]]; cent_id keeps the seeds' id type. */
   def kmeansCentroids(corpus: DataFrame, seeds: DataFrame,
       idCol: String, vecCol: String, iters: Int): DataFrame =
-    kmeansLoop(Barrier(normed(corpus, idCol, vecCol)),
-      seeds, idCol, vecCol, iters)
+    cosineLloyd(corpus, seeds, idCol, vecCol, iters, Cosine)
 
   /** [[kmeansCentroids]] with every Lloyd-round assignment routed
     * through the coarse quantizer — codebook training that stays
@@ -1192,12 +1194,8 @@ object Similarity extends org.apache.spark.internal.Logging {
       iters: Int, w: Int): DataFrame = {
     Guard.check(corpus.sparkSession, HierSizingConfKey)(
       hierSizingVerdict(seeds.count(), coarseSeeds.count(), w))
-    val coarse = normed(coarseSeeds, idCol, vecCol)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-        col("nrm").as("c_nrm"))
-    kmeansLoop(Barrier(normed(corpus, idCol, vecCol)),
-      seeds, idCol, vecCol, iters,
-      (cc, cents) => hierAssignImpl(cc, cents, coarse, w))
+    cosineLloyd(corpus, seeds, idCol, vecCol, iters,
+      Hier(collectCents(normed(coarseSeeds, idCol, vecCol))._2, w))
   }
 
   /** AUTO-SIZED [[kmeansCentroidsHier]]: derives k₁ = √(w·k) from the
@@ -1205,29 +1203,9 @@ object Similarity extends org.apache.spark.internal.Logging {
     * the seeds — the sizing-by-construction path the r12 verdict asked
     * for (a caller cannot recreate the linear-k₁ wall through it). */
   def kmeansCentroidsHier(corpus: DataFrame, seeds: DataFrame,
-      idCol: String, vecCol: String, iters: Int, w: Int): DataFrame = {
-    val k = seeds.count()
-    kmeansCentroidsHier(corpus, seeds,
-      autoCoarseSeeds(seeds, idCol, coarseSizeFor(k, w), k),
+      idCol: String, vecCol: String, iters: Int, w: Int): DataFrame =
+    kmeansCentroidsHier(corpus, seeds, autoCoarseSeeds(seeds, idCol, w),
       idCol, vecCol, iters, w)
-  }
-
-  private def kmeansLoop(c: DataFrame, seeds: DataFrame,
-      idCol: String, vecCol: String, iters: Int,
-      assign: (DataFrame, DataFrame) => DataFrame = assignCells): DataFrame = {
-    var cents = normed(seeds, idCol, vecCol)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-        col("nrm").as("c_nrm"))
-    var i = 0
-    while (i < iters) {
-      // Barrier per round: centroids are k rows, but their lineage is a
-      // full corpus pass — without the barrier every later broadcast
-      // replays the whole chain.
-      cents = Barrier(recentre(assign(c, cents)))
-      i += 1
-    }
-    cents
-  }
 
   /** [[kmeansAssign]] with every corpus-wide assignment (the Lloyd
     * rounds AND the final one) routed through the two-level
@@ -1240,28 +1218,18 @@ object Similarity extends org.apache.spark.internal.Logging {
     * centroid) — `w` buys it back. */
   def kmeansAssignHier(corpus: DataFrame, seeds: DataFrame,
       coarseSeeds: DataFrame, idCol: String, vecCol: String,
-      iters: Int, w: Int): DataFrame = {
-    Guard.check(corpus.sparkSession, HierSizingConfKey)(
-      hierSizingVerdict(seeds.count(), coarseSeeds.count(), w))
-    val c = Barrier(normed(corpus, idCol, vecCol))
-    val coarse = normed(coarseSeeds, idCol, vecCol)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-        col("nrm").as("c_nrm"))
-    val assign = (cc: DataFrame, cents: DataFrame) =>
-      hierAssignImpl(cc, cents, coarse, w)
-    assign(c, kmeansLoop(c, seeds, idCol, vecCol, iters, assign))
-  }
+      iters: Int, w: Int): DataFrame =
+    hierAssignImpl(normed(corpus, idCol, vecCol),
+      kmeansCentroidsHier(corpus, seeds, coarseSeeds, idCol, vecCol, iters, w),
+      centCols(normed(coarseSeeds, idCol, vecCol)), w)
 
   /** AUTO-SIZED [[kmeansAssignHier]]: k₁ = √(w·k) derived from the
     * seed count, coarse table = evenly-spaced seed subset (see
     * [[coarseSizeFor]]). */
   def kmeansAssignHier(corpus: DataFrame, seeds: DataFrame,
-      idCol: String, vecCol: String, iters: Int, w: Int): DataFrame = {
-    val k = seeds.count()
-    kmeansAssignHier(corpus, seeds,
-      autoCoarseSeeds(seeds, idCol, coarseSizeFor(k, w), k),
+      idCol: String, vecCol: String, iters: Int, w: Int): DataFrame =
+    kmeansAssignHier(corpus, seeds, autoCoarseSeeds(seeds, idCol, w),
       idCol, vecCol, iters, w)
-  }
 
   /** Nearest-centroid assignment by cosine — MAP-ONLY: the centroid
     * table collapses to a single sorted-array row that rides a 1-row
@@ -1274,7 +1242,7 @@ object Similarity extends org.apache.spark.internal.Logging {
   private def assignCells(c: DataFrame, cents: DataFrame): DataFrame = {
     val centsRow = cents.groupBy().agg(
       array_sort(collect_list(struct(
-        col("cent_id"), col("c_emb"), col("c_nrm")))).as("cents"))
+        longId, col("c_emb"), col("c_nrm")))).as("cents"))
     c.crossJoin(broadcast(centsRow))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         VectorFunctions.nearestCentroid(
@@ -1282,6 +1250,10 @@ object Similarity extends org.apache.spark.internal.Logging {
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("best.cent_id").as("cent_id"), col("best.ccos").as("ccos"))
   }
+
+  /** cent_id as the kernels' Long (a trained frame keeps the caller's
+    * id type; the cast is a no-op on Long ids). */
+  private def longId = col("cent_id").cast(LongType).as("cent_id")
 
   /** TWO-LEVEL nearest-centroid assignment — the coarse-quantizer shape
     * that keeps codebook assignment affordable when k grows with the
@@ -1316,14 +1288,14 @@ object Similarity extends org.apache.spark.internal.Logging {
         col("c_nrm").as("nrm")),
       coarseCents)
       .select(col("cent_id").as("coarse_id"),
-        struct(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-          col("nrm").as("c_nrm")).as("fine"))
+        struct(col("vec_id").cast(LongType).as("cent_id"),
+          col("embedding").as("c_emb"), col("nrm").as("c_nrm")).as("fine"))
     val cells = fineTagged.groupBy("coarse_id")
       .agg(array_sort(collect_list(col("fine"))).as("fines"))
     val treeRow = cells
       .join(coarseCents, cells("coarse_id") === coarseCents("cent_id"))
       .select(struct(
-        struct(col("cent_id"), col("c_emb"), col("c_nrm")).as("coarse"),
+        struct(longId, col("c_emb"), col("c_nrm")).as("coarse"),
         col("fines")).as("node"))
       .groupBy().agg(array_sort(collect_list(col("node"))).as("tree"))
     corpus.crossJoin(broadcast(treeRow))
@@ -1338,35 +1310,9 @@ object Similarity extends org.apache.spark.internal.Logging {
   def hierarchicalAssign(corpus: DataFrame, centroids: DataFrame,
       coarseCentroids: DataFrame, idCol: String, vecCol: String,
       w: Int): DataFrame = {
-    def cents(df: DataFrame) = normed(df, idCol, vecCol)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-        col("nrm").as("c_nrm"))
+    def cents(df: DataFrame) = centCols(normed(df, idCol, vecCol))
     hierAssign(normed(corpus, idCol, vecCol),
       cents(centroids), cents(coarseCentroids), w)
-  }
-
-  /** Centroid update: exact fixed-point mean per (cluster, coordinate),
-    * rebuilt into `array<float>` ordered by coordinate position. The
-    * whole update shuffles only (cent_id, pos) partial sums — map-side
-    * combined, k × dim result rows. */
-  private def recentre(assigned: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
-    val scale = lit(KMeansQuantScale.toDouble)
-    val coords = assigned
-      .select(col("cent_id"), posexplode(col("embedding")))
-      .select(col("cent_id"), col("pos"),
-        floor(col("col").cast(DoubleType) * scale).as("q"))
-      .groupBy("cent_id", "pos")
-      .agg(sum("q").as("sq"), count(lit(1)).as("n"))
-      .select(col("cent_id"), col("pos"),
-        (col("sq").cast(DoubleType) / (scale * col("n").cast(DoubleType)))
-          .cast(FloatType).as("v"))
-    coords.groupBy("cent_id")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("v")))),
-        s => s.getField("v")).as("c_emb"))
-      .select(col("cent_id"), col("c_emb"),
-        VectorFunctions.norm(col("c_emb")).as("c_nrm"))
   }
 
   /** ANN via IVF cells: corpus rows assigned to their nearest centroid,
@@ -1380,9 +1326,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     * variant. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int): DataFrame = {
-    val cents = normed(centroids, idCol, vecCol)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-        col("nrm").as("c_nrm"))
+    val cents = centCols(normed(centroids, idCol, vecCol))
     val corpusCells = assignCells(normed(corpus, idCol, vecCol), cents)
       .drop("ccos")
     ivfProbe(corpusCells, normed(queries, idCol, vecCol), cents, k, nProbe)
@@ -1395,12 +1339,9 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfTopKHier(corpus: DataFrame, queries: DataFrame,
       centroids: DataFrame, coarseCentroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int, w: Int): DataFrame = {
-    def centCols(df: DataFrame) = normed(df, idCol, vecCol)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-        col("nrm").as("c_nrm"))
-    val cents = centCols(centroids)
-    val corpusCells = hierAssign(normed(corpus, idCol, vecCol),
-      cents, centCols(coarseCentroids), w).drop("ccos")
+    val cents = centCols(normed(centroids, idCol, vecCol))
+    val corpusCells = hierAssign(normed(corpus, idCol, vecCol), cents,
+      centCols(normed(coarseCentroids, idCol, vecCol)), w).drop("ccos")
     ivfProbe(corpusCells, normed(queries, idCol, vecCol), cents, k, nProbe)
   }
 
@@ -1410,22 +1351,20 @@ object Similarity extends org.apache.spark.internal.Logging {
     * summarize the corpus geometry. */
   def ivfTopKHier(corpus: DataFrame, queries: DataFrame,
       centroids: DataFrame, idCol: String, vecCol: String,
-      k: Int, nProbe: Int, w: Int): DataFrame = {
-    val kc = centroids.count()
-    ivfTopKHier(corpus, queries, centroids,
-      autoCoarseSeeds(centroids, idCol, coarseSizeFor(kc, w), kc),
+      k: Int, nProbe: Int, w: Int): DataFrame =
+    ivfTopKHier(corpus, queries, centroids, autoCoarseSeeds(centroids, idCol, w),
       idCol, vecCol, k, nProbe, w)
-  }
 
   /** PQ sub-quantizer codebooks [Jégou et al. 2011]: the vector space
     * splits into `m` contiguous subspaces of width dim/m, and each gets
-    * an independent L2 Lloyd codebook of `ks` codes (seeds = the first
-    * `ks` rows' subvectors; `iters` rounds of argmin-L2 assignment +
-    * the quantized fixed-point mean — which IS the exact L2 minimizer,
-    * so the cosine machinery's recentre is reused verbatim). Returns
-    * (m, code_id, c_emb). Determinism contract as [[kmeansAssign]]:
-    * no RNG, ties → lowest id, integer mean — the DuckDB oracle
-    * replays the whole chain ([[graft.functions.PqFunctions
+    * an independent L2 Lloyd codebook of `ks` codes (seeds = the
+    * subvectors of the rows with id < `ks`; `iters` rounds of
+    * argmin-L2 assignment + the quantized fixed-point mean — which IS
+    * the exact L2 minimizer). All m codebooks train together in
+    * [[lloyd]], one aggregate job per round. Returns (m, code_id,
+    * c_emb), code_id in the corpus id type. Determinism contract as
+    * [[kmeansAssign]]: no RNG, ties → lowest id, integer mean — the
+    * DuckDB oracle replays the whole chain ([[graft.functions.PqFunctions
     * .l2KmeansCtes]]).
     *
     * Scale shape: training cost is m small k-means over the corpus
@@ -1434,105 +1373,173 @@ object Similarity extends org.apache.spark.internal.Logging {
     * full-corpus map-only passes regardless of what trained the books. */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ks: Int, iters: Int): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
-    val dim = corpus.select(size(col(vecCol))).head.getInt(0)
-    require(dim % m == 0, s"pqTrain: dim $dim not divisible by m=$m")
-    val d = dim / m
-    // r20: ONE fused Lloyd chain over (vec_id, m, sub-embedding) rows
-    // instead of m concurrent per-subspace chains. The arithmetic is
-    // untouched — per-m seeds are the same first-ks subvectors, the
-    // assignment argmin runs against the same cent_id-sorted per-m
-    // codebook array, and the recentre is the same quantized integer
-    // mean, just grouped by (m, cent_id) — so the books are
-    // bit-identical (the existing SimilaritySpec / oracle rows pin
-    // them). What changes is the JOB graph: 1 slice barrier + iters
-    // round barriers, vs m slice barriers + m·iters round barriers
-    // fanned out on a thread pool (measured r20: the concurrent
-    // chains serialized on driver scheduling — s6/s8 carried 109/128
-    // stages of 30-300 ms each at par ≈ 1). Fewer driver round trips
-    // at any scale; the per-round exchange volume is identical
-    // (m × slices instead of m separate slice frames).
-    val sliced = Barrier(corpus
-      .select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-      .select(col("vec_id"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          s => slice(col("embedding"), s * d + 1, lit(d)))))
-      .withColumnRenamed("pos", "m").withColumnRenamed("col", "embedding"))
-    var cents = sliced.filter(col("vec_id") < ks)
-      .select(col("m"), col("vec_id").as("cent_id"),
-        col("embedding").as("c_emb"))
-    var i = 0
-    while (i < iters) {
-      // Barrier per round: the books are m·ks rows, but their lineage
-      // is a full corpus pass (see kmeansLoop's rationale)
-      cents = Barrier(recentreByM(assignCellsL2ByM(sliced, cents)))
-      i += 1
+    val (idType, books) = l2Lloyd(corpus, idCol, vecCol, m, ks, iters)
+    centsFrame(corpus.sparkSession, "code_id", idType,
+      Seq(StructField("m", IntegerType, nullable = false),
+        StructField("code_id", LongType), CentFields(1)),
+      books.map { case (g, c) => Row(g, c.id, c.emb.toSeq) })
+  }
+
+  // Design: the centroids of every trained codebook live on the
+  // DRIVER, and each Lloyd round is ONE treeAggregate job over the
+  // lazily barriered input. The SQL rounds it replaced paid a broadcast
+  // aggregate, the per-(centroid, coordinate) mean aggregates and a
+  // barrier per round, each submitted as its own AQE stage job.
+  // Measured on perfbench daily_pipeline (seed 1, traced, 4-core box,
+  // median of 3): pqTrain 18 → 5 jobs and 1624 → 439 ms; at sf0.001 the
+  // call-time jobs of pqTrain read 12 → 3, ivfadcTopK 38 → 17, s6
+  // 29 → 14 and s8 48 → 25 (JobBudgetSpec pins the verbs). Trained
+  // output is a frame over ONE driver-built partition, never a
+  // LocalRelation: r21 measured book rows embedded in every consuming
+  // plan at ~2× wall (plan canonicalization and hashing over the data).
+
+  /** One centroid: its id and its vector (a PQ subspace slice or a whole
+    * embedding). */
+  private final case class Cent(id: Long, emb: Array[Float]) {
+    def arr: ArrayData = UnsafeArrayData.fromPrimitiveArray(emb)
+    /** c_nrm by the vec_dot kernel, as [[normed]] computes it. */
+    def nrm: Double = math.sqrt(VectorKernels.dot(arr, arr))
+    /** The kernels' centroid struct: (id, c_emb[, c_nrm]). */
+    def struct(withNrm: Boolean): InternalRow = new GenericInternalRow(
+      if (withNrm) Array[Any](id, arr, nrm) else Array[Any](id, arr))
+  }
+
+  private def structs(cs: Seq[Cent], withNrm: Boolean): ArrayData =
+    new GenericArrayData(cs.map(_.struct(withNrm)).toArray[Any])
+
+  /** How [[lloyd]] assigns a row — with the kernels the SQL assignments
+    * call: L2 argmin within each subspace (PQ books, IVFADC cells),
+    * cosine argmax (k-means), or the two-level cosine route through the
+    * fixed `coarse` cells ([[hierAssign]]). */
+  private sealed trait Assign extends Serializable
+  private case object L2 extends Assign
+  private case object Cosine extends Assign
+  private final case class Hier(coarse: Seq[Cent], w: Int) extends Assign
+
+  /** One round's kernel-side centroid arrays, one per group. */
+  private def kernelInput(cents: Array[Array[Cent]], how: Assign): Array[ArrayData] =
+    how match {
+      case L2 | Cosine => cents.map(structs(_, withNrm = how == Cosine))
+      case Hier(coarse, _) =>
+        // each fine centroid sits under its nearest coarse cell; cells
+        // holding none are left out, as hierAssignImpl's join leaves them
+        val cs = structs(coarse, withNrm = true)
+        val under = cents(0).groupBy(f =>
+          VectorKernels.nearestCentroid(cs, f.arr, f.nrm).getLong(0))
+        Array(new GenericArrayData(coarse.filter(c => under.contains(c.id))
+          .map(c => new GenericInternalRow(Array[Any](c.struct(withNrm = true),
+            structs(under(c.id), withNrm = true)))).toArray[Any]))
     }
-    cents.select(col("m"), col("cent_id").as("code_id"), col("c_emb"))
-  }
 
-  // r21 A/B note: a driver-collected LocalRelation book per Lloyd round
-  // (collect each round's m·ks rows, rebuild as a local frame, broadcast
-  // joblessly) was measured and REVERTED: job counts dropped (s8 50→40,
-  // s6 31→24) but wall REGRESSED ~2x (s8 5.2→9.1/10.9 s, s6 3.4→5.2 s,
-  // two probe runs, target/r21/probe_s_after2.log) — the book rows
-  // embedded in every job's LogicalPlan make each of the remaining jobs
-  // pay plan canonicalization/hashing over the data, and booksRowOf's
-  // per-call collect re-read the 32-file books asset at 32 tasks × 2
-  // calls on s7 (sumRun 0.24→3.7-6.9 s). The checkpoint-per-round +
-  // in-plan broadcast-build shape is the faster one on every leg.
-
-  /** [[assignCellsL2]] fused across subspaces: rows and centroids both
-    * carry `m`, the per-m codebook arrays broadcast as one tiny keyed
-    * frame, and the argmin runs within the row's own subspace. */
-  private def assignCellsL2ByM(c: DataFrame, cents: DataFrame): DataFrame = {
-    import graft.functions.PqFunctions
-    val centsRows = cents.groupBy(col("m")).agg(array_sort(
-      collect_list(struct(col("cent_id"), col("c_emb")))).as("cents"))
-    c.join(broadcast(centsRows), "m")
-      .select(col("m"), col("vec_id"), col("embedding"),
-        PqFunctions.nearestCentroidL2(col("cents"), col("embedding")).as("best"))
-      .select(col("m"), col("vec_id"), col("embedding"),
-        col("best.cent_id").as("cent_id"))
-  }
-
-  /** [[recentre]] fused across subspaces — identical quantized
-    * fixed-point mean, grouped by (m, cent_id); no norm column (the
-    * PQ books never use one, matching kmeansLoopL2's projection). */
-  private def recentreByM(assigned: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
-    val scale = lit(KMeansQuantScale.toDouble)
-    assigned
-      .select(col("m"), col("cent_id"), posexplode(col("embedding")))
-      .select(col("m"), col("cent_id"), col("pos"),
-        floor(col("col").cast(DoubleType) * scale).as("q"))
-      .groupBy("m", "cent_id", "pos")
-      .agg(sum("q").as("sq"), count(lit(1)).as("n"))
-      .select(col("m"), col("cent_id"), col("pos"),
-        (col("sq").cast(DoubleType) / (scale * col("n").cast(DoubleType)))
-          .cast(FloatType).as("v"))
-      .groupBy("m", "cent_id")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("v")))),
-        s => s.getField("v")).as("c_emb"))
-  }
-
-  /** L2 Lloyd loop over (vec_id, embedding) frames: argmin-L2 assign
-    * (native [[graft.functions.NearestCentroidL2]] over a 1-row
-    * broadcast — map-only, like the cosine path) + shared quantized
-    * recentre. */
-  private def kmeansLoopL2(c: DataFrame, seeds: DataFrame,
-      iters: Int): DataFrame = {
-    var cents = seeds.select(col("vec_id").as("cent_id"),
-      col("embedding").as("c_emb"))
-    var i = 0
-    while (i < iters) {
-      cents = Barrier(
-        recentre(assignCellsL2(c, cents)).select("cent_id", "c_emb"))
-      i += 1
+  /** THE Lloyd engine: `iters` rounds over `rows` = (embedding[, nrm]),
+    * centroids held on the driver as `groups × k` [[Cent]]s (group g
+    * reads the embedding slice at g·width). Each round is one
+    * treeAggregate job: every task assigns its rows with the native
+    * kernel (ties → lowest id) and sums floor(x · [[KMeansQuantScale]])
+    * per (centroid, coordinate) as longs, plus counts; the driver
+    * divides. Long sums are associative, so the centroids are
+    * bit-identical to the SQL `sum` the oracle replays at any
+    * partitioning. Empty clusters drop out. Task memory is the dense
+    * Σk × (width + 1) longs. */
+  private def lloyd(rows: DataFrame, seeds: Array[Array[Cent]], iters: Int,
+      how: Assign): Array[Array[Cent]] = {
+    val rdd = rows.queryExecution.toRdd
+    val scale = KMeansQuantScale.toDouble
+    (0 until iters).foldLeft(seeds) { (cents, _) =>
+      val kin = kernelInput(cents, how)
+      val ids = cents.map(_.map(_.id))
+      val base = ids.scanLeft(0)(_ + _.length)
+      val d = cents.flatten.headOption.fold(0)(_.emb.length)
+      val tot = rdd.mapPartitions { it =>
+        val acc = new Array[Long](base.last * (d + 1))
+        it.foreach { r =>
+          val emb = r.getArray(0)
+          var g = 0
+          while (g < kin.length) {
+            val id = (how match {
+              case L2 => PqKernels.nearestCentroidL2(kin(g), emb, g * d)
+              case Cosine => VectorKernels.nearestCentroid(kin(g), emb, r.getDouble(1))
+              case Hier(_, w) =>
+                VectorKernels.hierNearestCentroid(kin(g), emb, r.getDouble(1), w)
+            }).getLong(0)
+            val at = (base(g) + java.util.Arrays.binarySearch(ids(g), id)) * (d + 1)
+            acc(at) += 1
+            var i = 0
+            while (i < d) {
+              acc(at + 1 + i) += math.floor(emb.getFloat(g * d + i).toDouble * scale).toLong
+              i += 1
+            }
+            g += 1
+          }
+        }
+        Iterator.single(acc)
+      }.treeAggregate(null: Array[Long])(addInto, addInto)
+      // the new means; a centroid that drew no row drops out
+      Array.tabulate(cents.length)(g => ids(g).indices
+        .map(j => (ids(g)(j), (base(g) + j) * (d + 1)))
+        .collect { case (id, at) if tot != null && tot(at) > 0 =>
+          Cent(id, Array.tabulate(d)(i =>
+            (tot(at + 1 + i).toDouble / (scale * tot(at).toDouble)).toFloat))
+        }.toArray)
     }
-    cents
   }
+
+  private def addInto(a: Array[Long], b: Array[Long]): Array[Long] =
+    if (a == null || b == null) Option(a).getOrElse(b)
+    else { a.indices.foreach(i => a(i) += b(i)); a }
+
+  /** (id type, centroids sorted by id) from a (vec_id, embedding) frame. */
+  private def collectCents(df: DataFrame): (DataType, Array[Cent]) =
+    (df.schema("vec_id").dataType, df.select("vec_id", "embedding").collect()
+      .map(r => Cent(r.getAs[Number](0).longValue, r.getSeq[Float](1).toArray)).sortBy(_.id))
+
+  /** L2 Lloyd over `m` subspaces at once (m = 1: whole vectors, the
+    * IVFADC coarse cells); seeds are the rows with id < `ks`. Returns
+    * the id type and (subspace, centroid) pairs. The input is read
+    * through one lazy barrier, released when training ends. */
+  private def l2Lloyd(corpus: DataFrame, idCol: String, vecCol: String,
+      m: Int, ks: Int, iters: Int): (DataType, Seq[(Int, Cent)]) = {
+    val b = Barrier.lazily(corpus.select(col(idCol).as("vec_id"),
+      col(vecCol).as("embedding")))
+    try {
+      // the seed collect scans every row of b: it is the filling action
+      val (idType, seeds) = collectCents(b.filter(col("vec_id") < ks))
+      require(seeds.nonEmpty, s"no seed rows ($idCol < $ks) to train on")
+      val (dim, d) = (seeds.head.emb.length, seeds.head.emb.length / m)
+      require(dim % m == 0, s"pqTrain: dim $dim not divisible by m=$m")
+      (idType, lloyd(b.select("embedding"), Array.tabulate(m)(g =>
+        seeds.map(s => Cent(s.id, s.emb.slice(g * d, g * d + d)))), iters, L2)
+        .toSeq.zipWithIndex.flatMap { case (cs, g) => cs.map(g -> _) })
+    } finally Barrier.release(b)
+  }
+
+  /** Cosine Lloyd (flat or [[Hier]]) from the caller's `seeds`: returns
+    * (cent_id, c_emb, c_nrm), cent_id in the seeds' id type. */
+  private def cosineLloyd(corpus: DataFrame, seeds: DataFrame, idCol: String,
+      vecCol: String, iters: Int, how: Assign): DataFrame = {
+    val (idType, init) = collectCents(normed(seeds, idCol, vecCol))
+    // the first round's aggregate scans every row of b: it fills it
+    val b = Barrier.lazily(normed(corpus, idCol, vecCol).select("embedding", "nrm"))
+    val cents = try lloyd(b, Array(init), iters, how).head
+      finally Barrier.release(b)
+    centsFrame(corpus.sparkSession, "cent_id", idType, CentFields,
+      cents.toSeq.map(c => Row(c.id, c.emb.toSeq, c.nrm)))
+  }
+
+  private val CentFields = Seq(StructField("cent_id", LongType),
+    StructField("c_emb", ArrayType(FloatType), nullable = false),
+    StructField("c_nrm", DoubleType))
+
+  /** Driver-held rows as a one-partition frame, the Long id column
+    * `idCol` cast back to `idType` (a no-op the optimizer drops on Long). */
+  private def centsFrame(spark: SparkSession, idCol: String, idType: DataType,
+      fields: Seq[StructField], rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), StructType(fields))
+      .withColumn(idCol, col(idCol).cast(idType))
+
+  private def centCols(normedDf: DataFrame): DataFrame =
+    normedDf.select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
+      col("nrm").as("c_nrm"))
 
   /** Map-only L2 argmin assignment; every input column passes through
     * plus `cent_id` (the Lloyd loop passes (vec_id, embedding), IVFADC
@@ -1540,7 +1547,7 @@ object Similarity extends org.apache.spark.internal.Logging {
   private def assignCellsL2(c: DataFrame, cents: DataFrame): DataFrame = {
     import graft.functions.PqFunctions
     val centsRow = cents.groupBy().agg(array_sort(
-      collect_list(struct(col("cent_id"), col("c_emb")))).as("cents"))
+      collect_list(struct(longId, col("c_emb")))).as("cents"))
     val cols = c.columns.map(col).toSeq
     c.crossJoin(broadcast(centsRow))
       .select(cols :+
@@ -1586,11 +1593,8 @@ object Similarity extends org.apache.spark.internal.Logging {
   def pqTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int, ks: Int, iters: Int, rerank: Int): DataFrame = {
-    // r21: lazy barrier + count — the sizing count is the job that
-    // materializes the barrier (Barrier.lazily contract), one driver
-    // round-trip instead of two
-    val c = Barrier.lazily(normed(corpus, idCol, vecCol))
-    val n = c.count()
+    // the sizing count is the job that fills the lazy barrier
+    val (c, n) = Barrier.counted(normed(corpus, idCol, vecCol))
     Guard.check(corpus.sparkSession, RerankSizingConfKey)(
       rerankSizingVerdict(n, k, rerank))
     pqTopKImpl(c, queries, idCol, vecCol, k, m, ks, iters, rerank)
@@ -1605,8 +1609,7 @@ object Similarity extends org.apache.spark.internal.Logging {
   def pqTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int, ks: Int, iters: Int): DataFrame = {
-    val c = Barrier.lazily(normed(corpus, idCol, vecCol))
-    val n = c.count()
+    val (c, n) = Barrier.counted(normed(corpus, idCol, vecCol))
     Guard.check(corpus.sparkSession, PqConcConfKey)(
       pqConcVerdict(c, n, k, "pqTopK"))
     pqTopKImpl(c, queries, idCol, vecCol, k, m, ks, iters, rerankFor(n, k))
@@ -1615,22 +1618,39 @@ object Similarity extends org.apache.spark.internal.Logging {
   private def pqTopKImpl(c: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int, ks: Int, iters: Int, rerank: Int): DataFrame = {
-    val booksRow = booksRowOf(pqTrain(c, "vec_id", "embedding", m, ks, iters))
+    val booksRow = trainedBooksRow(c, "vec_id", "embedding", m, ks, iters)
     pqQueryTail(pqIndexOf(c, booksRow), c,
       normed(queries, idCol, vecCol), booksRow, k, rerank)
   }
 
-  /** The m-per-subspace codebooks folded into the single broadcastable
-    * row the native expressions consume: books[m] = code-id-ascending
-    * array of (code_id, c_emb) — position order IS id order, the
-    * contract [[graft.functions.PqEncode]]/[[graft.functions.PqAdc]]
-    * and the oracle rely on. */
+  /** The m per-subspace codebooks packed ON THE DRIVER into the single
+    * broadcastable row the native expressions consume: books[m] =
+    * code-id-ascending array of (code_id, c_emb), subspaces in m order
+    * — position order IS id order, the contract
+    * [[graft.functions.PqEncode]]/[[graft.functions.PqAdc]] and the
+    * oracle rely on. One collect of the (small, immutable) books; the
+    * row is a one-partition frame like [[pqTrain]]'s output. */
   private def booksRowOf(books: DataFrame): DataFrame =
-    books.groupBy("m").agg(array_sort(
-        collect_list(struct(col("code_id"), col("c_emb")))).as("codes"))
-      .groupBy().agg(transform(
-        array_sort(collect_list(struct(col("m"), col("codes")))),
-        s => s.getField("codes")).as("books"))
+    packBooks(books.sparkSession, books.schema("c_emb").nullable,
+      books.select(col("m"), col("code_id").cast(LongType), col("c_emb"))
+        .collect().toSeq
+        .map(r => (r.getInt(0), Cent(r.getLong(1), r.getSeq[Float](2).toArray))))
+
+  /** [[pqTrain]] packed straight into the books row (no collect). */
+  private def trainedBooksRow(corpus: DataFrame, idCol: String,
+      vecCol: String, m: Int, ks: Int, iters: Int): DataFrame =
+    packBooks(corpus.sparkSession, embNullable = false,
+      l2Lloyd(corpus, idCol, vecCol, m, ks, iters)._2)
+
+  private def packBooks(spark: SparkSession, embNullable: Boolean,
+      books: Seq[(Int, Cent)]): DataFrame = {
+    val entry = StructType(Seq(StructField("code_id", LongType),
+      StructField("c_emb", ArrayType(FloatType), embNullable)))
+    val row = Row(books.groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.map(_._2).sortBy(_.id).map(c => Row(c.id, c.emb.toSeq))))
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), StructType(Seq(
+      StructField("books", ArrayType(ArrayType(entry, false), false), nullable = false))))
+  }
 
   private def pqIndexOf(cNormed: DataFrame, booksRow: DataFrame): DataFrame = {
     import graft.functions.PqFunctions
@@ -1702,8 +1722,9 @@ object Similarity extends org.apache.spark.internal.Logging {
       queriesNormed: DataFrame, booksRow: DataFrame,
       k: Int, rerank: Int): DataFrame = {
     import graft.functions.PqFunctions
-    // r21: lazy barrier — the nq count below is the materializing job
-    val qB = Barrier.lazily(queriesNormed.crossJoin(broadcast(booksRow))
+    // the query count fills the lazy barrier; qB is one row per query
+    // by construction, so counting it needs no distinct (r18 ADVICE)
+    val (qB, nq) = Barrier.counted(queriesNormed.crossJoin(broadcast(booksRow))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"),
         PqFunctions.pqLut(col("books"), col("embedding")).as("lut")))
@@ -1711,11 +1732,8 @@ object Similarity extends org.apache.spark.internal.Logging {
       (col("q_nrm") * col("nrm"))
     val scored = index.join(broadcast(qB), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), adcCos.as("adc"))
-    // qB is barrier'd and one-row-per-query by construction — its
-    // count is a cached scan, no distinct job (r18 ADVICE)
     adcSelectRerank(scored,
-      qB.select(col("q_id"), col("q_emb"), col("q_nrm")), cNormed, k, rerank,
-      qB.count())
+      qB.select(col("q_id"), col("q_emb"), col("q_nrm")), cNormed, k, rerank, nq)
   }
 
   /** Ceiling on queries × rerank ENTRIES the heap-based ADC candidate
@@ -1886,9 +1904,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       idCol: String, vecCol: String, k: Int,
       nCells: Int, coarseIters: Int, m: Int, ks: Int, pqIters: Int,
       nProbe: Int, rerank: Int): DataFrame = {
-    // r21: lazy barrier + count (one materializing job, see pqTopK)
-    val c = Barrier.lazily(normed(corpus, idCol, vecCol))
-    val n = c.count()
+    val (c, n) = Barrier.counted(normed(corpus, idCol, vecCol))
     Guard.check(corpus.sparkSession, ProbeSizingConfKey)(
       probeSizingVerdict(nCells, nProbe))
     Guard.check(corpus.sparkSession, RerankSizingConfKey)(
@@ -1906,8 +1922,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       idCol: String, vecCol: String, k: Int,
       nCells: Int, coarseIters: Int, m: Int, ks: Int,
       pqIters: Int): DataFrame = {
-    val c = Barrier.lazily(normed(corpus, idCol, vecCol))
-    val n = c.count()
+    val (c, n) = Barrier.counted(normed(corpus, idCol, vecCol))
     Guard.check(corpus.sparkSession, PqConcConfKey)(
       pqConcVerdict(c, n, k, "ivfadcTopK"))
     ivfadcTopKImpl(c, queries, idCol, vecCol, k, nCells, coarseIters,
@@ -1919,9 +1934,9 @@ object Similarity extends org.apache.spark.internal.Logging {
       nCells: Int, coarseIters: Int, m: Int, ks: Int, pqIters: Int,
       nProbe: Int, rerank: Int): DataFrame = {
     import graft.functions.PqFunctions
-    val cf = c.select(col("vec_id"), col("embedding"))
-    val coarse = Barrier(kmeansLoopL2(cf,
-      cf.filter(col("vec_id") < nCells), coarseIters))
+    val (idType, cells) = l2Lloyd(c, "vec_id", "embedding", 1, nCells, coarseIters)
+    val coarse = centsFrame(c.sparkSession, "cent_id", idType, CentFields.take(2),
+      cells.map { case (_, x) => Row(x.id, x.emb.toSeq) })
     // residual index: (vec_id, cent_id, nrm, codes) — nrm is the TRUE
     // vector norm (cosine denominators), codes quantize the residual
     val res = Barrier(assignCellsL2(c, coarse)
@@ -1929,8 +1944,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       .select(col("vec_id"), col("cent_id"), col("nrm"),
         zip_with(col("embedding"), col("c_emb"), (x, cc) => x - cc)
           .as("embedding")))
-    val booksRow = booksRowOf(
-      pqTrain(res, "vec_id", "embedding", m, ks, pqIters))
+    val booksRow = trainedBooksRow(res, "vec_id", "embedding", m, ks, pqIters)
     val index = res.crossJoin(broadcast(booksRow))
       .select(col("vec_id"), col("cent_id"), col("nrm"),
         PqFunctions.pqEncode(col("books"), col("embedding")).as("codes"))
@@ -1960,12 +1974,10 @@ object Similarity extends org.apache.spark.internal.Logging {
     // projection so the dedup shuffle runs ONCE (the pre-r19 shape
     // re-ran it per consumer: one distinct+shuffle job just to count,
     // another under the re-rank join — the r18 ADVICE finding).
-    // r21: the barrier fills LAZILY and the count (a full scan, the
-    // Barrier.lazily contract) is the job that materializes it — one
-    // job, not two.
-    val qSmall = Barrier.lazily(
+    // The count fills that barrier.
+    val (qSmall, nq) = Barrier.counted(
       qB.select(col("q_id"), col("q_emb"), col("q_nrm")).distinct())
-    adcSelectRerank(scored, qSmall, c, k, rerank, qSmall.count())
+    adcSelectRerank(scored, qSmall, c, k, rerank, nq)
   }
 
   /** Shared IVF probe + exact re-rank tail: queries pick their nProbe

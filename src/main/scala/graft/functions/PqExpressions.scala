@@ -249,7 +249,12 @@ object PqKernels {
     acc
   }
 
-  def nearestCentroidL2(cents: ArrayData, emb: ArrayData): InternalRow = {
+  def nearestCentroidL2(cents: ArrayData, emb: ArrayData): InternalRow =
+    nearestCentroidL2(cents, emb, 0)
+
+  /** Argmin over the centroids' width starting at `emb[off]` — a PQ
+    * subspace slice, read in place. */
+  def nearestCentroidL2(cents: ArrayData, emb: ArrayData, off: Int): InternalRow = {
     val k = cents.numElements()
     require(k > 0, "nearest_centroid_l2: empty centroid array")
     var bestId = -1L
@@ -257,7 +262,7 @@ object PqKernels {
     var i = 0
     while (i < k) {
       val ct = cents.getStruct(i, 2)
-      val d = l2(emb, 0, ct.getArray(1))
+      val d = l2(emb, off, ct.getArray(1))
       if (d < bestDist) { bestDist = d; bestId = ct.getLong(0) }
       i += 1
     }

@@ -31,18 +31,8 @@ case class FloatVecDot(left: Expression, right: Expression)
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -239,19 +229,23 @@ object VectorKernels {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
+  /** [[FloatVecDot]]'s sum (the generated code inlines the same loop):
+    * products in double, accumulated left to right. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+      i += 1
+    }
+    acc
+  }
+
   /** dot(c_emb, emb)/(c_nrm · nrm) for one centroid struct — the exact
     * cosinePre op order both assignment kernels share. */
-  private def centCos(ct: InternalRow, emb: ArrayData, nrm: Double): Double = {
-    val cEmb = ct.getArray(1)
-    val n = math.min(emb.numElements(), cEmb.numElements())
-    var acc = 0.0
-    var d = 0
-    while (d < n) {
-      acc += cEmb.getFloat(d).toDouble * emb.getFloat(d).toDouble
-      d += 1
-    }
-    acc / (ct.getDouble(2) * nrm)
-  }
+  private def centCos(ct: InternalRow, emb: ArrayData, nrm: Double): Double =
+    dot(ct.getArray(1), emb) / (ct.getDouble(2) * nrm)
 
   def nearestCentroid(cents: ArrayData, emb: ArrayData, nrm: Double): InternalRow = {
     val k = cents.numElements()

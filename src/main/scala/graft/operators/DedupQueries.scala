@@ -393,7 +393,7 @@ object DedupQueries {
        |  SELECT c2.group_id FROM comp c2 WHERE c2.doc_id % $IncMod = 0)""".stripMargin
 
   // -- dd11: semantic dedup (SemDeDup) ---------------------------------
-  // Deterministic in-plan k-means over the embeddings (seeds = first
+  // Deterministic Lloyd k-means over the embeddings (seeds = first
   // SemK vectors, SemIters Lloyd rounds with the quantized fixed-point
   // centroid mean — see Similarity.KMeansQuantScale for why the mean is
   // an integer aggregate), exact-cosine pairs WITHIN final clusters at

@@ -96,7 +96,7 @@ object SimilarityQueries {
   // -- s4: IVF ANN over a k-means-TRAINED codebook ----------------------
   // The production IVF shape (train a codebook, assign corpus cells
   // once, probe at query time): centroids come from
-  // Similarity.kmeansCentroids (deterministic in-plan Lloyd, seeds =
+  // Similarity.kmeansCentroids (deterministic Lloyd engine, seeds =
   // first NCells vectors, TrainIters rounds) instead of the raw seed
   // vectors s3 uses. What training buys is cell BALANCE — the max-cell
   // probe cost bound that matters at corpus scale (measured at sf0.1:

@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The conf-driven materialization barrier: every mode must produce
@@ -68,13 +69,11 @@ class BarrierSpec extends AnyFunSuite with SparkSpec {
       assert(withMode(m)(run()) == base, s"mode $m diverged from localCheckpoint")
   }
 
-  test("persist-mode scoped pqTrain releases the pool-thread barriers (collecting/adopt)") {
-    // pqTrain submits its m sub-quantizer trainings from pool threads;
-    // the scope stack is a ThreadLocal, so without Barrier.collecting +
-    // adopt the per-thread barriers would escape the caller's scoped
-    // block and stay cached forever under persist mode (the FaaS
-    // deployment's barrier mode — a streaming seeding step would leak
-    // one cached frame per subspace per round)
+  test("persist-mode scoped pqTrain leaves no cached barrier (Lloyd engine)") {
+    // the Lloyd engine reads its input through one lazy barrier and
+    // hands back driver-built rows; under persist mode (the FaaS
+    // deployment's barrier mode) a barrier that outlived the call would
+    // stay cached for every seeding step of a stream
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001").limit(200)
     withMode("persist") {
       val leaked = leakedIds {
@@ -104,23 +103,31 @@ class BarrierSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("collecting releases its barriers when the body throws (persist mode)") {
-    // On the error path nobody will ever adopt the collected frames:
-    // without the catch-release, a failed pool-thread task under
-    // persist mode leaks every barrier it created before the throw —
-    // the exact leak collecting exists to prevent, just on failure.
-    val docs = Tables.documents(spark, sf0001).limit(50)
-    withMode("persist") {
-      val leaked = leakedIds {
-        intercept[RuntimeException] {
-          Barrier.collecting {
-            Barrier(docs.select("doc_id")) // materializes + registers
-            throw new RuntimeException("subspace failed")
-          }
-        }
-      }
-      assert(leaked.isEmpty,
-        s"leaked cached barriers on the error path: RDD ids $leaked")
+  test("lazily: one full-scan action fills the barrier; later actions skip the source") {
+    // the source counts the rows it computes; the filling action is the
+    // Lloyd engine's (a filtered collect), the later one its round shape
+    // (a raw-RDD pass over the frame)
+    val n = 200L
+    for (m <- Barrier.Modes.toSeq.sorted) withMode(m) {
+      val computed = spark.sparkContext.longAccumulator(s"lazily-$m")
+      val touch = udf((x: Long) => { computed.add(1); x }).asNondeterministic()
+      def src = spark.range(0, n, 1, 4).select(touch(col("id")).as("id"))
+      val b = Barrier.lazily(src)
+      // only checkpoint fills eagerly: a lazy reliable checkpoint would
+      // compute the frame twice
+      assert(computed.value == (if (m == "checkpoint") n else 0L), s"$m: after lazily")
+      val (seeds, jobs) = graft.JobCount(spark)(b.filter(col("id") < 5).collect())
+      assert(seeds.length == 5 && jobs == 1, s"$m: filling action ran $jobs jobs")
+      assert(computed.value == n, s"$m: the filling action computed ${computed.value} rows")
+      assert(b.queryExecution.toRdd.count() == n)
+      // none keeps the lineage: the second action recomputes the source
+      assert(computed.value == (if (m == "none") 2 * n else n),
+        s"$m: the second action recomputed the source (${computed.value} rows)")
+      Barrier.release(b)
+      // counted: the barrier and its row count from one filling job
+      val ((c, cn), cJobs) = graft.JobCount(spark)(Barrier.counted(src))
+      assert(cn == n && (m == "checkpoint" || cJobs == 1), s"$m: counted ran $cJobs jobs")
+      Barrier.release(c)
     }
   }
 

@@ -172,7 +172,7 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_S3_SECRET", "graft-bench"))
   }
 
-  /** Task-slot count for a PROBE session (ScaleProbe/RecallProbe):
+  /** Task-slot count for a PROBE session (ScaleProbe):
     * the requested `SPARK_GRAFT_CPUS` (default 32), capped under the
     * object-store shuffle leg by heap ÷ per-slot budget. A probe JVM
     * is simultaneously driver, all N executors AND the FS-shuffle
@@ -264,10 +264,9 @@ object Bench {
     * informational (catches a THROTTLED box: slow but unshared, the
     * one state the delay ratio cannot see).
     *
-    * Wall-clock prototypes measured and rejected this round
-    * (tools/CalibProbe): a single-thread kernel jitters 29% quiet on
-    * this box (frequency ramp + migration — false-flags at any
-    * useful threshold), and an all-cores wall-clock anchor at 1.15
+    * Wall-clock prototypes measured and rejected (STATUS r19): a
+    * single-thread kernel jitters 29% quiet on this box (frequency
+    * ramp + migration — false-flags at any useful threshold), and an all-cores wall-clock anchor at 1.15
     * false-flagged a quiet suite off ambient load that a 32-slot
     * Spark suite shrugs off.
     *
@@ -283,9 +282,8 @@ object Bench {
     * wall-clock — the informational `box_load` denominator. Override
     * with `SPARK_GRAFT_BENCH_CALIB_REF` on different hardware;
     * `SPARK_GRAFT_BENCH_CALIB=0` skips the anchor entirely
-    * (box_factor -1 in the artifact = not measured). Measured r19 on
-    * this box: tools/CalibProbe min 0.529–0.539 s across three
-    * sessions. */
+    * (box_factor -1 in the artifact = not measured). Measured r19
+    * (STATUS r19): the kernel's quiet-box min wall. */
   private[graft] val CalibRefSec = 0.53
 
   /** Contended past this median delay factor. The box is a VM, so the
@@ -294,10 +292,10 @@ object Bench {
     * to guest load average and is the leading suspect for r18's
     * flagged-by-nobody 1.4× driver run). Committed from measurement:
     * the quiet band on this box reads 1.07–1.17 (ambient load avg
-    * 2–3 + baseline host steal, r19 tools/CalibProbe across
-    * sessions), i.e. ≤ the ±10% same-code composite drift already
-    * attributed to box noise; 1.25 ≈ a quarter of the CPU stolen —
-    * past any noise attribution, and well under the ~1.5 a co-tenant
+    * 2–3 + baseline host steal; STATUS r19, and STATUS.md's r20
+    * quiet legs 1.073/1.126/1.114), i.e. ≤ the ±10% same-code
+    * composite drift already attributed to box noise; 1.25 ≈ a
+    * quarter of the CPU stolen — past any noise attribution, and well under the ~1.5 a co-tenant
     * build stealing half the box produces. */
   private[graft] val CalibDriftMax = 1.25
 
@@ -339,13 +337,6 @@ object Bench {
     val cpuSum = cpus.sum / 1e9
     (wall, if (cpuOk && cpuSum > 0) wall * threads / cpuSum else -1.0)
   }
-
-  /** Kernel wall-clock (sec) on `threads` concurrent threads, min
-    * over `reps` (the first rep carries JIT; the min is the box's
-    * best currently-available schedule — under sustained contention
-    * every rep is inflated, which is exactly the signal). */
-  private[graft] def calibSec(reps: Int = 3, threads: Int = 1): Double =
-    (1 to reps).map(r => calibOnce(threads, r * 1000L)._1).min
 
   /** One anchor leg on all cores, min-of-3 by wall-clock:
     * (wall sec, scheduler-delay factor from the min-wall rep). */
@@ -668,8 +659,7 @@ object Bench {
     val qs = results.map { case (k, v, _, _, _, _, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // bytesRead is task-level (counts each consumer's read of a
-    // barrier/cached block AGAIN); fsBytesRead is the storage-layer
-    // truth — see tools/BarrierBytes for the per-mode attribution
+    // barrier/cached block AGAIN); fsBytesRead is the storage-layer truth
     val bytes = results
       .map { case (k, _, r, s, f, _, _) =>
         s""""$k":{"bytesRead":$r,"fsBytesRead":$f,"shuffleWrite":$s}""" }

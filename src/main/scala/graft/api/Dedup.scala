@@ -1256,15 +1256,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     def mins(se: DataFrame): DataFrame = se
       .groupBy(col("u").as("c")).agg(least(min(col("v")), col("c")).as("m"))
 
-    // lazy barrier + count: the count is the materializing job
-    // (Barrier.lazily contract), and carrying each round's count
-    // forward drops the previous round's re-count; with the
-    // equal-count precondition short-circuiting the except, a round is
-    // 1-2 actions. `barriered` holds the round's barrier and `edges`
-    // reads it through Barrier.leaf, so the next round's plan does not
-    // nest this one's.
-    var barriered = Barrier.lazily(canon(residue))
-    var edgeCount = barriered.count()
+    // Barrier.counted fills each round's barrier and counts it in one
+    // job, and carrying each round's count forward drops the previous
+    // round's re-count; with the equal-count precondition
+    // short-circuiting the except, a round is 1-2 actions. `barriered`
+    // holds the round's barrier and `edges` reads it through
+    // Barrier.leaf, so the next round's plan does not nest this one's.
+    var (barriered, edgeCount) = Barrier.counted(canon(residue))
     var edges = Barrier.leaf(barriered)
     var rounds = 0
     var converged = false
@@ -1289,8 +1287,7 @@ object Dedup extends org.apache.spark.internal.Logging {
         large.join(m2, col("u") === col("c"))
           .select(col("v").as("u"), col("m").as("v"))
         .union(m2.select(col("c").as("u"), col("m").as("v"))))
-      val next = Barrier.lazily(small)
-      val nextCount = next.count()
+      val (next, nextCount) = Barrier.counted(small)
       converged = nextCount == edgeCount && next.except(edges).isEmpty
       Barrier.release(barriered) // persist mode: one cached copy per round otherwise
       barriered = next

@@ -66,7 +66,7 @@ object Similarity extends org.apache.spark.internal.Logging {
   val RerankBand = 10
 
   /** Calibration point of the rerank auto-sizing curve — the r13
-    * RecallProbe measurement (target/r13_recall3.log): R = 5000 at
+    * recall-vs-scale measurement (STATUS r13): R = 5000 at
     * n = 200 k vectors reads recall@5 = 0.97 on the near-uniform
     * fixture (PQ's worst case), and the third decade showed required
     * growth is SUBLINEAR (the SAME R = 5000 still reads 0.91 at 2 M
@@ -89,16 +89,15 @@ object Similarity extends org.apache.spark.internal.Logging {
     * better, and the measured requirement for recall ≥ 0.9 grew
     * sublinearly (R/n fell 10× between the second and third measured
     * decades). CONCENTRATION caveat (measured r15, clustered fixture —
-    * target/r15_recall_cluster*.log): heavy manifold concentration
+    * STATUS r15): heavy manifold concentration
     * does NOT relax this curve — it helps cell ROUTING but compresses
     * within-cluster cosine gaps (~5× on the 8-cluster fixture) below
     * ADC's resolution, so the required R transitions toward the
     * candidate CLUSTER's population (R = clusterSize read recall
     * 1.0000 exactly; the √n auto budget read 0.36 at 200 k). On such
     * corpora the multi-probe LSH family is the better tool (s2p read
-    * 0.96 scale-free there) — re-measure the knee at the operating
-    * scale and concentration (tools/RecallProbe, fixture=cluster)
-    * before trusting either curve. */
+    * 0.96 scale-free there) — [[rerankForMeasured]] measures the
+    * budget at the corpus's own concentration. */
   def rerankFor(n: Long, k: Int): Int = {
     if (n <= 1) return math.max(1, k)
     val curve = math.ceil(
@@ -122,7 +121,8 @@ object Similarity extends org.apache.spark.internal.Logging {
       "constant collapses recall as the corpus grows (measured r13: " +
       "R=50 read recall@5 0.35 at 2M vectors vs 0.91 at the " +
       "corpus-scaled R=5000). Use the auto-sized overload (no rerank " +
-      "arg), re-measure the knee at this scale with tools/RecallProbe, " +
+      "arg), measure the budget for this corpus with " +
+      "Similarity.rerankForMeasured, " +
       s"or set $RerankSizingConfKey=warn|off.")
   }
 
@@ -143,24 +143,23 @@ object Similarity extends org.apache.spark.internal.Logging {
     * FRACTION of queries at/above the level ([[PqConcFrac]]) — the
     * percentile form is measurably blind to mixtures.
     *
-    * MEASURED calibration. r16 (tools/ConcStatProbe over the r15
-    * recall campaign's own fixtures): the 10th-percentile 5th-NN
-    * cosine ([[annConcentration]], k = 5, sampleN = 1024) reads
+    * MEASURED calibration. r16 (STATUS r16, over the r15 recall
+    * campaign's own fixtures): the 10th-percentile 5th-NN cosine
+    * ([[annRoute]]'s `stat`, k = 5, sampleN = 1024) reads
     * 0.267–0.326 on every diffuse fixture (sf0.001 / sf0.01 / sf0.1
     * sources and the 20 k / 200 k / 2 M sign-cipher decades — the
     * corpora the √n curve was VALIDATED on at 0.91–0.97 recall@5) and
     * 0.837–0.838 on the clustered decades (where the same curve
     * MEASURED 0.23–0.47), so 0.6 separates the two regimes PER QUERY
     * with ≥ 1.8× margin on the diffuse side. r17
-    * (tools/MixProbe, λ ∈ {25, 50, 75}% clustered over the diffuse
+    * (STATUS r17, λ ∈ {25, 50, 75}% clustered over the diffuse
     * base at 20 k / 200 k): per-query kth-NN cosines stay bimodal in
     * mixtures — diffuse-side medians 0.42–0.49, clustered-side
     * 0.86–0.89 — so the LEVEL still separates cleanly; what failed
     * there was the 10th-percentile AGGREGATION (it read 0.275–0.296,
     * the diffuse band, at every λ ≤ 0.75 while the auto curve
     * collapsed to 0.58/0.47 at 200 k), which is why the floor now
-    * trips on the at-level FRACTION instead
-    * (target/r17_mix_probe.log; [[PqConcFrac]]). */
+    * trips on the at-level FRACTION instead ([[PqConcFrac]]). */
   val PqConcStatFloor = 0.6
 
   /** Tolerated concentrated-query share for the PQ auto paths: the
@@ -186,7 +185,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     * the auto budget silently reads 0.23–0.47 recall@5 where R =
     * cluster population reads 1.0000 (r15 clustered fixture, three
     * decades). Since r17 the statistic is the at-level FRACTION, not
-    * the 10th percentile: the mixture campaign (tools/MixProbe)
+    * the 10th percentile: the mixture campaign (STATUS r17)
     * measured λ = 0.5/0.75 clustered mixtures collapsing the auto
     * curve to 0.58/0.47 at 200 k while the percentile statistic sat
     * at 0.28 — a 10% diffuse minority pins any low percentile in the
@@ -233,9 +232,9 @@ object Similarity extends org.apache.spark.internal.Logging {
   val ProbeSizingConfKey = "spark.graft.nprobe.sizing"
 
   /** Cell-probe width for a recall-robust IVFADC scan: half the cells —
-    * the measured 0.94-recall point of the r12 PqTune sweep (nProbe 4
-    * of 8 + corpus-scaled rerank matches cell-free s6's recall at half
-    * the code scan). The committed s8 knee (3 of 8, recall 0.88 at
+    * the measured 0.94-recall point of the r12 IVFADC sweep (STATUS
+    * r12: nProbe 4 of 8 + corpus-scaled rerank matches cell-free s6's
+    * recall at half the code scan). The committed s8 knee (3 of 8, recall 0.88 at
     * tune scale) sits inside the tolerated band below this. */
   def probeFor(nCells: Int): Int = math.max(1, (nCells + 1) / 2)
 
@@ -256,7 +255,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       "cells are unreachable at any rerank budget (measured r13: " +
       "nProbe 3->8 moved recall 0.70->0.87 at 200k vectors while 4x " +
       "the residual codes moved it 0.70->0.73). Use the auto-sized " +
-      "overload, re-measure with tools/RecallProbe, or set " +
+      "overload (probeFor(nCells) cells), or set " +
       s"$ProbeSizingConfKey=warn|off.")
   }
 
@@ -268,8 +267,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     * NOT of the corpus size (measured scale-free across three
     * decades, r14 LSH recall probe: r = 0.301/0.110/0.037 at
     * planes 6/9/12 with full multi-probe on the cos≈0.4–0.5 fixture
-    * → T*(0.9) = 7/20/62) — measure r at the operating geometry with
-    * tools/RecallProbe (family=lsh), then size tables here. Candidate
+    * → T*(0.9) = 7/20/62; STATUS r14) — [[lshPerTableRate]] models r
+    * at the operating geometry; size tables from it here. Candidate
     * volume scales as n²·T/2^planes: for LOW-similarity thresholds
     * r(planes) decays faster than 2^planes prunes, so no (T, planes)
     * holds both linear volume and high recall at corpus scale — use
@@ -638,51 +637,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** CONCENTRATION statistic for ANN family routing: the 10th
-    * percentile of the sample's kth-nearest-neighbor cosine — "how
-    * similar is the weakest member of a typical top-k". Sample =
-    * deterministic hash-stride subset of ~`sampleN` rows (no sort, no
-    * full shuffle — one corpus scan + a sample-sized exact top-k
-    * job). Sampling UNDERESTIMATES the true kth-NN cosine (a sparser
-    * corpus has farther neighbors), which errs toward the PQ route —
-    * the general-purpose family — never toward over-trusting LSH. */
-  def annConcentration(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int = 5, sampleN: Int = 1024): Double = {
-    val cs = concentrationSample(corpus, idCol, vecCol, k, sampleN)
-    Barrier.release(cs.sample)
-    cs.stat
-  }
-
-  /** The CONCENTRATED-QUERY FRACTION on the same sample as
-    * [[annConcentration]]: the share of sample queries whose kth-NN
-    * cosine sits at or above the [[PqConcStatFloor]] collapse level
-    * — the statistic the r17 mixture campaign showed the percentile
-    * form is blind to (a 10% diffuse minority pins the 10th
-    * percentile in the diffuse band while the clustered MAJORITY
-    * collapses the √n curve: λ = 0.5/0.75 mixtures at 200 k read
-    * stat 0.28 beside auto-curve recall 0.58/0.47 —
-    * target/r17_mix_probe.log). */
-  def annConcentratedFraction(corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int = 5, sampleN: Int = 1024): Double = {
-    val cs = concentrationSample(corpus, idCol, vecCol, k, sampleN)
-    Barrier.release(cs.sample)
-    cs.concFrac
-  }
-
-  /** Shared sample + statistic construction behind [[annConcentration]],
-    * [[rerankForMeasured]], [[annRoute]] and the PQ concentration floor
-    * (one implementation so the sample definition and the kth-NN
-    * percentile cannot drift between the verbs, and callers that need
-    * several of (sample, stat, n) pay ONE corpus count): returns the
-    * barriered densely-re-keyed hash-stride sample, the 10th-percentile
-    * kth-NN cosine over it, the stride, and the corpus row count. The
-    * dense re-key exists for [[rerankForMeasured]]'s δ measurement
-    * (pqTrain seeds by id < ks, and a hash-strided subset of a sparse
-    * id space would select ~no seeds); relabeling cannot change the
-    * statistic — per-query top-k membership may reorder under exact
-    * cosine TIES, but the kth cosine VALUE (and hence the percentile)
-    * is tie-invariant. Pass `nKnown` when the caller already counted
-    * the corpus. Callers must [[Barrier.release]] the sample. */
   /** Test-only observability: total [[concentrationSample]] runs in
     * this JVM — the spec-level pin for the router's documented cost
     * contract ("one sample job per routed cold call, zero per cached
@@ -704,6 +658,23 @@ object Similarity extends org.apache.spark.internal.Logging {
   private final case class ConcSample(sample: DataFrame, stat: Double,
       concFrac: Double, stride: Long, n: Long)
 
+  /** Shared sample + statistic construction behind [[annRoute]],
+    * [[rerankForMeasured]] and the PQ concentration floor (one
+    * implementation so the sample definition and the kth-NN
+    * percentile cannot drift between them, and callers that need
+    * several of (sample, stat, n) pay ONE corpus count). The sample is
+    * a deterministic hash-stride subset of ~`sampleN` rows (no sort,
+    * no full shuffle — one corpus scan + a sample-sized exact top-k
+    * job), densely re-keyed for [[rerankForMeasured]]'s δ measurement
+    * (pqTrain seeds by id < ks, and a hash-strided subset of a sparse
+    * id space would select ~no seeds); relabeling cannot change the
+    * statistic — per-query top-k membership may reorder under exact
+    * cosine TIES, but the kth cosine VALUE (and hence the percentile)
+    * is tie-invariant. Sampling UNDERESTIMATES the true kth-NN cosine
+    * (a sparser corpus has farther neighbors), which errs toward the
+    * PQ route — the general-purpose family — never toward
+    * over-trusting LSH. Pass `nKnown` when the caller already counted
+    * the corpus. Callers must [[Barrier.release]] the sample. */
   private def concentrationSample(corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, sampleN: Int,
       nKnown: Option[Long] = None): ConcSample = {
@@ -734,7 +705,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     * must cover the CONFUSABLE population — everything whose true
     * cosine sits within ADC's resolution of the kth-neighbor level.
     * Both factors are MEASURED on the same hash-stride sample as
-    * [[annConcentration]]: δ = the 90th-percentile |adc − true|
+    * [[annRoute]]'s statistic: δ = the 90th-percentile |adc − true|
     * scoring error of codebooks trained on the sample at the caller's
     * own (m, ks, iters) geometry, and the population = the mean count
     * of sample neighbors with cosine ≥ (kth-NN statistic − δ), scaled
@@ -807,10 +778,10 @@ object Similarity extends org.apache.spark.internal.Logging {
   /** The router's decision record: the chosen family, the
     * 10th-percentile kth-NN cosine (`stat` — the LSH envelope's
     * sizing threshold), the concentrated-query fraction (`concFrac` —
-    * the PQ floor's collapse statistic, see
-    * [[annConcentratedFraction]]), and the derived LSH geometry when
-    * that route was taken. Both statistics come from the router's ONE
-    * sample job. */
+    * the share of sample queries whose kth-NN cosine sits at or above
+    * [[PqConcStatFloor]], the PQ floor's collapse statistic), and the
+    * derived LSH geometry when that route was taken. Both statistics
+    * come from the router's ONE sample job. */
   final case class AnnRoute(family: String, stat: Double,
       concFrac: Double, geometry: Option[LshGeometry])
 
@@ -824,13 +795,30 @@ object Similarity extends org.apache.spark.internal.Logging {
     * iff its sizing calculator can hold the recall target at the
     * measured concentration inside the table cap (and, since r17, the
     * radius ladder) — i.e. envelope membership ([[lshGeometryOption]])
-    * at the [[annConcentration]] statistic. The returned record also
-    * carries the concentrated-query FRACTION, which decides the PQ
-    * route's budget (measured r17: mixtures keep a diffuse-looking
+    * at the sample's 10th-percentile statistic. The returned record
+    * also carries the concentrated-query FRACTION, which decides the
+    * PQ route's budget (measured r17: mixtures keep a diffuse-looking
     * percentile while their clustered majority collapses the √n
-    * curve — the fraction is the statistic that sees them). */
+    * curve — the fraction is the statistic that sees them).
+    *
+    * `cacheDir` persists the statistic as a sidecar (the `_pairhist`
+    * pattern): concentration is a corpus SHAPE property that drifts
+    * slowly, so a routed daily path should not re-pay the sample
+    * top-k job per call. The file `<cacheDir>/_concstat` (atomic
+    * write-to-temp + rename, any Hadoop FS — park it next to the
+    * corpus's signature/PQ index assets) holds one line
+    * `v2 <stat> <frac> <n> <k> <sampleN>`; it is REUSED only when
+    * (k, sampleN) match and the current corpus count sits within 2×
+    * of the cached one — past that the corpus has grown/shrunk a
+    * decade's worth and the shape is re-measured (and re-cached).
+    * Pre-r17 `v1` lines (percentile only) and unparseable files read
+    * as a MISS. The envelope test always uses the CURRENT count; only the
+    * sample job is skipped on a hit. Delete the file to force a
+    * re-measure. */
   def annRoute(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int = 5, sampleN: Int = 1024): AnnRoute = {
+      k: Int = 5, sampleN: Int = 1024,
+      cacheDir: Option[String] = None): AnnRoute = {
+    val spark = corpus.sparkSession
     // one corpus count, threaded into both the concentration
     // measurement and the envelope test (on a computed, non-parquet
     // corpus a second count would replay the whole lineage)
@@ -840,12 +828,48 @@ object Similarity extends org.apache.spark.internal.Logging {
     // route "pq" with NaN, and the routed diffuse path's exact-affordable
     // auto budget answers it (the floor skips n <= k for the same reason)
     if (n <= k) return AnnRoute("pq", Double.NaN, 0.0, None)
-    val cs = concentrationSample(corpus, idCol, vecCol, k, sampleN, Some(n))
-    Barrier.release(cs.sample)
+    def measure(): (Double, Double) = {
+      val cs = concentrationSample(corpus, idCol, vecCol, k, sampleN, Some(n))
+      Barrier.release(cs.sample)
+      (cs.stat, cs.concFrac)
+    }
+    val (stat, frac) = cacheDir.fold(measure()) { dir =>
+      val file = new org.apache.hadoop.fs.Path(dir, "_concstat")
+      val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val cached = (try {
+        val in = fs.open(file)
+        try Some(scala.io.Source.fromInputStream(in).mkString.trim)
+        finally in.close()
+      } catch { case _: java.io.IOException => None })
+        .flatMap { line =>
+          // Try: a corrupted cache (truncated write, manual edit, a
+          // non-numeric token) degrades to a MISS, never a crash
+          scala.util.Try {
+            line.split("\\s+") match {
+              case Array("v2", s, f, cn, ck, cs)
+                if ck.toInt == k && cs.toInt == sampleN &&
+                  n <= 2 * cn.toLong && cn.toLong <= 2 * n =>
+                Some((s.toDouble, f.toDouble))
+              case _ => None
+            }
+          }.toOption.flatten
+        }
+      cached.getOrElse {
+        val (st, fr) = measure()
+        val tmp = new org.apache.hadoop.fs.Path(dir, "_concstat.tmp")
+        val out = fs.create(tmp, true)
+        try out.write(s"v2 $st $fr $n $k $sampleN\n"
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+        fs.delete(file, false)
+        require(fs.rename(tmp, file), s"failed to publish $file")
+        (st, fr)
+      }
+    }
     val g =
-      if (cs.stat.isNaN) None
-      else lshGeometryOption(n, cs.stat, corpus.sparkSession)
-    AnnRoute(if (g.isDefined) "lsh" else "pq", cs.stat, cs.concFrac, g)
+      if (stat.isNaN) None
+      else lshGeometryOption(n, stat, spark)
+    AnnRoute(if (g.isDefined) "lsh" else "pq", stat, frac, g)
   }
 
   /** ADAPTIVE top-k: measure the corpus's concentration, route to the
@@ -861,43 +885,25 @@ object Similarity extends org.apache.spark.internal.Logging {
     * radius ladder): there the router pays the honest-but-expensive
     * PQ fallback itself, [[rerankForMeasured]] through the pinned
     * overload, instead of handing the caller an auto path the
-    * concentration floor would (rightly) reject — measured r17
-    * (tools/MixProbe): on λ = 0.5/0.75 clustered mixtures at 200 k
+    * concentration floor would (rightly) reject — measured
+    * (STATUS r17): on λ = 0.5/0.75 clustered mixtures at 200 k
     * the auto curve reads 0.58/0.47 while this fallback reads
     * 0.99. The router is therefore TOTAL: every corpus shape gets an
     * answer with a measured-recall story. Output ≡ the routed verb
     * exactly (property-pinned in DedupSimilaritySpec) — this adds a
     * routing decision, never a new result semantics, so the routed
     * verb's oracle certifies it transitively. Routing cost: two
-    * metadata-cheap counts + one sample-sized exact top-k job. */
+    * metadata-cheap counts + one sample-sized exact top-k job, or
+    * only the counts when `cacheDir` serves the statistic
+    * ([[annRoute]]; pinned by the [[concentrationSampleRuns]] spec).
+    * (The concentrated-PQ fallback's [[rerankForMeasured]] still
+    * samples when taken — it measures ADC resolution at the caller's
+    * codebook geometry, not just the statistic.) */
   def annTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int = 8, ks: Int = 64, iters: Int = 2,
-      sampleN: Int = 1024): DataFrame =
-    annTopKRouted(annRoute(corpus, idCol, vecCol, k, sampleN),
-      corpus, queries, idCol, vecCol, k, m, ks, iters, sampleN)
-
-  /** [[annTopK]] with the routing statistic served from
-    * [[annRouteCached]]'s persisted sidecar — the routed daily-path
-    * form: on a cache hit the only routing cost is one corpus count —
-    * the diffuse-PQ route runs [[pqTopKImpl]] directly with the
-    * router's decision, never re-sampling (pinned by the
-    * [[concentrationSampleRuns]] spec). (The concentrated-PQ
-    * fallback's [[rerankForMeasured]] still samples when taken — it
-    * measures ADC resolution at the caller's codebook geometry, not
-    * just the statistic.) */
-  def annTopKCached(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, cacheDir: String,
-      m: Int = 8, ks: Int = 64, iters: Int = 2,
-      sampleN: Int = 1024): DataFrame =
-    annTopKRouted(annRouteCached(corpus, idCol, vecCol, cacheDir, k, sampleN),
-      corpus, queries, idCol, vecCol, k, m, ks, iters, sampleN)
-
-  private def annTopKRouted(
-      route: AnnRoute,
-      corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      m: Int, ks: Int, iters: Int, sampleN: Int): DataFrame = {
+      sampleN: Int = 1024, cacheDir: Option[String] = None): DataFrame = {
+    val route = annRoute(corpus, idCol, vecCol, k, sampleN, cacheDir)
     if (route.family == "lsh") {
       val geom = route.geometry.get
       lshTopK(corpus, queries, idCol, vecCol, k,
@@ -912,82 +918,17 @@ object Similarity extends org.apache.spark.internal.Logging {
       // under the floor's tolerance. Calling the public auto overload
       // here would re-run the concentration floor's sample job (a
       // SECOND sample-sized exact top-k per routed call, contradicting
-      // the documented one-sample routing cost — and on
-      // annTopKCached's hit path, re-paying the exact job the sidecar
-      // exists to skip); worse, a stale cached statistic below the
-      // floor beside a freshly-measured one above it would make
-      // enforce mode throw INSIDE the routed call, breaking the
-      // router's totality. The routing decision IS the validation;
-      // run the auto-sized impl directly.
+      // the documented one-sample routing cost — and on a sidecar
+      // hit, re-paying the exact job the sidecar exists to skip);
+      // worse, a stale cached statistic below the floor beside a
+      // freshly-measured one above it would make enforce mode throw
+      // INSIDE the routed call, breaking the router's totality. The
+      // routing decision IS the validation; run the auto-sized impl
+      // directly.
       val c = Barrier(normed(corpus, idCol, vecCol))
       val n = c.count()
       pqTopKImpl(c, queries, idCol, vecCol, k, m, ks, iters, rerankFor(n, k))
     }
-  }
-
-  /** [[annRoute]] with a persisted statistic sidecar (r15 verdict
-    * task #5, riding the r16 histogram-sidecar pattern): concentration
-    * is a corpus SHAPE property that drifts slowly, so a routed daily
-    * path should not re-pay the sample top-k job per call. The cache
-    * file `<cacheDir>/_concstat` (atomic write-to-temp + rename, any
-    * Hadoop FS — park it next to the corpus's signature/PQ index
-    * assets) stores (stat, concFrac, n, k, sampleN) — line format
-    * `v2 <stat> <frac> <n> <k> <sampleN>`; a cached measurement is
-    * REUSED only when (k, sampleN) match and the current corpus count
-    * sits within 2× of the cached one — past that the corpus has
-    * grown/shrunk a decade's worth and the shape claim is re-measured
-    * (and re-cached). Pre-r17 `v1` lines (percentile only — no
-    * fraction) read as a MISS: the routed budget decision now needs
-    * the fraction, and serving a v1 line would silently re-create the
-    * mixture blindness the fraction exists to fix. The envelope test
-    * always uses the CURRENT count (cheap on a parquet-backed
-    * corpus); only the sample job is skipped on a hit. Delete the
-    * file to force a re-measure. */
-  def annRouteCached(corpus: DataFrame, idCol: String, vecCol: String,
-      cacheDir: String, k: Int = 5, sampleN: Int = 1024): AnnRoute = {
-    val spark = corpus.sparkSession
-    val file = new org.apache.hadoop.fs.Path(cacheDir, "_concstat")
-    val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = corpus.count()
-    if (n <= k) return AnnRoute("pq", Double.NaN, 0.0, None) // totality
-    def cached: Option[(Double, Double)] =
-      (try {
-        val in = fs.open(file)
-        try Some(scala.io.Source.fromInputStream(in).mkString.trim)
-        finally in.close()
-      } catch { case _: java.io.IOException => None })
-        .flatMap { line =>
-          // Try: a corrupted cache (truncated write, manual edit, a
-          // non-numeric token) must degrade to a MISS and re-measure —
-          // the documented "delete the file to force a re-measure"
-          // recovery story — not crash the call from toInt/toDouble
-          // inside the guard.
-          scala.util.Try {
-            line.split("\\s+") match {
-              case Array("v2", s, f, cn, ck, cs)
-                if ck.toInt == k && cs.toInt == sampleN &&
-                  n <= 2 * cn.toLong && cn.toLong <= 2 * n =>
-                Some((s.toDouble, f.toDouble))
-              case _ => None
-            }
-          }.toOption.flatten
-        }
-    val (stat, frac) = cached.getOrElse {
-      val cs = concentrationSample(corpus, idCol, vecCol, k, sampleN, Some(n))
-      Barrier.release(cs.sample)
-      val tmp = new org.apache.hadoop.fs.Path(cacheDir, "_concstat.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"v2 ${cs.stat} ${cs.concFrac} $n $k $sampleN\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.delete(file, false)
-      require(fs.rename(tmp, file), s"failed to publish $file")
-      (cs.stat, cs.concFrac)
-    }
-    val g =
-      if (stat.isNaN) None
-      else lshGeometryOption(n, stat, spark)
-    AnnRoute(if (g.isDefined) "lsh" else "pq", stat, frac, g)
   }
 
   /** Deterministic evenly-id-rank-spaced k₁-row subset of `seeds` —
@@ -1574,7 +1515,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     * lost (quantization error decides R's recall); within the returned
     * rows the cosines and ranking are EXACT.
     *
-    * SIZING `rerank` (measured, RecallProbe r13): R is a
+    * SIZING `rerank` (measured, STATUS r13): R is a
     * per-corpus-size knob, not a constant. On near-uniform vectors —
     * PQ's worst case — the number of corpus points whose ADC noise
     * exceeds the true kth-neighbor gap grows ~linearly in n, so
@@ -1583,9 +1524,9 @@ object Similarity extends org.apache.spark.internal.Logging {
     * R ∝ n restores it. Concentration does NOT relax the knob — the
     * r15 clustered-fixture measurement read the √n auto budget at
     * 0.36 recall where R = clusterSize read exactly 1.0 (see
-    * [[rerankFor]]'s caveat) — so re-measure the R-recall knee at the
-    * operating scale AND concentration (tools/RecallProbe)
-    * rather than shipping the tuning-scale constant. Since r14 this is
+    * [[rerankFor]]'s caveat) — so size R at the operating scale AND
+    * concentration ([[rerankForMeasured]]) rather than shipping the
+    * tuning-scale constant. Since r14 this is
     * ENFORCED, not advisory: a pinned rerank more than [[RerankBand]]×
     * below the calibrated [[rerankFor]] curve throws (conf-gated,
     * [[RerankSizingConfKey]]), and the no-rerank overload derives the

@@ -123,7 +123,7 @@ object Aggregators {
     val K = 3 // the fixture queries' k
     private val Slot = 16
     // 4-byte count header. A 1-byte count wrapped at k > 255 and
-    // CORRUPTED the buffer — found by RecallProbe (r13): pqTopK with
+    // CORRUPTED the buffer — found in r13 (STATUS r13): pqTopK with
     // rerank = 500 returned recall 0.0 where 50 returned 0.43, because
     // the candidate aggregate's count byte overflowed. k is a scale
     // knob (rerank grows with the corpus); the header must not cap it.

@@ -29,12 +29,10 @@ import graft.functions.VectorFunctions
   */
 object SimilarityQueries {
 
-  // geometry shared with tools/IvfTune so the recall evidence can
-  // never drift from the shipped configuration
   private[graft] val K = 5          // neighbors per query
   private[graft] val NQueries = 10  // vec_id < 10 are the probe vectors
   private[graft] val NCells = 16    // IVF cells (seeded by vec_id < 16)
-  // IVF cells probed per query: the measured knee (tools/IvfTune @
+  // IVF cells probed per query: the measured knee (STATUS r12, at
   // sf0.01 vs the s1 exact baseline — recall@5 0.90 at nProbe=1, 0.92
   // from 2 through 6, 0.94 only at 8 = probing half the cells;
   // wall-clock flat across the sweep). 2 buys the recall plateau at
@@ -143,9 +141,10 @@ object SimilarityQueries {
   // lookups against a broadcast LUT, the top-PqRerank per query re-rank
   // exactly. Candidate selection is the bounded TopKPerKey aggregate —
   // map-side pre-reduction, not a full-corpus window sort.
-  // Geometry from tools/PqTune vs the s1 exact baseline (the fixture
-  // embeddings are near-uniform — PQ's hard case for NOISE, though the
-  // r15 clustered probe showed concentration brings its own wall:
+  // Geometry from the r12 sweep vs the s1 exact baseline (STATUS r12;
+  // the fixture embeddings are near-uniform — PQ's hard case for
+  // NOISE, though the r15 clustered probe showed concentration brings
+  // its own wall:
   // compressed within-cluster gaps push the rerank knee toward the
   // cluster population — see Similarity.rerankFor's caveat):
   // (8, 64, rerank 50) measures recall@5
@@ -207,12 +206,11 @@ object SimilarityQueries {
   // exactly as dot(q, cell) + ADC over the residual LUT. Residuals
   // concentrate near zero, so the same code budget quantizes them
   // better than raw vectors (8×16 codes here match the recall 8×64
-  // needs on raw vectors — tools/PqTune vs this query's measured
-  // recall).
-  // Geometry from tools/PqTune's IVFADC sweep (recall@5 vs the exact
-  // baseline at sf0.01): rerank is NOT the binding constraint here —
-  // recall plateaus at 0.86 from rerank 50 to 100 at nProbe 2, i.e.
-  // probe-limited (true neighbors in unprobed cells are unreachable),
+  // needs on raw vectors).
+  // Geometry from the r12 IVFADC sweep (STATUS r12; recall@5 vs the
+  // exact baseline at sf0.01): rerank is NOT the binding constraint
+  // here — recall plateaus at 0.86 from rerank 50 to 100 at nProbe 2,
+  // i.e. probe-limited (true neighbors in unprobed cells are unreachable),
   // the classic IVF knob. nProbe 3 is the knee (0.88 scanning 3/8 of
   // the codes; 4 probes + rerank 100 reach 0.94 = s6's full-scan
   // recall at half the scan). Residual quantization carries it: 8×16

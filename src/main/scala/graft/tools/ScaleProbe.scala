@@ -163,223 +163,9 @@ object ScaleProbe {
     * collision claims). */
   private[tools] def fixtureDir(reps: Int): String = s"target/scale_r$reps"
 
-  /** Number of clusters in the CLUSTERED embedding fixture — equal to
-    * s8's committed nCells, so the first nCells corpus vectors (the L2
-    * Lloyd seed rows, vec_id 0..7, whose cluster is vec_id % 8) sample
-    * one vector from EVERY cluster — the draw a real corpus's leading
-    * rows approximate. */
-  private[graft] val ClusterCount = 8
-
-  /** Within-cluster noise scale: v = centroid + 0.5·unit(noise) puts
-    * within-cluster cosines at ≈(1 + 0.25·cos_orig)/1.25 ∈ [0.6, 1]
-    * and cross-cluster magnitudes under ~0.2 — clearly separated,
-    * manifold-concentrated geometry. */
-  private[graft] val ClusterNoise = 0.5f
-
-  /** Deterministic unit-norm cluster centroid g: a ±1/√dim sign vector
-    * from the [[replicaSigns]] generator at a salted index (the +1001
-    * skips the generator's r = 0 identity). Cross-centroid dots
-    * concentrate at ~N(0, 1/dim). */
-  private[graft] def clusterCentroid(g: Int, dim: Int): Array[Float] = {
-    val inv = (1.0 / math.sqrt(dim.toDouble)).toFloat
-    replicaSigns(1001 + g, dim).map(_ * inv)
-  }
-
-  /** Build (idempotently) the CLUSTERED-embedding replica fixture —
-    * the r14 verdict's task #2 instrument: the sign-cipher fixture is
-    * near-uniform (every direction equally occupied — the coarse
-    * quantizer has nothing to cluster), and the docs attribute s8's
-    * auto-path 0.82-vs-0.97 gap to exactly that, UNMEASURED. This
-    * fixture gives the quantizer real structure to find: every vector
-    * is centroid(vec_id % [[ClusterCount]]) + [[ClusterNoise]] ·
-    * unit(sign-ciphered source vector) — deterministic, clusters cut
-    * ACROSS replicas (assignment is by original id), true top-k
-    * neighbors live inside the query's own cluster. Embeddings only
-    * (the pq recall family reads nothing else). */
-  private[tools] def ensureClusterFixture(spark: SparkSession, src: String,
-      reps: Int): String = {
-    val dir = s"${fixtureDir(reps)}c"
-    val embOut = new java.io.File(s"$dir/embeddings.parquet")
-    if (!embOut.exists()) {
-      graft.functions.VectorFunctions.register(spark)
-      val embs = graft.Tables.embeddings(spark, src)
-      val dim = embs.select(size(col("embedding"))).head().getInt(0)
-      val cents = typedLit(
-        (0 until ClusterCount).map(g => clusterCentroid(g, dim).toSeq))
-      val salted = (0 until reps).map { r =>
-        val signs = typedLit(replicaSigns(r, dim).toSeq)
-        embs.select(
-          (col("vec_id") + lit(r.toLong * ReplicaOffset)).as("vec_id"),
-          zip_with(col("embedding"), signs, (x, s) => x * s).as("u"),
-          col("label"))
-      }.reduce(_ union _)
-      val cent = element_at(cents,
-        (col("vec_id") % ReplicaOffset % ClusterCount + 1).cast("int"))
-      // greatest(.., tiny) guards a zero source vector (NaN otherwise)
-      // without dropping its row
-      val scale = lit(ClusterNoise) /
-        greatest(graft.functions.VectorFunctions.norm(col("u")), lit(1e-30))
-      salted
-        .select(col("vec_id"),
-          zip_with(cent, col("u"),
-            (c, x) => (c + x * scale).cast("float")).as("embedding"),
-          col("label"))
-        .repartition(math.max(32, reps / 10))
-        .write.mode("overwrite").parquet(embOut.toString)
-      println(s"[probe] built $dir: ${reps}x ${src} embeddings, " +
-        s"$ClusterCount-cluster manifold (centroid + " +
-        s"$ClusterNoise*unit(sign-ciphered source))")
-    }
-    dir
-  }
-
-  /** Build (idempotently) a WIDE-NOISE clustered fixture: every row is
-    * centroid + (noisePct/100)·unit(sign-ciphered source) — at noise
-    * 0.8 within-cluster cosines sit ≈ 1/(1+0.64) ≈ 0.61, putting the
-    * 10th-percentile statistic in the MID band (≈ 0.55–0.65) where
-    * the r17 radius ladder escalates: the radius-1 table derivation
-    * busts the 64-table cap while radius 2–3 hold the target inside
-    * both caps — the fixture that exercises the auto-chosen escalated
-    * geometry end-to-end (uniformly concentrated, unlike the mixed
-    * fixture whose 10th percentile stays diffuse). */
-  private[tools] def ensureSpreadFixture(spark: SparkSession, src: String,
-      reps: Int, noisePct: Int): String = {
-    require(noisePct > 0, s"noisePct must be positive, got $noisePct")
-    val dir = s"${fixtureDir(reps)}s$noisePct"
-    val embOut = new java.io.File(s"$dir/embeddings.parquet")
-    if (!embOut.exists()) {
-      graft.functions.VectorFunctions.register(spark)
-      val embs = graft.Tables.embeddings(spark, src)
-      val dim = embs.select(size(col("embedding"))).head().getInt(0)
-      val cents = typedLit(
-        (0 until ClusterCount).map(g => clusterCentroid(g, dim).toSeq))
-      val salted = (0 until reps).map { r =>
-        val signs = typedLit(replicaSigns(r, dim).toSeq)
-        embs.select(
-          (col("vec_id") + lit(r.toLong * ReplicaOffset)).as("vec_id"),
-          zip_with(col("embedding"), signs, (x, s) => x * s).as("u"),
-          col("label"))
-      }.reduce(_ union _)
-      val cent = element_at(cents,
-        (col("vec_id") % ReplicaOffset % ClusterCount + 1).cast("int"))
-      val scale = lit(noisePct / 100.0f) /
-        greatest(graft.functions.VectorFunctions.norm(col("u")), lit(1e-30))
-      salted
-        .select(col("vec_id"),
-          zip_with(cent, col("u"),
-            (c, x) => (c + x * scale).cast("float")).as("embedding"),
-          col("label"))
-        .repartition(math.max(32, reps / 10))
-        .write.mode("overwrite").parquet(embOut.toString)
-      println(s"[probe] built $dir: ${reps}x ${src} embeddings, " +
-        s"$ClusterCount-cluster manifold at noise ${noisePct / 100.0}")
-    }
-    dir
-  }
-
-  /** Build (idempotently) a MIXED-concentration embedding fixture: a
-    * deterministic `lambdaPct`% of rows (by id hash, replica- and
-    * cluster-independent) get the clustered treatment
-    * (centroid(vec_id % [[ClusterCount]]) + [[ClusterNoise]] ·
-    * unit(sign-ciphered source)), the rest stay the diffuse
-    * sign-ciphered source embedding verbatim — the r16 verdict's
-    * instrument for the 0.6–0.84 concentration middle: the floor's
-    * unmeasured band sits between the all-diffuse fixtures
-    * (stat 0.27–0.33) and the all-clustered ones (0.84), and a corpus
-    * that is PART manifold is exactly the shape that lands there. */
-  private[tools] def ensureMixedFixture(spark: SparkSession, src: String,
-      reps: Int, lambdaPct: Int): String = {
-    require(lambdaPct > 0 && lambdaPct < 100,
-      s"lambdaPct must be in (0,100), got $lambdaPct")
-    val dir = s"${fixtureDir(reps)}m$lambdaPct"
-    val embOut = new java.io.File(s"$dir/embeddings.parquet")
-    if (!embOut.exists()) {
-      graft.functions.VectorFunctions.register(spark)
-      val embs = graft.Tables.embeddings(spark, src)
-      val dim = embs.select(size(col("embedding"))).head().getInt(0)
-      val cents = typedLit(
-        (0 until ClusterCount).map(g => clusterCentroid(g, dim).toSeq))
-      val salted = (0 until reps).map { r =>
-        val signs = typedLit(replicaSigns(r, dim).toSeq)
-        embs.select(
-          (col("vec_id") + lit(r.toLong * ReplicaOffset)).as("vec_id"),
-          zip_with(col("embedding"), signs, (x, s) => x * s).as("u"),
-          col("label"))
-      }.reduce(_ union _)
-      val cent = element_at(cents,
-        (col("vec_id") % ReplicaOffset % ClusterCount + 1).cast("int"))
-      val scale = lit(ClusterNoise) /
-        greatest(graft.functions.VectorFunctions.norm(col("u")), lit(1e-30))
-      val inCluster = pmod(xxhash64(col("vec_id")), lit(100L)) < lambdaPct
-      salted
-        .select(col("vec_id"),
-          when(inCluster, zip_with(cent, col("u"),
-              (c, x) => (c + x * scale).cast("float")))
-            .otherwise(col("u")).as("embedding"),
-          col("label"))
-        .repartition(math.max(32, reps / 10))
-        .write.mode("overwrite").parquet(embOut.toString)
-      println(s"[probe] built $dir: ${reps}x ${src} embeddings, " +
-        s"$lambdaPct% clustered over the diffuse sign-cipher base")
-    }
-    dir
-  }
-
-  /** Build (idempotently) a fully SYNTHETIC mixed-concentration
-    * embedding fixture at arbitrary row count — the r19 verdict's
-    * item #3 instrument: the embedding family's measured ceiling was
-    * the 2 M replica fixture (reps = 1000 was already a 1000-way
-    * union plan; 5000 replicas would stress Catalyst analysis, not
-    * the engine), while the hamming family's 20 M point came free
-    * from synthetic sigs. Same semantics as [[ensureMixedFixture]],
-    * no source fixture and no per-replica unions: a deterministic
-    * `lambdaPct`% of ids (by id hash — the same `xxhash64(vec_id) %
-    * 100` rule, so the clustered share is scale-free by construction)
-    * get centroid(vec_id % [[ClusterCount]]) + [[ClusterNoise]] ·
-    * unit(u); the rest stay the diffuse vector u verbatim, where
-    * u(id)_j = ±1 from bit 0 of xxhash64(id·dim + j) — pairwise
-    * cosines of distinct diffuse rows concentrate at N(0, 1/dim)
-    * exactly like the replica fixtures' sign-ciphered sources
-    * (norm √dim instead of the source norms; cosine geometry is
-    * norm-free). One spark.range(n) pass, ~640 M hash evaluations at
-    * 10 M × 64 — minutes on 32 slots. */
-  private[tools] def ensureSynthMixedFixture(spark: SparkSession,
-      n: Long, dim: Int, lambdaPct: Int): String = {
-    require(lambdaPct > 0 && lambdaPct < 100,
-      s"lambdaPct must be in (0,100), got $lambdaPct")
-    val dir = s"target/scale_synth_n${n}d${dim}m$lambdaPct"
-    val embOut = new java.io.File(s"$dir/embeddings.parquet")
-    if (!embOut.exists()) {
-      graft.functions.VectorFunctions.register(spark)
-      val cents = typedLit(
-        (0 until ClusterCount).map(g => clusterCentroid(g, dim).toSeq))
-      val u = expr(s"transform(sequence(0, ${dim - 1}), j -> " +
-        s"IF(pmod(xxhash64(id * $dim + CAST(j AS BIGINT)), 2) = 0, " +
-        "CAST(1.0 AS FLOAT), CAST(-1.0 AS FLOAT)))")
-      val cent = element_at(cents, (col("id") % ClusterCount + 1).cast("int"))
-      // |u| = sqrt(dim) exactly, so unit(u) = u / sqrt(dim) — no
-      // norm job and no zero-vector guard needed
-      val scale = lit(ClusterNoise / math.sqrt(dim.toDouble).toFloat)
-      val inCluster = pmod(xxhash64(col("id")), lit(100L)) < lambdaPct
-      spark.range(n)
-        .select(col("id"), u.as("u"))
-        .select(col("id").as("vec_id"),
-          when(inCluster, zip_with(cent, col("u"),
-              (c, x) => (c + x * scale).cast("float")))
-            .otherwise(col("u")).as("embedding"),
-          (col("id") % ClusterCount).cast("int").as("label"))
-        .repartition(math.max(32, (n / 200000L).toInt))
-        .write.mode("overwrite").parquet(embOut.toString)
-      println(s"[probe] built $dir: $n synthetic ${dim}d vectors, " +
-        s"$lambdaPct% clustered over the hash-sign diffuse base")
-    }
-    dir
-  }
-
   /** Build (idempotently) the reps-replica fixture — documents under
     * the letter-permutation cipher, embeddings (when `needEmb`) under
-    * the sign cipher — and return its dir. Shared by the wall-clock
-    * probe and [[RecallProbe]], so both measure the SAME corpus. */
+    * the sign cipher — and return its dir. */
   private[tools] def ensureFixture(spark: SparkSession, src: String,
       reps: Int, needEmb: Boolean): String = {
     val dir = fixtureDir(reps)
@@ -572,7 +358,7 @@ object ScaleProbe {
       }.toSeq
       val noise = measured.exists(p => p.spread > 2.0 || p.warm < 0)
       // Locale.ROOT: the f-interpolator would emit comma decimals on a
-      // non-English default locale (same fix as Bench/IvfTune)
+      // non-English default locale (same fix as Bench)
       println(String.format(java.util.Locale.ROOT,
         "[probe] %-28s exponents %s%s",
         name,

@@ -250,7 +250,7 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
 
   test("TopKPerKey is exact past k = 255 (the count-byte overflow regression)") {
     // The buffer's entry count was one byte: k > 255 wrapped at 256 and
-    // corrupted the aggregate (RecallProbe r13 — pqTopK at rerank 500
+    // corrupted the aggregate (STATUS r13 — pqTopK at rerank 500
     // returned recall 0.0 where rerank 50 returned 0.43). rerank is a
     // scale knob that grows with the corpus, so k must be unbounded.
     import spark.implicits._

@@ -491,7 +491,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
         s"ADC ${r.getDouble(2)} != reconstruction dot $dot for ${r.getLong(0)}")
     }
     // recall@5 vs the exact s1 baseline at the SHIPPED geometry
-    // (8 × 64 codes, rerank 50) — tools/PqTune measures 0.90 @ sf0.001
+    // (8 × 64 codes, rerank 50) — STATUS r12 measures 0.90 @ sf0.001
     // / 0.94 @ sf0.01; pinned with margin
     def topSets(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
@@ -520,7 +520,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     val adc = topSets(graft.api.Similarity.ivfadcTopK(
       emb, queries, "vec_id", "embedding", 5,
       AdcCells, AdcCoarseIters, PqM, AdcKs, PqIters, AdcProbe, PqRerank))
-    // recall floor (tools/PqTune measures 0.88 at sf0.01 at this
+    // recall floor (STATUS r12 measures 0.88 at sf0.01 at this
     // geometry; the probe ceiling is the documented IVF knob)
     val recall = exact.map { case (q, ns) =>
       val got = adc.getOrElse(q, Array.empty).map(_._2).toSet
@@ -586,7 +586,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       S.pqTopK(emb, queries, "vec_id", "embedding", 5, 8, 16, 1, 10)
     }
     assert(e.getMessage.contains("rerank") &&
-      e.getMessage.contains("RecallProbe"))
+      e.getMessage.contains("rerankForMeasured"))
     // ...while the committed fixture geometry (R=50) stays in-band
     // (s6/s7 pass the oracle gate under the default enforce mode)
     assert(50 >= S.rerankFor(500L, 5) / S.RerankBand)
@@ -1162,7 +1162,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("annRouteCached: sidecar hit serves the cached statistic, stale or mismatched entries re-measure") {
+  test("annRoute with cacheDir: sidecar hit serves the cached statistic, stale or mismatched entries re-measure") {
     val S = graft.api.Similarity
     import spark.implicits._
     val dim = 64
@@ -1185,7 +1185,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     try {
-      val r1 = S.annRouteCached(diffuse, "vid", "v", dir)
+      val r1 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir))
       assert(r1.family == "pq" && r1.stat < 0.6,
         s"diffuse must route pq, stat ${r1.stat}")
       assert(new java.io.File(s"$dir/_concstat").exists())
@@ -1193,26 +1193,26 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       // the same (n, k, sampleN): the next call must SERVE it (flipping
       // the route) — proof the hit path reads the cache, not the corpus
       writeCache("v2 0.95 0.9 2000 5 1024")
-      val r2 = S.annRouteCached(diffuse, "vid", "v", dir)
+      val r2 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir))
       assert(r2.stat == 0.95 && r2.concFrac == 0.9 && r2.family == "lsh",
         s"poisoned cache must be served verbatim, got $r2")
       // a cached count 10× off is stale → re-measure (and re-cache)
       writeCache("v2 0.95 0.9 200000 5 1024")
-      val r3 = S.annRouteCached(diffuse, "vid", "v", dir)
+      val r3 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir))
       assert(r3.family == "pq" && r3.stat == r1.stat,
         "stale count must force a re-measure")
       // (k, sampleN) mismatch likewise
       writeCache("v2 0.95 0.9 2000 7 1024")
-      val r4 = S.annRouteCached(diffuse, "vid", "v", dir)
+      val r4 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir))
       assert(r4.family == "pq" && r4.stat == r1.stat)
       // a pre-r17 v1 line (no fraction) must read as a MISS — serving
       // it would re-create the mixture blindness the fraction fixes
       writeCache("v1 0.95 2000 5 1024")
-      val r5 = S.annRouteCached(diffuse, "vid", "v", dir)
+      val r5 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir))
       assert(r5.family == "pq" && r5.stat == r1.stat,
         "v1 cache lines must re-measure, not serve")
       // and the refreshed cache now hits again
-      assert(S.annRouteCached(diffuse, "vid", "v", dir).stat == r1.stat)
+      assert(S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir)).stat == r1.stat)
     } finally {
       import scala.sys.process._
       Seq("rm", "-rf", dir).!
@@ -1450,12 +1450,12 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       // statistic once; the diffuse-PQ branch must NOT re-measure it
       // inside the auto overload's floor (the r16 double-sample defect)
       val (rows1, cold) = runs(
-        S.annTopKCached(diffuse, q, "vid", "v", 5, dir, 8, 16, 1).count())
+        S.annTopK(diffuse, q, "vid", "v", 5, 8, 16, 1, cacheDir = Some(dir)).count())
       assert(rows1 > 0)
       assert(cold == 1, s"routed cold call must pay exactly ONE sample job, paid $cold")
       // CACHED hit: the sidecar serves the statistic — zero sample jobs
       val (rows2, hit) = runs(
-        S.annTopKCached(diffuse, q, "vid", "v", 5, dir, 8, 16, 1).count())
+        S.annTopK(diffuse, q, "vid", "v", 5, 8, 16, 1, cacheDir = Some(dir)).count())
       assert(rows2 == rows1)
       assert(hit == 0, s"cached hit must pay ZERO sample jobs, paid $hit")
 
@@ -1479,7 +1479,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
         val qc = clustered.filter(col("vid") < 2)
         // enforce mode is the default — this used to throw here
         val (rows3, tot) = runs(
-          S.annTopKCached(clustered, qc, "vid", "v", 5, cdir, 8, 16, 1).count())
+          S.annTopK(clustered, qc, "vid", "v", 5, 8, 16, 1, cacheDir = Some(cdir)).count())
         assert(rows3 > 0, "routed call must stay total under a stale cached stat")
         assert(tot == 0, s"stale-cache route must not re-sample, paid $tot")
       } finally {
@@ -1492,7 +1492,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("annRouteCached: a corrupted _concstat degrades to a miss and re-measures") {
+  test("annRoute with cacheDir: a corrupted _concstat degrades to a miss and re-measures") {
     val S = graft.api.Similarity
     import spark.implicits._
     val dim = 32
@@ -1506,7 +1506,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       .toDF("vid", "v")
     val dir = java.nio.file.Files.createTempDirectory("graft-concbad").toString
     try {
-      val s1 = S.annRouteCached(diffuse, "vid", "v", dir).stat
+      val s1 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir)).stat
       // non-numeric tokens (truncated write / manual edit): the parse
       // must treat it as a miss — the documented recovery is "delete
       // the file", so malformed MUST behave like absent, not crash
@@ -1515,11 +1515,11 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_concstat"),
         "v1 garbage nope 5 1024\n".getBytes(
           java.nio.charset.StandardCharsets.UTF_8))
-      val s2 = S.annRouteCached(diffuse, "vid", "v", dir).stat
+      val s2 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir)).stat
       assert(s2 == s1, "corrupted cache must re-measure, not crash or serve junk")
       // and the re-measure re-published a healthy cache
       val before = S.concentrationSampleRuns.get()
-      val s3 = S.annRouteCached(diffuse, "vid", "v", dir).stat
+      val s3 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir)).stat
       assert(s3 == s1 && S.concentrationSampleRuns.get() == before)
     } finally {
       import scala.sys.process._
@@ -1544,7 +1544,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
   }
 
   test("mixture blindness fixed: a clustered-majority mix trips the fraction floor where the percentile stays diffuse") {
-    // The r17 MixProbe refutation operationalized: λ = 0.5/0.75
+    // The r17 mixture refutation (STATUS r17) operationalized: λ = 0.5/0.75
     // mixtures keep a diffuse-band 10th-percentile statistic (a 10%+
     // diffuse minority pins it) while the clustered majority collapses
     // the √n auto curve at scale (0.58/0.47 recall@5 measured at

@@ -76,30 +76,31 @@ object Barrier {
     out
   }
 
-  /** A LAZY barrier (r21, guide §1/§2: the fixed per-job driver latency
-    * dominates small-frame iterative operators): marks `df` for
-    * materialization per the session mode but launches NO job — the
-    * CALLER must immediately run one FULL-SCAN action (an aggregate
-    * that reads every row: `count`, a global `agg`) on the returned
-    * frame, which fills the barrier as a side effect of that job. One
-    * job where [[apply]] + the action cost two driver round-trips.
-    *
-    * Caller contract (the reason this is not the default): the first
-    * action must NOT short-circuit (`isEmpty`/`take`/`head` leave the
-    * barrier partially filled), and the frame must have exactly ONE
-    * consumer inside that first job (two consumers race to materialize
-    * the same partitions — the duplicated-scan defect the eager mode
-    * exists to prevent; see the class scaladoc). Modes where lazy
-    * filling is wrong fall back to eager [[apply]]: `checkpoint` (a
-    * lazy reliable checkpoint RECOMPUTES the frame in a second job —
-    * strictly worse) and `none` (nothing to fill). Under
-    * `localCheckpoint` any partition the first action somehow missed
-    * is computed by the checkpoint finalizer's fill-in job, so the
-    * contract violation costs an extra job, never correctness.
-    * BarrierSpec pins this per mode (one filling job, no second read of
-    * the source); the Lloyd engine's seed collect and first round are
-    * such filling actions. */
-  def lazily(df: DataFrame): DataFrame = {
+  /** A barrier over `df` filled by the caller's own full-scan
+    * `action` (r21, guide §1/§2: the fixed per-job driver latency
+    * dominates small-frame iterative operators): the barrier is marked
+    * per the session mode without a job, and `action` — an aggregate
+    * that reads every row of the frame it is given (`count`, a global
+    * `agg`, a collect, a raw-RDD pass) — fills it as a side effect.
+    * One job where [[apply]] + the action cost two driver round trips.
+    * Returns the barrier and the action's result; a failing action
+    * releases the barrier. `checkpoint` fills eagerly first (a lazy
+    * reliable checkpoint RECOMPUTES the frame in a second job) and
+    * `none` has nothing to fill. BarrierSpec pins one filling job and
+    * no second read of the source per mode. */
+  def filled[T](df: DataFrame)(action: DataFrame => T): (DataFrame, T) = {
+    val b = lazily(df)
+    try (b, action(b))
+    catch { case e: Throwable => release(b); throw e }
+  }
+
+  /** [[filled]] by the row count: the barrier and its count in ONE
+    * job over every partition (`Dataset.count` adds an aggregate
+    * exchange, a second job under AQE). */
+  def counted(df: DataFrame): (DataFrame, Long) =
+    filled(df)(_.queryExecution.toRdd.count())
+
+  private def lazily(df: DataFrame): DataFrame = {
     val out = mode(df) match {
       case "none" => df
       case "persist" => df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -108,14 +109,6 @@ object Barrier {
     }
     scopeStack.get.headOption.foreach(_ += out)
     out
-  }
-
-  /** [[lazily]] together with its filling action: the barrier and its
-    * row count, counted in ONE job over every partition (`Dataset.count`
-    * adds an aggregate exchange, a second job under AQE). */
-  def counted(df: DataFrame): (DataFrame, Long) = {
-    val b = lazily(df)
-    (b, b.queryExecution.toRdd.count())
   }
 
   /** Barrier `b` as a frame whose logical plan is ONE leaf over its

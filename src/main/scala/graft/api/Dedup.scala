@@ -148,7 +148,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * shuffled; comparable-sized inputs degrade gracefully to dd3's
     * shuffled equi-join.
     *
-    * `corpusHist` (r16): the [[readSignatureHistogram]] sidecar (keyed
+    * `corpusHist` (r16): the [[Asset.pairHistogram]] sidecar (keyed
     * by [[jaccardGuardKeys]]) makes the pair-budget precheck
     * Θ(increment) instead of a second full scan of the corpus asset
     * per call — pass it on every daily/streaming invocation whose
@@ -283,7 +283,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * join, day after day. Costs one map-side-combined aggregate over
     * both sides' slim banded rows (the corpus side is one streamed
     * scan of the signature asset's sigs column) — or, with
-    * `corpusHist` (the [[readSignatureHistogram]] sidecar keyed by
+    * `corpusHist` (the [[Asset.pairHistogram]] sidecar keyed by
     * [[embeddingGuardKeys]]), Θ(increment + histogram) with NO corpus
     * scan: the increment's bucket counts join the persisted corpus
     * bucket counts, with a `+ 1.0` floor standing in for the 0-or-1
@@ -413,7 +413,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * page detonates a daily run.
     *
     * COST (r16, the r15 verdict's top task): with `corpusHist` — the
-    * persisted signature-count sidecar from [[readSignatureHistogram]]
+    * persisted signature-count sidecar ([[Asset.pairHistogram]])
     * — the precheck aggregates ONLY the increment and joins the slim
     * histogram: Θ(increment + histogram), no corpus scan (the full
     * union aggregate re-read the whole 100 TB-scale asset on every
@@ -1151,13 +1151,12 @@ object Dedup extends org.apache.spark.internal.Logging {
     * the caller releases a lower level's result once it has composed
     * it. */
   private def components(edges: DataFrame, above: Long, top: Boolean): DataFrame = {
-    val local = Barrier.lazily(
+    // the residue size is the full-scan aggregate that fills the barrier
+    val (local, residueSize) = Barrier.filled(
       edges.as(LongPairs).mapPartitions(localRoots)(LongPairs).toDF("node", "root")
         .groupBy("node")
-        .agg(min("root").as("lbl"), collect_set("root").as("roots")))
-    // the full-scan aggregate that fills the barrier (Barrier.lazily)
-    val residueSize = local
-      .agg(coalesce(sum(size(col("roots")) - 1), lit(0L))).head.getLong(0)
+        .agg(min("root").as("lbl"), collect_set("root").as("roots")))(
+      _.agg(coalesce(sum(size(col("roots")) - 1), lit(0L))).head.getLong(0))
     if (residueSize == 0L) local
     else {
       val residue = local
@@ -1469,80 +1468,17 @@ object Dedup extends org.apache.spark.internal.Logging {
   }
 
   // ------------------------------------------------------------------
-  // Signature-asset lifecycle: the persisted corpus signature table the
-  // incremental operators (dd7-dd10) and the streaming twins read.
-  //
-  // Directory layout under one asset root:
-  //   base/ (or any non-inc_, non-base_gen name)  seed generation 0 —
-  //     written directly by the user from minhashSignatures /
-  //     lshSignatureTable / an (id, sig) projection
-  //   inc_<batchId>/   one per streamed micro-batch (appended by the
-  //     incremental streams)
-  //   base_gen<k>/     compacted generation k: the union of the
-  //     previous generation and the inc_* dirs folded into it.
-  //     COMPLETE iff its `_manifest` file exists AND parses to a
-  //     non-empty fold list. The manifest is published by atomic
-  //     rename strictly after the parquet data, so a crashed
-  //     compaction can never leave a truncated manifest masquerading
-  //     as complete; an empty manifest (a legitimate fold always
-  //     covers >= 1 dir) is likewise treated as a crashed attempt.
-  //   _*               ignored (markers, in-flight work)
-  //
-  // The reader takes the newest COMPLETE generation plus every inc_*
-  // dir not listed in that generation's manifest — never a folded inc
-  // (double rows) and never an incomplete gen (partial data).
-  //
-  // Retention: superseded dirs are NOT deleted at the compaction that
-  // supersedes them — they linger `keepSuperseded` further compactions
-  // (default 1), so a concurrent ad-hoc reader that planned its file
-  // list against the previous generation still finds those files.
-  // Manifests record every folded dir name (seeds included), so a
-  // lingering dir is always attributable; a non-lifecycle dir dropped
-  // into a compacted asset root fails loud instead of being silently
-  // destroyed at the next compaction.
+  // Asset lifecycle: the persisted signature and groups assets live in
+  // [[Asset]]. The six verbs below are one-line forwarders kept under
+  // their historical names for existing callers (the repo benchmark
+  // among them); new code calls [[Asset]] directly.
   // ------------------------------------------------------------------
-
-  private val GenRe = "base_gen(\\d+)".r
-
-  /** See [[readGroupsAsset]]'s `maxUpsertDirs`. */
-  val DefaultMaxUpsertDirs = 64
-
-  // ------------------------------------------------------------------
-  // Pair-budget histogram sidecar (r16 — the r15 verdict's top task):
-  // the incremental guards' corpus-side signature counts, persisted
-  // per generation at compaction time so the per-call precheck is
-  // Θ(increment + sidecar) instead of a second full corpus scan.
-  //
-  // Layout: `base_gen<k>/_pairhist/` — parquet (k: <family key type>,
-  // cc: long), ONLY keys with cc ≥ 2 (duplicate heaps / hot buckets;
-  // singleton keys would make the sidecar corpus-sized for nothing —
-  // the guards model an absent key as ≤ 1 copy with a +1 floor, so
-  // truncation only ever OVER-estimates, by ≤ |increment| pairs).
-  // The `_` prefix hides the dir from the generation's own parquet
-  // scan (Hadoop's hidden-path filter), and the sidecar lands BEFORE
-  // the `_manifest`, so a generation is never complete without its
-  // histogram. Seed dirs (`base/`) have no sidecar — the reader
-  // returns None there and the guards fall back to the full
-  // aggregate.
-  // ------------------------------------------------------------------
-
-  private val PairHistDir = "_pairhist"
-
-  /** `on` (default) serves the `_pairhist` sidecar to the incremental
-    * guards; `off` makes [[readSignatureHistogram]] return None so
-    * every precheck takes the exact full-corpus aggregate — the
-    * escape hatch for a sidecar suspected wrong, and the A/B leg that
-    * isolates the sidecar's wall-clock contribution on the daily
-    * bindings (guard OUTPUT is identical either way: the sidecar only
-    * changes the precheck's cost shape, spec-pinned). */
-  val PairHistConfKey = "spark.graft.dedup.pairhist"
 
   /** Guard-key projection for the MinHash/Jaccard family's signature
     * asset ([[minhashSignatures]] schema): the stored band-key array
     * is the asset's stand-in for the full minhash signature (equal
     * texts ⇒ equal bkeys ⇒ every pair survives at jac = 1.0). Pass to
-    * [[compactSignatureAsset]] / [[readSignatureHistogram]];
-    * [[Increment.Family.jaccard]] carries it. */
+    * [[Asset.pairHistogram]]; [[Increment.Family.jaccard]] carries it. */
   val jaccardGuardKeys: DataFrame => DataFrame =
     sigs => sigs.select(col("bkeys").as("k"))
 
@@ -1561,399 +1497,39 @@ object Dedup extends org.apache.spark.internal.Logging {
       .select(struct(col("pos").cast("integer").as("tbl"),
         col("col").as("sig")).as("k"))
 
-  /** Write the `_pairhist` sidecar for an existing SEED dir (e.g.
-    * `<asset>/base` right after seeding — compacted generations get
-    * theirs automatically from [[compactSignatureAsset]]'s
-    * `guardKeys`): one aggregate over the seed rows, persisted so
-    * every incremental guard call against the asset is Θ(increment)
-    * from day one instead of from the first compaction. */
+  /** [[Asset.writeSidecar]] of the family's [[Asset.pairHistogram]]. */
   def writeSignatureHistogram(spark: org.apache.spark.sql.SparkSession,
       genDir: String, guardKeys: DataFrame => DataFrame): Unit =
-    guardKeys(spark.read.parquet(genDir))
-      .groupBy("k").agg(count(lit(1)).as("cc"))
-      .filter(col("cc") >= 2)
-      .write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(genDir, PairHistDir).toString)
+    Asset.writeSidecar(spark, genDir, Asset.pairHistogram(guardKeys))
 
-  /** Read the pair-budget histogram for the asset at `dir`: the newest
-    * complete generation's persisted sidecar UNIONED with guard-key
-    * counts over the un-folded inc_* dirs (aggregated at read time —
-    * Θ(increments since the last compaction), the same freshness
-    * contract as [[readSignatureAsset]]; `excludeInc` as there).
-    * Returns None when the newest generation carries no sidecar (seed
-    * dirs never stamped by [[writeSignatureHistogram]], or generations
-    * compacted without `guardKeys`) — the guards then fall back to the
-    * full corpus aggregate. The `guardKeys` deriver must be the SAME
-    * family projection the compaction wrote (the key types would
-    * otherwise mismatch — the guard's join fails loud at analysis
-    * rather than mis-counting).
-    *
-    * Count semantics: exact for every key the sidecar covers (its
-    * c ≥ 2 generation keys plus all live-inc keys); a key with one
-    * generation copy may be absent or under-counted by exactly 1 —
-    * the guards' +1 floor absorbs it conservatively. */
+  /** [[Asset.readSidecar]] of the family's [[Asset.pairHistogram]]. */
   def readSignatureHistogram(spark: org.apache.spark.sql.SparkSession,
       dir: String, guardKeys: DataFrame => DataFrame,
-      excludeInc: Option[String] = None): Option[DataFrame] = {
-    // `off` forces the guards onto the exact full-aggregate fallback
-    // even when a sidecar exists: the operational escape hatch for a
-    // histogram suspected wrong (semantics are unchanged either way —
-    // the sidecar only re-shapes the precheck's cost), and the A/B
-    // instrument that measures what the sidecar saves on the daily
-    // bindings (the r17 bench-attribution legs).
-    // normalized (trim + lowercase) like the enforce|warn|off guard
-    // confs read through SQLConf: 'OFF'/' On ' must select the mode,
-    // not throw mid-pipeline at the first read-time call (r17 ADVICE)
-    if (Guard.mode(spark, PairHistConfKey, "on", Seq("on", "off")) == "off")
-      return None
-    val (fs, root) = assetFs(spark, dir)
-    val scan = scanAsset(fs, root)
-    val histPaths = scan.gen
-      .map(g => new org.apache.hadoop.fs.Path(g, PairHistDir))
-      .filter(fs.exists)
-    if (scan.gen.isEmpty || histPaths.size != scan.gen.size) return None
-    // Per-dir sidecars truncate cc >= 2 PER DIR: with m seed dirs, a
-    // key holding exactly one copy in each (true cc = m >= 2 — a heap
-    // spread across seeds) is absent from EVERY sidecar, and the guard
-    // would model it as <= 1 copy — an UNDER-estimate that breaks the
-    // sidecar's over-estimate-only guarantee, un-recoverable by any
-    // reader-side re-aggregation (the rows were never written). A
-    // compacted generation is always one dir (scanAsset returns
-    // Seq(newest)); only multi-dir seeds reach here, and they fall
-    // back to the exact full-corpus aggregate until the first
-    // compaction merges them into one generation.
-    if (scan.gen.size > 1) return None
-    // read the sidecar's part files: Spark treats the `_`-prefixed dir
-    // itself as a hidden path and logs that it ignored it
-    val parts = histPaths.flatMap(fs.listStatus(_).map(_.getPath)
-      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith(".")))
-    val genHist = spark.read.parquet(
-        (if (parts.nonEmpty) parts else histPaths).map(_.toString): _*)
-      .select(col("k"), col("cc"))
-    val incs = scan.liveExcept(excludeInc, dir)
-    Some(
-      if (incs.isEmpty) genHist
-      else genHist.union(
-          guardKeys(spark.read.parquet(incs.map(_.toString): _*))
-            .groupBy("k").agg(count(lit(1)).as("cc")))
-        .groupBy("k").agg(sum("cc").as("cc")))
-  }
+      excludeInc: Option[String] = None): Option[DataFrame] =
+    Asset.readSidecar(spark, dir, Asset.pairHistogram(guardKeys), excludeInc)
 
-  private def assetFs(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    (root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
-  }
-
-  /** Asset-root inventory: `gen` = dirs of the newest complete
-    * generation (the seed dirs when none exists), `genK` = its number
-    * (0 = seeds), `folded` = its manifest (every dir name ever folded,
-    * with the first generation that folded it), `liveIncs` = un-folded
-    * inc_* dirs, `stale` = superseded dirs tagged with the generation
-    * that superseded them (Int.MinValue = crashed attempt, deletable
-    * immediately). */
-  private final case class AssetScan(
-      gen: Seq[org.apache.hadoop.fs.Path],
-      genK: Int,
-      folded: Map[String, Int],
-      liveIncs: Seq[org.apache.hadoop.fs.Path],
-      stale: Seq[(org.apache.hadoop.fs.Path, Int)]) {
-
-    /** The live inc dirs minus `excludeInc`. Excluding a tag that a
-      * generation already folded fails: its rows are in that
-      * generation, so the exclusion cannot hold, and a rewrite of the
-      * tag would be skipped by every reader and deleted by a later
-      * compaction — an increment lost without an error. */
-    def liveExcept(excludeInc: Option[String], dir: String): Seq[org.apache.hadoop.fs.Path] = {
-      for (t <- excludeInc; k <- folded.get(t))
-        throw new IllegalArgumentException(s"inc tag '$t' of the asset at " +
-          s"$dir was already folded into generation base_gen$k — its " +
-          "rows are in that generation, and a rewrite of the tag would " +
-          "be skipped by every reader and deleted by a later compaction. " +
-          "Give a new increment a tag no compaction has folded.")
-      liveIncs.filterNot(i => excludeInc.contains(i.getName))
-    }
-  }
-
-  /** One manifest read per generation: None = missing or vanished
-    * mid-scan (an expired lingering gen deleted by a concurrent
-    * compaction reads as incomplete instead of crashing the scan). */
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      gen: org.apache.hadoop.fs.Path): Option[Seq[String]] =
-    try {
-      val in = fs.open(new org.apache.hadoop.fs.Path(gen, "_manifest"))
-      try Some(scala.io.Source.fromInputStream(in)
-        .getLines().map(_.trim).filter(_.nonEmpty).toList)
-      finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  private def scanAsset(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): AssetScan = {
-    require(fs.exists(root),
-      s"asset root $root does not exist — create it and seed a generation " +
-        "(e.g. base/) first")
-    val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filterNot(_.getName.startsWith("_")).toSeq
-    val (incs, genDirs) = dirs.partition(_.getName.startsWith("inc_"))
-    val (compacted, seeds) = genDirs.partition(p => GenRe.matches(p.getName))
-    val numbered = compacted
-      .map { p => val GenRe(k) = p.getName: @unchecked; (k.toInt, p) }
-    // ONE manifest read per candidate generation: completeness, the
-    // fold set, and per-dir superseded-at ages all derive from it (on
-    // an object store each read is a metadata round trip, and scans
-    // run per micro-batch)
-    val complete = numbered.sortBy(_._1)
-      .flatMap { case (j, p) =>
-        readManifest(fs, p).filter(_.nonEmpty).map(m => (j, p, m)) }
-    complete.lastOption match {
-      case Some((k, newest, newestManifest)) =>
-        // first generation that folded each name — manifests are
-        // cumulative, so lingering manifests date every superseded dir
-        val firstFold = scala.collection.mutable.Map[String, Int]()
-        complete.foreach { case (j, _, m) =>
-          m.foreach(n => if (!firstFold.contains(n)) firstFold(n) = j) }
-        val folded = newestManifest.map(n => n -> firstFold(n)).toMap
-        val unrecognized = seeds.filterNot(s => folded.contains(s.getName))
-        require(unrecognized.isEmpty,
-          s"asset at $root holds director(ies) the lifecycle did not " +
-            s"create and no generation folded: " +
-            s"${unrecognized.map(_.getName).mkString(", ")} — a compacted " +
-            "asset only manages inc_* and base_gen* dirs; ingest new data " +
-            "as an inc_* dir (or seed a fresh asset root) instead. (If " +
-            "this is a seed dir folded by a pre-manifest-format " +
-            "compaction whose cleanup crashed, confirm its rows are in " +
-            "the newest generation, then delete the dir manually.)")
-        val staleSeeds = seeds.map(p => (p, firstFold(p.getName)))
-        val staleGens = complete.init.map { case (j, p, _) =>
-          (p, complete.find(_._1 > j).get._1) } // superseded by the next gen
-        val crashed = numbered.collect { // failed attempts at or below k
-          case (j, p) if j <= k && !complete.exists(_._2 == p) =>
-            (p, Int.MinValue) }
-        val (foldedIncs, liveIncs) =
-          incs.partition(i => folded.contains(i.getName))
-        AssetScan(Seq(newest), k, folded, liveIncs,
-          staleSeeds ++ staleGens ++ crashed ++
-            foldedIncs.map(p => (p, firstFold(p.getName))))
-      case None =>
-        AssetScan(seeds, 0, Map.empty, incs, Seq.empty)
-    }
-  }
-
-  /** Delete every stale dir superseded at or before generation
-    * `maxGen` (crashed attempts carry Int.MinValue: always eligible). */
-  private def deleteAged(fs: org.apache.hadoop.fs.FileSystem,
-      stale: Seq[(org.apache.hadoop.fs.Path, Int)], maxGen: Int): Unit =
-    stale.collect { case (p, j) if j <= maxGen => p }
-      .foreach(p => fs.delete(p, true))
-
-  /** Read the signature asset at `dir` per the layout contract above:
-    * newest complete generation + un-folded inc_* dirs, minus
-    * `excludeInc` (a streaming batch excludes its OWN subdir so a
-    * replayed batch never pairs against its previous attempt). Fails
-    * loud when the asset is unseeded, and when `excludeInc` names a tag
-    * a compaction already folded. */
+  /** [[Asset.read]]. */
   def readSignatureAsset(spark: org.apache.spark.sql.SparkSession, dir: String,
-      excludeInc: Option[String] = None): DataFrame = {
-    val (fs, root) = assetFs(spark, dir)
-    val scan = scanAsset(fs, root)
-    val parts = (scan.gen ++ scan.liveExcept(excludeInc, dir)).map(_.toString)
-    require(parts.nonEmpty,
-      s"signature asset at $dir is unseeded — write minhashSignatures / " +
-        "lshSignatureTable output (e.g. under base/) first")
-    spark.read.parquet(parts: _*)
-  }
+      excludeInc: Option[String] = None): DataFrame =
+    Asset.read(spark, dir, excludeInc)
 
-  /** Fold the asset's accumulated inc_* dirs into a new compacted
-    * generation — the maintenance verb that keeps a long-lived
-    * streaming asset from degrading into thousands of small dirs (a
-    * year of daily batches is ~365 `listStatus` children and as many
-    * tiny-file scans per read: the classic object-store lakehouse
-    * failure). Idempotent under retry at every step: the new
-    * generation is invisible until its `_manifest` lands (written
-    * strictly after the parquet data), a crashed attempt is simply
-    * overwritten, and cleanup of superseded dirs is safe at any point
-    * after the manifest exists (readers already ignore them). Safe to
-    * run between micro-batches of a live stream — but not concurrently
-    * with one (a replayed batch whose inc dir was just folded fails:
-    * readers refuse to exclude a folded tag); quiesce the stream first.
-    *
-    * Retention: the dirs THIS compaction supersedes stay on disk for
-    * `keepSuperseded` further compactions (default 1) before being
-    * deleted, so an ad-hoc reader that planned its scan against the
-    * previous generation — listing the asset just before the new
-    * manifest landed — still finds every file it planned.
-    * `keepSuperseded = 0` restores immediate deletion (safe only when
-    * no reader can be in flight). Returns the number of inc dirs
-    * folded (0 = nothing to do; dirs whose retention has expired are
-    * still cleaned up).
-    *
-    * `guardKeys` (r16): the family's guard-key projection
-    * ([[jaccardGuardKeys]] / [[hammingGuardKeys]] /
-    * [[embeddingGuardKeys]]) — when given, the new generation also
-    * gets its `_pairhist` sidecar (key counts ≥ 2 over the folded
-    * rows, one extra aggregate over data the fold already wrote),
-    * which makes every later incremental guard call Θ(increment) via
-    * [[readSignatureHistogram]]. Compaction is exactly where the
-    * corpus-sized pass is already being paid — the sidecar rides it
-    * instead of being re-derived per daily call. */
+  /** [[Asset.compact]], with the family's [[Asset.pairHistogram]] when
+    * `guardKeys` is given. */
   def compactSignatureAsset(spark: org.apache.spark.sql.SparkSession,
       dir: String, keepSuperseded: Int = 1,
-      guardKeys: Option[DataFrame => DataFrame] = None): Int = {
-    require(keepSuperseded >= 0,
-      s"keepSuperseded must be non-negative, got $keepSuperseded")
-    val (fs, root) = assetFs(spark, dir)
-    val scan = scanAsset(fs, root)
-    if (scan.liveIncs.isEmpty) { // nothing to fold; still expire leftovers
-      deleteAged(fs, scan.stale, scan.genK - keepSuperseded)
-      return 0
-    }
-    require(scan.gen.nonEmpty, s"signature asset at $dir has no seed generation")
-    val k = scan.genK + 1
-    writeGeneration(fs, root, k,
-      spark.read.parquet((scan.gen ++ scan.liveIncs).map(_.toString): _*),
-      scan.folded.keySet ++ (scan.gen ++ scan.liveIncs).map(_.getName),
-      guardKeys.map(gk => out => gk(spark.read.parquet(out))
-        .groupBy("k").agg(count(lit(1)).as("cc"))
-        .filter(col("cc") >= 2)))
-    deleteAged(fs, scan.stale ++ (scan.gen ++ scan.liveIncs).map((_, k)),
-      k - keepSuperseded)
-    scan.liveIncs.size
-  }
+      guardKeys: Option[DataFrame => DataFrame] = None): Int =
+    Asset.compact(spark, dir, keepSuperseded, guardKeys.map(Asset.pairHistogram))
 
-  /** Write `df` as generation `base_gen<k>` with its completion marker
-    * LAST: the gen is invisible to readers until the `_manifest` — the
-    * cumulative fold list, seed and generation names included — exists,
-    * and the manifest itself is published by write-to-temp + atomic
-    * rename, so a crash mid-write can never expose a truncated manifest
-    * as a complete generation. `sidecar` (the histogram builder, fed
-    * the just-written generation path so it aggregates the FRESH
-    * parquet, not the pre-fold lineage a second time) writes under the
-    * gen dir before the manifest — a generation is never complete
-    * without its sidecar. Deleting superseded dirs is the CALLER's
-    * job (the retention policy lives there). */
-  private def writeGeneration(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, k: Int, df: DataFrame,
-      manifest: Set[String],
-      sidecar: Option[String => DataFrame] = None): Unit = {
-    val target = new org.apache.hadoop.fs.Path(root, s"base_gen$k")
-    df.write.mode("overwrite").parquet(target.toString)
-    sidecar.foreach(_(target.toString).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(target, PairHistDir).toString))
-    val tmp = new org.apache.hadoop.fs.Path(target, "_manifest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(manifest.toSeq.sorted
-      .mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(target, "_manifest")),
-      s"failed to publish manifest under $target")
-  }
-
-  /** Read the (doc_id, group_id) GROUPS asset at `dir` — same layout
-    * as the signature asset, but inc_* dirs are UPSERTS (dd10 output:
-    * all members of the components a batch touched), not appends:
-    * the resolved view takes, per doc, the row from the
-    * highest-numbered inc, falling back to the base generation.
-    * Resolution is the 100 TB merge-on-read shape: the (small)
-    * increment updates resolve among themselves with one window over
-    * broadcastable rows, then the base generation is STREAMED through
-    * a broadcast anti-join on the updated ids — the corpus-sized side
-    * is never shuffled. Compaction folds the upserts away entirely.
-    *
-    * That resolution ASSUMES the un-compacted upserts stay small (they
-    * union into one windowed frame whose update-id set is broadcast):
-    * a stream that never compacts silently grows both until the
-    * broadcast build side OOMs an executor at scale. `maxUpsertDirs`
-    * turns that silent degradation into the lifecycle's standard
-    * fail-loud: more live inc_* dirs than the threshold refuses the
-    * read and names the fix ([[compactGroupsAsset]] — which itself
-    * reads without the guard: the fix must never be blocked by the
-    * condition it fixes). The default (64) is far above any sane
-    * compaction cadence (a daily stream that compacts weekly holds
-    * ≤ 7) while still far below where dir-count itself hurts an
-    * object-store listing; raise it explicitly only to ride out a
-    * missed maintenance window. */
+  /** [[Asset.readUpserts]]. */
   def readGroupsAsset(spark: org.apache.spark.sql.SparkSession, dir: String,
       excludeInc: Option[String] = None,
-      maxUpsertDirs: Int = DefaultMaxUpsertDirs): DataFrame = {
-    val (fs, root) = assetFs(spark, dir)
-    val scan = scanAsset(fs, root)
-    val gen = scan.gen
-    def ord(p: org.apache.hadoop.fs.Path): Long = {
-      val suffix = p.getName.stripPrefix("inc_")
-      require(suffix.forall(_.isDigit) && suffix.nonEmpty,
-        s"groups asset upsert dir '${p.getName}' is not inc_<batchId> — " +
-          "upsert precedence is by numeric batch id")
-      suffix.toLong
-    }
-    val incs = scan.liveExcept(excludeInc, dir).sortBy(ord)
-    // guard counts only the dirs that PARTICIPATE in resolution (an
-    // excluded replayed batch's own dir never unions into the window)
-    require(incs.size <= maxUpsertDirs,
-      s"groups asset at $dir holds ${incs.size} un-compacted upsert dirs " +
-        s"(> maxUpsertDirs = $maxUpsertDirs) — merge-on-read resolution " +
-        "assumes the accumulated upserts stay broadcastable, and a stream " +
-        "that never compacts breaks that assumption silently at scale. " +
-        "Run compactGroupsAsset (at a quiesce point) to fold them; raise " +
-        "maxUpsertDirs only to ride out a missed maintenance window")
-    require(gen.nonEmpty || incs.nonEmpty,
-      s"groups asset at $dir is unseeded — write duplicateGroups output " +
-        "(e.g. under base/) first")
-    val updLatest =
-      if (incs.isEmpty) None
-      else Some {
-        val u = incs.map { p =>
-          spark.read.parquet(p.toString)
-            .select(col("doc_id"), col("group_id"), lit(ord(p)).as("_ord"))
-        }.reduce(_ union _)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy(col("_ord").desc)
-        Barrier(u.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1)
-          .select(col("doc_id"), col("group_id")))
-      }
-    val base =
-      if (gen.isEmpty) None
-      else Some(spark.read.parquet(gen.map(_.toString): _*)
-        .select(col("doc_id"), col("group_id")))
-    (base, updLatest) match {
-      case (Some(b), Some(u)) =>
-        b.join(broadcast(u.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-          .union(u)
-      case (Some(b), None) => b
-      case (None, Some(u)) => u
-      case _ => throw new IllegalStateException("unreachable: require above")
-    }
-  }
+      maxUpsertDirs: Int = Asset.DefaultMaxUpsertDirs): DataFrame =
+    Asset.readUpserts(spark, dir, excludeInc, maxUpsertDirs)
 
-  /** Fold the groups asset's accumulated upsert dirs into a new
-    * RESOLVED generation — same crash-idempotence contract as
-    * [[compactSignatureAsset]] (generation invisible until `_manifest`
-    * lands; cleanup safe after), but the fold is latest-wins
-    * resolution rather than plain union. Safe between micro-batches
-    * of a quiesced stream; same `keepSuperseded` retention contract as
-    * [[compactSignatureAsset]]; returns the number of upsert dirs
-    * folded. */
+  /** [[Asset.compactUpserts]]. */
   def compactGroupsAsset(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keepSuperseded: Int = 1): Int = {
-    require(keepSuperseded >= 0,
-      s"keepSuperseded must be non-negative, got $keepSuperseded")
-    val (fs, root) = assetFs(spark, dir)
-    val scan = scanAsset(fs, root)
-    if (scan.liveIncs.isEmpty) { // nothing to fold; still expire leftovers
-      deleteAged(fs, scan.stale, scan.genK - keepSuperseded)
-      return 0
-    }
-    val k = scan.genK + 1
-    Barrier.scoped {
-      // unguarded read (maxUpsertDirs = MaxValue): compaction IS the
-      // fix for upsert accumulation and must never refuse it
-      writeGeneration(fs, root, k,
-        readGroupsAsset(spark, dir, maxUpsertDirs = Int.MaxValue),
-        scan.folded.keySet ++ (scan.gen ++ scan.liveIncs).map(_.getName))
-    }
-    deleteAged(fs, scan.stale ++ (scan.gen ++ scan.liveIncs).map((_, k)),
-      k - keepSuperseded)
-    scan.liveIncs.size
-  }
+      dir: String, keepSuperseded: Int = 1): Int =
+    Asset.compactUpserts(spark, dir, keepSuperseded)
 
   /** Opt-in precondition check for the incremental operators: corpus
     * and increment ids must be disjoint (an increment is new by

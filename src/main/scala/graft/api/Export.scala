@@ -172,74 +172,40 @@ object Export {
 
   // ---- pack asset: the streaming twin's durable state -----------------
 
-  /** Seed a PACK ASSET at `packDir`: the corpus packed under `base/`
-    * plus the running token total under `_totals/base` (1 row — the
-    * sidecar [[graft.streaming.StreamingOps.packIncrementStream]]
-    * advances per batch). The packed-rows dirs follow the dedup-asset
-    * layout contract (base/ + inc_* + generational folds), so
-    * [[Dedup.readSignatureAsset]] / [[Dedup.compactSignatureAsset]]
-    * manage them unchanged; `_totals` is invisible to that lifecycle
-    * (underscore prefix). The total is derived from the WRITTEN base
-    * (not the input plan), so the sidecar can never disagree with the
-    * durable data. */
+  /** The pack asset's running token total as an [[Asset.Sidecar]]: the
+    * end of the packed layout, max(`cum_before` + `tokensCol`) over the
+    * packed rows (0 when empty). A generation stores its own; a read
+    * adds the max over the live inc dirs (totals are monotone — each
+    * batch continues where its predecessor ended — so the max is the
+    * newest end). */
+  def packTotal(tokensCol: String): Asset.Sidecar = Asset.Sidecar("packtotal",
+    summarize = _.agg(coalesce(max(col("cum_before") + col(tokensCol)), lit(0L))
+      .as("end_total")),
+    merge = _.agg(max(col("end_total")).as("end_total")))
+
+  /** Seed a PACK ASSET at `packDir`: the corpus packed as the seed
+    * generation of an append [[Asset]], stamped with its [[packTotal]]
+    * sidecar — the total is derived from the WRITTEN rows (not the
+    * input plan), so it can never disagree with the durable data.
+    * [[graft.streaming.StreamingOps.packIncrementStream]] appends one
+    * inc dir per batch and compacts with the same sidecar. */
   def seedPackAsset(corpus: DataFrame, idCol: String, tokensCol: String,
-      packDir: String, seed: Long, seqLen: Long, shift: Int = 18): Unit = {
-    packSequences(corpus, idCol, tokensCol, seed, seqLen, shift)
-      .write.mode("overwrite").parquet(s"$packDir/base")
-    val s = corpus.sparkSession
-    s.read.parquet(s"$packDir/base")
-      .agg(coalesce(max(col("cum_before") + col(tokensCol)), lit(0L))
-        .as("end_total"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$packDir/_totals/base")
-  }
+      packDir: String, seed: Long, seqLen: Long, shift: Int = 18): Unit =
+    Asset.seed(corpus.sparkSession, packDir,
+      packSequences(corpus, idCol, tokensCol, seed, seqLen, shift),
+      Some(packTotal(tokensCol)))
 
-  /** The pack asset's current running token total: max `end_total`
-    * across the `_totals` sidecar rows (totals are monotone — each
-    * batch's row is its predecessor's plus its own tokens, so max =
-    * newest; reading the sidecar costs one tiny-file scan per batch,
-    * never a corpus aggregate). `exclude` drops one dir's own row so
-    * a REPLAYED streaming batch reads its predecessor's total, not
-    * its own previous attempt's. */
-  def readPackTotal(spark: org.apache.spark.sql.SparkSession,
-      packDir: String, exclude: Option[String] = None): Long = {
-    val root = new org.apache.hadoop.fs.Path(s"$packDir/_totals")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root),
-      s"pack asset at $packDir is unseeded — call seedPackAsset first")
-    // Only dirs holding committed parquet files count: a crash mid-write
-    // (e.g. of collapsePackTotals' fold dir) leaves an empty/partial dir
-    // whose totals row was never acknowledged — reading it would throw an
-    // opaque schema-inference error and block recovery until someone
-    // hand-deletes it. Such dirs are skipped; the batch protocol writes
-    // each totals row strictly AFTER its data dir, so a skipped dir never
-    // hides an acknowledged total.
-    val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filterNot(p => exclude.contains(p.getName))
-      .filter(p => fs.listStatus(p).exists(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet") && f.getLen > 0))
-      .map(_.toString).toSeq
-    require(dirs.nonEmpty,
-      s"pack asset at $packDir has no committed totals rows " +
-        "(crashed-attempt dirs without parquet files are ignored)")
-    spark.read.parquet(dirs: _*).agg(max(col("end_total"))).head.getLong(0)
-  }
-
-  /** Collapse the `_totals` sidecar to one `fold` row — the pack
-    * asset's quiesce-point maintenance (run it with
-    * [[Dedup.compactSignatureAsset]] over the packed dirs). Crash-safe
-    * in this order: the fold row lands first, and lingering per-batch
-    * rows never change the max (totals are monotone). */
-  def collapsePackTotals(spark: org.apache.spark.sql.SparkSession,
-      packDir: String): Unit = {
-    val total = readPackTotal(spark, packDir)
-    import spark.implicits._
-    Seq(total).toDF("end_total").coalesce(1)
-      .write.mode("overwrite").parquet(s"$packDir/_totals/fold")
-    val root = new org.apache.hadoop.fs.Path(s"$packDir/_totals")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filterNot(_.getName == "fold").foreach(p => fs.delete(p, true))
-  }
+  /** The pack asset's current running token total ([[Asset.readSidecar]]
+    * of [[packTotal]]). `exclude` drops one inc dir so a REPLAYED
+    * streaming batch reads its predecessor's total, not its own
+    * previous attempt's. Fails when the asset carries no total (packed
+    * rows written without [[seedPackAsset]]) instead of reading 0. */
+  def readPackTotal(spark: org.apache.spark.sql.SparkSession, packDir: String,
+      tokensCol: String, exclude: Option[String] = None): Long =
+    Asset.readSidecar(spark, packDir, packTotal(tokensCol), exclude)
+      .getOrElse(throw new IllegalArgumentException(s"pack asset at $packDir " +
+        "carries no running token total — seed it with Export.seedPackAsset"))
+      .head.getLong(0)
 
   /** MATERIALIZE the deterministic shuffle as real shard files — the
     * artifact a training launch actually reads (the reference's jobs

@@ -93,23 +93,21 @@ object Increment {
     * `assertDisjointIds` fails the increment, before any write, when
     * an id is already in the signature asset
     * ([[Dedup.assertDisjointIds]]); `maxUpsertDirs` is the groups read's
-    * accumulation guard ([[Dedup.readGroupsAsset]]). */
+    * accumulation guard ([[Asset.readUpserts]]). */
   def step(spark: SparkSession, sigDir: String, groupsDir: Option[String],
       pairsOut: String, tag: String, incSigs: DataFrame, family: Family,
       assertDisjointIds: Boolean = false,
-      maxUpsertDirs: Int = Dedup.DefaultMaxUpsertDirs): Unit =
+      maxUpsertDirs: Int = Asset.DefaultMaxUpsertDirs): Unit =
     Barrier.scoped {
-      val corpus = Dedup.readSignatureAsset(spark, sigDir, excludeInc = Some(tag))
-      val hist = Dedup.readSignatureHistogram(spark, sigDir, family.guardKeys,
-        excludeInc = Some(tag))
-      val groupsAsset = groupsDir.map(d => Dedup.readGroupsAsset(spark, d,
+      val corpus = Asset.read(spark, sigDir, excludeInc = Some(tag))
+      val hist = Asset.readSidecar(spark, sigDir,
+        Asset.pairHistogram(family.guardKeys), excludeInc = Some(tag))
+      val groupsAsset = groupsDir.map(d => Asset.readUpserts(spark, d,
         excludeInc = Some(tag), maxUpsertDirs = maxUpsertDirs))
       Overlap.scoped { writes =>
         val inc = Barrier(incSigs)
         if (assertDisjointIds) Dedup.assertDisjointIds(corpus, inc, family.idCol)
-        writes.background(s"$tag-sigs") {
-          inc.write.mode("overwrite").parquet(s"$sigDir/$tag")
-        }
+        writes.background(s"$tag-sigs") { Asset.writeInc(inc, sigDir, tag) }
         // barriered only for a second reader: the groups upsert
         val built = family.pairs(corpus, inc, hist)
         val pairs = if (groupsDir.isEmpty) built else Barrier(built)
@@ -119,27 +117,40 @@ object Increment {
         val groups = groupsAsset.map(
           Dedup.incrementalGroups(_, pairs, family.aCol, family.bCol))
         writes.join()
-        for (d <- groupsDir; g <- groups)
-          g.write.mode("overwrite").parquet(s"$d/$tag")
+        for (d <- groupsDir; g <- groups) Asset.writeInc(g, d, tag)
       }
+    }
+
+  /** Seed yesterday's state, the assets [[step]] runs against:
+    * `corpusSigs` (`family.signatures` of the corpus) as the signature
+    * asset's seed generation, stamped with the family's guard sidecar
+    * so the first increment's precheck never re-scans the corpus, then
+    * `groups` (the corpus's duplicate groups, built after the
+    * signatures land) as the groups asset's seed. Barriers the groups
+    * builder creates are released once it is written. */
+  def seed(spark: SparkSession, sigDir: String, groupsDir: String,
+      corpusSigs: DataFrame, groups: => DataFrame, family: Family): Unit =
+    Barrier.scoped {
+      Asset.seed(spark, sigDir, corpusSigs,
+        Some(Asset.pairHistogram(family.guardKeys)))
+      Asset.seed(spark, groupsDir, groups)
     }
 
   /** Fold both assets' inc dirs into a new generation at a quiesce
     * point; the signature generation carries the family's guard
-    * sidecar ([[Dedup.compactSignatureAsset]],
-    * [[Dedup.compactGroupsAsset]]). */
+    * sidecar ([[Asset.compact]], [[Asset.compactUpserts]]). */
   def compact(spark: SparkSession, sigDir: String, groupsDir: Option[String],
       family: Family, keepSuperseded: Int = 1): Unit = {
-    Dedup.compactSignatureAsset(spark, sigDir, keepSuperseded,
-      Some(family.guardKeys))
-    groupsDir.foreach(Dedup.compactGroupsAsset(spark, _, keepSuperseded))
+    Asset.compact(spark, sigDir, keepSuperseded,
+      Some(Asset.pairHistogram(family.guardKeys)))
+    groupsDir.foreach(Asset.compactUpserts(spark, _, keepSuperseded))
   }
 
   /** Keep/drop: the `doc_id`s of `docs` that lead their resolved group
     * in the groups asset at `groupsDir`, or belong to none. The
     * corpus-sized side anti-joins a broadcastable loser set. */
   def survivors(docs: DataFrame, groupsDir: String): DataFrame = {
-    val losers = Dedup.readGroupsAsset(docs.sparkSession, groupsDir)
+    val losers = Asset.readUpserts(docs.sparkSession, groupsDir)
       .filter(col("doc_id") =!= col("group_id")).select(col("doc_id"))
     docs.join(losers, Seq("doc_id"), "leftanti").select(col("doc_id"))
   }

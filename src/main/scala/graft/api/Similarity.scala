@@ -801,8 +801,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     * percentile while their clustered majority collapses the √n
     * curve — the fraction is the statistic that sees them).
     *
-    * `cacheDir` persists the statistic as a sidecar (the `_pairhist`
-    * pattern): concentration is a corpus SHAPE property that drifts
+    * `cacheDir` persists the statistic as a sidecar file (not yet an
+    * [[Asset.Sidecar]] of the index generation): concentration is a corpus SHAPE property that drifts
     * slowly, so a routed daily path should not re-pay the sample
     * top-k job per call. The file `<cacheDir>/_concstat` (atomic
     * write-to-temp + rename, any Hadoop FS — park it next to the
@@ -1440,11 +1440,11 @@ object Similarity extends org.apache.spark.internal.Logging {
     * through one lazy barrier, released when training ends. */
   private def l2Lloyd(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ks: Int, iters: Int): (DataType, Seq[(Int, Cent)]) = {
-    val b = Barrier.lazily(corpus.select(col(idCol).as("vec_id"),
-      col(vecCol).as("embedding")))
+    // the seed collect scans every row of b: it is the filling action
+    val (b, (idType, seeds)) = Barrier.filled(corpus.select(
+      col(idCol).as("vec_id"), col(vecCol).as("embedding")))(
+      b => collectCents(b.filter(col("vec_id") < ks)))
     try {
-      // the seed collect scans every row of b: it is the filling action
-      val (idType, seeds) = collectCents(b.filter(col("vec_id") < ks))
       require(seeds.nonEmpty, s"no seed rows ($idCol < $ks) to train on")
       val (dim, d) = (seeds.head.emb.length, seeds.head.emb.length / m)
       require(dim % m == 0, s"pqTrain: dim $dim not divisible by m=$m")
@@ -1460,9 +1460,10 @@ object Similarity extends org.apache.spark.internal.Logging {
       vecCol: String, iters: Int, how: Assign): DataFrame = {
     val (idType, init) = collectCents(normed(seeds, idCol, vecCol))
     // the first round's aggregate scans every row of b: it fills it
-    val b = Barrier.lazily(normed(corpus, idCol, vecCol).select("embedding", "nrm"))
-    val cents = try lloyd(b, Array(init), iters, how).head
-      finally Barrier.release(b)
+    val (b, cents) = Barrier.filled(
+      normed(corpus, idCol, vecCol).select("embedding", "nrm"))(
+      lloyd(_, Array(init), iters, how).head)
+    Barrier.release(b)
     centsFrame(corpus.sparkSession, "cent_id", idType, CentFields,
       cents.toSeq.map(c => Row(c.id, c.emb.toSeq, c.nrm)))
   }

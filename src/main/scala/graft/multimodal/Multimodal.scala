@@ -549,7 +549,7 @@ object Multimodal {
   // wall-clock, so p6 is correctness-gated but not benched — mm9 and
   // the dd8/dd10p probes carry the measured daily costs.
   private def dailyImageIncrement(s: SparkSession, dir: String): DataFrame = {
-    import graft.api.{Barrier, Dedup, Increment}
+    import graft.api.{Asset, Barrier, Dedup, Increment}
     import graft.operators.DedupQueries.IncMod
     val root = s"target/graft_p6/${dir.replaceAll("[^A-Za-z0-9.]+", "_")}"
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -562,18 +562,14 @@ object Multimodal {
       val corpusSigs = sigs.filter(col("doc_id") % IncMod =!= 0)
       // yesterday's state: signature asset + groups asset from the
       // corpus split only
-      corpusSigs.write.mode("overwrite").parquet(s"$root/sigs/base")
-      // guard sidecar (r16): the daily dd8-shaped precheck reads this
-      // instead of re-scanning the corpus signature asset
-      Dedup.writeSignatureHistogram(
-        s, s"$root/sigs/base", ImageFamily.guardKeys)
-      Dedup.duplicateGroups(
+      Increment.seed(s, s"$root/sigs", s"$root/groups", corpusSigs,
+        Dedup.duplicateGroups(
           Dedup.hammingPairs(corpusSigs, "doc_id", "sig", AHashMaxHamming),
-          "doc_a", "doc_b")
-        .write.mode("overwrite").parquet(s"$root/groups/base")
+          "doc_a", "doc_b"),
+        ImageFamily)
       // today: the increment step, then the day's quiesce point
       Increment.step(s, s"$root/sigs", Some(s"$root/groups"), s"$root/pairs",
-        "inc_0", sigs.filter(col("doc_id") % IncMod === 0), ImageFamily)
+        Asset.incTag(0), sigs.filter(col("doc_id") % IncMod === 0), ImageFamily)
       Increment.compact(s, s"$root/sigs", Some(s"$root/groups"), ImageFamily)
     }
     Increment.survivors(Tables.documents(s, dir), s"$root/groups")
@@ -619,32 +615,28 @@ object Multimodal {
   // batch-global oracle (components over the FULL ahash pair set)
   // gates this binding unchanged.
   private def dailyImageIncrementAsset(s: SparkSession, dir: String): DataFrame = {
-    import graft.api.Increment
+    import graft.api.{Asset, Increment}
     import graft.operators.DedupQueries.IncMod
     val root = QueryDef.seedOnce(s, "p6p", dir) { root =>
       graft.api.Barrier.scoped {
         val corpusSigs = graft.api.Barrier(ahashSigsOf(
           docIds(s, dir).filter(col("doc_id") % IncMod =!= 0)))
-        corpusSigs.write.mode("overwrite").parquet(s"$root/sigs/base")
-        // guard sidecar: p6p's daily precheck reads this, so the timed
-        // path never re-scans the corpus signature asset
-        graft.api.Dedup.writeSignatureHistogram(
-          s, s"$root/sigs/base", ImageFamily.guardKeys)
-        // seed via the CONTRACTION verb (≡ duplicateGroups over
+        // groups via the CONTRACTION verb (≡ duplicateGroups over
         // hammingPairs, property-pinned) — the pattern the pair
         // budget preaches: the replica fixture's ahash space
         // saturates (~716 distinct sigs), so the all-pairs seeding
         // form would trip its own guard at the 500 k-doc decade
-        graft.api.Dedup.hammingGroups(
-            corpusSigs, "doc_id", "sig", AHashMaxHamming)
-          .write.mode("overwrite").parquet(s"$root/groups/base")
+        Increment.seed(s, s"$root/sigs", s"$root/groups", corpusSigs,
+          graft.api.Dedup.hammingGroups(
+            corpusSigs, "doc_id", "sig", AHashMaxHamming),
+          ImageFamily)
       }
     }
     // the decode (the day's ONLY codec work: the increment's) runs
     // once, in the step's barrier job
     Increment.step(s, s"$root/sigs", Some(s"$root/groups"), s"$root/pairs",
-      "inc_0", ahashSigsOf(docIds(s, dir).filter(col("doc_id") % IncMod === 0)),
-      ImageFamily)
+      Asset.incTag(0),
+      ahashSigsOf(docIds(s, dir).filter(col("doc_id") % IncMod === 0)), ImageFamily)
     Increment.survivors(Tables.documents(s, dir), s"$root/groups")
   }
 

@@ -199,24 +199,12 @@ object ExportQueries {
   // duplicated, or dropped row in the FILES changes it). Shards are
   // written once per fixture dir (cold pass), like the dd10p/s7p
   // asset seeding.
-  private val seededShardRoots = scala.collection.mutable.Set.empty[String]
-
-  private[operators] def seedShards(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val root = s"target/graft_bench/ex6/$key/shards"
-    synchronized {
-      if (!seededShardRoots.contains(root)) {
-        val docs = Tables.documents(s, dir).select(col("doc_id"),
-          tokenCount(col("text")).cast("long").as("n_tokens"))
-        Export.writeShards(docs, "doc_id", Seed, NShards, root, Shift)
-        seededShardRoots += root
-      }
-    }
-    root
-  }
-
   private def shardRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = seedShards(s, dir)
+    val root = QueryDef.seedOnce(s, "ex6", dir) { root =>
+      val docs = Tables.documents(s, dir).select(col("doc_id"),
+        tokenCount(col("text")).cast("long").as("n_tokens"))
+      Export.writeShards(docs, "doc_id", Seed, NShards, root, Shift)
+    }
     s.read.parquet(root)
       .select(col("doc_id"), col("n_tokens"),
         col("shard").cast("long").as("shard"), col("shard_pos"))

@@ -201,7 +201,7 @@ object PipelineQueries {
   * (README's operating guide). */
 private[graft] object DailyPipeline {
   import DedupQueries.{DD3Bands, DD3Rows, IncMod}
-  import graft.api.{Increment, Dedup}
+  import graft.api.{Asset, Increment, Dedup}
   private val Jaccard = 0.8
   private val Family =
     Increment.Family.jaccard("doc_id", "text", DD3Bands, DD3Rows, Jaccard)
@@ -214,18 +214,13 @@ private[graft] object DailyPipeline {
   /** Seed yesterday's state: signature + groups assets from the
     * corpus (the increment's docs excluded). */
   def seedAssets(s: SparkSession, docs: DataFrame, root: String): Unit =
-    graft.api.Barrier.scoped {
-      Family.signatures(corpus(docs))
-        .write.mode("overwrite").parquet(s"$root/sigs/base")
-      // guard sidecar: the daily dd7 precheck reads this instead of
-      // re-scanning the corpus signature asset
-      Dedup.writeSignatureHistogram(s, s"$root/sigs/base", Family.guardKeys)
+    Increment.seed(s, s"$root/sigs", s"$root/groups",
+      Family.signatures(corpus(docs)),
       Dedup.duplicateGroups(
-          Dedup.jaccardPairs(
-            corpus(docs), "doc_id", "text", DD3Bands, DD3Rows, Jaccard),
-          "doc_a", "doc_b")
-        .write.mode("overwrite").parquet(s"$root/groups/base")
-    }
+        Dedup.jaccardPairs(
+          corpus(docs), "doc_id", "text", DD3Bands, DD3Rows, Jaccard),
+        "doc_a", "doc_b"),
+      Family)
 
   /** The daily latency path over seeded assets — the increment step
     * (signatures → dd7 pairs → dd10 groups upsert, tag `inc_0`) — plus,
@@ -233,7 +228,7 @@ private[graft] object DailyPipeline {
   def runIncrement(s: SparkSession, docs: DataFrame, root: String,
       compact: Boolean): Unit = {
     Increment.step(s, s"$root/sigs", Some(s"$root/groups"), s"$root/pairs",
-      "inc_0", Family.signatures(increment(docs)), Family)
+      Asset.incTag(0), Family.signatures(increment(docs)), Family)
     if (compact) Increment.compact(s, s"$root/sigs", Some(s"$root/groups"), Family)
   }
 

@@ -184,8 +184,8 @@ object StreamingOps {
     * duplicate/incorrect pairs ([[graft.api.Dedup.assertDisjointIds]]).
     *
     * Guard cost per micro-batch: the pair generators' budget prechecks
-    * read the asset's `_pairhist` sidecar
-    * ([[graft.api.Dedup.readSignatureHistogram]]), Θ(batch +
+    * read the asset's guard sidecar
+    * ([[graft.api.Asset.pairHistogram]]), Θ(batch +
     * un-compacted incs). Before the first compaction there is no
     * sidecar and the precheck falls back to the full aggregate (one
     * more slim streamed asset scan per batch); `compactOnFinish` writes
@@ -198,9 +198,9 @@ object StreamingOps {
     *
     * `compactOnFinish = true` blocks until the AvailableNow drain
     * terminates, then folds both assets ([[graft.api.Increment.compact]];
-    * `keepSuperseded` as in [[graft.api.Dedup.compactSignatureAsset]]).
+    * `keepSuperseded` as in [[graft.api.Asset.compact]]).
     * `maxUpsertDirs` is the per-batch groups read's accumulation guard
-    * ([[graft.api.Dedup.readGroupsAsset]]): a stream draining more
+    * ([[graft.api.Asset.readUpserts]]): a stream draining more
     * batches than that between compactions must raise it or compact. */
   def incrementalPairStream(docs: DataFrame, family: graft.api.Increment.Family,
       sigDir: String, pairsDir: String, checkpointDir: String,
@@ -208,12 +208,12 @@ object StreamingOps {
       groupsDir: Option[String] = None,
       compactOnFinish: Boolean = false,
       keepSuperseded: Int = 1,
-      maxUpsertDirs: Int = graft.api.Dedup.DefaultMaxUpsertDirs):
+      maxUpsertDirs: Int = graft.api.Asset.DefaultMaxUpsertDirs):
       org.apache.spark.sql.streaming.StreamingQuery =
     microBatches(docs, checkpointDir, sigDir +: groupsDir.toSeq, compactOnFinish) {
       (batch, batchId) =>
         graft.api.Increment.step(batch.sparkSession, sigDir, groupsDir,
-          s"$pairsDir/batch=$batchId", s"inc_$batchId",
+          s"$pairsDir/batch=$batchId", graft.api.Asset.incTag(batchId),
           family.signatures(batch), family, assertDisjointIds, maxUpsertDirs)
     } { s =>
       graft.api.Increment.compact(s, sigDir, groupsDir, family, keepSuperseded)
@@ -278,7 +278,7 @@ object StreamingOps {
     * at `indexDir` as `inc_<batchId>` — replay-idempotent (overwrite),
     * lineage-stamped like the dedup assets, and visible to
     * [[graft.api.Similarity.pqTopKFromIndex]] readers through the same
-    * manifest-gated [[graft.api.Dedup.readSignatureAsset]] layout
+    * manifest-gated [[graft.api.Asset.read]] layout
     * (seed the asset with [[graft.api.Similarity.pqEncodeIndex]]
     * output under `base/`). `compactOnFinish` folds the drained
     * batches at the AvailableNow quiesce point, exactly as the
@@ -289,11 +289,11 @@ object StreamingOps {
       org.apache.spark.sql.streaming.StreamingQuery =
     microBatches(vecs, checkpointDir, Seq(indexDir), compactOnFinish) {
       (batch, batchId) =>
-        graft.api.Similarity.pqEncodeIndex(
-            batch, batch.sparkSession.read.parquet(booksDir), idCol, vecCol)
-          .write.mode("overwrite").parquet(s"$indexDir/inc_$batchId")
+        graft.api.Asset.writeInc(graft.api.Similarity.pqEncodeIndex(
+            batch, batch.sparkSession.read.parquet(booksDir), idCol, vecCol),
+          indexDir, graft.api.Asset.incTag(batchId))
     } { s =>
-      graft.api.Dedup.compactSignatureAsset(s, indexDir, keepSuperseded)
+      graft.api.Asset.compact(s, indexDir, keepSuperseded)
       ()
     }
 
@@ -302,17 +302,17 @@ object StreamingOps {
     * layout ([[graft.api.Export.packSequencesAfter]] — corpus
     * sequences never rewritten, Θ(batch) work + one broadcast row),
     * appending `inc_<batchId>` to the pack asset at `packDir` (seed
-    * with [[graft.api.Export.seedPackAsset]]) and advancing the
-    * `_totals` sidecar — the sidecar row is derived from the WRITTEN
-    * inc dir and lands strictly after it, so a crashed attempt is
-    * invisible to the next batch. Replay-idempotent: a replayed batch
-    * overwrites its own dirs and reads its PREDECESSOR's total (its
-    * own sidecar row is excluded from the max). Lineage-stamped like
-    * the dedup assets. `compactOnFinish` folds the drained inc dirs
-    * into a new generation at the AvailableNow quiesce point — pure
+    * with [[graft.api.Export.seedPackAsset]]). The running total the
+    * batch continues from is the asset's [[graft.api.Export.packTotal]]
+    * sidecar, which reads the written inc dirs themselves, so a
+    * crashed attempt is never counted twice. Replay-idempotent: a
+    * replayed batch overwrites its own dir and reads its PREDECESSOR's
+    * total (its own dir is excluded). Lineage-stamped like the dedup
+    * assets. `compactOnFinish` folds the drained inc dirs into a new
+    * generation at the AvailableNow quiesce point — pure
     * concatenation, since the per-batch layouts are disjoint token
-    * ranges — and collapses the sidecar. Batch ≡ stream (pinned in
-    * StreamingSpec): the asset after N batches equals applying
+    * ranges — whose sidecar stores the total. Batch ≡ stream (pinned
+    * in StreamingSpec): the asset after N batches equals applying
     * packSequencesAfter sequentially at the same batch boundaries. */
   def packIncrementStream(docs: DataFrame, idCol: String, tokensCol: String,
       packDir: String, checkpointDir: String, seed: Long, seqLen: Long,
@@ -321,20 +321,16 @@ object StreamingOps {
     microBatches(docs, checkpointDir, Seq(packDir), compactOnFinish) {
       (batch, batchId) =>
         val s = batch.sparkSession
-        val prev = graft.api.Export.readPackTotal(s, packDir,
-          exclude = Some(s"inc_$batchId"))
+        val tag = graft.api.Asset.incTag(batchId)
+        val prev = graft.api.Export.readPackTotal(s, packDir, tokensCol,
+          exclude = Some(tag))
         val base = s.range(1).select(lit(prev).as("base_tokens"))
-        graft.api.Export.packSequencesAfter(batch, idCol, tokensCol,
-            base, seed, seqLen)
-          .write.mode("overwrite").parquet(s"$packDir/inc_$batchId")
-        s.read.parquet(s"$packDir/inc_$batchId")
-          .agg(coalesce(max(col("cum_before") + col(tokensCol)), lit(prev))
-            .as("end_total"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$packDir/_totals/inc_$batchId")
+        graft.api.Asset.writeInc(graft.api.Export.packSequencesAfter(
+          batch, idCol, tokensCol, base, seed, seqLen), packDir, tag)
     } { s =>
-      graft.api.Dedup.compactSignatureAsset(s, packDir, keepSuperseded)
-      graft.api.Export.collapsePackTotals(s, packDir)
+      graft.api.Asset.compact(s, packDir, keepSuperseded,
+        Some(graft.api.Export.packTotal(tokensCol)))
+      ()
     }
 
   /** Idempotent micro-batch sink: foreachBatch + deterministic

@@ -4,15 +4,15 @@ import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Signature-asset lifecycle: generation-aware reads and compaction
-  * (Dedup.readSignatureAsset / compactSignatureAsset). The invariant
+/** Asset lifecycle: generation-aware reads and compaction
+  * ([[Asset.read]] / [[Asset.compact]]). The invariant
   * under test everywhere: the ROWS the reader returns never change
   * across compactions, crashed compaction attempts, or cleanup — only
   * the directory layout does. */
 class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
 
   private def sigRows(dir: String): Set[(Long, Int)] =
-    Dedup.readSignatureAsset(spark, dir)
+    Asset.read(spark, dir)
       .select(col("doc_id"), col("nh"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
 
@@ -41,14 +41,14 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       // real compaction overwrites the crashed attempt; rows unchanged
       // (keepSuperseded = 0 pins the immediate-cleanup layout; the
       // retention default has its own test below)
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 0) == 2)
+      assert(Asset.compact(spark, root, keepSuperseded = 0) == 2)
       assert(sigRows(root) == before)
       assert(subdirs(root) == Set("base_gen1"),
         s"seed + folded incs cleaned up, got ${subdirs(root)}")
       assert(new java.io.File(s"$root/base_gen1/_manifest").exists())
 
       // nothing left to fold
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 0) == 0)
+      assert(Asset.compact(spark, root, keepSuperseded = 0) == 0)
       assert(sigRows(root) == before)
 
       // a later increment lands, reads merge it, next compaction chains
@@ -59,7 +59,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
         .write.parquet(s"$root/inc_2")
       val withInc = sigRows(root)
       assert(withInc.size == before.size + 7)
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 0) == 1)
+      assert(Asset.compact(spark, root, keepSuperseded = 0) == 1)
       assert(sigRows(root) == withInc)
       assert(subdirs(root) == Set("base_gen2"))
     } finally {
@@ -77,7 +77,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       Dedup.minhashSignatures(docs.filter(col("doc_id") % 2 === 1),
         "doc_id", "text", 8, 4).write.parquet(s"$root/inc_3")
       val all = sigRows(root)
-      val excl = Dedup.readSignatureAsset(spark, root, excludeInc = Some("inc_3"))
+      val excl = Asset.read(spark, root, excludeInc = Some("inc_3"))
         .select(col("doc_id"), col("nh"))
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
       assert(excl.nonEmpty && all != excl)
@@ -100,21 +100,21 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       Seq((3L, 1L)).toDF("doc_id", "group_id").write.parquet(s"$root/inc_0")
       Seq((3L, 2L), (100L, 2L)).toDF("doc_id", "group_id")
         .write.parquet(s"$root/inc_1")
-      def resolved() = Dedup.readGroupsAsset(spark, root)
+      def resolved() = Asset.readUpserts(spark, root)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val expected = Set((1L, 1L), (2L, 1L), (3L, 2L), (4L, 4L), (100L, 2L))
       assert(resolved() == expected)
       // excludeInc: a replayed batch 1 must resolve pre-batch-1 state
-      val pre = Dedup.readGroupsAsset(spark, root, excludeInc = Some("inc_1"))
+      val pre = Asset.readUpserts(spark, root, excludeInc = Some("inc_1"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(pre == Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L)))
       // compaction folds both upserts into a resolved generation
-      assert(Dedup.compactGroupsAsset(spark, root, keepSuperseded = 0) == 2)
+      assert(Asset.compactUpserts(spark, root, keepSuperseded = 0) == 2)
       assert(resolved() == expected)
       val names = new java.io.File(root).listFiles()
         .filter(_.isDirectory).map(_.getName).toSet
       assert(names == Set("base_gen1"), s"got $names")
-      assert(Dedup.compactGroupsAsset(spark, root, keepSuperseded = 0) == 0)
+      assert(Asset.compactUpserts(spark, root, keepSuperseded = 0) == 0)
     } finally {
       import scala.sys.process._
       Seq("rm", "-rf", root).!
@@ -129,7 +129,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       Seq((1L, 1L), (2L, 1L), (3L, 3L)).toDF("doc_id", "group_id")
         .write.parquet(s"$root/base")
       Seq((3L, 1L)).toDF("doc_id", "group_id").write.parquet(s"$root/inc_0")
-      val df = Dedup.readGroupsAsset(spark, root)
+      val df = Asset.readUpserts(spark, root)
       df.collect() // materialize so AQE's final plan is in place
       val plan = df.queryExecution.executedPlan.toString
       // the corpus-sized base side must NEVER shuffle: resolution is a
@@ -154,19 +154,19 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       sigs(col("doc_id") % 3 === 1).write.parquet(s"$root/inc_0")
       // compaction 1 (default retention): gen1 lands, the seed and
       // inc_0 it folded LINGER one more cycle
-      assert(Dedup.compactSignatureAsset(spark, root) == 1)
+      assert(Asset.compact(spark, root) == 1)
       assert(subdirs(root) == Set("base", "inc_0", "base_gen1"),
         s"superseded dirs must linger one compaction, got ${subdirs(root)}")
       val afterGen1 = sigRows(root)
 
       // an ad-hoc reader plans its scan NOW (file list = gen1 + inc_1)
       sigs(col("doc_id") % 3 === 2).write.parquet(s"$root/inc_1")
-      val inFlight = Dedup.readSignatureAsset(spark, root)
+      val inFlight = Asset.read(spark, root)
       val expected = sigRows(root)
 
       // compaction 2 supersedes gen1 + inc_1 (kept) and expires the
       // cycle-1 leftovers (base, inc_0 deleted)
-      assert(Dedup.compactSignatureAsset(spark, root) == 1)
+      assert(Asset.compact(spark, root) == 1)
       assert(subdirs(root) == Set("base_gen1", "inc_1", "base_gen2"),
         s"got ${subdirs(root)}")
       // the in-flight reader's planned files all still exist
@@ -179,7 +179,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
 
       // a no-op compaction only expires dirs whose retention has passed
       // (gen1/inc_1 were superseded at gen2 = the newest gen: kept)
-      assert(Dedup.compactSignatureAsset(spark, root) == 0)
+      assert(Asset.compact(spark, root) == 0)
       assert(subdirs(root) == Set("base_gen1", "inc_1", "base_gen2"))
     } finally {
       import scala.sys.process._
@@ -205,14 +205,14 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
     try {
       sigs(col("doc_id") % 3 === 0).write.parquet(s"$root/base")
       sigs(col("doc_id") % 3 === 1).write.parquet(s"$root/inc_0")
-      assert(Dedup.compactSignatureAsset(spark, root) == 1) // gen1; base+inc_0 linger
+      assert(Asset.compact(spark, root) == 1) // gen1; base+inc_0 linger
       sigs(col("doc_id") % 3 === 2).repartition(4).write.parquet(s"$root/inc_1")
       val expected = sigRows(root)
 
       // force a multi-partition scan (tiny files otherwise coalesce
       // into one task and the whole read would finish pre-compaction)
       spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
-      val inFlight = Dedup.readSignatureAsset(spark, root)
+      val inFlight = Asset.read(spark, root)
         .select(col("doc_id"), col("nh"))
       assert(inFlight.rdd.getNumPartitions > 1,
         "the scan must span several tasks for a mid-scan pause to mean anything")
@@ -242,7 +242,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       // compaction 2 UNDER the paused reader: supersedes gen1 + inc_1
       // (the dirs being scanned — kept by retention) and expires the
       // cycle-1 leftovers (base, inc_0 — deleted NOW)
-      assert(Dedup.compactSignatureAsset(spark, root) == 1)
+      assert(Asset.compact(spark, root) == 1)
       assert(subdirs(root) == Set("base_gen1", "inc_1", "base_gen2"),
         s"expiry must delete base/inc_0 mid-read, got ${subdirs(root)}")
       compacted.countDown()
@@ -272,20 +272,20 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       }
       // over the (lowered) threshold: read refuses and names the fix
       val e = intercept[IllegalArgumentException] {
-        Dedup.readGroupsAsset(spark, root, maxUpsertDirs = 3)
+        Asset.readUpserts(spark, root, maxUpsertDirs = 3)
       }
       assert(e.getMessage.contains("compactGroupsAsset"))
       assert(e.getMessage.contains("4 un-compacted upsert dirs"))
       // at the threshold: reads fine
-      assert(Dedup.readGroupsAsset(spark, root, maxUpsertDirs = 4)
+      assert(Asset.readUpserts(spark, root, maxUpsertDirs = 4)
         .count() == 6)
       // the fix itself must never be refused by the guard it fixes —
       // compaction reads unguarded, folds all 4, and the default-guard
       // read works again
-      assert(Dedup.compactGroupsAsset(spark, root, keepSuperseded = 0) == 4)
-      assert(Dedup.readGroupsAsset(spark, root).count() == 6)
+      assert(Asset.compactUpserts(spark, root, keepSuperseded = 0) == 4)
+      assert(Asset.readUpserts(spark, root).count() == 6)
       // the shipped default is the documented constant
-      assert(Dedup.DefaultMaxUpsertDirs == 64)
+      assert(Asset.DefaultMaxUpsertDirs == 64)
     } finally {
       import scala.sys.process._
       Seq("rm", "-rf", root).!
@@ -300,7 +300,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
     try {
       sigs(col("doc_id") % 2 === 0).write.parquet(s"$root/base")
       sigs(col("doc_id") % 2 === 1).write.parquet(s"$root/inc_0")
-      assert(Dedup.compactSignatureAsset(spark, root) == 1) // gen1; base+inc_0 linger
+      assert(Asset.compact(spark, root) == 1) // gen1; base+inc_0 linger
       val expected = sigRows(root)
       // a concurrent compaction's cleanup deletes a lingering gen's
       // manifest between the reader's listing and its manifest read —
@@ -308,7 +308,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       sigs(col("doc_id") % 4 === 1).limit(3)
         .withColumn("doc_id", col("doc_id") + 7000000L)
         .write.parquet(s"$root/inc_1")
-      assert(Dedup.compactSignatureAsset(spark, root) == 1) // gen2; gen1+inc_1 linger
+      assert(Asset.compact(spark, root) == 1) // gen2; gen1+inc_1 linger
       java.nio.file.Files.delete(
         java.nio.file.Paths.get(s"$root/base_gen1/_manifest"))
       val got = sigRows(root)
@@ -340,7 +340,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       assert(sigRows(root) == before,
         "an empty _manifest must not count as a complete generation")
       // retry folds over the crashed attempt and publishes atomically
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 0) == 1)
+      assert(Asset.compact(spark, root, keepSuperseded = 0) == 1)
       assert(sigRows(root) == before)
       assert(subdirs(root) == Set("base_gen1"))
     } finally {
@@ -357,7 +357,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
         "doc_id", "text", 8, 4).write.parquet(s"$root/base")
       Dedup.minhashSignatures(docs.filter(col("doc_id") % 2 === 1),
         "doc_id", "text", 8, 4).write.parquet(s"$root/inc_0")
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 0) == 1)
+      assert(Asset.compact(spark, root, keepSuperseded = 0) == 1)
       // a user drops new data NOT via the lifecycle: the old code
       // classified it as a stale seed and the next compaction deleted
       // it unread — now both read and compaction refuse
@@ -365,11 +365,11 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
         .withColumn("doc_id", col("doc_id") + 5000000L)
         .write.parquet(s"$root/base2")
       val e = intercept[IllegalArgumentException] {
-        Dedup.readSignatureAsset(spark, root)
+        Asset.read(spark, root)
       }
       assert(e.getMessage.contains("base2"))
       intercept[IllegalArgumentException] {
-        Dedup.compactSignatureAsset(spark, root)
+        Asset.compact(spark, root)
       }
       assert(new java.io.File(s"$root/base2").exists(),
         "off-lifecycle data must never be deleted")
@@ -382,7 +382,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
   test("unseeded asset fails loud") {
     val root = java.nio.file.Files.createTempDirectory("graft-asset3").toString
     val e = intercept[IllegalArgumentException] {
-      Dedup.readSignatureAsset(spark, root)
+      Asset.read(spark, root)
     }
     assert(e.getMessage.contains("unseeded"))
   }
@@ -415,18 +415,18 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       sigs(col("doc_id") % 4 === 0).write.parquet(s"$root/base")
       sigs(col("doc_id") % 4 === 1).write.parquet(s"$root/inc_0")
       // compaction 1 → gen1; seed cycle lingers (superseded at gen1)
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 2) == 1)
+      assert(Asset.compact(spark, root, keepSuperseded = 2) == 1)
       assert(subdirs(root) == Set("base", "inc_0", "base_gen1"))
 
       // the slow reader plans NOW: file list = gen1 + inc_1
       sigs(col("doc_id") % 4 === 2).write.parquet(s"$root/inc_1")
-      val slowReader = Dedup.readSignatureAsset(spark, root)
+      val slowReader = Asset.read(spark, root)
       val planned = sigRows(root)
 
       // compaction 2 → gen2 (supersedes gen1 + inc_1). With
       // keepSuperseded=2 the seed cycle (superseded at gen1, age 1)
       // must STILL exist — under the default 1 it would expire here.
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 2) == 1)
+      assert(Asset.compact(spark, root, keepSuperseded = 2) == 1)
       assert(subdirs(root) ==
         Set("base", "inc_0", "base_gen1", "inc_1", "base_gen2"),
         s"seed cycle must survive one more cycle under keepSuperseded=2, got ${subdirs(root)}")
@@ -434,7 +434,7 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
       // compaction 3 → gen3 (folds inc_2): the seed cycle is now age 2
       // and expires; the reader's cycle (gen1 + inc_1, age 1) remains
       sigs(col("doc_id") % 4 === 3).write.parquet(s"$root/inc_2")
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 2) == 1)
+      assert(Asset.compact(spark, root, keepSuperseded = 2) == 1)
       assert(subdirs(root) ==
         Set("base_gen1", "inc_1", "base_gen2", "inc_2", "base_gen3"),
         s"got ${subdirs(root)}")
@@ -457,18 +457,18 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
     val gk = Dedup.hammingGuardKeys("sig")
     val root = java.nio.file.Files.createTempDirectory("graft-hist").toString
     def hist(excl: Option[String] = None): Option[Map[Long, Long]] =
-      Dedup.readSignatureHistogram(spark, root, gk, excl)
+      Asset.readSidecar(spark, root, Asset.pairHistogram(gk), excl)
         .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     try {
       // seed: sig 100 ×3 (a heap), sig 200 ×1 (a singleton)
       Seq((1L, 100L), (2L, 100L), (3L, 100L), (4L, 200L))
         .toDF("doc_id", "sig").write.parquet(s"$root/base")
       assert(hist().isEmpty, "unstamped seed must report no sidecar")
-      Dedup.writeSignatureHistogram(spark, s"$root/base", gk)
+      Asset.writeSidecar(spark, s"$root/base", Asset.pairHistogram(gk))
       // c >= 2 keys only; the singleton is the guards' +1 floor's job
       assert(hist() == Some(Map(100L -> 3L)))
       // the sidecar is invisible to the asset's own parquet scan
-      assert(Dedup.readSignatureAsset(spark, root).count() == 4)
+      assert(Asset.read(spark, root).count() == 4)
 
       // live incs merge at read time; excludeInc drops a batch's own dir
       Seq((10L, 100L), (11L, 300L), (12L, 300L))
@@ -478,49 +478,19 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
 
       // compaction with guardKeys persists the merged counts in the new
       // generation's own sidecar (reader now serves it with no inc scan)
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 0,
-        guardKeys = Some(gk)) == 1)
+      assert(Asset.compact(spark, root, keepSuperseded = 0,
+        sidecar = Some(Asset.pairHistogram(gk))) == 1)
       assert(hist() == Some(Map(100L -> 4L, 300L -> 2L)))
-      assert(Dedup.readSignatureAsset(spark, root).count() == 7)
+      assert(Asset.read(spark, root).count() == 7)
 
       // a later compaction WITHOUT guardKeys produces a generation with
       // no sidecar — the reader reports None (guards fall back loudly
       // to the full aggregate, never serve a stale histogram)
       Seq((20L, 300L)).toDF("doc_id", "sig").write.parquet(s"$root/inc_1")
       assert(hist() == Some(Map(100L -> 4L, 300L -> 3L)))
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 0) == 1)
+      assert(Asset.compact(spark, root, keepSuperseded = 0) == 1)
       assert(hist().isEmpty,
         "a generation compacted without guardKeys must not inherit a sidecar")
-    } finally {
-      import scala.sys.process._
-      Seq("rm", "-rf", root).!
-    }
-  }
-
-  test("pair-budget histogram sidecar: conf off forces the exact-fallback path; bad values rejected") {
-    import spark.implicits._
-    val gk = Dedup.hammingGuardKeys("sig")
-    val root = java.nio.file.Files.createTempDirectory("graft-histoff").toString
-    try {
-      Seq((1L, 100L), (2L, 100L)).toDF("doc_id", "sig")
-        .write.parquet(s"$root/base")
-      Dedup.writeSignatureHistogram(spark, s"$root/base", gk)
-      assert(Dedup.readSignatureHistogram(spark, root, gk).isDefined)
-      // off: a present, healthy sidecar must still read as None — the
-      // guards take the exact full-aggregate fallback (the operational
-      // escape hatch, and the bench A/B leg that isolates the
-      // sidecar's wall-clock contribution)
-      spark.conf.set(Dedup.PairHistConfKey, "off")
-      try assert(Dedup.readSignatureHistogram(spark, root, gk).isEmpty,
-        "pairhist=off must force the exact-fallback path")
-      finally spark.conf.unset(Dedup.PairHistConfKey)
-      assert(Dedup.readSignatureHistogram(spark, root, gk).isDefined)
-      spark.conf.set(Dedup.PairHistConfKey, "bogus")
-      try {
-        val e = intercept[IllegalArgumentException](
-          Dedup.readSignatureHistogram(spark, root, gk))
-        assert(e.getMessage.contains(Dedup.PairHistConfKey))
-      } finally spark.conf.unset(Dedup.PairHistConfKey)
     } finally {
       import scala.sys.process._
       Seq("rm", "-rf", root).!
@@ -541,17 +511,17 @@ class AssetLifecycleSpec extends AnyFunSuite with SparkSpec {
         .write.parquet(s"$root/seed_a")
       Seq((4L, 100L), (5L, 400L)).toDF("doc_id", "sig")
         .write.parquet(s"$root/seed_b")
-      Dedup.writeSignatureHistogram(spark, s"$root/seed_a", gk)
-      Dedup.writeSignatureHistogram(spark, s"$root/seed_b", gk)
-      assert(Dedup.readSignatureHistogram(spark, root, gk).isEmpty,
+      Asset.writeSidecar(spark, s"$root/seed_a", Asset.pairHistogram(gk))
+      Asset.writeSidecar(spark, s"$root/seed_b", Asset.pairHistogram(gk))
+      assert(Asset.readSidecar(spark, root, Asset.pairHistogram(gk)).isEmpty,
         "multi-dir seeds must fall back to the exact full aggregate")
       // first compaction (folding an inc) merges the seeds into ONE
       // generation whose sidecar sees the cross-dir heap whole — fast
       // path restored
       Seq((6L, 400L)).toDF("doc_id", "sig").write.parquet(s"$root/inc_0")
-      assert(Dedup.compactSignatureAsset(spark, root, keepSuperseded = 0,
-        guardKeys = Some(gk)) == 1)
-      val hist = Dedup.readSignatureHistogram(spark, root, gk)
+      assert(Asset.compact(spark, root, keepSuperseded = 0,
+        sidecar = Some(Asset.pairHistogram(gk))) == 1)
+      val hist = Asset.readSidecar(spark, root, Asset.pairHistogram(gk))
         .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(hist == Some(Map(100L -> 2L, 300L -> 2L, 400L -> 2L)))
     } finally {

@@ -103,20 +103,22 @@ class BarrierSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("lazily: one full-scan action fills the barrier; later actions skip the source") {
+  test("filled: one full-scan action fills the barrier; later actions skip the source") {
     // the source counts the rows it computes; the filling action is the
     // Lloyd engine's (a filtered collect), the later one its round shape
     // (a raw-RDD pass over the frame)
     val n = 200L
     for (m <- Barrier.Modes.toSeq.sorted) withMode(m) {
-      val computed = spark.sparkContext.longAccumulator(s"lazily-$m")
+      val computed = spark.sparkContext.longAccumulator(s"filled-$m")
       val touch = udf((x: Long) => { computed.add(1); x }).asNondeterministic()
       def src = spark.range(0, n, 1, 4).select(touch(col("id")).as("id"))
-      val b = Barrier.lazily(src)
-      // only checkpoint fills eagerly: a lazy reliable checkpoint would
-      // compute the frame twice
-      assert(computed.value == (if (m == "checkpoint") n else 0L), s"$m: after lazily")
-      val (seeds, jobs) = graft.JobCount(spark)(b.filter(col("id") < 5).collect())
+      val (b, (seeds, jobs)) = Barrier.filled(src) { b =>
+        // only checkpoint fills eagerly: a lazy reliable checkpoint
+        // would compute the frame twice
+        assert(computed.value == (if (m == "checkpoint") n else 0L),
+          s"$m: before the filling action")
+        graft.JobCount(spark)(b.filter(col("id") < 5).collect())
+      }
       assert(seeds.length == 5 && jobs == 1, s"$m: filling action ran $jobs jobs")
       assert(computed.value == n, s"$m: the filling action computed ${computed.value} rows")
       assert(b.queryExecution.toRdd.count() == n)

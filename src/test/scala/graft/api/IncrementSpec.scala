@@ -39,11 +39,11 @@ class IncrementSpec extends AnyFunSuite with SparkSpec {
   /** What a run leaves, as sorted rows (a duplicated row shows): the
     * resolved signature asset, the resolved groups asset and the pairs. */
   private def state(root: String, pairsOut: String) = (
-    Dedup.readSignatureAsset(spark, s"$root/sigs")
+    Asset.read(spark, s"$root/sigs")
       .select(col("doc_id"), col("nh"), col("bkeys")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Any](2).mkString(",")))
       .toSeq.sorted,
-    Dedup.readGroupsAsset(spark, s"$root/groups").collect()
+    Asset.readUpserts(spark, s"$root/groups").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted,
     spark.read.parquet(pairsOut).select("doc_a", "doc_b", "jac").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted)
@@ -110,7 +110,7 @@ class IncrementSpec extends AnyFunSuite with SparkSpec {
           .filter(col("doc_id") >= 1000000L).isEmpty)
       // a fresh tag lands the day
       step(root, s"$root/pairs2", day2, "inc_1")
-      assert(Dedup.readSignatureAsset(spark, s"$root/sigs")
+      assert(Asset.read(spark, s"$root/sigs")
         .filter(col("doc_id") >= 1000000L).count() == day2.count())
     } finally rm(root)
   }

@@ -74,15 +74,15 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
       val inc = docs.filter(col("doc_id") % 10 === 0)
       val sigs = s"$root/sigs"
       Dedup.minhashSignatures(corpus, "doc_id", "text", 8, 4).write.parquet(s"$sigs/base")
-      Dedup.writeSignatureHistogram(spark, s"$sigs/base", Dedup.jaccardGuardKeys)
+      Asset.writeSidecar(spark, s"$sigs/base", Asset.pairHistogram(Dedup.jaccardGuardKeys))
       Dedup.minhashSignatures(inc, "doc_id", "text", 8, 4).write.parquet(s"$sigs/inc_1")
       Dedup.jaccardPairs(corpus, "doc_id", "text", 8, 4, 0.8).write.parquet(s"$root/pairs/base")
       val dayPairs = spark.read.parquet(s"$root/pairs/base")
       Dedup.duplicateGroups(dayPairs, "doc_a", "doc_b").write.parquet(s"$root/groups/base")
       def incPairs() = Dedup.incrementalJaccardPairs(
-        Dedup.readSignatureAsset(spark, sigs, excludeInc = Some("inc_1")),
+        Asset.read(spark, sigs, excludeInc = Some("inc_1")),
         spark.read.parquet(s"$sigs/inc_1"), 0.8,
-        Dedup.readSignatureHistogram(spark, sigs, Dedup.jaccardGuardKeys,
+        Asset.readSidecar(spark, sigs, Asset.pairHistogram(Dedup.jaccardGuardKeys),
           excludeInc = Some("inc_1")))
       incPairs().write.parquet(s"$root/pairs/inc_1")
       val pairs = spark.read.parquet(s"$root/pairs/inc_1")
@@ -93,7 +93,7 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
           () => Dedup.duplicateGroups(dayPairs, "doc_a", "doc_b")),
         ("incrementalJaccardPairs (_pairhist)", 8, () => incPairs()),
         ("incrementalGroups", 15,
-          () => Dedup.incrementalGroups(Dedup.readGroupsAsset(spark, s"$root/groups"),
+          () => Dedup.incrementalGroups(Asset.readUpserts(spark, s"$root/groups"),
             pairs, "doc_a", "doc_b")),
         ("duplicateGroups (star rounds)", 185,
           () => starRounds(Dedup.duplicateGroups(chain, "x", "y")))))

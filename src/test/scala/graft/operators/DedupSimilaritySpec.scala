@@ -913,7 +913,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       "vec_id", "embedding", 2, 4)
     val incE = D.lshSignatureTable(
       Seq((0L, vec)).toDF("vec_id", "embedding"), "vec_id", "embedding", 2, 4)
-    // sidecars, built exactly as writeSignatureHistogram persists them
+    // sidecars, built exactly as Asset.pairHistogram persists them
     def histOf(sigs: org.apache.spark.sql.DataFrame,
         gk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
       Some(gk(sigs).groupBy("k").agg(count(lit(1)).as("cc"))

@@ -161,14 +161,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       // (keepSuperseded = 0: this test pins the immediate-cleanup layout;
       // the family deriver makes the generation carry its guard sidecar,
       // so run 2's per-batch precheck below runs the Θ(increment) path)
-      assert(graft.api.Dedup.compactSignatureAsset(spark, sigDir,
-        keepSuperseded = 0,
-        guardKeys = Some(graft.api.Dedup.jaccardGuardKeys)) == 1)
+      val guardSidecar = graft.api.Asset.pairHistogram(graft.api.Dedup.jaccardGuardKeys)
+      assert(graft.api.Asset.compact(spark, sigDir,
+        keepSuperseded = 0, sidecar = Some(guardSidecar)) == 1)
       assert(!new java.io.File(s"$sigDir/inc_0").exists())
       assert(new java.io.File(s"$sigDir/base_gen1/_manifest").exists())
       assert(new java.io.File(s"$sigDir/base_gen1/_pairhist").exists())
-      assert(graft.api.Dedup.readSignatureHistogram(spark, sigDir,
-        graft.api.Dedup.jaccardGuardKeys).isDefined)
+      assert(graft.api.Asset.readSidecar(spark, sigDir, guardSidecar).isDefined)
       // run 2: second half, SAME checkpoint — batchIds continue
       land(col("doc_id") % 20 =!= 0, "inc1.parquet")
       val q2 = StreamingOps.incrementalPairStream(
@@ -222,7 +221,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       // DEFAULT retention: the folded seed and inc_0 LINGER after the
       // fold — run 2 must skip them via the manifest, not re-pair
       // against the increment's own folded signatures
-      assert(graft.api.Dedup.compactSignatureAsset(spark, sigDir) == 1)
+      assert(graft.api.Asset.compact(spark, sigDir) == 1)
       val names = new java.io.File(sigDir).listFiles()
         .filter(_.isDirectory).map(_.getName).toSet
       assert(names == Set("base", "inc_0", "base_gen1"), s"got $names")
@@ -280,7 +279,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(q.awaitTermination(180000), "AvailableNow query did not stop")
       assert(new java.io.File(s"$work/groups").list()
         .count(_.startsWith("inc_")) == 2, "one upsert dir per batch")
-      def resolved() = graft.api.Dedup.readGroupsAsset(spark, s"$work/groups")
+      def resolved() = graft.api.Asset.readUpserts(spark, s"$work/groups")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val got = resolved()
       // the strong pin: resolved streaming state ≡ one batch dd6 over
@@ -294,9 +293,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(got.exists { case (id, _) => id % 10 == 0 },
         "increment docs must appear in the resolved asset")
       // compaction folds the upserts without changing the resolved view
-      assert(graft.api.Dedup.compactGroupsAsset(spark, s"$work/groups") == 2)
+      assert(graft.api.Asset.compactUpserts(spark, s"$work/groups") == 2)
       assert(resolved() == expected, "compaction changed the resolved groups")
-      assert(graft.api.Dedup.compactGroupsAsset(spark, s"$work/groups") == 0)
+      assert(graft.api.Asset.compactUpserts(spark, s"$work/groups") == 0)
     } finally {
       import scala.sys.process._
       Seq("rm", "-rf", work.toString, landing.toString).!
@@ -343,7 +342,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
           graft.api.Dedup.minhashSignatures(inc, "doc_id", "text", 8, 4), 0.8)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == expectedPairs && got.nonEmpty)
-      val resolved = graft.api.Dedup.readGroupsAsset(spark, s"$work/groups")
+      val resolved = graft.api.Asset.readUpserts(spark, s"$work/groups")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val expectedGroups = graft.api.Dedup.duplicateGroups(
           graft.api.Dedup.jaccardPairs(docs, "doc_id", "text", 8, 4, 0.8),
@@ -351,7 +350,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(resolved == expectedGroups && resolved.nonEmpty)
       // the signature asset still reads whole after the fold
-      assert(graft.api.Dedup.readSignatureAsset(spark, s"$work/sigs").count() ==
+      assert(graft.api.Asset.read(spark, s"$work/sigs").count() ==
         graft.api.Dedup.minhashSignatures(docs, "doc_id", "text", 8, 4).count())
     } finally {
       import scala.sys.process._
@@ -512,7 +511,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       def key(df: org.apache.spark.sql.DataFrame) = df
         .select("vec_id", "nrm", "codes").collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Int](2).toList)).toSet
-      val streamed = key(graft.api.Dedup.readSignatureAsset(spark, s"$work/index"))
+      val streamed = key(graft.api.Asset.read(spark, s"$work/index"))
       val batch = key(graft.api.Similarity.pqEncodeIndex(
         emb, books, "vec_id", "embedding"))
       assert(streamed == batch)
@@ -520,7 +519,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       // and the asset answers queries: identical to the all-in-memory path
       val queries = emb.filter(col("vec_id") < 10)
       val fromAsset = graft.api.Similarity.pqTopKFromIndex(
-        graft.api.Dedup.readSignatureAsset(spark, s"$work/index"),
+        graft.api.Asset.read(spark, s"$work/index"),
         emb, queries, spark.read.parquet(s"$work/books"),
         "vec_id", "embedding", 5, 50).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
@@ -592,7 +591,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       // symmetric generator: a self-join cannot expand probe masks)
       // UNION the radius-2 incremental pairs (the query-shaped
       // increment side CAN — the r18 asymmetric ladder)
-      val gotGroups = graft.api.Dedup.readGroupsAsset(spark, s"$work/groups")
+      val gotGroups = graft.api.Asset.readUpserts(spark, s"$work/groups")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val expectedGroups = graft.api.Dedup.duplicateGroups(
           graft.api.Dedup.embeddingPairs(corpus, "vec_id", "embedding",
@@ -865,7 +864,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val pack = s"$work/pack"
     try {
       E.seedPackAsset(corpus, "doc_id", "n_tokens", pack, 7L, 128L)
-      val baseTotal = E.readPackTotal(spark, pack)
+      val baseTotal = E.readPackTotal(spark, pack, "n_tokens")
       assert(baseTotal == corpus.agg(sum("n_tokens")).head.getLong(0))
       // two landing files → two AvailableNow micro-batches
       Seq(col("doc_id") % 20 === 0, col("doc_id") % 20 =!= 0).zipWithIndex.foreach {
@@ -904,19 +903,96 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(key(b0) == key(exp0))
       assert(key(b1) == key(exp1))
       // the sidecar advanced to the full corpus+increment token total
-      assert(E.readPackTotal(spark, pack) ==
-        docs.agg(sum("n_tokens")).head.getLong(0))
-      // quiesce maintenance: fold the packed dirs, collapse the sidecar
-      val before = key(graft.api.Dedup.readSignatureAsset(spark, pack))
-      assert(graft.api.Dedup.compactSignatureAsset(spark, pack) == 2)
-      E.collapsePackTotals(spark, pack)
+      val total = E.readPackTotal(spark, pack, "n_tokens")
+      assert(total == docs.agg(sum("n_tokens")).head.getLong(0))
+      // quiesce maintenance: fold the packed dirs with the total sidecar
+      val before = key(graft.api.Asset.read(spark, pack))
+      assert(graft.api.Asset.compact(spark, pack,
+        sidecar = Some(E.packTotal("n_tokens"))) == 2)
       assert(new java.io.File(pack).listFiles()
         .exists(_.getName == "base_gen1"))
-      assert(new java.io.File(s"$pack/_totals").listFiles()
-        .filter(_.isDirectory).map(_.getName).toSet == Set("fold"))
-      assert(key(graft.api.Dedup.readSignatureAsset(spark, pack)) == before)
-      assert(E.readPackTotal(spark, pack) ==
+      // the folded generation carries the same total
+      assert(E.readPackTotal(spark, pack, "n_tokens") == total)
+      assert(key(graft.api.Asset.read(spark, pack)) == before)
+      assert(E.readPackTotal(spark, pack, "n_tokens") ==
         docs.agg(sum("n_tokens")).head.getLong(0))
+    } finally {
+      import scala.sys.process._
+      Seq("rm", "-rf", work.toString, landing.toString).!
+    }
+  }
+
+  test("pack asset replay: a re-run batch reads its predecessor's total; compaction serves the total from the generation sidecar; an unstamped seed fails loud") {
+    import java.nio.file.Files
+    val E = graft.api.Export
+    val docs = Tables.documents(spark, sf0001).select(col("doc_id"),
+      graft.functions.TextFunctions.tokenCount(col("text")).cast("long")
+        .as("n_tokens"))
+    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+    val inc = docs.filter(col("doc_id") % 10 === 0)
+    val work = Files.createTempDirectory("graft-packreplay")
+    val landing = Files.createTempDirectory("graft-packreplay-landing")
+    val pack = s"$work/pack"
+    val ckpt = s"$work/ckpt"
+    def tokens(df: org.apache.spark.sql.DataFrame) =
+      df.agg(sum("n_tokens")).head.getLong(0)
+    def key(df: org.apache.spark.sql.DataFrame) = df
+      .select("doc_id", "cum_before", "seq_id", "seq_off").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet
+    def run() = {
+      val q = StreamingOps.packIncrementStream(
+        spark.readStream.schema(inc.schema)
+          .option("maxFilesPerTrigger", "1").parquet(landing.toString),
+        "doc_id", "n_tokens", pack, ckpt, 7L, 128L)
+      assert(q.awaitTermination(180000), "AvailableNow query did not stop")
+    }
+    try {
+      E.seedPackAsset(corpus, "doc_id", "n_tokens", pack, 7L, 128L)
+      Seq(col("doc_id") % 20 === 0, col("doc_id") % 20 =!= 0).zipWithIndex.foreach {
+        case (pred, i) =>
+          val tmp = work.resolve(s"half$i")
+          inc.filter(pred).coalesce(1).write.parquet(tmp.toString)
+          val part = Files.list(tmp)
+            .filter(_.getFileName.toString.endsWith(".parquet"))
+            .findFirst().get
+          Files.copy(part, landing.resolve(s"inc$i.parquet"))
+      }
+      run()
+      val total = E.readPackTotal(spark, pack, "n_tokens")
+      assert(total == tokens(docs))
+      val b1 = key(spark.read.parquet(s"$pack/inc_1"))
+      val predecessor = total - tokens(spark.read.parquet(s"$pack/inc_1"))
+      assert(E.readPackTotal(spark, pack, "n_tokens", Some("inc_1")) == predecessor)
+      // replay batch 1 after its inc dir landed: drop its commit record,
+      // so the restart re-runs it with the same batch id
+      assert(new java.io.File(s"$ckpt/commits/1").delete())
+      new java.io.File(s"$ckpt/commits/.1.crc").delete()
+      run()
+      assert(new java.io.File(s"$ckpt/commits/1").exists(), "batch 1 did not re-run")
+      // it continued from its predecessor's total, not from its own
+      // first attempt's: the same layout, and the total did not move
+      assert(key(spark.read.parquet(s"$pack/inc_1")) == b1)
+      assert(b1.map(_._2).min == predecessor)
+      assert(E.readPackTotal(spark, pack, "n_tokens") == total)
+
+      // compaction stores the total in the new generation's sidecar and
+      // (keepSuperseded = 0) deletes the folded incs: none is live
+      assert(graft.api.Asset.compact(spark, pack, keepSuperseded = 0,
+        sidecar = Some(E.packTotal("n_tokens"))) == 2)
+      assert(new java.io.File(pack).listFiles().map(_.getName)
+        .filter(n => n.startsWith("inc_") || n == "base").isEmpty)
+      assert(new java.io.File(s"$pack/base_gen1/_packtotal").isDirectory)
+      assert(E.readPackTotal(spark, pack, "n_tokens") == total)
+
+      // packed rows seeded without the total: the read names the fix
+      // instead of reading 0
+      val bare = s"$work/bare"
+      graft.api.Asset.seed(spark, bare,
+        E.packSequences(corpus, "doc_id", "n_tokens", 7L, 128L))
+      val e = intercept[IllegalArgumentException](
+        E.readPackTotal(spark, bare, "n_tokens"))
+      assert(e.getMessage.contains("seedPackAsset"), e.getMessage)
     } finally {
       import scala.sys.process._
       Seq("rm", "-rf", work.toString, landing.toString).!

@@ -171,14 +171,45 @@ object Asset {
     * when the asset is unseeded, and when `excludeInc` names a tag a
     * compaction already folded. */
   def read(spark: SparkSession, dir: String,
-      excludeInc: Option[String] = None): DataFrame = {
-    val (fs, root) = assetFs(spark, dir)
-    val scan = scanAsset(fs, root)
-    val parts = (scan.gen ++ scan.liveExcept(excludeInc, dir)).map(_.toString)
-    require(parts.nonEmpty,
-      s"asset at $dir is unseeded — seed it first (Asset.seed, e.g. " +
-        "minhashSignatures / lshSignatureTable output)")
-    spark.read.parquet(parts: _*)
+      excludeInc: Option[String] = None): DataFrame =
+    list(spark, dir).read(excludeInc)
+
+  /** One listing of the asset at `dir` — one `listStatus` of the root
+    * and one `_manifest` read per generation — that [[read]] and
+    * [[readSidecar]] both read from, so a caller that needs an asset's
+    * rows and its sidecar ([[Increment.step]]) lists the asset once. */
+  def list(spark: SparkSession, dir: String): Listing = new Listing(spark, dir)
+
+  final class Listing private[Asset] (spark: SparkSession, dir: String) {
+    private val (fs, root) = assetFs(spark, dir)
+    private val scan = scanAsset(fs, root)
+
+    /** [[Asset.read]] of this listing. */
+    def read(excludeInc: Option[String] = None): DataFrame = {
+      val parts = (scan.gen ++ scan.liveExcept(excludeInc, dir)).map(_.toString)
+      require(parts.nonEmpty,
+        s"asset at $dir is unseeded — seed it first (Asset.seed, e.g. " +
+          "minhashSignatures / lshSignatureTable output)")
+      spark.read.parquet(parts: _*)
+    }
+
+    /** [[Asset.readSidecar]] of this listing. */
+    def readSidecar(sidecar: Sidecar,
+        excludeInc: Option[String] = None): Option[DataFrame] = {
+      val stored = scan.gen.map(new Path(_, "_" + sidecar.name))
+      if (stored.size != 1 || !fs.exists(stored.head)) return None
+      // read the stored part files: Spark treats the `_`-prefixed dir
+      // itself as a hidden path and logs that it ignored it
+      val parts = fs.listStatus(stored.head).map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      val genPart = spark.read.parquet(
+        (if (parts.nonEmpty) parts.toSeq else stored).map(_.toString): _*)
+      val incs = scan.liveExcept(excludeInc, dir)
+      Some(
+        if (incs.isEmpty) genPart
+        else sidecar.merge(genPart.union(
+          sidecar.summarize(spark.read.parquet(incs.map(_.toString): _*)))))
+    }
   }
 
   /** Read the (doc_id, group_id) UPSERT asset at `dir` (the groups
@@ -410,21 +441,6 @@ object Asset {
     * can recover it. A compacted generation is always one dir, so the
     * first compaction restores the sidecar. */
   def readSidecar(spark: SparkSession, dir: String, sidecar: Sidecar,
-      excludeInc: Option[String] = None): Option[DataFrame] = {
-    val (fs, root) = assetFs(spark, dir)
-    val scan = scanAsset(fs, root)
-    val stored = scan.gen.map(new Path(_, "_" + sidecar.name))
-    if (stored.size != 1 || !fs.exists(stored.head)) return None
-    // read the stored part files: Spark treats the `_`-prefixed dir
-    // itself as a hidden path and logs that it ignored it
-    val parts = fs.listStatus(stored.head).map(_.getPath)
-      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-    val genPart = spark.read.parquet(
-      (if (parts.nonEmpty) parts.toSeq else stored).map(_.toString): _*)
-    val incs = scan.liveExcept(excludeInc, dir)
-    Some(
-      if (incs.isEmpty) genPart
-      else sidecar.merge(genPart.union(
-        sidecar.summarize(spark.read.parquet(incs.map(_.toString): _*)))))
-  }
+      excludeInc: Option[String] = None): Option[DataFrame] =
+    list(spark, dir).readSidecar(sidecar, excludeInc)
 }

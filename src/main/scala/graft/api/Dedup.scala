@@ -1,8 +1,9 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType,
+  StructField, StructType}
 import graft.functions.{HashFunctions, MinHashConstants, VectorFunctions}
 
 /** Library-facing deduplication operators: DataFrame in, DataFrame out,
@@ -1187,20 +1188,30 @@ object Dedup extends org.apache.spark.internal.Logging {
 
   private val LongPairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
+  /** The distinct values of `xs(0 until n)`, sorted. */
+  private def sortedDistinct(xs: Array[Long], n: Int): Array[Long] = {
+    val s = java.util.Arrays.copyOf(xs, n)
+    java.util.Arrays.sort(s)
+    var k = 0
+    for (i <- 0 until n if k == 0 || s(i) != s(k - 1)) { s(k) = s(i); k += 1 }
+    java.util.Arrays.copyOf(s, k)
+  }
+
   /** Round cap of [[starComponents]]: the rounds grow with the log of
     * the residue size (an 8 801-edge residue of a 10⁴-hop chain
     * converges in 15), so the cap only turns a residue that does not
     * converge into a loud failure. */
   private val MaxStarRounds = 100
 
-  /** Union-find over one partition's edges: (node, local root) for each
-    * distinct node of the partition, the root being the minimum id of
-    * the node's local component. Primitive arrays only — the endpoints
-    * as read (16 B an edge), their sorted distinct ids (16 B an edge
-    * before de-duplication) and an int parent array (4 B a node). Ids
-    * map to indexes by binary search, so a smaller index is a smaller
-    * id, and linking every union under its smaller root roots each set
-    * at its minimum. */
+  /** Union-find over one partition's edges (or, in
+    * [[incrementalGroups]], the driver's contracted label edges):
+    * (node, local root) for each distinct node of the edges, the root
+    * being the minimum id of the node's local component. Primitive
+    * arrays only — the endpoints as read (16 B an edge), their sorted
+    * distinct ids (16 B an edge before de-duplication) and an int
+    * parent array (4 B a node). Ids map to indexes by binary search,
+    * so a smaller index is a smaller id, and linking every union under
+    * its smaller root roots each set at its minimum. */
   private def localRoots(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
     var ends = new Array[Long](256)
     var n = 0
@@ -1208,17 +1219,15 @@ object Dedup extends org.apache.spark.internal.Logging {
       if (n == ends.length) ends = java.util.Arrays.copyOf(ends, 2 * n)
       ends(n) = a; ends(n + 1) = b; n += 2
     }
-    val ids = java.util.Arrays.copyOf(ends, n)
-    java.util.Arrays.sort(ids)
-    var k = 0
-    for (i <- 0 until n if k == 0 || ids(i) != ids(k - 1)) { ids(k) = ids(i); k += 1 }
+    val ids = sortedDistinct(ends, n)
+    val k = ids.length
     val parent = Array.range(0, k)
     def find(x0: Int): Int = {
       var x = x0
       while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
-    def root(id: Long): Int = find(java.util.Arrays.binarySearch(ids, 0, k, id))
+    def root(id: Long): Int = find(java.util.Arrays.binarySearch(ids, id))
     for (i <- 0 until n by 2) {
       val ra = root(ends(i))
       val rb = root(ends(i + 1))
@@ -1405,67 +1414,100 @@ object Dedup extends org.apache.spark.internal.Logging {
     * increment doc bridged two groups, or carries a smaller id than
     * the old minimum). Untouched groups are not emitted: their rows in
     * the asset are still current, so the caller upserts this output
-    * over the asset to produce the next generation.
+    * over the asset to produce the next generation. A pair with a null
+    * endpoint links nothing, and neither does a self-pair: an increment
+    * doc paired only with itself is a trivial group, not emitted like
+    * every unpaired doc. Ids must be integral; the output columns keep
+    * the type the asset's and the pairs' ids widen to.
     *
-    * Equivalence (property-pinned in DedupSimilaritySpec): the output
-    * is EXACTLY `duplicateGroups(corpusPairs ∪ incPairs)` restricted
-    * to components containing an increment doc — group ids are the
-    * component-min doc ids of the merged graph.
+    * Equivalence (property-pinned in DedupSimilaritySpec and ApiSpec):
+    * the output is EXACTLY
+    * `duplicateGroups(corpusPairs ∪ incPairs)` restricted to components
+    * containing an increment doc — group ids are the component-min doc
+    * ids of the merged graph.
+    *
+    * Algorithm — the increment-sized part runs on the driver:
+    *  1. `incPairs` is collected as packed primitive longs (one job);
+    *  2. the asset is scanned once against a broadcast of the pairs'
+    *     distinct endpoints, and the matched (doc_id, group_id) rows —
+    *     at most one per endpoint — are collected;
+    *  3. an endpoint's label is its group id, or its own id when the
+    *     asset does not hold it (a new doc, or a corpus doc paired for
+    *     the first time); the pairs contract to label edges, self-edges
+    *     drop, and [[localRoots]] gives each touched label its new
+    *     group, the minimum label of its component (an old label is
+    *     already its group's minimum doc id);
+    *  4. the returned frame is lazy: the asset joined to a broadcast of
+    *     the touched (group, new group) rows, plus the rows of the
+    *     touched endpoints the asset does not hold.
     *
     * Scale shape: the corpus asset (the 100 TB table) is STREAMED
-    * twice and never shuffled — once against a broadcast of the
-    * increment's pair endpoints (label lookup), once against a
-    * broadcast of the touched group ids (member expansion).
-    * [[duplicateGroups]] runs over the CONTRACTED label graph — one
-    * node per touched group or new doc, O(|incPairs|) edges — never
-    * the full corpus, so a bridge merging two billion-doc groups costs
-    * components over 2 labels, not 2×10⁹ rows. Preconditions: increment ids are disjoint from corpus ids
-    * (an increment is new by definition) and each incPair touches the
-    * increment; a corpus-corpus pair inside ONE existing group is
-    * tolerated (its contracted edge self-collapses — the group is
-    * simply not touched). */
+    * twice and never shuffled — the scan of step 2 and the caller's
+    * scan of the output — so a bridge merging two billion-doc groups
+    * costs union-find over 2 labels, not 2×10⁹ rows. The driver holds
+    * O(|incPairs|) primitives — 16 B a pair, and an endpoint's id,
+    * label and asset row (~33 B) — bounded upstream by the pair budget
+    * (`spark.graft.dedup.pairbudget.max`, 10⁸ pairs). Preconditions:
+    * increment ids are disjoint from corpus ids (an increment is new
+    * by definition) and each incPair touches the increment; a
+    * corpus-corpus pair inside ONE existing group is tolerated (its
+    * contracted edge self-collapses — the group is simply not
+    * touched). */
   def incrementalGroups(asset: DataFrame, incPairs: DataFrame,
       aCol: String, bCol: String): DataFrame = {
-    // endpoints of the increment's pairs: O(|incPairs|), broadcastable
-    val endpoints = Barrier(incPairs.select(col(aCol).as("doc_id"))
-      .union(incPairs.select(col(bCol).as("doc_id"))).distinct())
-    // label = the endpoint's existing group id when it is in the asset,
-    // else its own id (new doc, or an existing doc paired for the first
-    // time). The asset streams against the broadcast endpoint set.
-    val matched = Barrier(asset.join(broadcast(endpoints), "doc_id")
-      .select(col("doc_id"), col("group_id").as("lbl")))
-    val unmatched = Barrier(endpoints
-      .join(matched.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("lbl")))
-    // r20: no barrier on the union — both inputs are already
-    // materialized, so re-reading them per consumer is a checkpoint
-    // block read, not a recompute; the dropped barrier was one full
-    // materialization job of rows that exist twice already
-    val labeled = matched.union(unmatched)
-    // contract each pair to a (label, label) edge; self-edges collapse
-    val la = labeled.select(col("doc_id").as("da"), col("lbl").as("la"))
-    val lb = labeled.select(col("doc_id").as("db"), col("lbl").as("lb"))
-    val contracted = incPairs
-      .select(col(aCol).as("da"), col(bCol).as("db"))
-      .join(la, "da").join(lb, "db")
-      .select(col("la"), col("lb"))
-      .filter(col("la") =!= col("lb"))
-    // components over touched labels only; group = min label = min doc id
-    // of the merged component (each old label is already its group min)
-    val newGroup = duplicateGroups(contracted, "la", "lb")
-      .select(col("doc_id").as("lbl"), col("group_id").as("new_group"))
-    // member expansion: all asset rows of touched groups (one more
-    // streamed asset scan against the broadcast touched-group set),
-    // plus the endpoints that were not in the asset
-    val touched = matched.select(col("lbl").as("tg")).distinct()
-    val assetMembers = asset.join(broadcast(touched), col("group_id") === col("tg"))
-      .select(col("doc_id"), col("group_id").as("lbl"))
-    // inner join: a label with no surviving contracted edge (tolerated
-    // same-group corpus pair) has no new group — correctly not emitted
-    assetMembers.union(unmatched)
-      .join(broadcast(newGroup), "lbl")
+    val spark = asset.sparkSession
+    def widened(c: String) = asset.select(c).union(incPairs.select(aCol))
+      .union(incPairs.select(bCol)).schema(0).dataType
+    val (docType, groupType) = (widened("doc_id"), widened("group_id"))
+    require(IntegralIds(docType) && IntegralIds(groupType),
+      s"incrementalGroups needs integral ids, got $docType / $groupType")
+    // 1. pair i is (pairs(2i), pairs(2i + 1))
+    val pairs = collectPairs(incPairs
+      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
+      .select(col(aCol).cast("long"), col(bCol).cast("long")))
+    val ids = sortedDistinct(pairs, pairs.length)
+    def at(id: Long) = java.util.Arrays.binarySearch(ids, id)
+    // 2. (doc_id, group_id) of the endpoints the asset holds
+    val matched = if (ids.isEmpty) ids else collectPairs(asset
+      .join(broadcast(packedFrame(spark, ids, "e")), col("doc_id") === col("e"))
+      .select(col("doc_id").cast("long"), col("group_id").cast("long")))
+    // 3. label each endpoint, contract, and union-find the labels
+    val label = ids.clone()
+    val inAsset = new Array[Boolean](ids.length)
+    for (i <- matched.indices by 2; j = at(matched(i))) {
+      label(j) = matched(i + 1); inAsset(j) = true
+    }
+    // a touched label is an endpoint the asset lacks, or a group id
+    val touched, fresh = Array.newBuilder[Long]
+    localRoots(Iterator.range(0, pairs.length, 2)
+        .map(i => (label(at(pairs(i))), label(at(pairs(i + 1)))))
+        .filter { case (la, lb) => la != lb })
+      .foreach { case (l, root) =>
+        val i = at(l)
+        (if (i >= 0 && !inAsset(i)) fresh else touched) += l += root
+      }
+    // 4. touched groups' members, plus the touched endpoints new to the asset
+    asset.join(broadcast(packedFrame(spark, touched.result(), "tg", "new_group")),
+        col("group_id") === col("tg"))
       .select(col("doc_id"), col("new_group").as("group_id"))
+      .union(packedFrame(spark, fresh.result(), "doc_id", "group_id"))
+      .select(col("doc_id").cast(docType), col("group_id").cast(groupType))
   }
+
+  /** The (long, long) rows of `df` as one packed array, pair i at
+    * (2i, 2i + 1): one job, and no row objects on the driver. */
+  private def collectPairs(df: DataFrame): Array[Long] =
+    Array.concat(df.queryExecution.toRdd.mapPartitions(rows => Iterator(
+      rows.flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toArray)).collect(): _*)
+
+  /** Packed driver-held longs as a one-partition frame of long columns
+    * `names`, one row per `names.size` longs: the task builds the rows,
+    * so the plan carries one array instead of embedded rows. */
+  private def packedFrame(spark: SparkSession, packed: Array[Long],
+      names: String*): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(packed), 1)
+        .flatMap(_.grouped(names.size).map(r => Row.fromSeq(r.toSeq))),
+      StructType(names.map(StructField(_, LongType))))
 
   // ------------------------------------------------------------------
   // Asset lifecycle: the persisted signature and groups assets live in

@@ -76,7 +76,8 @@ object Increment {
     * `incSigs` is `family.signatures` of the increment's rows. Pairs
     * land at `pairsOut`.
     *
-    * Reads first, then writes. The three asset reads exclude `tag`, and
+    * Reads first, then writes. The signature asset is listed once for
+    * its rows and its guard sidecar. The asset reads exclude `tag`, and
     * fail before anything is written when a compaction has already
     * folded `tag` (the rewrite would be skipped by every reader and
     * deleted by the next compaction). The writes then run in one order:
@@ -99,9 +100,10 @@ object Increment {
       assertDisjointIds: Boolean = false,
       maxUpsertDirs: Int = Asset.DefaultMaxUpsertDirs): Unit =
     Barrier.scoped {
-      val corpus = Asset.read(spark, sigDir, excludeInc = Some(tag))
-      val hist = Asset.readSidecar(spark, sigDir,
-        Asset.pairHistogram(family.guardKeys), excludeInc = Some(tag))
+      val sigs = Asset.list(spark, sigDir)
+      val corpus = sigs.read(excludeInc = Some(tag))
+      val hist = sigs.readSidecar(Asset.pairHistogram(family.guardKeys),
+        excludeInc = Some(tag))
       val groupsAsset = groupsDir.map(d => Asset.readUpserts(spark, d,
         excludeInc = Some(tag), maxUpsertDirs = maxUpsertDirs))
       Overlap.scoped { writes =>

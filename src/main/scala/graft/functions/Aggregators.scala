@@ -159,18 +159,25 @@ object Aggregators {
     private def better(p1: Double, x1: Long, p2: Double, x2: Long): Boolean =
       p1 > p2 || (p1 == p2 && x1 < x2)
 
-    /** Insertion into the sorted fixed buffer (shifts ≤ k slots); k is
-      * implied by the buffer's size. */
+    /** Insertion into the sorted fixed buffer; k is implied by the
+      * buffer's size. A binary search finds the first slot the entry is
+      * [[better]] than — strictly, so an equal entry stays ahead of it —
+      * and one copy shifts the slots below it (the last one drops off a
+      * full buffer). Scores must not be NaN: a NaN is neither better nor
+      * worse than any entry, which no sorted order can hold. */
     def insert(b: Array[Byte], p: Double, x: Long): Array[Byte] = {
       val k = (b.length - Header) / Slot
       val n = count(b)
       if (n == k && !better(p, x, price(b, k - 1), id(b, k - 1))) return b
-      var pos = if (n == k) k - 1 else n
-      while (pos > 0 && better(p, x, price(b, pos - 1), id(b, pos - 1))) {
-        writeSlot(b, pos, price(b, pos - 1), id(b, pos - 1))
-        pos -= 1
+      var lo = 0
+      var hi = n
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (better(p, x, price(b, mid), id(b, mid))) hi = mid else lo = mid + 1
       }
-      writeSlot(b, pos, p, x)
+      val moved = math.min(n, k - 1) - lo
+      System.arraycopy(b, Header + lo * Slot, b, Header + (lo + 1) * Slot, moved * Slot)
+      writeSlot(b, lo, p, x)
       if (n < k) setCount(b, n + 1)
       b
     }

@@ -331,9 +331,10 @@ object DedupQueries {
   // daily pipeline. The corpus's (doc_id, group_id) table (a previous
   // dd6 run over corpus-only pairs) is the persisted asset; dd7's
   // incremental pairs are the increment's edges. incrementalGroups
-  // contracts each pair endpoint to its existing group label, runs the
-  // CC fixpoint over the contracted label graph ONLY (never the
-  // corpus), and re-expands touched groups' members — so the output is
+  // collects the pairs and their endpoints' asset rows, contracts each
+  // endpoint to its existing group label, runs union-find over the
+  // contracted label edges on the driver (never the corpus), and
+  // re-expands touched groups' members — so the output is
   // dd6 over corpus ∪ inc restricted to components touched by the
   // increment (property-pinned in DedupSimilaritySpec). Oracle = dd6's
   // recursive CTE over the full table, restricted to components
@@ -357,7 +358,7 @@ object DedupQueries {
   // pre-seeded parquet assets (written once per JVM under target/ —
   // the cold bench pass pays the seeding, warm passes only read), and
   // the timed plan is ONLY incrementalGroups — the asset streamed
-  // against broadcasts, CC fixpoint over the contracted label graph.
+  // against broadcasts, union-find over the contracted label edges.
   // Same oracle as dd10: identical semantics, different input shape.
   private def incrementalCCAsset(s: SparkSession, dir: String): DataFrame = {
     val root = QueryDef.seedOnce(s, "dd10p", dir) { root =>

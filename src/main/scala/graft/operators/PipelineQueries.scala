@@ -104,7 +104,7 @@ object PipelineQueries {
   //   seed yesterday's assets (signature asset + groups asset)
   //   → ingest today's increment (signatures land as an inc dir)
   //   → incremental pairs   (dd7: asset streamed, increment broadcast)
-  //   → incremental groups  (dd10: fixpoint over contracted labels only)
+  //   → incremental groups  (dd10: driver union-find over contracted labels only)
   //   → upsert + compact both assets (merge-on-read, then fold)
   //   → keep/drop decision  (drop every doc that doesn't lead its group)
   //
@@ -155,7 +155,7 @@ object PipelineQueries {
   //
   //   increment-ingest (signatures land as inc_0)
   //   → dd7 pairs (asset streamed once, increment broadcast)
-  //   → dd10 groups (fixpoint over contracted labels only)
+  //   → dd10 groups (driver union-find over contracted labels only)
   //   → upsert (touched components land as a groups-asset inc dir)
   //   → keep/drop (corpus anti-joins the broadcastable loser set)
   //

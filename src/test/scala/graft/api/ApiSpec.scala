@@ -155,6 +155,55 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
     bothResiduePaths(assert(groups(cdf) == (0L to 10000L).map(_ -> 0L).toMap))
   }
 
+  test("incrementalGroups equals a driver-side union-find of corpus and increment pairs, over its touched components") {
+    // corpus ids 0..199 grouped by their own pairs (a self-pair
+    // included); increment ids from 1000, each random pair touching one
+    val rnd = new scala.util.Random(11)
+    val corpusPairs = Seq.fill(150)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong)) :+
+      ((3L, 3L))
+    val asset = unionFind(corpusPairs)
+    val sameGroup = asset.groupBy(_._2).values.find(_.size >= 2).get.keys.toSeq
+    val incPairs: Seq[(Option[Long], Option[Long])] =
+      Seq.fill(80) {
+        val i = 1000L + rnd.nextInt(50)
+        val o = if (rnd.nextBoolean()) rnd.nextInt(200).toLong else 1000L + rnd.nextInt(50)
+        if (rnd.nextBoolean()) (Some(i), Some(o)) else (Some(o), Some(i))
+      } ++ Seq(
+        (Some(1001L), Some(1001L)), // self-pair on a paired doc
+        (Some(1059L), Some(1059L)), // self-pair on an otherwise unpaired doc
+        (None, Some(1002L)), (Some(1055L), None), // null endpoints link nothing
+        (Some(sameGroup(0)), Some(sameGroup(1)))) // tolerated same-group corpus pair
+    val linked = incPairs.collect { case (Some(a), Some(b)) => (a, b) }
+    val merged = unionFind(corpusPairs ++ linked)
+    val touched = linked.filter { case (a, b) => a != b }
+      .flatMap { case (a, b) => Seq(a, b) }.filter(_ >= 1000L).map(merged).toSet
+    val want = merged.filter { case (_, g) => touched(g) }.toSet
+    assert(!want.exists(_._1 == 1059L) && !want.exists(_._1 == 1055L))
+    for (parts <- Seq(1, 4)) {
+      val got = Dedup.incrementalGroups(
+          spark.createDataFrame(asset.toSeq).toDF("doc_id", "group_id").repartition(parts),
+          spark.createDataFrame(incPairs).toDF("a", "b").repartition(parts), "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(got.toSet == want, s"over $parts partitions")
+      assert(got.length == want.size, s"duplicate rows over $parts partitions")
+    }
+    // Int ids keep their type in both output columns
+    val ints = Dedup.incrementalGroups(
+      spark.createDataFrame(asset.toSeq.map { case (d, g) => (d.toInt, g.toInt) })
+        .toDF("doc_id", "group_id"),
+      spark.createDataFrame(linked.map { case (a, b) => (a.toInt, b.toInt) }).toDF("a", "b"),
+      "a", "b")
+    assert(ints.schema.map(_.dataType) ==
+      Seq(org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType))
+    assert(ints.collect().map(r => r.getInt(0).toLong -> r.getInt(1).toLong).toSet == want)
+    // an empty increment touches nothing
+    val none = Dedup.incrementalGroups(
+      spark.createDataFrame(asset.toSeq).toDF("doc_id", "group_id"),
+      spark.createDataFrame(Seq.empty[(Long, Long)]).toDF("a", "b"), "a", "b")
+    assert(none.collect().isEmpty)
+    assert(none.columns.toSeq == Seq("doc_id", "group_id"))
+  }
+
   test("multi-probe LSH recall >= 0.9 on planted pairs in the cos~0.4-0.5 regime") {
     // Planted-pair fixture: 60 random unit vectors (fixed seed —
     // deterministic), each with a partner at a known cosine in
@@ -265,6 +314,23 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
       .sortBy { case (s, id) => (-s, id) }.take(k).zipWithIndex
       .map { case ((s, id), i) => (id, s, i + 1) }
     assert(got.sortBy(_._3).toSeq == want.toSeq)
+  }
+
+  test("TopKPerKey at k = 400 with exact score ties equals a sort-based top k") {
+    // scores from 13 values, so every kept slot ties with ~150 others
+    // and the id tie-break decides; 4 partitions merge partial buffers
+    import spark.implicits._
+    val k = 400
+    val rows = (0 until 6000).map(i => (i % 3L, ((i * 7919) % 13).toDouble, i.toLong))
+    val got = TopKPerKey(rows.toDF("grp", "score", "rid").repartition(4),
+        "grp", "score", "rid", k)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .sortBy(r => (r._1, r._4)).toSeq
+    val want = rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (g, rs) =>
+      rs.sortBy { case (_, s, id) => (-s, id) }.take(k).zipWithIndex
+        .map { case ((_, s, id), i) => (g, id, s, i + 1) }
+    }
+    assert(got == want)
   }
 
   test("dedup operators survive null text / null vectors under ANSI mode") {

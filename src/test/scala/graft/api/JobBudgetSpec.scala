@@ -86,15 +86,23 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
           excludeInc = Some("inc_1")))
       incPairs().write.parquet(s"$root/pairs/inc_1")
       val pairs = spark.read.parquet(s"$root/pairs/inc_1")
+      // the whole daily step over assets of its own, replayed under one tag
+      val family = Increment.Family.jaccard("doc_id", "text", 8, 4, 0.8)
+      Increment.seed(spark, s"$root/step/sigs", s"$root/step/groups",
+        family.signatures(corpus), Dedup.duplicateGroups(dayPairs, "doc_a", "doc_b"), family)
+      val incSigs = family.signatures(inc)
       withinBudgets(Seq(
         ("jaccardPairs", 6,
           () => Dedup.jaccardPairs(corpus, "doc_id", "text", 8, 4, 0.8)),
         ("duplicateGroups", 3,
           () => Dedup.duplicateGroups(dayPairs, "doc_a", "doc_b")),
         ("incrementalJaccardPairs (_pairhist)", 8, () => incPairs()),
-        ("incrementalGroups", 15,
+        ("incrementalGroups", 4,
           () => Dedup.incrementalGroups(Asset.readUpserts(spark, s"$root/groups"),
             pairs, "doc_a", "doc_b")),
+        ("Increment.step (jaccard)", 20,
+          () => Increment.step(spark, s"$root/step/sigs", Some(s"$root/step/groups"),
+            s"$root/step/pairs", "inc_1", incSigs, family)),
         ("duplicateGroups (star rounds)", 185,
           () => starRounds(Dedup.duplicateGroups(chain, "x", "y")))))
     } finally {

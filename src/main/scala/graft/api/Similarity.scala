@@ -2,12 +2,15 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Divide, EvalMode, Expression,
+  GenericInternalRow, Literal, NumericEvalContext, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{PqKernels, VectorFunctions, VectorKernels}
+import graft.functions.Aggregators.TopK
 
 /** Library-facing similarity search: corpus/query DataFrames in, ranked
   * neighbor rows out. The oracled fixture queries
@@ -1505,12 +1508,11 @@ object Similarity extends org.apache.spark.internal.Logging {
     * candidate scan reads codes only — Σ_m lut[m][code] reconstructs
     * dot(query, decode(codes)), divided by the TRUE stored norms to
     * approximate cosine. The `rerank` best ADC candidates per query
-    * (selected by the bounded [[TopKPerKey]] aggregate: O(rerank) state
-    * per query, map-side pre-reduction — NOT a full-corpus window sort)
-    * join back to the base table for exact-cosine scoring, and the
-    * final top-`k` of those is returned. Every stage is map-only or
-    * broadcast except the candidate top-R aggregate (whose exchange is
-    * ≤ maps × queries × rerank rows).
+    * (O(rerank) state per query, merged on the driver — NOT a
+    * full-corpus window sort) are re-scored by exact cosine against
+    * the base table, and the final top-`k` of those is returned. Below
+    * [[PqHeapSelectMaxKey]] the query tail is [[adcTopK]]: one query
+    * collect, one ADC-selection job, one re-rank job, no shuffle.
     *
     * Approximation contract: a true neighbor outside the ADC top-R is
     * lost (quantization error decides R's recall); within the returned
@@ -1560,9 +1562,9 @@ object Similarity extends org.apache.spark.internal.Logging {
   private def pqTopKImpl(c: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int, ks: Int, iters: Int, rerank: Int): DataFrame = {
-    val booksRow = trainedBooksRow(c, "vec_id", "embedding", m, ks, iters)
-    pqQueryTail(pqIndexOf(c, booksRow), c,
-      normed(queries, idCol, vecCol), booksRow, k, rerank)
+    val books = l2Lloyd(c, "vec_id", "embedding", m, ks, iters)._2
+    pqQueryTail(pqIndexOf(c, packBooks(c.sparkSession, embNullable = false, books)),
+      c, normed(queries, idCol, vecCol), books, k, rerank)
   }
 
   /** The m per-subspace codebooks packed ON THE DRIVER into the single
@@ -1573,10 +1575,13 @@ object Similarity extends org.apache.spark.internal.Logging {
     * oracle rely on. One collect of the (small, immutable) books; the
     * row is a one-partition frame like [[pqTrain]]'s output. */
   private def booksRowOf(books: DataFrame): DataFrame =
-    packBooks(books.sparkSession, books.schema("c_emb").nullable,
-      books.select(col("m"), col("code_id").cast(LongType), col("c_emb"))
-        .collect().toSeq
-        .map(r => (r.getInt(0), Cent(r.getLong(1), r.getSeq[Float](2).toArray))))
+    packBooks(books.sparkSession, books.schema("c_emb").nullable, collectBooks(books))
+
+  /** [[pqTrain]] output on the driver as (subspace, code) pairs. */
+  private def collectBooks(books: DataFrame): Seq[(Int, Cent)] =
+    books.select(col("m"), col("code_id").cast(LongType), col("c_emb"))
+      .collect().toSeq
+      .map(r => (r.getInt(0), Cent(r.getLong(1), r.getSeq[Float](2).toArray)))
 
   /** [[pqTrain]] packed straight into the books row (no collect). */
   private def trainedBooksRow(corpus: DataFrame, idCol: String,
@@ -1588,11 +1593,15 @@ object Similarity extends org.apache.spark.internal.Logging {
       books: Seq[(Int, Cent)]): DataFrame = {
     val entry = StructType(Seq(StructField("code_id", LongType),
       StructField("c_emb", ArrayType(FloatType), embNullable)))
-    val row = Row(books.groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.map(_._2).sortBy(_.id).map(c => Row(c.id, c.emb.toSeq))))
+    val row = Row(subspaces(books).map(_.map(c => Row(c.id, c.emb.toSeq))))
     spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), StructType(Seq(
       StructField("books", ArrayType(ArrayType(entry, false), false), nullable = false))))
   }
+
+  /** The books in the packed row's order: subspaces in m order, each
+    * code-id-ascending. */
+  private def subspaces(books: Seq[(Int, Cent)]): Seq[Seq[Cent]] =
+    books.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2).sortBy(_.id))
 
   private def pqIndexOf(cNormed: DataFrame, booksRow: DataFrame): DataFrame = {
     import graft.functions.PqFunctions
@@ -1616,27 +1625,27 @@ object Similarity extends org.apache.spark.internal.Logging {
   /** ANN over a PREBUILT PQ index (persisted codes + frozen books —
     * [[pqEncodeIndex]] rows from any mix of asset generations and
     * fresh increments): ADC-score the index, bounded top-`rerank` per
-    * query, exact re-rank against `base` (the full-vector table, joined
+    * query, exact re-rank against `base` (the full-vector table, read
     * only for the ≤ queries × rerank survivor rows). This is [[pqTopK]]
     * minus training/encoding — the query path a production deployment
     * runs per request. */
   def pqTopKFromIndex(index: DataFrame, base: DataFrame, queries: DataFrame,
       books: DataFrame, idCol: String, vecCol: String,
       k: Int, rerank: Int): DataFrame = {
-    VectorFunctions.register(queries.sparkSession)
+    val spark = queries.sparkSession
+    VectorFunctions.register(spark)
     // n for the sizing check is the BASE corpus row count (the index
-    // covers the base table by contract): counting the base is a
-    // metadata-only parquet count in the production shape, where
-    // counting the index frame could replay the increment's encode.
-    // Evaluated inside the check: `off` mode must skip the count job
-    // entirely (a computed, non-parquet base would replay its lineage
-    // per call)
-    Guard.check(queries.sparkSession, RerankSizingConfKey)(
-      rerankSizingVerdict(base.count(), k, rerank))
+    // covers the base table by contract), counted by the re-rank's own
+    // scan of the base. `off` skips the check and everything it costs:
+    // the re-rank then stays lazy, so a computed base is not read at
+    // call time
+    val sizeCheck = Option.when(Guard.mode(spark, RerankSizingConfKey) != "off") {
+      (n: Long) => Guard.check(spark, RerankSizingConfKey)(rerankSizingVerdict(n, k, rerank))
+    }
     pqQueryTail(
       index.select(col(idCol).as("vec_id"), col("nrm"), col("codes")),
       normed(base, idCol, vecCol),
-      normed(queries, idCol, vecCol), booksRowOf(books), k, rerank)
+      normed(queries, idCol, vecCol), collectBooks(books), k, rerank, sizeCheck)
   }
 
   /** AUTO-SIZED [[pqTopKFromIndex]]: rerank derived from the base
@@ -1652,20 +1661,31 @@ object Similarity extends org.apache.spark.internal.Logging {
       pqConcVerdict(b, n, k, "pqTopKFromIndex"))
     pqQueryTail(
       index.select(col(idCol).as("vec_id"), col("nrm"), col("codes")),
-      b, normed(queries, idCol, vecCol), booksRowOf(books), k,
+      b, normed(queries, idCol, vecCol), collectBooks(books), k,
       rerankFor(n, k))
   }
 
-  /** Shared PQ query tail: per-query LUTs (broadcast), ADC scoring of
-    * the (vec_id, nrm, codes) index, bounded [[TopKPerKey]] candidate
-    * selection, exact-cosine re-rank of the survivors against the
-    * normed base table. */
+  /** Shared PQ query tail over the (vec_id, nrm, codes) index: the
+    * driver-merged [[adcTopK]] engine (each task builds the query LUTs
+    * from `books`), or past [[PqHeapSelectMaxKey]] the sort path
+    * ([[sortSelectRerank]]) over broadcast LUT rows. `sizeCheck`, when
+    * set, judges the base row count before the result is returned. */
   private def pqQueryTail(index: DataFrame, cNormed: DataFrame,
-      queriesNormed: DataFrame, booksRow: DataFrame,
-      k: Int, rerank: Int): DataFrame = {
+      queriesNormed: DataFrame, books: Seq[(Int, Cent)],
+      k: Int, rerank: Int, sizeCheck: Option[Long => Unit] = None): DataFrame = {
     import graft.functions.PqFunctions
-    // the query count fills the lazy barrier; qB is one row per query
-    // by construction, so counting it needs no distinct (r18 ADVICE)
+    val spark = index.sparkSession
+    val (qField, qs) = collectQueries(queriesNormed)
+    if (heapSelects(spark, qs.length, rerank))
+      return adcTopK(qs, qField, Codes(new GenericArrayData(
+          subspaces(books).map(structs(_, withNrm = false)).toArray[Any])),
+        index.select(col("vec_id").cast(LongType), col("nrm"), col("codes")),
+        cNormed, k, rerank, sizeCheck)
+    sizeCheck.foreach(_(cNormed.count()))
+    // past the ceiling: the query count fills the lazy barrier; qB is
+    // one row per query by construction, so counting it needs no
+    // distinct (r18 ADVICE)
+    val booksRow = packBooks(spark, embNullable = false, books)
     val (qB, nq) = Barrier.counted(queriesNormed.crossJoin(broadcast(booksRow))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"),
@@ -1674,25 +1694,186 @@ object Similarity extends org.apache.spark.internal.Logging {
       (col("q_nrm") * col("nrm"))
     val scored = index.join(broadcast(qB), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), adcCos.as("adc"))
-    adcSelectRerank(scored,
+    sortSelectRerank(scored,
       qB.select(col("q_id"), col("q_emb"), col("q_nrm")), cNormed, k, rerank, nq)
   }
 
-  /** Ceiling on queries × rerank ENTRIES the heap-based ADC candidate
-    * selection may hold per task (conf [[PqHeapSelectMaxKey]], default
-    * 2²¹ ≈ 2.1 M ≈ 100 MB/task worst case): [[TopKPerKey]]'s partial
-    * state is one (id, score) heap per query PER TASK — every task
-    * scans rows of every query, so the aggregation holds queries ×
-    * rerank entries in each of the N parallel tasks. The r18 mixture
-    * campaign measured the wall this guards: at the 2 M λ-mixture
-    * decade the routed measured-rerank budget lands at the at-level
-    * population (R ~ λ·n ≈ 10⁵⁻⁶), and 30 queries × R heaps × 32
-    * tasks put an 8 GB driver-JVM into a GC death spiral — the r17
+  /** One query of the PQ tail, held on the driver: its id as the caller
+    * typed it, the id as a long (the selection key), its embedding and
+    * norm. */
+  private final case class Query(id: Any, key: Long, emb: ArrayData, nrm: Double)
+
+  /** The distinct normed query rows with a non-null id, in ONE collect,
+    * and the id column's field (the output `q_id` keeps its type). */
+  private def collectQueries(queriesNormed: DataFrame): (StructField, Array[Query]) = {
+    val q = queriesNormed.select("vec_id", "embedding", "nrm")
+    (q.schema("vec_id"), q.collect().distinct.filterNot(_.isNullAt(0)).map(r =>
+      Query(r.get(0), r.getAs[Number](0).longValue,
+        UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray), r.getDouble(2))))
+  }
+
+  /** True when queries × rerank fits [[PqHeapSelectMaxKey]]: the
+    * driver-merged engine, else the sort path. */
+  private def heapSelects(spark: SparkSession, nq: Long, rerank: Int): Boolean =
+    nq * rerank <= spark.conf.get(PqHeapSelectMaxKey, PqHeapSelectMaxDefault.toString).toLong
+
+  /** What [[adcTopK]]'s selection job scans. */
+  private sealed trait Candidates extends Serializable
+  /** PQ index rows (vec_id: long, nrm, codes): each task builds every
+    * query's LUT from the packed `books` and scores each row against
+    * each query but itself. */
+  private final case class Codes(books: ArrayData) extends Candidates
+  /** Rows already scored as (q_id: long, n_id: long, adc) — IVFADC's
+    * probe join. */
+  private case object Scored extends Candidates
+
+  /** THE PQ query tail's top-K engine, driver-held like [[lloyd]]:
+    *  1. the queries arrive collected (`queries`, one job by the caller);
+    *  2. ONE selection job over `rows` ([[Candidates]]): every task keeps
+    *     one [[TopK]] buffer of `rerank` entries per query, ordered by
+    *     (adc desc, n_id asc), and treeAggregate merges them on the
+    *     driver;
+    *  3. ONE re-rank job over `cNormed` (vec_id, embedding, nrm): every
+    *     task scores only the survivor ids — cosine by
+    *     [[VectorKernels.dot]] in the `cosinePre` op order — into a
+    *     top-`k` buffer per query, ordered by (cos desc, n_id asc), and
+    *     counts the base rows.
+    * With `sizeCheck` set, step 3 runs now, the check judges its row
+    * count, and the result is a one-partition frame of the driver-held
+    * rows; without it step 3 runs when the returned one-partition frame
+    * is read (one job, its buffers merged in one reduce task).
+    * Output (q_id, n_id: long, cos, rank): the rows, types and
+    * nullability of the SQL tail it replaced, bit for bit. Task and
+    * driver memory: queries × rerank entries of 16 B, bounded by
+    * [[PqHeapSelectMaxKey]]. A zero divisor raises what the SQL tail
+    * raised ([[sqlDivide]]). */
+  private def adcTopK(queries: Array[Query], qField: StructField,
+      candidates: Candidates, rows: DataFrame, cNormed: DataFrame,
+      k: Int, rerank: Int, sizeCheck: Option[Long => Unit]): DataFrame = {
+    val spark = cNormed.sparkSession
+    val ansi = spark.sessionState.conf.ansiEnabled
+    val nq = queries.length
+    val keys = queries.map(_.key)
+    val embs = queries.map(_.emb)
+    val nrms = queries.map(_.nrm)
+    val picked = rows.queryExecution.toRdd.mapPartitions { it =>
+      val top = Array.fill[Array[Byte]](nq)(TopK.zero(rerank))
+      candidates match {
+        case Codes(books) =>
+          val luts = embs.map(PqKernels.pqLut(books, _))
+          it.foreach { r =>
+            if (!r.isNullAt(0)) {
+              val id = r.getLong(0)
+              val nrm = r.getDouble(1)
+              val codes = r.getArray(2)
+              var s = 0
+              while (s < nq) {
+                if (keys(s) != id) TopK.insert(top(s),
+                  sqlDivide(PqKernels.pqAdc(luts(s), codes), nrms(s) * nrm, ansi), id)
+                s += 1
+              }
+            }
+          }
+        case Scored =>
+          val slot = keys.zipWithIndex.toMap
+          it.foreach { r =>
+            val adc = if (r.isNullAt(2)) notNull(Literal(null, DoubleType)) else r.getDouble(2)
+            slot.get(r.getLong(0)).foreach(s => TopK.insert(top(s), adc, r.getLong(1)))
+          }
+      }
+      Iterator.single(top)
+    }.treeAggregate(null: Tops)(mergeTops, mergeTops)
+    // survivors sorted by id, each with the query slot it survived for
+    val (ids, slots) = Option(picked).toSeq.flatMap(_.zipWithIndex.toSeq.flatMap {
+      case (b, s) => TopK.entries(b).map(e => (e._2, s))
+    }).sortBy(_._1).toArray.unzip
+    val reranked = cNormed.select(col("vec_id").cast(LongType), col("embedding"), col("nrm"))
+      .queryExecution.toRdd.mapPartitions { it =>
+        val top = Array.fill[Array[Byte]](nq)(TopK.zero(k))
+        var n = 0L
+        it.foreach { r =>
+          n += 1
+          if (!r.isNullAt(0)) {
+            val id = r.getLong(0)
+            var i = lowerBound(ids, id)
+            while (i < ids.length && ids(i) == id) {
+              val s = slots(i)
+              TopK.insert(top(s), sqlDivide(VectorKernels.dot(embs(s), r.getArray(1)),
+                nrms(s) * r.getDouble(2), ansi), id)
+              i += 1
+            }
+          }
+        }
+        Iterator.single((n, top))
+      }
+    val qIds = queries.map(_.id)
+    def rowsOf(acc: (Long, Tops)): Seq[Row] =
+      if (acc == null) Nil
+      else for (s <- 0 until nq; ((cos, id), i) <- TopK.entries(acc._2(s)).zipWithIndex)
+        yield Row(qIds(s), id, cos, i + 1)
+    val out = sizeCheck match {
+      case Some(check) =>
+        val acc = reranked.treeAggregate(null: (Long, Tops))(mergeCounted, mergeCounted)
+        check(Option(acc).fold(0L)(_._1))
+        spark.sparkContext.parallelize(rowsOf(acc), 1)
+      case None =>
+        reranked.coalesce(1, shuffle = true).mapPartitions(it =>
+          rowsOf(it.foldLeft(null: (Long, Tops))(mergeCounted)).iterator)
+    }
+    spark.createDataFrame(out, StructType(Seq(
+      StructField("q_id", qField.dataType, qField.nullable),
+      StructField("n_id", LongType, nullable = false), StructField("cos", DoubleType),
+      StructField("rank", IntegerType, nullable = false))))
+  }
+
+  /** Per-query [[TopK]] buffers, one per query slot. */
+  private type Tops = Array[Array[Byte]]
+
+  private def mergeTops(a: Tops, b: Tops): Tops =
+    if (a == null || b == null) Option(a).getOrElse(b)
+    else { a.indices.foreach(s => TopK.mergeInto(a(s), b(s))); a }
+
+  private def mergeCounted(a: (Long, Tops), b: (Long, Tops)): (Long, Tops) =
+    if (a == null || b == null) Option(a).getOrElse(b)
+    else (a._1 + b._1, mergeTops(a._2, b._2))
+
+  /** The first index of `xs` (ascending) holding a value ≥ `x`. */
+  private def lowerBound(xs: Array[Long], x: Long): Int = {
+    var (lo, hi) = (0, xs.length)
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (xs(mid) < x) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** Spark SQL's `num / den` on doubles, as the SQL tail computed its
+    * scores: a zero divisor raises DIVIDE_BY_ZERO under ANSI, and the
+    * null it yields otherwise raises NOT_NULL_ASSERT_VIOLATION — what
+    * the tail's typed selection aggregate raised on a null score (a
+    * zero-norm vector has no cosine). */
+  private def sqlDivide(num: Double, den: Double, ansi: Boolean): Double =
+    if (den != 0.0) num / den
+    else notNull(Divide(Literal(num), Literal(den),
+      NumericEvalContext(EvalMode.fromBoolean(ansi))))
+
+  private def notNull(e: Expression): Double =
+    AssertNotNull(e).eval().asInstanceOf[Double]
+
+  /** Ceiling on queries × rerank ENTRIES the driver-merged ADC
+    * selection ([[adcTopK]]) may hold (conf [[PqHeapSelectMaxKey]],
+    * default 2²¹ entries of 16 B ≈ 32 MB): every task keeps one
+    * rerank-entry buffer per query — each task scans rows of every
+    * query — and the driver merges them, so each of the N parallel
+    * tasks and the driver hold queries × rerank entries. The r18
+    * mixture campaign measured the wall this guards: at the 2 M
+    * λ-mixture decade the routed measured-rerank budget lands at the
+    * at-level population (R ~ λ·n ≈ 10⁵⁻⁶), and 30 queries × R heaps ×
+    * 32 tasks put an 8 GB driver-JVM into a GC death spiral — the r17
     * campaign's ">70 min, killed" 2 M leg reproduced and explained.
     * Past the ceiling the selection switches to a rank-based
     * distributed sort (memory Θ(partition), shuffle n·queries slim
-    * rows) and the re-rank join stops broadcasting the
-    * queries × R survivor set. */
+    * rows) and the re-rank joins the survivors by shuffle. */
   val PqHeapSelectMaxKey = "spark.graft.pq.heapselect.max"
   val PqHeapSelectMaxDefault: Long = 1L << 21
 
@@ -1744,13 +1925,10 @@ object Similarity extends org.apache.spark.internal.Logging {
   val PqSortSelectFoldKey = "spark.graft.pq.sortselect.fold"
   val PqSortSelectFoldDefault: Int = 8
 
-  /** Bounded ADC-candidate selection + exact re-rank (shared by the PQ
-    * and IVFADC paths). Small queries × rerank products (every auto
-    * path; the benched s6/s7/s8 geometries): [[TopKPerKey]] keeps the
-    * top-`rerank` per query map-side — no shuffle of the scored set —
-    * and the survivor pairs broadcast into the re-rank join. Past
-    * [[PqHeapSelectMaxKey]] entries (measured-rerank budgets on
-    * clustered corpora at scale, R ~ concentrated population): a
+  /** ADC-candidate selection + exact re-rank past
+    * [[PqHeapSelectMaxKey]] entries (shared by the PQ and IVFADC paths;
+    * measured-rerank budgets on clustered corpora at scale, R ~
+    * concentrated population — below the ceiling [[adcTopK]] runs): a
     * SALTED two-phase rank selects the same survivors with memory
     * bounded by partition size — phase 1 ranks within (q_id, salt =
     * hash(n_id) mod S) and keeps each group's top-`rerank` (a
@@ -1759,73 +1937,54 @@ object Similarity extends org.apache.spark.internal.Logging {
     * to the exact global top-`rerank` ≤ `fold` groups at a time
     * ([[PqSortSelectFoldKey]] — r20: no single task sorts the full
     * rerank · S survivor set) — and the re-rank joins by shuffle. Same
-    * rows out as the heap path (deterministic (adc desc, n_id)
-    * ordering in both phases), different resource shape; the salt
-    * restores scan-width parallelism the r18 single-phase
+    * rows out as the engine (deterministic (adc desc, n_id) ordering
+    * in both phases), different resource shape; the salt restores
+    * scan-width parallelism the r18 single-phase
     * Window.partitionBy(q_id) fallback gave up (#queries tasks).
     * `nq` is the (exact or contractual) query-row count, threaded
     * from callers that already hold a barrier'd query frame — the
     * r18 ADVICE finding: counting the qSmall projection here paid a
     * distinct+shuffle job per call on the IVFADC path. */
-  private def adcSelectRerank(scored: DataFrame, qSmall: DataFrame,
+  private def sortSelectRerank(scored: DataFrame, qSmall: DataFrame,
       cNormed: DataFrame, k: Int, rerank: Int, nq: Long): DataFrame = {
     val spark = scored.sparkSession
-    val heapMax = spark.conf.get(PqHeapSelectMaxKey,
-      PqHeapSelectMaxDefault.toString).toLong
-    if (nq * rerank <= heapMax) {
-      // the query table is ≤ queries rows BY CONTRACT — broadcast
-      // explicitly (post-aggregate stats are unknown, so the planner
-      // otherwise falls back to a sort-merge join of two tiny sides)
-      val survivors = TopKPerKey(scored, "q_id", "adc", "n_id", rerank)
-        .select(col("q_id").as("s_q_id"), col("n_id"))
-        .join(broadcast(qSmall), col("s_q_id") === col("q_id"))
-        .select(col("q_id"), col("q_emb"), col("q_nrm"), col("n_id"))
-      val cos = VectorFunctions.cosinePre(
-        VectorFunctions.dot(col("q_emb"), col("embedding")),
-        col("q_nrm"), col("nrm"))
-      cNormed.join(broadcast(survivors), col("vec_id") === col("n_id"))
-        .select(col("q_id"), col("n_id"), cos.as("cos"))
-        .withColumn("rank", row_number().over(rankWindow))
-        .filter(col("rank") <= k)
-    } else {
-      val saltsConf = spark.conf.get(PqSortSelectSaltsKey, "0").toInt
-      val shufflePart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val salts =
-        if (saltsConf > 0) saltsConf
-        else math.min(64L, math.max(2L,
-          (4L * shufflePart + nq - 1) / math.max(1L, nq))).toInt
-      val fold = math.max(2, spark.conf.get(PqSortSelectFoldKey,
-        PqSortSelectFoldDefault.toString).toInt)
-      val saltW = Window.partitionBy(col("q_id"), col("salt"))
-        .orderBy(col("adc").desc, col("n_id"))
-      var cur = scored
-        .withColumn("salt", pmod(xxhash64(col("n_id")), lit(salts.toLong)))
+    val saltsConf = spark.conf.get(PqSortSelectSaltsKey, "0").toInt
+    val shufflePart = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val salts =
+      if (saltsConf > 0) saltsConf
+      else math.min(64L, math.max(2L,
+        (4L * shufflePart + nq - 1) / math.max(1L, nq))).toInt
+    val fold = math.max(2, spark.conf.get(PqSortSelectFoldKey,
+      PqSortSelectFoldDefault.toString).toInt)
+    val saltW = Window.partitionBy(col("q_id"), col("salt"))
+      .orderBy(col("adc").desc, col("n_id"))
+    var cur = scored
+      .withColumn("salt", pmod(xxhash64(col("n_id")), lit(salts.toLong)))
+      .withColumn("rk", row_number().over(saltW))
+      .filter(col("rk") <= rerank)
+      .select(col("q_id"), col("n_id"), col("adc"), col("salt"))
+    // phase 2 as a fold tree (see PqSortSelectFoldKey): merge ≤ fold
+    // salt groups per level until one remains; each level's rank is
+    // over ≤ fold·rerank rows per group, and the survivor invariant
+    // (cur ⊇ the global per-query top-rerank) holds inductively
+    var live = salts
+    while (live > 1) {
+      val next = if (live <= fold) 1 else (live + fold - 1) / fold
+      cur = cur.withColumn("salt", pmod(col("salt"), lit(next.toLong)))
         .withColumn("rk", row_number().over(saltW))
         .filter(col("rk") <= rerank)
         .select(col("q_id"), col("n_id"), col("adc"), col("salt"))
-      // phase 2 as a fold tree (see PqSortSelectFoldKey): merge ≤ fold
-      // salt groups per level until one remains; each level's rank is
-      // over ≤ fold·rerank rows per group, and the survivor invariant
-      // (cur ⊇ the global per-query top-rerank) holds inductively
-      var live = salts
-      while (live > 1) {
-        val next = if (live <= fold) 1 else (live + fold - 1) / fold
-        cur = cur.withColumn("salt", pmod(col("salt"), lit(next.toLong)))
-          .withColumn("rk", row_number().over(saltW))
-          .filter(col("rk") <= rerank)
-          .select(col("q_id"), col("n_id"), col("adc"), col("salt"))
-        live = next
-      }
-      val pairs = cur.select(col("q_id"), col("n_id"))
-      val cos = VectorFunctions.cosinePre(
-        VectorFunctions.dot(col("q_emb"), col("embedding")),
-        col("q_nrm"), col("nrm"))
-      cNormed.join(pairs, col("vec_id") === col("n_id"))
-        .join(broadcast(qSmall), "q_id")
-        .select(col("q_id"), col("n_id"), cos.as("cos"))
-        .withColumn("rank", row_number().over(rankWindow))
-        .filter(col("rank") <= k)
+      live = next
     }
+    val pairs = cur.select(col("q_id"), col("n_id"))
+    val cos = VectorFunctions.cosinePre(
+      VectorFunctions.dot(col("q_emb"), col("embedding")),
+      col("q_nrm"), col("nrm"))
+    cNormed.join(pairs, col("vec_id") === col("n_id"))
+      .join(broadcast(qSmall), "q_id")
+      .select(col("q_id"), col("n_id"), cos.as("cos"))
+      .withColumn("rank", row_number().over(rankWindow))
+      .filter(col("rank") <= k)
   }
 
   /** IVFADC [Jégou et al. 2011, §IV]: the canonical composition of the
@@ -1839,9 +1998,10 @@ object Similarity extends org.apache.spark.internal.Logging {
     * (query, probed cell) and the LUT once per query (residual books
     * are cell-independent). Residuals concentrate near 0, so the same
     * code budget quantizes them better than raw vectors. Exact-cosine
-    * re-rank of the top-`rerank` as everywhere in this family; all
-    * stages map-only or broadcast except the bounded candidate
-    * aggregate. */
+    * re-rank of the top-`rerank` as everywhere in this family: the
+    * probe join is the scored input of [[adcTopK]]'s selection job
+    * (one query collect, one selection job, one re-rank job), or of the
+    * sort path past [[PqHeapSelectMaxKey]]. */
   def ivfadcTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nCells: Int, coarseIters: Int, m: Int, ks: Int, pqIters: Int,
@@ -1895,7 +2055,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     // dot(q, cell) per probed cell, one LUT per query
     val probeW = Window.partitionBy(col("vec_id"))
       .orderBy(col("d2").asc, col("cent_id"))
-    val qB = Barrier(normed(queries, idCol, vecCol)
+    val qNormed = normed(queries, idCol, vecCol)
+    val probes = qNormed
       .join(broadcast(coarse))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"),
         PqFunctions.vecL2(col("c_emb"), col("embedding")).as("d2"),
@@ -1905,21 +2066,27 @@ object Similarity extends org.apache.spark.internal.Logging {
       .crossJoin(broadcast(booksRow))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"), col("cent_id"), col("cell_dot"),
-        PqFunctions.pqLut(col("books"), col("embedding")).as("lut")))
+        PqFunctions.pqLut(col("books"), col("embedding")).as("lut"))
     val adcCos = (col("cell_dot") +
       PqFunctions.pqAdc(col("lut"), col("codes"))) /
       (col("q_nrm") * col("nrm"))
-    val scored = index.join(broadcast(qB),
+    def scoredBy(qB: DataFrame) = index.join(broadcast(qB),
         qB("cent_id") === index("cent_id") && col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), adcCos.as("adc"))
-    // qB carries nProbe rows per query — barrier the distinct query
-    // projection so the dedup shuffle runs ONCE (the pre-r19 shape
-    // re-ran it per consumer: one distinct+shuffle job just to count,
-    // another under the re-rank join — the r18 ADVICE finding).
-    // The count fills that barrier.
+    val (qField, qs) = collectQueries(qNormed)
+    if (heapSelects(c.sparkSession, qs.length, rerank))
+      return adcTopK(qs, qField, Scored, scoredBy(probes).select(
+        col("q_id").cast(LongType), col("n_id").cast(LongType), col("adc")),
+        c, k, rerank, sizeCheck = None)
+    // past the ceiling: qB carries nProbe rows per query — barrier the
+    // distinct query projection so the dedup shuffle runs ONCE (the
+    // pre-r19 shape re-ran it per consumer: one distinct+shuffle job
+    // just to count, another under the re-rank join — the r18 ADVICE
+    // finding). The count fills that barrier.
+    val qB = Barrier(probes)
     val (qSmall, nq) = Barrier.counted(
       qB.select(col("q_id"), col("q_emb"), col("q_nrm")).distinct())
-    adcSelectRerank(scored, qSmall, c, k, rerank, nq)
+    sortSelectRerank(scoredBy(qB), qSmall, c, k, rerank, nq)
   }
 
   /** Shared IVF probe + exact re-rank tail: queries pick their nProbe

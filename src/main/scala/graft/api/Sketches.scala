@@ -211,11 +211,12 @@ object Sketches {
   * heap per key PER TASK — a task that sees rows of every key holds
   * keys × k entries, and N parallel tasks hold N× that. Fine for
   * small k (q30's bounded top-k) or key-partitioned inputs; for
-  * large k × broadcast-shaped keys (every task sees all keys — the
-  * ADC candidate selection at measured-rerank budgets) the aggregate
-  * stops fitting and a rank-over-window formulation is the
-  * memory-bounded tool — see
-  * [[Similarity.PqHeapSelectMaxKey]] for the switch this repo ships. */
+  * large k × broadcast-shaped keys (every task sees all keys) the
+  * aggregate stops fitting and a rank-over-window formulation is the
+  * memory-bounded tool. The PQ query tail does not use this
+  * aggregate: it merges the same [[graft.functions.Aggregators.TopK]]
+  * buffers on the driver, under the [[Similarity.PqHeapSelectMaxKey]]
+  * ceiling. */
 object TopKPerKey {
   import graft.functions.Aggregators.{Priced, TopK, TopKAgg}
 

@@ -163,12 +163,13 @@ object Aggregators {
       * buffer's size. A binary search finds the first slot the entry is
       * [[better]] than — strictly, so an equal entry stays ahead of it —
       * and one copy shifts the slots below it (the last one drops off a
-      * full buffer). Scores must not be NaN: a NaN is neither better nor
-      * worse than any entry, which no sorted order can hold. */
+      * full buffer; a zero-size buffer takes nothing). Scores must not
+      * be NaN: a NaN is neither better nor worse than any entry, which
+      * no sorted order can hold. */
     def insert(b: Array[Byte], p: Double, x: Long): Array[Byte] = {
+      if (rejects(b, p, x)) return b
       val k = (b.length - Header) / Slot
       val n = count(b)
-      if (n == k && !better(p, x, price(b, k - 1), id(b, k - 1))) return b
       var lo = 0
       var hi = n
       while (lo < hi) {
@@ -190,8 +191,7 @@ object Aggregators {
       * would dominate the whole aggregate). */
     def rejects(b: Array[Byte], p: Double, x: Long): Boolean = {
       val k = (b.length - Header) / Slot
-      val n = count(b)
-      n == k && !better(p, x, price(b, k - 1), id(b, k - 1))
+      count(b) == k && (k == 0 || !better(p, x, price(b, k - 1), id(b, k - 1)))
     }
 
     def mergeInto(a: Array[Byte], b: Array[Byte]): Array[Byte] = {

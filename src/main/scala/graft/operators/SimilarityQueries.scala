@@ -139,8 +139,9 @@ object SimilarityQueries {
   // encoded once to PqM sub-quantizer codes (PqM bytes/vector at
   // Ks ≤ 256 vs 4·dim float bytes), queries score candidates by M table
   // lookups against a broadcast LUT, the top-PqRerank per query re-rank
-  // exactly. Candidate selection is the bounded TopKPerKey aggregate —
-  // map-side pre-reduction, not a full-corpus window sort.
+  // exactly. Candidate selection keeps a bounded top-rerank buffer per
+  // query in each task, merged on the driver — not a full-corpus window
+  // sort (Similarity.adcTopK).
   // Geometry from the r12 sweep vs the s1 exact baseline (STATUS r12;
   // the fixture embeddings are near-uniform — PQ's hard case for
   // NOISE, though the r15 clustered probe showed concentration brings

@@ -1390,40 +1390,49 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         math.rint(r.getDouble(2) * 1e9), r.getInt(3))).toSet
-    // nq (5) x rerank (300) = 1500 <= default ceiling: heap path
-    val heap = rows(S.pqTopK(emb, q, "vid", "v", 5, 8, 16, 1, 300))
-    // force the sort path for the SAME call; identical output rows —
-    // first at the derived salt count (max(2, partitions/queries)),
-    // then across pinned salt counts including salts that do not
-    // divide the candidate set and a degenerate single salt: the
-    // phase-1 local top-rerank must be a superset of the global
-    // top-rerank at ANY salting, or the two-phase rank is wrong
-    spark.conf.set(S.PqHeapSelectMaxKey, "100")
-    try {
-      val sorted = rows(S.pqTopK(emb, q, "vid", "v", 5, 8, 16, 1, 300))
-      assert(sorted == heap)
-      for (salts <- Seq(1, 3, 16)) {
-        spark.conf.set(S.PqSortSelectSaltsKey, salts.toString)
-        try assert(rows(S.pqTopK(emb, q, "vid", "v", 5, 8, 16, 1, 300)) == heap,
-          s"salted two-phase rank diverged at salts=$salts")
-        finally spark.conf.unset(S.PqSortSelectSaltsKey)
-      }
-      // r20 phase-2 fold tree: byte-identical at every fold — a
-      // non-dividing fold (3 over 16 salts: levels 16→6→2→1), the
-      // minimum fold, and fold ≥ salts (one level — the r19 shape).
-      // The survivor invariant must hold at EVERY level or rows with
-      // globally-top adc in a merged-late group are lost.
-      spark.conf.set(S.PqSortSelectSaltsKey, "16")
+    // the same comparison for every verb on the ADC tail
+    val books = S.pqTrain(emb, "vid", "v", 8, 16, 1)
+    val index = S.pqEncodeIndex(emb, books, "vid", "v").withColumnRenamed("vec_id", "vid")
+    val verbs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pqTopK" -> (() => S.pqTopK(emb, q, "vid", "v", 5, 8, 16, 1, 300)),
+      "pqTopKFromIndex" -> (() => S.pqTopKFromIndex(index, emb, q, books, "vid", "v", 5, 300)),
+      "ivfadcTopK" -> (() => S.ivfadcTopK(emb, q, "vid", "v", 5, 4, 1, 8, 16, 1, 2, 300)))
+    for ((verb, call) <- verbs) withClue(s"[$verb] ") {
+      // nq (5) x rerank (300) = 1500 <= default ceiling: heap path
+      val heap = rows(call())
+      // force the sort path for the SAME call; identical output rows —
+      // first at the derived salt count (max(2, partitions/queries)),
+      // then across pinned salt counts including salts that do not
+      // divide the candidate set and a degenerate single salt: the
+      // phase-1 local top-rerank must be a superset of the global
+      // top-rerank at ANY salting, or the two-phase rank is wrong
+      spark.conf.set(S.PqHeapSelectMaxKey, "100")
       try {
-        for (fold <- Seq(2, 3, 64)) {
-          spark.conf.set(S.PqSortSelectFoldKey, fold.toString)
-          try assert(
-            rows(S.pqTopK(emb, q, "vid", "v", 5, 8, 16, 1, 300)) == heap,
-            s"phase-2 fold tree diverged at fold=$fold")
-          finally spark.conf.unset(S.PqSortSelectFoldKey)
+        val sorted = rows(call())
+        assert(sorted == heap)
+        for (salts <- Seq(1, 3, 16)) {
+          spark.conf.set(S.PqSortSelectSaltsKey, salts.toString)
+          try assert(rows(call()) == heap,
+            s"salted two-phase rank diverged at salts=$salts")
+          finally spark.conf.unset(S.PqSortSelectSaltsKey)
         }
-      } finally spark.conf.unset(S.PqSortSelectSaltsKey)
-    } finally spark.conf.unset(S.PqHeapSelectMaxKey)
+        // r20 phase-2 fold tree: byte-identical at every fold — a
+        // non-dividing fold (3 over 16 salts: levels 16→6→2→1), the
+        // minimum fold, and fold ≥ salts (one level — the r19 shape).
+        // The survivor invariant must hold at EVERY level or rows with
+        // globally-top adc in a merged-late group are lost.
+        spark.conf.set(S.PqSortSelectSaltsKey, "16")
+        try {
+          for (fold <- Seq(2, 3, 64)) {
+            spark.conf.set(S.PqSortSelectFoldKey, fold.toString)
+            try assert(
+              rows(call()) == heap,
+              s"phase-2 fold tree diverged at fold=$fold")
+            finally spark.conf.unset(S.PqSortSelectFoldKey)
+          }
+        } finally spark.conf.unset(S.PqSortSelectSaltsKey)
+      } finally spark.conf.unset(S.PqHeapSelectMaxKey)
+    }
   }
 
   test("routed PQ path: one concentration sample per cold call, zero per cached hit, and a stale cached stat cannot break totality") {

@@ -1512,7 +1512,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     * full-corpus window sort) are re-scored by exact cosine against
     * the base table, and the final top-`k` of those is returned. Below
     * [[PqHeapSelectMaxKey]] the query tail is [[adcTopK]]: one query
-    * collect, one ADC-selection job, one re-rank job, no shuffle.
+    * collect, one ADC-selection job, one re-rank job; no scored row is
+    * shuffled.
     *
     * Approximation contract: a true neighbor outside the ADC top-R is
     * lost (quantization error decides R's recall); within the returned

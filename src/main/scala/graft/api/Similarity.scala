@@ -1743,11 +1743,10 @@ object Similarity extends org.apache.spark.internal.Logging {
     * count, and the result is a one-partition frame of the driver-held
     * rows; without it step 3 runs when the returned one-partition frame
     * is read (one job, its buffers merged in one reduce task).
-    * Output (q_id, n_id: long, cos, rank): the rows, types and
-    * nullability of the SQL tail it replaced, bit for bit. Task and
-    * driver memory: queries × rerank entries of 16 B, bounded by
-    * [[PqHeapSelectMaxKey]]. A zero divisor raises what the SQL tail
-    * raised ([[sqlDivide]]). */
+    * Output (q_id in the query ids' type and nullability, n_id: long,
+    * cos, rank), rank 1..k per query. Task and driver memory: queries ×
+    * rerank entries of 16 B, bounded by [[PqHeapSelectMaxKey]]. A zero
+    * divisor raises Spark SQL's errors ([[sqlDivide]]). */
   private def adcTopK(queries: Array[Query], qField: StructField,
       candidates: Candidates, rows: DataFrame, cNormed: DataFrame,
       k: Int, rerank: Int, sizeCheck: Option[Long => Unit]): DataFrame = {
@@ -1848,11 +1847,10 @@ object Similarity extends org.apache.spark.internal.Logging {
     lo
   }
 
-  /** Spark SQL's `num / den` on doubles, as the SQL tail computed its
-    * scores: a zero divisor raises DIVIDE_BY_ZERO under ANSI, and the
-    * null it yields otherwise raises NOT_NULL_ASSERT_VIOLATION — what
-    * the tail's typed selection aggregate raised on a null score (a
-    * zero-norm vector has no cosine). */
+  /** Spark SQL's `num / den` on doubles, required non-null: a zero
+    * divisor (a zero-norm vector has no cosine) raises DIVIDE_BY_ZERO
+    * under ANSI, and otherwise the NOT_NULL_ASSERT_VIOLATION a typed
+    * aggregate raises on a null score. */
   private def sqlDivide(num: Double, den: Double, ansi: Boolean): Double =
     if (den != 0.0) num / den
     else notNull(Divide(Literal(num), Literal(den),

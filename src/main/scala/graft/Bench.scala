@@ -77,8 +77,7 @@ import org.apache.spark.sql.SparkSession
   *    mapPartitions, timed once through mm8 (decode + banded dedup,
   *    the capstone that also moves shuffle bytes); timing seven more
   *    decode variants re-measures the same codec loop.
-  *  - ex5 (Θ(increment) continue-pack, sub-second by design — its
-  *    scaling story lives in the ScaleProbe tables, not the bench).
+  *  - ex5 (Θ(increment) continue-pack, sub-second by design).
   */
 object Bench {
   /** One warm measurement: (wallClockSec — -1.0 on failure, bytesRead,
@@ -116,7 +115,7 @@ object Bench {
     * shaped queries are unaffected (their row count depends on the
     * full computation). The noop sink — Spark's standard benchmarking
     * sink — executes the complete plan and iterates every row without
-    * writing anything. Shared by Bench and ScaleProbe so the two
+    * writing anything. Shared by Bench and StageProbe so the two
     * measurement mains cannot drift on what "ran the query" means. */
   private[graft] def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
@@ -126,8 +125,8 @@ object Bench {
     * local-disk sort shuffle — the deployment-shaped configuration.
     * A `graftfs://` URI also registers the local-backed stand-in
     * FileSystem ([[graft.mr.GraftObjectFs]]) so the leg runs without
-    * external configuration. Shared by Bench and ScaleProbe so the
-    * two measurement mains cannot drift on how the leg is wired. */
+    * external configuration. Shared by Bench, Verify and ElasticProbe so the
+    * mains cannot drift on how the leg is wired. */
   private[graft] def withShuffleEnv(
       builder: SparkSession.Builder): SparkSession.Builder =
     sys.env.get("SPARK_GRAFT_SHUFFLE_DIR").fold(builder) { dir =>
@@ -170,30 +169,6 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_S3_ACCESS", "graft-bench"))
       .config("spark.hadoop.fs.s3g.secret.key",
         sys.env.getOrElse("SPARK_GRAFT_S3_SECRET", "graft-bench"))
-  }
-
-  /** Task-slot count for a PROBE session (ScaleProbe):
-    * the requested `SPARK_GRAFT_CPUS` (default 32), capped under the
-    * object-store shuffle leg by heap ÷ per-slot budget. A probe JVM
-    * is simultaneously driver, all N executors AND the FS-shuffle
-    * client; the r13 sf100 embedding campaign measured ~250 MB/slot
-    * peak on that leg — 32 slots exactly exhaust the 8 g default heap
-    * (one warm pass OOM'd in Spark's spill read-ahead), which forced
-    * a labeled 12 g run. Deriving slots from the heap
-    * (`SPARK_GRAFT_SLOT_MB`, default 320) keeps the campaign at the
-    * default heap with a few fewer slots instead of a bigger driver.
-    * Local-sort legs are uncapped (measured clean at 32 × 8 g — and
-    * capping them would silently change the probe baseline). In
-    * production each executor owns its heap, so the per-slot budget,
-    * not the corpus, sets this bound — the cap models exactly that. */
-  private[graft] def probeCpus: String = {
-    val req = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val n = if (sys.env.contains("SPARK_GRAFT_SHUFFLE_DIR")) {
-      val slotMb = sys.env.getOrElse("SPARK_GRAFT_SLOT_MB", "320").toInt
-      val heapMb = (Runtime.getRuntime.maxMemory() / (1024L * 1024L)).toInt
-      math.max(4, math.min(req, heapMb / slotMb))
-    } else req
-    n.toString
   }
 
   /** What the artifact's `shuffle` field should say for this run. */

@@ -100,7 +100,7 @@ object GraftSession {
         .config("spark.graft.shuffle.dir", dir)
         .config("spark.io.compression.codec", shuffleCodec)
       // the graftfs:// object-store stand-in self-registers, same as
-      // in Bench/ScaleProbe/Verify (s3a:// in production registers
+      // in Bench/Verify (s3a:// in production registers
       // itself via hadoop-aws's ServiceLoader entry instead)
       if (dir.startsWith("graftfs:")) graft.mr.GraftObjectFs.register(b)
       // s3g:// — the repo's own S3-protocol FS: wire the impl class

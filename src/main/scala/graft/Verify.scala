@@ -8,7 +8,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_SHUFFLE_DIR runs the WHOLE oracle gate under the
-    // object-store shuffle (same env contract as Bench/ScaleProbe) —
+    // object-store shuffle (same env contract as Bench) —
     // 80/80 hash-match in the deployment-shaped configuration.
     // SPARK_GRAFT_MASTER=lambda://<fn> additionally runs it on the FaaS
     // backend (leased process executors; a named function self-deploys

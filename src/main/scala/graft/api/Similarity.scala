@@ -97,10 +97,9 @@ object Similarity extends org.apache.spark.internal.Logging {
     * within-cluster cosine gaps (~5× on the 8-cluster fixture) below
     * ADC's resolution, so the required R transitions toward the
     * candidate CLUSTER's population (R = clusterSize read recall
-    * 1.0000 exactly; the √n auto budget read 0.36 at 200 k). On such
+    * 1.0000 exactly; the √n budget read 0.36 at 200 k). On such
     * corpora the multi-probe LSH family is the better tool (s2p read
-    * 0.96 scale-free there) — [[rerankForMeasured]] measures the
-    * budget at the corpus's own concentration. */
+    * 0.96 scale-free there). */
   def rerankFor(n: Long, k: Int): Int = {
     if (n <= 1) return math.max(1, k)
     val curve = math.ceil(
@@ -123,111 +122,9 @@ object Similarity extends org.apache.spark.internal.Logging {
       s"sqrt(n/$RerankCalibN) = $auto (floor $floor). A tuning-scale " +
       "constant collapses recall as the corpus grows (measured r13: " +
       "R=50 read recall@5 0.35 at 2M vectors vs 0.91 at the " +
-      "corpus-scaled R=5000). Use the auto-sized overload (no rerank " +
-      "arg), measure the budget for this corpus with " +
-      "Similarity.rerankForMeasured, " +
-      s"or set $RerankSizingConfKey=warn|off.")
-  }
-
-  /** Session conf governing the PQ-family AUTO paths' concentration
-    * floor ([[pqConcVerdict]]): `enforce` (default) throws
-    * when the measured corpus concentration sits in the regime where
-    * the √n rerank curve is REFUTED, `warn` logs the measurement and
-    * proceeds, `off` skips (skips the sample job too). The pinned
-    * paths are exempt by design — [[RerankSizingConfKey]] already
-    * polices them, and [[rerankForMeasured]]'s output (the measured
-    * remedy this floor names) is consumed through a pin. */
-  val PqConcConfKey = "spark.graft.pq.concfloor"
-
-  /** Per-query COLLAPSE LEVEL: the kth-NN cosine at or above which a
-    * query's neighborhood sits in the regime where the √n rerank
-    * curve is refuted. Through r16 this value was compared against
-    * the 10th-PERCENTILE statistic; since r17 the floor trips on the
-    * FRACTION of queries at/above the level ([[PqConcFrac]]) — the
-    * percentile form is measurably blind to mixtures.
-    *
-    * MEASURED calibration. r16 (STATUS r16, over the r15 recall
-    * campaign's own fixtures): the 10th-percentile 5th-NN cosine
-    * ([[annRoute]]'s `stat`, k = 5, sampleN = 1024) reads
-    * 0.267–0.326 on every diffuse fixture (sf0.001 / sf0.01 / sf0.1
-    * sources and the 20 k / 200 k / 2 M sign-cipher decades — the
-    * corpora the √n curve was VALIDATED on at 0.91–0.97 recall@5) and
-    * 0.837–0.838 on the clustered decades (where the same curve
-    * MEASURED 0.23–0.47), so 0.6 separates the two regimes PER QUERY
-    * with ≥ 1.8× margin on the diffuse side. r17
-    * (STATUS r17, λ ∈ {25, 50, 75}% clustered over the diffuse
-    * base at 20 k / 200 k): per-query kth-NN cosines stay bimodal in
-    * mixtures — diffuse-side medians 0.42–0.49, clustered-side
-    * 0.86–0.89 — so the LEVEL still separates cleanly; what failed
-    * there was the 10th-percentile AGGREGATION (it read 0.275–0.296,
-    * the diffuse band, at every λ ≤ 0.75 while the auto curve
-    * collapsed to 0.58/0.47 at 200 k), which is why the floor now
-    * trips on the at-level FRACTION instead ([[PqConcFrac]]). */
-  val PqConcStatFloor = 0.6
-
-  /** Tolerated concentrated-query share for the PQ auto paths: the
-    * floor trips when more than this fraction of sample queries sit
-    * at/above the [[PqConcStatFloor]] collapse level. 0.1 = 1 − the 0.9
-    * recall target the calculators size for: if the concentrated
-    * slice collapsed to zero recall, a smaller share could not pull
-    * the composite below target, while a larger one provably can —
-    * measured r17: λ = 0.25 (frac ≈ 0.25) read 0.91 at 200 k with the
-    * auto budget right at the cluster population (marginal hold, one
-    * decade from collapse); λ = 0.5/0.75 read 0.58/0.47 where the
-    * measured remedy ([[rerankForMeasured]]) read 0.99 on the same
-    * corpora. The trip is deliberately conservative at small n
-    * (20 k mixtures still read 0.89–0.99 — there the remedy costs
-    * only ~1.2× the auto budget and reads ≥ 0.97). */
-  val PqConcFrac = 0.1
-
-  /** [[PqConcConfKey]]'s verdict: an AUTO-sized PQ-family call trips
-    * when it is about to run the √n rerank curve on a corpus where more
-    * than [[PqConcFrac]] of the query population sits in the curve's
-    * refuted regime: heavy manifold concentration
-    * compresses within-cluster cosine gaps below ADC's resolution, so
-    * the auto budget silently reads 0.23–0.47 recall@5 where R =
-    * cluster population reads 1.0000 (r15 clustered fixture, three
-    * decades). Since r17 the statistic is the at-level FRACTION, not
-    * the 10th percentile: the mixture campaign (STATUS r17)
-    * measured λ = 0.5/0.75 clustered mixtures collapsing the auto
-    * curve to 0.58/0.47 at 200 k while the percentile statistic sat
-    * at 0.28 — a 10% diffuse minority pins any low percentile in the
-    * diffuse band no matter how large the clustered mass. Costs one
-    * sample-sized statistic job ([[concentrationSample]]) per auto
-    * call; under `off` [[Guard.check]] never runs it. */
-  private def pqConcVerdict(cNormed: DataFrame, n: Long,
-      k: Int, what: String): Option[String] = {
-    // A corpus with n <= k rows cannot be in the collapse regime the
-    // floor polices (there is no "cluster population >> rerank budget"
-    // at that size, and the exact scan is affordable anyway) — and
-    // concentrationSample's n > k contract would hard-fail it, turning
-    // the r16 floor into a regression on previously-working tiny-corpus
-    // auto calls (warn mode could not proceed either, only off).
-    if (n <= k) {
-      logWarning(s"$what: corpus holds only $n rows (<= k = $k) — " +
-        "concentration floor skipped; a corpus this small cannot " +
-        "collapse the sqrt(n) rerank curve")
-      return None
-    }
-    val cs = concentrationSample(cNormed, "vec_id", "embedding", k, 1024,
-      Some(n))
-    Barrier.release(cs.sample)
-    if (cs.concFrac.isNaN || cs.concFrac < PqConcFrac) None
-    else Some(f"$what (auto-sized): ${100 * cs.concFrac}%.0f%% of " +
-      f"sampled queries have their ${k}th-NN cosine >= $PqConcStatFloor " +
-      f"(tolerated share ${100 * PqConcFrac}%.0f%%) — " +
-      "that query population sits outside the sqrt(n) rerank " +
-      "curve's validated regime (measured r15-r17: diffuse corpora " +
-      "hold 0.91-0.97 recall@5 on the curve; clustered ones read " +
-      "0.23-0.47, and MIXTURES collapse the same way while keeping " +
-      "a diffuse-looking 10th-percentile statistic — lambda=0.5/" +
-      "0.75 mixes at 200k read 0.58/0.47 on the auto budget where " +
-      "the measured remedy read 0.99; within-cluster cosine gaps " +
-      "compress below ADC's resolution, and recall returns only at " +
-      "R = cluster population). Use rerankForMeasured (pass its " +
-      "budget to the pinned overload), route with annTopK/annRoute " +
-      "(it takes the measured-rerank path on this shape), or set " +
-      s"$PqConcConfKey=warn|off.")
+      "corpus-scaled R=5000). Pin the calibrated budget " +
+      s"Similarity.rerankFor(n, k) = $auto, or set " +
+      s"$RerankSizingConfKey=warn|off.")
   }
 
   /** Session conf governing the IVFADC probe-width check: same
@@ -257,8 +154,8 @@ object Similarity extends org.apache.spark.internal.Logging {
       "this regime is PROBE-limited — true neighbors in unprobed " +
       "cells are unreachable at any rerank budget (measured r13: " +
       "nProbe 3->8 moved recall 0.70->0.87 at 200k vectors while 4x " +
-      "the residual codes moved it 0.70->0.73). Use the auto-sized " +
-      "overload (probeFor(nCells) cells), or set " +
+      "the residual codes moved it 0.70->0.73). Pin " +
+      s"Similarity.probeFor(nCells) = ${probeFor(nCells)}, or set " +
       s"$ProbeSizingConfKey=warn|off.")
   }
 
@@ -396,8 +293,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     * per-table rate WITHOUT re-shuffling the corpus (the r16 measured
     * lift: 0.26 → 0.91 recall@5 at 200 k), but the bucket count is
     * combinatorial in radius; past ~10% of the corpus per query the
-    * probe set approaches a scan and the PQ family's measured-rerank
-    * path is the honest tool (the r16 radius probe measured ~29% of
+    * probe set approaches a scan and the PQ family is the honest
+    * tool (the r16 radius probe measured ~29% of
     * the corpus per query at its hand-pinned radius-3 geometry —
     * target/r16_recall_radius.log — and named exactly this boundary). */
   val LshMaxCandFracKey = "spark.graft.lsh.maxcandfrac"
@@ -535,27 +432,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     ladder.find(g => g.tables <= maxTables &&
       (g.radius == 1 || lshCandFraction(g) <= maxFrac))
 
-  /** Non-throwing [[lshGeometryFor]]: Some(geometry) when some probe
-    * radius ≤ `maxRadius` fits the table cap (and, for escalated
-    * radii, the candidate budget), None when the (n, threshold)
-    * regime is outside banded LSH's envelope — the membership test
-    * [[annRoute]] routes on. Since r17 the envelope includes the
-    * radius ladder: mid-concentration corpora whose radius-1
-    * derivation busts the table cap now route LSH at radius 2–3
-    * (the r16-measured lift, 0.26 → 0.91 recall@5 at 200 k) instead
-    * of falling to the PQ family. */
-  def lshGeometryOption(n: Long, threshold: Double,
-      spark: org.apache.spark.sql.SparkSession,
-      recallTarget: Double = 0.9,
-      maxRadius: Int = MaxProbeRadius): Option[LshGeometry] = {
-    val maxTables = spark.conf.get(LshMaxTablesKey,
-      LshMaxTablesDefault.toString).toInt
-    val maxFrac = spark.conf.get(LshMaxCandFracKey,
-      LshMaxCandFracDefault.toString).toDouble
-    lshRadiusFit(lshRadiusLadder(n, threshold, recallTarget, maxRadius),
-      maxTables, maxFrac)
-  }
-
   /** Probe RADIUS for an ASYMMETRIC incremental generator against a
     * persisted signature asset of FIXED (tables, planes) geometry —
     * the r17 verdict's dd9 finding operationalized: a self-join pair
@@ -637,300 +513,6 @@ object Similarity extends org.apache.spark.internal.Logging {
           "admissible rung (an explicit recall floor)."
         Guard.trip(mode, msg)
         admissible.maxBy(_._2)._1
-    }
-  }
-
-  /** Test-only observability: total [[concentrationSample]] runs in
-    * this JVM — the spec-level pin for the router's documented cost
-    * contract ("one sample job per routed cold call, zero per cached
-    * hit"): a code path that silently re-pays the sample job moves
-    * this counter where wall-clock assertions would flake. */
-  private[graft] val concentrationSampleRuns =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** One concentration measurement: the barriered hash-stride sample,
-    * the 10th-percentile kth-NN cosine (`stat` — the LSH-envelope
-    * threshold: the similarity level the WEAKEST typical queries need
-    * recalled), the fraction of sample queries whose kth-NN cosine
-    * sits at or above the configured collapse level (`concFrac` — the
-    * PQ floor's statistic: how much of the query population lives in
-    * the regime where the √n curve is refuted), the stride, and the
-    * corpus count. Both statistics come from the SAME sample top-k
-    * job — adding the fraction costs one more column in the final
-    * tiny aggregate, not a second job. */
-  private final case class ConcSample(sample: DataFrame, stat: Double,
-      concFrac: Double, stride: Long, n: Long)
-
-  /** Shared sample + statistic construction behind [[annRoute]],
-    * [[rerankForMeasured]] and the PQ concentration floor (one
-    * implementation so the sample definition and the kth-NN
-    * percentile cannot drift between them, and callers that need
-    * several of (sample, stat, n) pay ONE corpus count). The sample is
-    * a deterministic hash-stride subset of ~`sampleN` rows (no sort,
-    * no full shuffle — one corpus scan + a sample-sized exact top-k
-    * job), densely re-keyed for [[rerankForMeasured]]'s δ measurement
-    * (pqTrain seeds by id < ks, and a hash-strided subset of a sparse
-    * id space would select ~no seeds); relabeling cannot change the
-    * statistic — per-query top-k membership may reorder under exact
-    * cosine TIES, but the kth cosine VALUE (and hence the percentile)
-    * is tie-invariant. Sampling UNDERESTIMATES the true kth-NN cosine
-    * (a sparser corpus has farther neighbors), which errs toward the
-    * PQ route — the general-purpose family — never toward
-    * over-trusting LSH. Pass `nKnown` when the caller already counted
-    * the corpus. Callers must [[Barrier.release]] the sample. */
-  private def concentrationSample(corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int, sampleN: Int,
-      nKnown: Option[Long] = None): ConcSample = {
-    concentrationSampleRuns.incrementAndGet()
-    val n = nKnown.getOrElse(corpus.count())
-    require(n > k, s"corpus must hold more than k=$k rows, got $n")
-    val stride = math.max(1L, n / sampleN)
-    // The window is over ≤ ~sampleN rows — single-partition by design.
-    val sample = Barrier(corpus
-      .filter(pmod(xxhash64(col(idCol)), lit(stride)) === 0)
-      .select(col(idCol).as("_src"), col(vecCol))
-      .withColumn(idCol,
-        row_number().over(Window.orderBy(col("_src"))).cast("long") - 1)
-      .select(col(idCol), col(vecCol)))
-    val kk = math.min(k.toLong, sample.count() - 1).toInt
-    require(kk >= 1, "hash-stride sample too small to measure concentration")
-    val row = cosineTopK(sample, sample, idCol, vecCol, kk)
-      .groupBy("q_id").agg(min("cos").as("kcos"))
-      .agg(expr("percentile(kcos, 0.1)"),
-        avg((col("kcos") >= PqConcStatFloor).cast("double"))).head
-    ConcSample(sample, row.getDouble(0), row.getDouble(1), stride, n)
-  }
-
-  /** MEASURED-concentration rerank budget — the r15 probe's
-    * refutation of the √n curve on concentrated corpora, closed as a
-    * calculator: on heavily-clustered data ADC routes candidates to
-    * the right cluster but resolves little within it, so the budget
-    * must cover the CONFUSABLE population — everything whose true
-    * cosine sits within ADC's resolution of the kth-neighbor level.
-    * Both factors are MEASURED on the same hash-stride sample as
-    * [[annRoute]]'s statistic: δ = the 90th-percentile |adc − true|
-    * scoring error of codebooks trained on the sample at the caller's
-    * own (m, ks, iters) geometry, and the population = the mean count
-    * of sample neighbors with cosine ≥ (kth-NN statistic − δ), scaled
-    * back by the sampling stride. Floored at the
-    * corpus-calibrated [[rerankFor]] curve (on diffuse corpora the
-    * confusable set is ~k·stride — far under the curve, so this
-    * degenerates to the measured-correct √n path) and capped at n−1.
-    * Measured (r15 clustered fixture): the estimate lands at the
-    * cluster population, where recall reads exactly 1.0 vs 0.36 at
-    * the √n budget. Costs one corpus count + two sample-sized jobs —
-    * pass the result to the pinned [[pqTopK]]/[[pqTopKFromIndex]]
-    * (it always satisfies the sizing floor). For corpora
-    * concentrated enough to route "lsh" ([[annRoute]]), prefer the
-    * LSH family outright: covering a cluster with rerank is the
-    * honest-but-expensive PQ fallback. */
-  def rerankForMeasured(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, m: Int = 8, ks: Int = 64, iters: Int = 2,
-      sampleN: Int = 1024): Int = {
-    import graft.functions.PqFunctions
-    val cs = concentrationSample(corpus, idCol, vecCol, k, sampleN)
-    val (sample, stat, stride, n) = (cs.sample, cs.stat, cs.stride, cs.n)
-    // ADC resolution δ at the CALLER's codebook geometry, measured on
-    // the sample itself: train books on the sample, score every
-    // sample pair both ways, take the 90th-percentile |adc − true|.
-    val e = Barrier(normed(sample, idCol, vecCol))
-    val booksRow = trainedBooksRow(sample, idCol, vecCol, m, ks, iters)
-    val index = pqIndexOf(e, booksRow)
-      .join(e.select(col("vec_id"), col("embedding").as("c_emb")), "vec_id")
-    val qB = e.crossJoin(broadcast(booksRow))
-      .select(col("vec_id").as("qa"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"),
-        PqFunctions.pqLut(col("books"), col("embedding")).as("lut"))
-    val adcCos = PqFunctions.pqAdc(col("lut"), col("codes")) /
-      (col("q_nrm") * col("nrm"))
-    val trueCos = VectorFunctions.cosinePre(
-      VectorFunctions.dot(col("q_emb"), col("c_emb")),
-      col("q_nrm"), col("nrm"))
-    val scored = Barrier(index.join(broadcast(qB), col("qa") =!= col("vec_id"))
-      .select(col("qa"), trueCos.as("tc"), abs(adcCos - trueCos).as("err")))
-    val delta = scored.agg(expr("percentile(err, 0.9)")).head.getDouble(0)
-    // CONFUSABLE population: candidates whose true cosine sits within
-    // δ of the kth-neighbor level — the set ADC cannot reliably rank
-    // below a true neighbor, so the budget must cover it. Averaged
-    // over sample points, scaled back by the stride.
-    val conf = scored.filter(col("tc") >= stat - delta)
-      .groupBy("qa").agg(count(lit(1)).as("cm"))
-      .agg(coalesce(avg("cm"), lit(0.0))).head.getDouble(0)
-    Barrier.release(scored)
-    Barrier.release(e)
-    Barrier.release(sample)
-    val r = math.min(n - 1,
-      math.max(rerankFor(n, k).toLong,
-        math.ceil(conf * stride).toLong)).toInt
-    // The derived budget IS the family signal: when covering the
-    // confusable population means re-ranking a meaningful fraction of
-    // the corpus per query, PQ is the wrong tool at this
-    // concentration/scale — the r15 third-decade probe DNF'd the
-    // R ≈ 12%-of-corpus leg after 45 min where multi-probe LSH (s2p)
-    // answered the same corpus at 0.98 recall in minutes.
-    if (r.toLong * 20 > n)
-      logWarning(f"rerankForMeasured derived R = $r — " +
-        f"${100.0 * r / n}%.0f%% of the $n-row corpus. At this " +
-        "concentration/scale the PQ family must re-rank a whole " +
-        "cluster per query; prefer the multi-probe LSH family " +
-        "(annRoute/annTopK or lshTopK), which held 0.96-0.98 recall " +
-        "scale-free on such corpora (r15 clustered probe).")
-    r
-  }
-
-  /** The router's decision record: the chosen family, the
-    * 10th-percentile kth-NN cosine (`stat` — the LSH envelope's
-    * sizing threshold), the concentrated-query fraction (`concFrac` —
-    * the share of sample queries whose kth-NN cosine sits at or above
-    * [[PqConcStatFloor]], the PQ floor's collapse statistic), and the
-    * derived LSH geometry when that route was taken. Both statistics
-    * come from the router's ONE sample job. */
-  final case class AnnRoute(family: String, stat: Double,
-      concFrac: Double, geometry: Option[LshGeometry])
-
-  /** Which ANN family the corpus SHAPE favors — the r15
-    * clustered-fixture measurement operationalized (STATUS r15 item
-    * 2: which family wins flips with corpus concentration — banded
-    * multi-probe LSH held 0.96–0.98 recall@5 scale-free on
-    * manifold-concentrated corpora where the PQ family's √n budget
-    * read 0.36; on diffuse corpora the positions reverse). The
-    * routing criterion is PRINCIPLED, not a magic threshold: LSH wins
-    * iff its sizing calculator can hold the recall target at the
-    * measured concentration inside the table cap (and, since r17, the
-    * radius ladder) — i.e. envelope membership ([[lshGeometryOption]])
-    * at the sample's 10th-percentile statistic. The returned record
-    * also carries the concentrated-query FRACTION, which decides the
-    * PQ route's budget (measured r17: mixtures keep a diffuse-looking
-    * percentile while their clustered majority collapses the √n
-    * curve — the fraction is the statistic that sees them).
-    *
-    * `cacheDir` persists the statistic as a sidecar file (not yet an
-    * [[Asset.Sidecar]] of the index generation): concentration is a corpus SHAPE property that drifts
-    * slowly, so a routed daily path should not re-pay the sample
-    * top-k job per call. The file `<cacheDir>/_concstat` (atomic
-    * write-to-temp + rename, any Hadoop FS — park it next to the
-    * corpus's signature/PQ index assets) holds one line
-    * `v2 <stat> <frac> <n> <k> <sampleN>`; it is REUSED only when
-    * (k, sampleN) match and the current corpus count sits within 2×
-    * of the cached one — past that the corpus has grown/shrunk a
-    * decade's worth and the shape is re-measured (and re-cached).
-    * Pre-r17 `v1` lines (percentile only) and unparseable files read
-    * as a MISS. The envelope test always uses the CURRENT count; only the
-    * sample job is skipped on a hit. Delete the file to force a
-    * re-measure. */
-  def annRoute(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int = 5, sampleN: Int = 1024,
-      cacheDir: Option[String] = None): AnnRoute = {
-    val spark = corpus.sparkSession
-    // one corpus count, threaded into both the concentration
-    // measurement and the envelope test (on a computed, non-parquet
-    // corpus a second count would replay the whole lineage)
-    val n = corpus.count()
-    // totality on tiny corpora: concentrationSample contracts n > k;
-    // below that there is no shape to measure and no collapse regime —
-    // route "pq" with NaN, and the routed diffuse path's exact-affordable
-    // auto budget answers it (the floor skips n <= k for the same reason)
-    if (n <= k) return AnnRoute("pq", Double.NaN, 0.0, None)
-    def measure(): (Double, Double) = {
-      val cs = concentrationSample(corpus, idCol, vecCol, k, sampleN, Some(n))
-      Barrier.release(cs.sample)
-      (cs.stat, cs.concFrac)
-    }
-    val (stat, frac) = cacheDir.fold(measure()) { dir =>
-      val file = new org.apache.hadoop.fs.Path(dir, "_concstat")
-      val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val cached = (try {
-        val in = fs.open(file)
-        try Some(scala.io.Source.fromInputStream(in).mkString.trim)
-        finally in.close()
-      } catch { case _: java.io.IOException => None })
-        .flatMap { line =>
-          // Try: a corrupted cache (truncated write, manual edit, a
-          // non-numeric token) degrades to a MISS, never a crash
-          scala.util.Try {
-            line.split("\\s+") match {
-              case Array("v2", s, f, cn, ck, cs)
-                if ck.toInt == k && cs.toInt == sampleN &&
-                  n <= 2 * cn.toLong && cn.toLong <= 2 * n =>
-                Some((s.toDouble, f.toDouble))
-              case _ => None
-            }
-          }.toOption.flatten
-        }
-      cached.getOrElse {
-        val (st, fr) = measure()
-        val tmp = new org.apache.hadoop.fs.Path(dir, "_concstat.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(s"v2 $st $fr $n $k $sampleN\n"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        fs.delete(file, false)
-        require(fs.rename(tmp, file), s"failed to publish $file")
-        (st, fr)
-      }
-    }
-    val g =
-      if (stat.isNaN) None
-      else lshGeometryOption(n, stat, spark)
-    AnnRoute(if (g.isDefined) "lsh" else "pq", stat, frac, g)
-  }
-
-  /** ADAPTIVE top-k: measure the corpus's concentration, route to the
-    * ANN family that shape favors, run that family's auto-sized path —
-    * the "just answer it" verb for a caller with no recall
-    * measurement of their own. LSH route: [[lshTopK]] at the geometry
-    * derived FOR the measured concentration (corpus-side cost
-    * n·tables slim rows). PQ route: [[pqTopK]]'s auto overload
-    * (corpus-calibrated √n rerank) at the given codebook geometry —
-    * UNLESS the measured concentrated-query fraction already sits
-    * past the floor's tolerated share while the LSH envelope doesn't
-    * hold (concentrated or MIXED corpora outside the table cap and
-    * radius ladder): there the router pays the honest-but-expensive
-    * PQ fallback itself, [[rerankForMeasured]] through the pinned
-    * overload, instead of handing the caller an auto path the
-    * concentration floor would (rightly) reject — measured
-    * (STATUS r17): on λ = 0.5/0.75 clustered mixtures at 200 k
-    * the auto curve reads 0.58/0.47 while this fallback reads
-    * 0.99. The router is therefore TOTAL: every corpus shape gets an
-    * answer with a measured-recall story. Output ≡ the routed verb
-    * exactly (property-pinned in DedupSimilaritySpec) — this adds a
-    * routing decision, never a new result semantics, so the routed
-    * verb's oracle certifies it transitively. Routing cost: two
-    * metadata-cheap counts + one sample-sized exact top-k job, or
-    * only the counts when `cacheDir` serves the statistic
-    * ([[annRoute]]; pinned by the [[concentrationSampleRuns]] spec).
-    * (The concentrated-PQ fallback's [[rerankForMeasured]] still
-    * samples when taken — it measures ADC resolution at the caller's
-    * codebook geometry, not just the statistic.) */
-  def annTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      m: Int = 8, ks: Int = 64, iters: Int = 2,
-      sampleN: Int = 1024, cacheDir: Option[String] = None): DataFrame = {
-    val route = annRoute(corpus, idCol, vecCol, k, sampleN, cacheDir)
-    if (route.family == "lsh") {
-      val geom = route.geometry.get
-      lshTopK(corpus, queries, idCol, vecCol, k,
-        geom.tables, geom.planes, geom.probes, geom.radius)
-    } else if (!route.concFrac.isNaN && route.concFrac >= PqConcFrac)
-      pqTopK(corpus, queries, idCol, vecCol, k, m, ks, iters,
-        rerankForMeasured(corpus, idCol, vecCol, k, m, ks, iters, sampleN))
-    else {
-      // Diffuse (or unmeasurably small) route: the router just
-      // produced the statistics — measured them, or served them from
-      // the `_concstat` sidecar — and the concentrated share sits
-      // under the floor's tolerance. Calling the public auto overload
-      // here would re-run the concentration floor's sample job (a
-      // SECOND sample-sized exact top-k per routed call, contradicting
-      // the documented one-sample routing cost — and on a sidecar
-      // hit, re-paying the exact job the sidecar exists to skip);
-      // worse, a stale cached statistic below the floor beside a
-      // freshly-measured one above it would make enforce mode throw
-      // INSIDE the routed call, breaking the router's totality. The
-      // routing decision IS the validation; run the auto-sized impl
-      // directly.
-      val c = Barrier(normed(corpus, idCol, vecCol))
-      val n = c.count()
-      pqTopKImpl(c, queries, idCol, vecCol, k, m, ks, iters, rerankFor(n, k))
     }
   }
 
@@ -1080,8 +662,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     * the target; true top-k entries BELOW it (diffuse corpora) remain
     * the PQ/IVF family's job, and a simFloor the calculator cannot
     * hold inside the table cap fails loud naming that family. The
-    * corpus count is one metadata-only job on a parquet-backed frame
-    * (the [[pqTopK]] auto overload's contract). */
+    * corpus count is one metadata-only job on a parquet-backed
+    * frame. */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, simFloor: Double): DataFrame = {
     val g = lshGeometryFor(corpus.count(), simFloor, corpus.sparkSession)
@@ -1510,10 +1092,10 @@ object Similarity extends org.apache.spark.internal.Logging {
     * approximate cosine. The `rerank` best ADC candidates per query
     * (O(rerank) state per query, merged on the driver — NOT a
     * full-corpus window sort) are re-scored by exact cosine against
-    * the base table, and the final top-`k` of those is returned. Below
-    * [[PqHeapSelectMaxKey]] the query tail is [[adcTopK]]: one query
-    * collect, one ADC-selection job, one re-rank job; no scored row is
-    * shuffled.
+    * the base table, and the final top-`k` of those is returned. The
+    * query tail is [[adcTopK]]: one query collect, then one
+    * ADC-selection job and one re-rank job per query chunk (one chunk
+    * below [[PqHeapSelectMaxKey]]); no scored row is shuffled.
     *
     * Approximation contract: a true neighbor outside the ADC top-R is
     * lost (quantization error decides R's recall); within the returned
@@ -1525,16 +1107,11 @@ object Similarity extends org.apache.spark.internal.Logging {
     * exceeds the true kth-neighbor gap grows ~linearly in n, so
     * holding R fixed while the corpus grows collapses recall (0.90 at
     * the 20 k tuning-fixture decade → 0.43/0.40 at 200 k/2 M with R = 50);
-    * R ∝ n restores it. Concentration does NOT relax the knob — the
-    * r15 clustered-fixture measurement read the √n auto budget at
-    * 0.36 recall where R = clusterSize read exactly 1.0 (see
-    * [[rerankFor]]'s caveat) — so size R at the operating scale AND
-    * concentration ([[rerankForMeasured]]) rather than shipping the
-    * tuning-scale constant. Since r14 this is
-    * ENFORCED, not advisory: a pinned rerank more than [[RerankBand]]×
-    * below the calibrated [[rerankFor]] curve throws (conf-gated,
-    * [[RerankSizingConfKey]]), and the no-rerank overload derives the
-    * budget from the corpus count. */
+    * R ∝ n restores it; size it with [[rerankFor]] (and see its
+    * concentration caveat) rather than shipping the tuning-scale
+    * constant. Since r14 this is ENFORCED, not advisory: a rerank more
+    * than [[RerankBand]]× below the calibrated [[rerankFor]] curve
+    * throws (conf-gated, [[RerankSizingConfKey]]). */
   def pqTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int, ks: Int, iters: Int, rerank: Int): DataFrame = {
@@ -1542,27 +1119,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     val (c, n) = Barrier.counted(normed(corpus, idCol, vecCol))
     Guard.check(corpus.sparkSession, RerankSizingConfKey)(
       rerankSizingVerdict(n, k, rerank))
-    pqTopKImpl(c, queries, idCol, vecCol, k, m, ks, iters, rerank)
-  }
-
-  /** AUTO-SIZED [[pqTopK]]: the rerank budget is derived from the
-    * corpus row count ([[rerankFor]]) — the sizing-by-construction
-    * path (a caller cannot recreate the measured fixed-R recall
-    * collapse through it), concentration-floored since r16
-    * ([[pqConcVerdict]]: the √n curve's OTHER measured
-    * failure mode — corpus shape, not corpus size). */
-  def pqTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      m: Int, ks: Int, iters: Int): DataFrame = {
-    val (c, n) = Barrier.counted(normed(corpus, idCol, vecCol))
-    Guard.check(corpus.sparkSession, PqConcConfKey)(
-      pqConcVerdict(c, n, k, "pqTopK"))
-    pqTopKImpl(c, queries, idCol, vecCol, k, m, ks, iters, rerankFor(n, k))
-  }
-
-  private def pqTopKImpl(c: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      m: Int, ks: Int, iters: Int, rerank: Int): DataFrame = {
     val books = l2Lloyd(c, "vec_id", "embedding", m, ks, iters)._2
     pqQueryTail(pqIndexOf(c, packBooks(c.sparkSession, embNullable = false, books)),
       c, normed(queries, idCol, vecCol), books, k, rerank)
@@ -1649,54 +1205,18 @@ object Similarity extends org.apache.spark.internal.Logging {
       normed(queries, idCol, vecCol), collectBooks(books), k, rerank, sizeCheck)
   }
 
-  /** AUTO-SIZED [[pqTopKFromIndex]]: rerank derived from the base
-    * corpus row count ([[rerankFor]]), concentration-floored since
-    * r16 (the base table is the corpus whose shape decides the
-    * curve's validity — the floor samples it once per call). */
-  def pqTopKFromIndex(index: DataFrame, base: DataFrame, queries: DataFrame,
-      books: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    VectorFunctions.register(queries.sparkSession)
-    val b = normed(base, idCol, vecCol)
-    val n = base.count()
-    Guard.check(queries.sparkSession, PqConcConfKey)(
-      pqConcVerdict(b, n, k, "pqTopKFromIndex"))
-    pqQueryTail(
-      index.select(col(idCol).as("vec_id"), col("nrm"), col("codes")),
-      b, normed(queries, idCol, vecCol), collectBooks(books), k,
-      rerankFor(n, k))
-  }
-
   /** Shared PQ query tail over the (vec_id, nrm, codes) index: the
-    * driver-merged [[adcTopK]] engine (each task builds the query LUTs
-    * from `books`), or past [[PqHeapSelectMaxKey]] the sort path
-    * ([[sortSelectRerank]]) over broadcast LUT rows. `sizeCheck`, when
-    * set, judges the base row count before the result is returned. */
+    * [[chunkedTopK]] engine, each task building the query LUTs from
+    * `books`. `sizeCheck`, when set, judges the base row count before
+    * the result is returned. */
   private def pqQueryTail(index: DataFrame, cNormed: DataFrame,
       queriesNormed: DataFrame, books: Seq[(Int, Cent)],
       k: Int, rerank: Int, sizeCheck: Option[Long => Unit] = None): DataFrame = {
-    import graft.functions.PqFunctions
-    val spark = index.sparkSession
     val (qField, qs) = collectQueries(queriesNormed)
-    if (heapSelects(spark, qs.length, rerank))
-      return adcTopK(qs, qField, Codes(new GenericArrayData(
-          subspaces(books).map(structs(_, withNrm = false)).toArray[Any])),
-        index.select(col("vec_id").cast(LongType), col("nrm"), col("codes")),
-        cNormed, k, rerank, sizeCheck)
-    sizeCheck.foreach(_(cNormed.count()))
-    // past the ceiling: the query count fills the lazy barrier; qB is
-    // one row per query by construction, so counting it needs no
-    // distinct (r18 ADVICE)
-    val booksRow = packBooks(spark, embNullable = false, books)
-    val (qB, nq) = Barrier.counted(queriesNormed.crossJoin(broadcast(booksRow))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"),
-        PqFunctions.pqLut(col("books"), col("embedding")).as("lut")))
-    val adcCos = PqFunctions.pqAdc(col("lut"), col("codes")) /
-      (col("q_nrm") * col("nrm"))
-    val scored = index.join(broadcast(qB), col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), adcCos.as("adc"))
-    sortSelectRerank(scored,
-      qB.select(col("q_id"), col("q_emb"), col("q_nrm")), cNormed, k, rerank, nq)
+    val codes = index.select(col("vec_id").cast(LongType), col("nrm"), col("codes"))
+    chunkedTopK(qs, qField, Codes(new GenericArrayData(
+        subspaces(books).map(structs(_, withNrm = false)).toArray[Any])),
+      _ => codes, cNormed, k, rerank, sizeCheck)
   }
 
   /** One query of the PQ tail, held on the driver: its id as the caller
@@ -1713,10 +1233,30 @@ object Similarity extends org.apache.spark.internal.Logging {
         UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray), r.getDouble(2))))
   }
 
-  /** True when queries × rerank fits [[PqHeapSelectMaxKey]]: the
-    * driver-merged engine, else the sort path. */
-  private def heapSelects(spark: SparkSession, nq: Long, rerank: Int): Boolean =
-    nq * rerank <= spark.conf.get(PqHeapSelectMaxKey, PqHeapSelectMaxDefault.toString).toLong
+  /** [[adcTopK]] over driver-side chunks of the collected queries, in
+    * query order: all of them in one chunk when queries × rerank fits
+    * [[PqHeapSelectMaxKey]], else chunks of ⌊ceiling / rerank⌋ queries
+    * whose results are unioned — one selection scan and one re-rank
+    * scan per chunk, each within the ceiling. `rows(chunk)` is a
+    * chunk's selection input (`None`: every query, the one-chunk
+    * call). `sizeCheck` rides the first chunk only, so the base count
+    * is judged once. A rerank that alone exceeds the ceiling fails. */
+  private def chunkedTopK(queries: Array[Query], qField: StructField,
+      candidates: Candidates, rows: Option[Array[Query]] => DataFrame,
+      cNormed: DataFrame, k: Int, rerank: Int,
+      sizeCheck: Option[Long => Unit]): DataFrame = {
+    val ceiling = cNormed.sparkSession.conf
+      .get(PqHeapSelectMaxKey, PqHeapSelectMaxDefault.toString).toLong
+    if (queries.length.toLong * rerank <= ceiling)
+      return adcTopK(queries, qField, candidates, rows(None), cNormed, k, rerank, sizeCheck)
+    require(rerank <= ceiling, s"PQ rerank budget $rerank alone exceeds " +
+      s"$PqHeapSelectMaxKey = $ceiling candidate entries, so no query's " +
+      s"top-rerank buffer fits; lower rerank or raise $PqHeapSelectMaxKey")
+    queries.grouped((ceiling / rerank).toInt).zipWithIndex.map { case (chunk, i) =>
+      adcTopK(chunk, qField, candidates, rows(Some(chunk)), cNormed, k, rerank,
+        if (i == 0) sizeCheck else None)
+    }.reduce(_ union _)
+  }
 
   /** What [[adcTopK]]'s selection job scans. */
   private sealed trait Candidates extends Serializable
@@ -1865,126 +1405,12 @@ object Similarity extends org.apache.spark.internal.Logging {
     * rerank-entry buffer per query — each task scans rows of every
     * query — and the driver merges them, so each of the N parallel
     * tasks and the driver hold queries × rerank entries. The r18
-    * mixture campaign measured the wall this guards: at the 2 M
-    * λ-mixture decade the routed measured-rerank budget lands at the
-    * at-level population (R ~ λ·n ≈ 10⁵⁻⁶), and 30 queries × R heaps ×
-    * 32 tasks put an 8 GB driver-JVM into a GC death spiral — the r17
-    * campaign's ">70 min, killed" 2 M leg reproduced and explained.
-    * Past the ceiling the selection switches to a rank-based
-    * distributed sort (memory Θ(partition), shuffle n·queries slim
-    * rows) and the re-rank joins the survivors by shuffle. */
+    * mixture campaign measured the wall this guards: 30 queries × R ~
+    * 10⁵⁻⁶ heaps × 32 tasks put an 8 GB driver-JVM into a GC death
+    * spiral. Past the ceiling [[chunkedTopK]] splits the queries into
+    * chunks that each fit it. */
   val PqHeapSelectMaxKey = "spark.graft.pq.heapselect.max"
   val PqHeapSelectMaxDefault: Long = 1L << 21
-
-  /** Salt count for the sort path's two-phase rank (conf
-    * [[PqSortSelectSaltsKey]]): 0 (default) derives it as
-    * clamp(⌈4 · shuffle.partitions / queries⌉, 2, 64) — enough
-    * (q_id, salt) groups that the phase-1 local rank runs at scan
-    * width instead of one task per query (the r18 verdict's
-    * parallelism finding: a ~30-query batch ran its selection on 30
-    * tasks however wide the cluster), with the 4× overpartition
-    * factor measured at the 2 M routed decade (30 q × 1e5 rerank,
-    * min-of-2: 22.5 s at 1 salt group/query, 20.7 s at 2, 13.6 s at
-    * 8 — group-per-partition balance, not raw group count, is what
-    * pays; target/r19_sortsel_2m.log). The 64 cap bounds phase 2's
-    * TOTAL survivor volume (≤ 64 · rerank rows per query,
-    * corpus-size-free); since r20 phase 2 is a fold tree
-    * ([[PqSortSelectFoldKey]]) whose per-task sort is additionally
-    * bounded at fold · rerank rows, so the cap prices shuffle volume,
-    * not a single-task sort. A positive conf value pins the count. */
-  val PqSortSelectSaltsKey = "spark.graft.pq.sortselect.salts"
-
-  /** Fold factor for the sort path's phase-2 rank (conf
-    * [[PqSortSelectFoldKey]]): phase 2 reduces the phase-1 salt
-    * groups to the global per-query top-`rerank` by merging at most
-    * `fold` groups per level (salt → salt mod ⌈s/fold⌉, rank within
-    * the merged group, keep `rerank`) until one group remains. Each
-    * level's group input is ≤ fold·rerank rows, so no single task
-    * ever sorts the full rerank·salts survivor set — the r19 shape
-    * (one spillable task per query of ≤ 64·rerank ≈ 6.4 M rows at the
-    * cap) becomes log_fold(salts) levels of bounded sorts at
-    * (queries × live-groups)-task width. Correctness is the phase-1
-    * superset argument applied inductively: a globally-top-`rerank`
-    * row has < rerank rows ordered ahead of it in ANY group it lands
-    * in, so it survives every level; the final single-group rank is
-    * exact, and the (adc desc, n_id) ordering is total per query —
-    * byte-identical rows at every fold (spec-pinned alongside the
-    * salt pins in DedupSimilaritySpec). Default 8, committed from the
-    * r20 A/B at the 10 M synthetic corpus with 4 queries × 1e5 rerank
-    * and salts pinned at the 64 cap — the worst committed phase-2
-    * shape (few queries: the per-query task cannot fill the machine;
-    * the cap: maximum survivor volume): min-wall 55.4 s single-level
-    * (fold ≥ salts ≡ the r19 shape) vs 14.5/12.3 s at fold=8 (run +
-    * repeat), 12.4 s at fold=4, 17.0 s at fold=2 (the extra levels'
-    * shuffles outweigh their smaller sorts), and the derived-salt
-    * auto path reads 11.9 s at the default
-    * (target/r20_treefold_10m{,_b}.log). Wide batches are untouched
-    * by construction: at ≥ 16 queries the derived salt count is ≤ 8,
-    * so the tree is a single level — identical to r19. */
-  val PqSortSelectFoldKey = "spark.graft.pq.sortselect.fold"
-  val PqSortSelectFoldDefault: Int = 8
-
-  /** ADC-candidate selection + exact re-rank past
-    * [[PqHeapSelectMaxKey]] entries (shared by the PQ and IVFADC paths;
-    * measured-rerank budgets on clustered corpora at scale, R ~
-    * concentrated population — below the ceiling [[adcTopK]] runs): a
-    * SALTED two-phase rank selects the same survivors with memory
-    * bounded by partition size — phase 1 ranks within (q_id, salt =
-    * hash(n_id) mod S) and keeps each group's top-`rerank` (a
-    * superset of the global top-`rerank`: any globally-surviving row
-    * survives its own salt group), phase 2 folds the salt groups down
-    * to the exact global top-`rerank` ≤ `fold` groups at a time
-    * ([[PqSortSelectFoldKey]] — r20: no single task sorts the full
-    * rerank · S survivor set) — and the re-rank joins by shuffle. Same
-    * rows out as the engine (deterministic (adc desc, n_id) ordering
-    * in both phases), different resource shape; the salt restores
-    * scan-width parallelism the r18 single-phase
-    * Window.partitionBy(q_id) fallback gave up (#queries tasks).
-    * `nq` is the (exact or contractual) query-row count, threaded
-    * from callers that already hold a barrier'd query frame — the
-    * r18 ADVICE finding: counting the qSmall projection here paid a
-    * distinct+shuffle job per call on the IVFADC path. */
-  private def sortSelectRerank(scored: DataFrame, qSmall: DataFrame,
-      cNormed: DataFrame, k: Int, rerank: Int, nq: Long): DataFrame = {
-    val spark = scored.sparkSession
-    val saltsConf = spark.conf.get(PqSortSelectSaltsKey, "0").toInt
-    val shufflePart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val salts =
-      if (saltsConf > 0) saltsConf
-      else math.min(64L, math.max(2L,
-        (4L * shufflePart + nq - 1) / math.max(1L, nq))).toInt
-    val fold = math.max(2, spark.conf.get(PqSortSelectFoldKey,
-      PqSortSelectFoldDefault.toString).toInt)
-    val saltW = Window.partitionBy(col("q_id"), col("salt"))
-      .orderBy(col("adc").desc, col("n_id"))
-    var cur = scored
-      .withColumn("salt", pmod(xxhash64(col("n_id")), lit(salts.toLong)))
-      .withColumn("rk", row_number().over(saltW))
-      .filter(col("rk") <= rerank)
-      .select(col("q_id"), col("n_id"), col("adc"), col("salt"))
-    // phase 2 as a fold tree (see PqSortSelectFoldKey): merge ≤ fold
-    // salt groups per level until one remains; each level's rank is
-    // over ≤ fold·rerank rows per group, and the survivor invariant
-    // (cur ⊇ the global per-query top-rerank) holds inductively
-    var live = salts
-    while (live > 1) {
-      val next = if (live <= fold) 1 else (live + fold - 1) / fold
-      cur = cur.withColumn("salt", pmod(col("salt"), lit(next.toLong)))
-        .withColumn("rk", row_number().over(saltW))
-        .filter(col("rk") <= rerank)
-        .select(col("q_id"), col("n_id"), col("adc"), col("salt"))
-      live = next
-    }
-    val pairs = cur.select(col("q_id"), col("n_id"))
-    val cos = VectorFunctions.cosinePre(
-      VectorFunctions.dot(col("q_emb"), col("embedding")),
-      col("q_nrm"), col("nrm"))
-    cNormed.join(pairs, col("vec_id") === col("n_id"))
-      .join(broadcast(qSmall), "q_id")
-      .select(col("q_id"), col("n_id"), cos.as("cos"))
-      .withColumn("rank", row_number().over(rankWindow))
-      .filter(col("rank") <= k)
-  }
 
   /** IVFADC [Jégou et al. 2011, §IV]: the canonical composition of the
     * coarse quantizer and PQ — the corpus is partitioned into `nCells`
@@ -1998,9 +1424,9 @@ object Similarity extends org.apache.spark.internal.Logging {
     * are cell-independent). Residuals concentrate near 0, so the same
     * code budget quantizes them better than raw vectors. Exact-cosine
     * re-rank of the top-`rerank` as everywhere in this family: the
-    * probe join is the scored input of [[adcTopK]]'s selection job
-    * (one query collect, one selection job, one re-rank job), or of the
-    * sort path past [[PqHeapSelectMaxKey]]. */
+    * probe join of a query chunk is the scored input of its
+    * [[chunkedTopK]] selection job (one query collect, then one
+    * selection job and one re-rank job per chunk). */
   def ivfadcTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nCells: Int, coarseIters: Int, m: Int, ks: Int, pqIters: Int,
@@ -2010,30 +1436,6 @@ object Similarity extends org.apache.spark.internal.Logging {
       probeSizingVerdict(nCells, nProbe))
     Guard.check(corpus.sparkSession, RerankSizingConfKey)(
       rerankSizingVerdict(n, k, rerank))
-    ivfadcTopKImpl(c, queries, idCol, vecCol, k, nCells, coarseIters,
-      m, ks, pqIters, nProbe, rerank)
-  }
-
-  /** AUTO-SIZED [[ivfadcTopK]]: nProbe = [[probeFor]] (half the
-    * cells — the measured recall-robust width) and rerank =
-    * [[rerankFor]] (the corpus-calibrated √n curve) are both derived —
-    * the path a caller gets when they have no operating-scale recall
-    * measurement of their own. */
-  def ivfadcTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      nCells: Int, coarseIters: Int, m: Int, ks: Int,
-      pqIters: Int): DataFrame = {
-    val (c, n) = Barrier.counted(normed(corpus, idCol, vecCol))
-    Guard.check(corpus.sparkSession, PqConcConfKey)(
-      pqConcVerdict(c, n, k, "ivfadcTopK"))
-    ivfadcTopKImpl(c, queries, idCol, vecCol, k, nCells, coarseIters,
-      m, ks, pqIters, probeFor(nCells), rerankFor(n, k))
-  }
-
-  private def ivfadcTopKImpl(c: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      nCells: Int, coarseIters: Int, m: Int, ks: Int, pqIters: Int,
-      nProbe: Int, rerank: Int): DataFrame = {
     import graft.functions.PqFunctions
     val (idType, cells) = l2Lloyd(c, "vec_id", "embedding", 1, nCells, coarseIters)
     val coarse = centsFrame(c.sparkSession, "cent_id", idType, CentFields.take(2),
@@ -2055,7 +1457,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     val probeW = Window.partitionBy(col("vec_id"))
       .orderBy(col("d2").asc, col("cent_id"))
     val qNormed = normed(queries, idCol, vecCol)
-    val probes = qNormed
+    def probesOf(q: DataFrame) = q
       .join(broadcast(coarse))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"),
         PqFunctions.vecL2(col("c_emb"), col("embedding")).as("d2"),
@@ -2069,23 +1471,17 @@ object Similarity extends org.apache.spark.internal.Logging {
     val adcCos = (col("cell_dot") +
       PqFunctions.pqAdc(col("lut"), col("codes"))) /
       (col("q_nrm") * col("nrm"))
-    def scoredBy(qB: DataFrame) = index.join(broadcast(qB),
-        qB("cent_id") === index("cent_id") && col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), adcCos.as("adc"))
+    // a chunk probes only its own queries' cells
+    def scoredOf(chunk: Option[Array[Query]]) = {
+      val qB = probesOf(chunk.fold(qNormed)(qs =>
+        qNormed.filter(col("vec_id").isin(qs.map(_.id): _*))))
+      index.join(broadcast(qB),
+          qB("cent_id") === index("cent_id") && col("q_id") =!= col("vec_id"))
+        .select(col("q_id").cast(LongType), col("vec_id").cast(LongType).as("n_id"),
+          adcCos.as("adc"))
+    }
     val (qField, qs) = collectQueries(qNormed)
-    if (heapSelects(c.sparkSession, qs.length, rerank))
-      return adcTopK(qs, qField, Scored, scoredBy(probes).select(
-        col("q_id").cast(LongType), col("n_id").cast(LongType), col("adc")),
-        c, k, rerank, sizeCheck = None)
-    // past the ceiling: qB carries nProbe rows per query — barrier the
-    // distinct query projection so the dedup shuffle runs ONCE (the
-    // pre-r19 shape re-ran it per consumer: one distinct+shuffle job
-    // just to count, another under the re-rank join — the r18 ADVICE
-    // finding). The count fills that barrier.
-    val qB = Barrier(probes)
-    val (qSmall, nq) = Barrier.counted(
-      qB.select(col("q_id"), col("q_emb"), col("q_nrm")).distinct())
-    sortSelectRerank(scoredBy(qB), qSmall, c, k, rerank, nq)
+    chunkedTopK(qs, qField, Scored, scoredOf, c, k, rerank, sizeCheck = None)
   }
 
   /** Shared IVF probe + exact re-rank tail: queries pick their nProbe

@@ -29,7 +29,7 @@ class GraftObjectFs extends RawLocalFileSystem {
 object GraftObjectFs {
   /** Adds the scheme registration to a session builder — one place, so
     * the entry points that accept a graftfs:// shuffle location
-    * (Bench/ScaleProbe/Verify via `Bench.withShuffleEnv`, the CLI via
+    * (Bench/Verify via `Bench.withShuffleEnv`, the CLI via
     * `GraftSession.builder`) cannot drift on the two confs. */
   def register(b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder =
     b.config("spark.hadoop.fs.graftfs.impl", classOf[GraftObjectFs].getName)

@@ -63,8 +63,8 @@ class GuardSpec extends AnyFunSuite with SparkSpec {
   /** (operator, guard keys, guard jobs per call, call) — every
     * job-priced guard. Job counts are scheduler jobs (an adaptive
     * query's shuffle stages are jobs of their own): 3 for one fused
-    * estimate, 8 where a histogram barrier precedes it or a
-    * concentration sample runs, 0 for the rerank check, whose base
+    * estimate, 8 where a histogram barrier precedes it, 0 for the
+    * rerank check, whose base
     * count comes from the query's own re-rank scan. */
   private lazy val pricedGuards: Seq[(String, Seq[String], Int, () => Any)] = {
     val pair = D.PairBudgetConfKey
@@ -90,9 +90,6 @@ class GuardSpec extends AnyFunSuite with SparkSpec {
         D.incrementalEmbeddingPairs(s.filter(col("vec_id") % 10 =!= 0),
           s.filter(col("vec_id") % 10 === 0), 0.4, probes = 2)
       }),
-      ("pqTopKFromIndex (auto)", Seq(S.PqConcConfKey), 8,
-        () => S.pqTopKFromIndex(pqIndex, emb, emb.filter(col("vec_id") < 3),
-          pqBooks, "vec_id", "embedding", 5)),
       ("pqTopKFromIndex (pinned)", Seq(S.RerankSizingConfKey), 0,
         () => S.pqTopKFromIndex(pqIndex, emb, emb.filter(col("vec_id") < 3),
           pqBooks, "vec_id", "embedding", 5, 50)))
@@ -113,7 +110,7 @@ class GuardSpec extends AnyFunSuite with SparkSpec {
 
   test("mode tokens are trimmed and lowercased; an unknown token names the key") {
     val keys = Seq(D.PairBudgetConfKey, D.CandBudgetConfKey,
-      S.HierSizingConfKey, S.RerankSizingConfKey, S.PqConcConfKey,
+      S.HierSizingConfKey, S.RerankSizingConfKey,
       S.ProbeSizingConfKey, S.LshSizingConfKey)
     keys.foreach { key =>
       assert(withConfs(key -> " Warn ")(Guard.mode(spark, key)) == "warn")

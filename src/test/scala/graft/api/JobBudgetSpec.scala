@@ -35,7 +35,16 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
       () => S.pqTopKFromIndex(index, emb, queries, books,
         "vec_id", "embedding", 5, 50).collect()),
     ("pqTopK (pinned), call + collect", 8,
-      () => S.pqTopK(emb, queries, "vec_id", "embedding", 5, 8, 16, 2, 50).collect()))
+      () => S.pqTopK(emb, queries, "vec_id", "embedding", 5, 8, 16, 2, 50).collect()),
+    // 10 queries × rerank 50 past a ceiling of 250 entries: two chunks of 5
+    ("pqTopKFromIndex (pinned, two query chunks), call + collect", 7,
+      () => withHeapCeiling(250)(S.pqTopKFromIndex(index, emb, queries, books,
+        "vec_id", "embedding", 5, 50).collect())))
+
+  private def withHeapCeiling[A](entries: Long)(body: => A): A = {
+    spark.conf.set(S.PqHeapSelectMaxKey, entries)
+    try body finally spark.conf.unset(S.PqHeapSelectMaxKey)
+  }
 
   private def withinBudgets(budgets: Seq[(String, Int, () => Any)]): Unit = {
     budgets.foreach { case (_, _, call) => call() } // warm: registrations, file listings

@@ -586,7 +586,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       S.pqTopK(emb, queries, "vec_id", "embedding", 5, 8, 16, 1, 10)
     }
     assert(e.getMessage.contains("rerank") &&
-      e.getMessage.contains("rerankForMeasured"))
+      e.getMessage.contains("Similarity.rerankFor(n, k)"))
     // ...while the committed fixture geometry (R=50) stays in-band
     // (s6/s7 pass the oracle gate under the default enforce mode)
     assert(50 >= S.rerankFor(500L, 5) / S.RerankBand)
@@ -597,14 +597,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
         "vec_id", "embedding", 5, 8, 16, 1, 10).count() == 15)
       finally spark.conf.unset(S.RerankSizingConfKey)
     }
-    // the auto overload ≡ pinned at rerankFor(n, k) — the
-    // sizing-by-construction path
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val auto = key(S.pqTopK(emb, queries, "vec_id", "embedding", 5, 8, 16, 1))
-    val pinned = key(S.pqTopK(emb, queries, "vec_id", "embedding", 5, 8, 16, 1,
-      S.rerankFor(emb.count(), 5)))
-    assert(auto == pinned && auto.size == 15)
     // the index path enforces through the BASE corpus count
     val books = S.pqTrain(emb, "vec_id", "embedding", 8, 16, 1)
     val index = S.pqEncodeIndex(emb, books, "vec_id", "embedding")
@@ -612,11 +604,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       S.pqTopKFromIndex(index, emb, queries, books, "vec_id", "embedding", 5, 10)
     }
     assert(e2.getMessage.contains("rerank"))
-    val autoIdx = key(S.pqTopKFromIndex(index, emb, queries, books,
-      "vec_id", "embedding", 5))
-    val pinnedIdx = key(S.pqTopKFromIndex(index, emb, queries, books,
-      "vec_id", "embedding", 5, S.rerankFor(emb.count(), 5)))
-    assert(autoIdx == pinnedIdx && autoIdx.size == 15)
   }
 
   test("ivfadc probe sizing: probe-starved nProbe rejected, auto derives half the cells") {
@@ -634,14 +621,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       e.getMessage.contains("PROBE-limited"))
     // the committed s8 knee (3 of 8) stays inside the band
     assert(3 >= (8 + 3) / 4)
-    // auto overload ≡ pinned at (probeFor(nCells), rerankFor(n, k))
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val auto = key(S.ivfadcTopK(emb, queries, "vec_id", "embedding", 5,
-      8, 1, 8, 16, 1))
-    val pinned = key(S.ivfadcTopK(emb, queries, "vec_id", "embedding", 5,
-      8, 1, 8, 16, 1, S.probeFor(8), S.rerankFor(emb.count(), 5)))
-    assert(auto == pinned && auto.size == 15)
   }
 
   test("hammingPairs pair budget: duplicate heaps fail loud, pointing at hammingGroups") {
@@ -1076,55 +1055,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     finally spark.conf.unset(S.LshSizingConfKey)
   }
 
-  test("PQ auto paths: concentration floor trips on clustered corpora, passes on diffuse, pinned exempt") {
-    val S = graft.api.Similarity
-    import spark.implicits._
-    val dim = 128
-    val rnd = new scala.util.Random(7)
-    def unit(v: Array[Double]): Array[Float] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(x => (x / n).toFloat)
-    }
-    val diffuse = (0L until 2000L)
-      .map(i => (i, unit(Array.fill(dim)(rnd.nextGaussian()))))
-      .toDF("vid", "v")
-    // tight clusters (0.3-scale noise → within-cluster cos ≈ 0.92):
-    // the measured-collapse regime (the r15 fixtures read stat 0.84)
-    val cents = (0 until 8).map(_ => unit(Array.fill(dim)(rnd.nextGaussian())))
-    val clustered = (0L until 2000L).map { i =>
-      val c = cents((i % 8).toInt)
-      val nz = unit(Array.fill(dim)(rnd.nextGaussian()))
-      (i, c.zip(nz).map { case (a, b) => a + 0.3f * b })
-    }.toDF("vid", "v")
-    val qc = clustered.filter(col("vid") < 2)
-    val qd = diffuse.filter(col("vid") < 2)
-    // all three auto overloads trip in enforce (the default), naming
-    // the measured remedy
-    val e1 = intercept[IllegalArgumentException] {
-      S.pqTopK(clustered, qc, "vid", "v", 5, 8, 64, 1)
-    }
-    assert(e1.getMessage.contains("pqTopK") &&
-      e1.getMessage.contains("rerankForMeasured"))
-    val e2 = intercept[IllegalArgumentException] {
-      S.ivfadcTopK(clustered, qc, "vid", "v", 5, 8, 1, 8, 16, 1)
-    }
-    assert(e2.getMessage.contains("ivfadcTopK"))
-    val books = S.pqTrain(clustered, "vid", "v", 8, 16, 1)
-    val index = S.pqEncodeIndex(clustered, books, "vid", "v")
-    val e3 = intercept[IllegalArgumentException] {
-      S.pqTopKFromIndex(index, clustered, qc, books, "vid", "v", 5)
-    }
-    assert(e3.getMessage.contains("pqTopKFromIndex"))
-    // diffuse passes the same enforce-mode auto path
-    assert(S.pqTopK(diffuse, qd, "vid", "v", 5, 8, 64, 1).count() > 0)
-    // warn proceeds on the clustered corpus; the PINNED overload is
-    // exempt by design (rerankForMeasured's output is consumed there)
-    spark.conf.set(S.PqConcConfKey, "warn")
-    try assert(S.pqTopK(clustered, qc, "vid", "v", 5, 8, 64, 1).count() > 0)
-    finally spark.conf.unset(S.PqConcConfKey)
-    assert(S.pqTopK(clustered, qc, "vid", "v", 5, 8, 64, 1, 600).count() > 0)
-  }
-
   test("lshTopK probe radius: radius=1 is the probes overload exactly, recall monotone in radius, model monotone") {
     val S = graft.api.Similarity
     import spark.implicits._
@@ -1162,63 +1092,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("annRoute with cacheDir: sidecar hit serves the cached statistic, stale or mismatched entries re-measure") {
-    val S = graft.api.Similarity
-    import spark.implicits._
-    val dim = 64
-    val rnd = new scala.util.Random(11)
-    def unit(v: Array[Double]): Array[Float] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(x => (x / n).toFloat)
-    }
-    val diffuse = (0L until 2000L)
-      .map(i => (i, unit(Array.fill(dim)(rnd.nextGaussian()))))
-      .toDF("vid", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-concstat").toString
-    def writeCache(line: String): Unit = {
-      // drop the Hadoop LocalFileSystem checksum — a raw overwrite
-      // would otherwise fail fs.open with ChecksumException and read
-      // as a miss instead of a hit
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(dir, "._concstat.crc"))
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_concstat"),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-    try {
-      val r1 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir))
-      assert(r1.family == "pq" && r1.stat < 0.6,
-        s"diffuse must route pq, stat ${r1.stat}")
-      assert(new java.io.File(s"$dir/_concstat").exists())
-      // poison the sidecar with a clustered-regime measurement under
-      // the same (n, k, sampleN): the next call must SERVE it (flipping
-      // the route) — proof the hit path reads the cache, not the corpus
-      writeCache("v2 0.95 0.9 2000 5 1024")
-      val r2 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir))
-      assert(r2.stat == 0.95 && r2.concFrac == 0.9 && r2.family == "lsh",
-        s"poisoned cache must be served verbatim, got $r2")
-      // a cached count 10× off is stale → re-measure (and re-cache)
-      writeCache("v2 0.95 0.9 200000 5 1024")
-      val r3 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir))
-      assert(r3.family == "pq" && r3.stat == r1.stat,
-        "stale count must force a re-measure")
-      // (k, sampleN) mismatch likewise
-      writeCache("v2 0.95 0.9 2000 7 1024")
-      val r4 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir))
-      assert(r4.family == "pq" && r4.stat == r1.stat)
-      // a pre-r17 v1 line (no fraction) must read as a MISS — serving
-      // it would re-create the mixture blindness the fraction fixes
-      writeCache("v1 0.95 2000 5 1024")
-      val r5 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir))
-      assert(r5.family == "pq" && r5.stat == r1.stat,
-        "v1 cache lines must re-measure, not serve")
-      // and the refreshed cache now hits again
-      assert(S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir)).stat == r1.stat)
-    } finally {
-      import scala.sys.process._
-      Seq("rm", "-rf", dir).!
-    }
-  }
-
   test("LSH calculator radius ladder: escalates 2-3 inside table+candidate caps before failing toward PQ") {
     val S = graft.api.Similarity
     // inside the radius-1 envelope: ladder returns the pre-r17
@@ -1228,15 +1101,17 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       S.lshTablesFor(0.9, S.lshPerTableRate(0.4, g1.planes, g1.probes)))
     // mid-concentration at scale: radius 1 busts the 64-table cap
     // (223 tables at n = 200k, threshold 0.55) — pre-r17 this was
-    // OUTSIDE the envelope (annRoute fell to PQ); the ladder holds it
-    // at radius 2 within both caps
-    val g2 = S.lshGeometryOption(200000, 0.55, spark)
+    // OUTSIDE the envelope (the calculator failed toward PQ); the
+    // ladder holds it at radius 2 within both caps. Under the default
+    // enforce mode the calculator throws where no rung fits
+    def fit(n: Long, t: Double) = scala.util.Try(S.lshGeometryFor(n, t, spark)).toOption
+    val g2 = fit(200000, 0.55)
     assert(g2.isDefined && g2.get.radius == 2 && g2.get.tables <= 64,
       s"got $g2")
     assert(S.lshCandFraction(g2.get) <= S.LshMaxCandFracDefault)
     assert(S.lshGeometryFor(200000, 0.55, spark) == g2.get)
     // a decade up the same threshold needs radius 3
-    val g3 = S.lshGeometryOption(2000000, 0.55, spark)
+    val g3 = fit(2000000, 0.55)
     assert(g3.isDefined && g3.get.radius == 3 && g3.get.tables <= 64,
       s"got $g3")
     // the candidate budget binds the ESCALATED rungs: with a tiny
@@ -1244,11 +1119,11 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     // the envelope...
     spark.conf.set(S.LshMaxCandFracKey, "0.0001")
     try {
-      assert(S.lshGeometryOption(200000, 0.55, spark).isEmpty)
+      assert(fit(200000, 0.55).isEmpty)
       // ...while radius-1 geometries answer to the table cap alone
       // (small-n candidate FRACTIONS are naturally high — the r14
       // baseline must not regress under the r17 budget)
-      assert(S.lshGeometryOption(2000, 0.4, spark).map(_.radius) == Some(1))
+      assert(fit(2000, 0.4).map(_.radius) == Some(1))
       val e = intercept[IllegalArgumentException] {
         S.lshGeometryFor(200000, 0.55, spark)
       }
@@ -1273,7 +1148,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     // the table cap: the asymmetric ladder lands on the SAME rung the
     // symmetric calculator sized the tables for (its radius-1 model
     // recall is by construction under target at that table count)
-    val g = S.lshGeometryOption(200000, 0.55, spark).get
+    val g = S.lshGeometryFor(200000, 0.55, spark)
     assert(g.radius >= 2)
     assert(S.lshIncRadiusFor(g.tables, g.planes, g.probes, 0.55, spark)
       == g.radius)
@@ -1379,7 +1254,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset(D.CandBudgetMaxKey)
   }
 
-  test("ADC candidate selection: past the heap ceiling the sort path returns exactly the heap path's rows") {
+  test("ADC candidate selection: past the heap ceiling, query chunks return exactly the one-chunk rows") {
     val S = graft.api.Similarity
     import spark.implicits._
     val rnd = new scala.util.Random(41)
@@ -1387,9 +1262,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       .map(i => (i, Array.fill(64)(rnd.nextGaussian().toFloat)))
       .toDF("vid", "v")
     val q = emb.filter(col("vid") < 5)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1),
-        math.rint(r.getDouble(2) * 1e9), r.getInt(3))).toSet
     // the same comparison for every verb on the ADC tail
     val books = S.pqTrain(emb, "vid", "v", 8, 16, 1)
     val index = S.pqEncodeIndex(emb, books, "vid", "v").withColumnRenamed("vec_id", "vid")
@@ -1397,269 +1269,32 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       "pqTopK" -> (() => S.pqTopK(emb, q, "vid", "v", 5, 8, 16, 1, 300)),
       "pqTopKFromIndex" -> (() => S.pqTopKFromIndex(index, emb, q, books, "vid", "v", 5, 300)),
       "ivfadcTopK" -> (() => S.ivfadcTopK(emb, q, "vid", "v", 5, 4, 1, 8, 16, 1, 2, 300)))
+    def withCeiling[A](entries: Long)(body: => A): A = {
+      spark.conf.set(S.PqHeapSelectMaxKey, entries)
+      try body finally spark.conf.unset(S.PqHeapSelectMaxKey)
+    }
+    // (schema, rows, chunks): each chunk's result is one partition
+    def run(call: () => org.apache.spark.sql.DataFrame) = {
+      val df = call()
+      (df.schema, df.collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(3))),
+        df.rdd.getNumPartitions)
+    }
     for ((verb, call) <- verbs) withClue(s"[$verb] ") {
-      // nq (5) x rerank (300) = 1500 <= default ceiling: heap path
-      val heap = rows(call())
-      // force the sort path for the SAME call; identical output rows —
-      // first at the derived salt count (max(2, partitions/queries)),
-      // then across pinned salt counts including salts that do not
-      // divide the candidate set and a degenerate single salt: the
-      // phase-1 local top-rerank must be a superset of the global
-      // top-rerank at ANY salting, or the two-phase rank is wrong
-      spark.conf.set(S.PqHeapSelectMaxKey, "100")
-      try {
-        val sorted = rows(call())
-        assert(sorted == heap)
-        for (salts <- Seq(1, 3, 16)) {
-          spark.conf.set(S.PqSortSelectSaltsKey, salts.toString)
-          try assert(rows(call()) == heap,
-            s"salted two-phase rank diverged at salts=$salts")
-          finally spark.conf.unset(S.PqSortSelectSaltsKey)
-        }
-        // r20 phase-2 fold tree: byte-identical at every fold — a
-        // non-dividing fold (3 over 16 salts: levels 16→6→2→1), the
-        // minimum fold, and fold ≥ salts (one level — the r19 shape).
-        // The survivor invariant must hold at EVERY level or rows with
-        // globally-top adc in a merged-late group are lost.
-        spark.conf.set(S.PqSortSelectSaltsKey, "16")
-        try {
-          for (fold <- Seq(2, 3, 64)) {
-            spark.conf.set(S.PqSortSelectFoldKey, fold.toString)
-            try assert(
-              rows(call()) == heap,
-              s"phase-2 fold tree diverged at fold=$fold")
-            finally spark.conf.unset(S.PqSortSelectFoldKey)
-          }
-        } finally spark.conf.unset(S.PqSortSelectSaltsKey)
-      } finally spark.conf.unset(S.PqHeapSelectMaxKey)
-    }
-  }
-
-  test("routed PQ path: one concentration sample per cold call, zero per cached hit, and a stale cached stat cannot break totality") {
-    val S = graft.api.Similarity
-    import spark.implicits._
-    val dim = 64
-    val rnd = new scala.util.Random(17)
-    def unit(v: Array[Double]): Array[Float] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(x => (x / n).toFloat)
-    }
-    val diffuse = (0L until 2000L)
-      .map(i => (i, unit(Array.fill(dim)(rnd.nextGaussian()))))
-      .toDF("vid", "v")
-    val q = diffuse.filter(col("vid") < 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-routecost").toString
-    def runs[A](body: => A): (A, Long) = {
-      val before = S.concentrationSampleRuns.get()
-      val a = body
-      (a, S.concentrationSampleRuns.get() - before)
-    }
-    try {
-      // COLD routed call on the diffuse corpus: the router measures the
-      // statistic once; the diffuse-PQ branch must NOT re-measure it
-      // inside the auto overload's floor (the r16 double-sample defect)
-      val (rows1, cold) = runs(
-        S.annTopK(diffuse, q, "vid", "v", 5, 8, 16, 1, cacheDir = Some(dir)).count())
-      assert(rows1 > 0)
-      assert(cold == 1, s"routed cold call must pay exactly ONE sample job, paid $cold")
-      // CACHED hit: the sidecar serves the statistic — zero sample jobs
-      val (rows2, hit) = runs(
-        S.annTopK(diffuse, q, "vid", "v", 5, 8, 16, 1, cacheDir = Some(dir)).count())
-      assert(rows2 == rows1)
-      assert(hit == 0, s"cached hit must pay ZERO sample jobs, paid $hit")
-
-      // TOTALITY under a stale cache: a clustered corpus whose cached
-      // stat (from before it drifted) reads diffuse. The routed call
-      // must serve the decision — not re-validate inside the auto
-      // overload, where enforce mode would measure stat >= floor and
-      // THROW inside the router's own call.
-      val cents = (0 until 4).map(_ => unit(Array.fill(dim)(rnd.nextGaussian())))
-      val clustered = (0L until 1200L).map { i =>
-        val c = cents((i % 4).toInt)
-        val nz = unit(Array.fill(dim)(rnd.nextGaussian()))
-        (i, c.zip(nz).map { case (a, b) => a + 0.3f * b })
-      }.toDF("vid", "v")
-      val cdir = java.nio.file.Files.createTempDirectory("graft-routetot").toString
-      try {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(cdir, "_concstat"),
-          "v2 0.30 0.0 1200 5 1024\n".getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-        val qc = clustered.filter(col("vid") < 2)
-        // enforce mode is the default — this used to throw here
-        val (rows3, tot) = runs(
-          S.annTopK(clustered, qc, "vid", "v", 5, 8, 16, 1, cacheDir = Some(cdir)).count())
-        assert(rows3 > 0, "routed call must stay total under a stale cached stat")
-        assert(tot == 0, s"stale-cache route must not re-sample, paid $tot")
-      } finally {
-        import scala.sys.process._
-        Seq("rm", "-rf", cdir).!
+      // nq (5) x rerank (300) = 1500 <= the default ceiling: one chunk
+      val (schema, one, n1) = run(call)
+      assert(n1 == 1 && one.size == 25)
+      // ⌊600 / 300⌋ = 2 queries a chunk: 2 + 2 + 1; ⌊300 / 300⌋ = 1: 1 × 5.
+      // Byte-identical rows: a query's top-rerank and re-rank do not
+      // depend on which queries share its chunk
+      for ((ceiling, chunks) <- Seq(600L -> 3, 300L -> 5)) {
+        val (s, rows, n) = withCeiling(ceiling)(run(call))
+        assert(n == chunks, s"ceiling $ceiling")
+        assert(s == schema && rows == one, s"chunked rows diverged at ceiling $ceiling")
       }
-    } finally {
-      import scala.sys.process._
-      Seq("rm", "-rf", dir).!
+      // a rerank that alone exceeds the ceiling fails, naming the key
+      val e = intercept[IllegalArgumentException](withCeiling(299)(call()))
+      assert(e.getMessage.contains(S.PqHeapSelectMaxKey), e.getMessage)
     }
-  }
-
-  test("annRoute with cacheDir: a corrupted _concstat degrades to a miss and re-measures") {
-    val S = graft.api.Similarity
-    import spark.implicits._
-    val dim = 32
-    val rnd = new scala.util.Random(23)
-    def unit(v: Array[Double]): Array[Float] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(x => (x / n).toFloat)
-    }
-    val diffuse = (0L until 1500L)
-      .map(i => (i, unit(Array.fill(dim)(rnd.nextGaussian()))))
-      .toDF("vid", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-concbad").toString
-    try {
-      val s1 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir)).stat
-      // non-numeric tokens (truncated write / manual edit): the parse
-      // must treat it as a miss — the documented recovery is "delete
-      // the file", so malformed MUST behave like absent, not crash
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(dir, "._concstat.crc"))
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_concstat"),
-        "v1 garbage nope 5 1024\n".getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-      val s2 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir)).stat
-      assert(s2 == s1, "corrupted cache must re-measure, not crash or serve junk")
-      // and the re-measure re-published a healthy cache
-      val before = S.concentrationSampleRuns.get()
-      val s3 = S.annRoute(diffuse, "vid", "v", cacheDir = Some(dir)).stat
-      assert(s3 == s1 && S.concentrationSampleRuns.get() == before)
-    } finally {
-      import scala.sys.process._
-      Seq("rm", "-rf", dir).!
-    }
-  }
-
-  test("tiny corpora (n <= k) stay total: router, auto pqTopK, and the concentration floor all skip") {
-    val S = graft.api.Similarity
-    import spark.implicits._
-    val tiny = (0L until 4L)
-      .map(i => (i, Array.fill(16)((i + 1).toFloat)))
-      .toDF("vid", "v")
-    val q = tiny.filter(col("vid") === 0)
-    // the router: nothing to measure, no collapse regime — route pq/NaN
-    val r = S.annRoute(tiny, "vid", "v", 5)
-    assert(r.family == "pq" && r.stat.isNaN && r.geometry.isEmpty)
-    // the floor (r16) must not regress previously-working tiny-corpus
-    // auto calls in enforce mode (concentrationSample contracts n > k)
-    assert(S.pqTopK(tiny, q, "vid", "v", 5, 4, 4, 1).count() > 0)
-    assert(S.annTopK(tiny, q, "vid", "v", 5, 4, 4, 1).count() > 0)
-  }
-
-  test("mixture blindness fixed: a clustered-majority mix trips the fraction floor where the percentile stays diffuse") {
-    // The r17 mixture refutation (STATUS r17) operationalized: λ = 0.5/0.75
-    // mixtures keep a diffuse-band 10th-percentile statistic (a 10%+
-    // diffuse minority pins it) while the clustered majority collapses
-    // the √n auto curve at scale (0.58/0.47 recall@5 measured at
-    // 200 k). The floor must SEE such corpora via the at-level
-    // fraction, and the router must take the measured-rerank path.
-    val S = graft.api.Similarity
-    import spark.implicits._
-    val dim = 64
-    val rnd = new scala.util.Random(31)
-    def unit(v: Array[Double]): Array[Float] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(x => (x / n).toFloat)
-    }
-    val cents = (0 until 4).map(_ => unit(Array.fill(dim)(rnd.nextGaussian())))
-    // 55% clustered (tight, cos ≈ 0.92), 45% diffuse unit noise
-    val mixed = (0L until 2000L).map { i =>
-      val nz = unit(Array.fill(dim)(rnd.nextGaussian()))
-      if (i % 100 < 55) {
-        val c = cents((i % 4).toInt)
-        (i, c.zip(nz).map { case (a, b) => a + 0.3f * b })
-      } else (i, nz)
-    }.toDF("vid", "v")
-    val route = S.annRoute(mixed, "vid", "v")
-    assert(route.stat < 0.6,
-      s"the percentile statistic must stay diffuse-band here, got ${route.stat}")
-    assert(route.concFrac >= 0.4 && route.concFrac <= 0.7,
-      s"the fraction must see the clustered majority, got ${route.concFrac}")
-    val q = mixed.filter(col("vid") < 2)
-    // enforce mode (default): the auto overload must now REFUSE this
-    // shape — pre-r17 it passed the percentile floor silently
-    val e = intercept[IllegalArgumentException] {
-      S.pqTopK(mixed, q, "vid", "v", 5, 8, 16, 1)
-    }
-    assert(e.getMessage.contains("sampled queries") &&
-      e.getMessage.contains("rerankForMeasured"))
-    // ... while the router stays total on it, via the measured path
-    assert(S.annTopK(mixed, q, "vid", "v", 5, 8, 16, 1).count() > 0)
-  }
-
-  test("annTopK routes by measured concentration and equals the routed verb") {
-    val S = graft.api.Similarity
-    import spark.implicits._
-    val dim = 128
-    val rnd = new scala.util.Random(42)
-    def unit(v: Array[Double]): Array[Float] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(x => (x / n).toFloat)
-    }
-    // DIFFUSE: 6000 random unit vectors — kth-NN cosines concentrate
-    // near 0.25 at dim 128, putting the LSH table derivation far past
-    // the cap (the measured low-similarity-at-scale envelope limit)
-    val diffuse = (0L until 6000L)
-      .map(i => (i, unit(Array.fill(dim)(rnd.nextGaussian()))))
-      .toDF("vid", "v")
-    // CLUSTERED: 8 unit centroids + 0.4-scale noise — within-cluster
-    // cosines ≈ 0.86, the regime the r15 probe measured multi-probe
-    // LSH winning scale-free
-    val cents = (0 until 8).map(_ => unit(Array.fill(dim)(rnd.nextGaussian())))
-    val clustered = (0L until 4000L).map { i =>
-      val c = cents((i % 8).toInt)
-      val nz = unit(Array.fill(dim)(rnd.nextGaussian()))
-      (i, c.zip(nz).map { case (a, b) => a + 0.4f * b })
-    }.toDF("vid", "v")
-    val routeD = S.annRoute(diffuse, "vid", "v")
-    val routeC = S.annRoute(clustered, "vid", "v")
-    assert(routeD.family == "pq" && routeD.geometry.isEmpty,
-      s"diffuse corpus must route pq (stat ${routeD.stat})")
-    assert(routeC.family == "lsh" && routeC.geometry.isDefined,
-      s"clustered corpus must route lsh (stat ${routeC.stat})")
-    assert(routeC.stat > routeD.stat,
-      s"concentration must separate: ${routeC.stat} vs ${routeD.stat}")
-    // the fraction statistic separates the same way (r17): nearly all
-    // clustered queries sit above the collapse level, nearly no
-    // diffuse ones do
-    assert(routeC.concFrac > 0.5 && routeD.concFrac < 0.1,
-      s"conc fractions: ${routeC.concFrac} vs ${routeD.concFrac}")
-    def key(df: org.apache.spark.sql.DataFrame) = df.select("q_id", "n_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // adaptive ≡ the routed verb, both families
-    val qc = clustered.filter(col("vid") < 3)
-    val gc = routeC.geometry.get
-    assert(key(S.annTopK(clustered, qc, "vid", "v", 5)) ==
-      key(S.lshTopK(clustered, qc, "vid", "v", 5,
-        gc.tables, gc.planes, gc.probes)))
-    val qd = diffuse.filter(col("vid") < 3)
-    assert(key(S.annTopK(diffuse, qd, "vid", "v", 5)) ==
-      key(S.pqTopK(diffuse, qd, "vid", "v", 5, 8, 64, 2)))
-    // and the routed LSH leg actually recalls on the clustered corpus
-    // (the point of routing): ≥ 0.8 of exact top-5
-    val exact = key(S.cosineTopK(clustered, qc, "vid", "v", 5))
-    val got = key(S.annTopK(clustered, qc, "vid", "v", 5))
-    assert(exact.count(got).toDouble / exact.size >= 0.8)
-    // rerankForMeasured: on the clustered corpus the estimate lands at
-    // the cluster population (±2×) — the budget the r15 probe measured
-    // reading recall 1.0 where the √n curve collapsed; on the diffuse
-    // corpus the confusable set is tiny and the curve floor wins
-    val clusterSize = 4000 / 8
-    val rc = S.rerankForMeasured(clustered, "vid", "v", 5)
-    assert(rc >= clusterSize / 2 && rc <= 2 * clusterSize,
-      s"measured rerank $rc vs cluster population $clusterSize")
-    assert(S.rerankForMeasured(diffuse, "vid", "v", 5) ==
-      S.rerankFor(6000, 5))
-    // and PQ at the measured budget recalls on the clustered corpus
-    // where the curve budget cannot
-    val pqMeas = key(S.pqTopK(clustered, qc, "vid", "v", 5, 8, 64, 2, rc))
-    assert(exact.count(pqMeas).toDouble / exact.size >= 0.9)
   }
 
   test("vec_dot expression matches higher-order-function dot") {
